@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.GraftParquet
 import org.apache.spark.sql.functions._
 
 /** Loaders for the driver-generated testdata tables (TESTDATA.md).
@@ -39,7 +40,7 @@ object Tables {
   /** Read one table; `events` goes through [[normalizeEvents]]. */
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     GraftSession.tune(spark)
-    val df = spark.read.parquet(path(sfDir, name))
+    val df = GraftParquet.read(spark, path(sfDir, name))
     if (name == "events") normalizeEvents(df) else df
   }
 

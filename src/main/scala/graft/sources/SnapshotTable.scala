@@ -1,8 +1,10 @@
 package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.GraftParquet
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** A minimal versioned-snapshot TABLE FORMAT — the engine's stand-in for
   * Delta/Iceberg dim-table maintenance in this zero-egress environment
@@ -465,7 +467,7 @@ object SnapshotTable {
     readStatsVersion(root, version).flatMap { stats =>
       val mins = stats.flatMap(fs => fs.mins.get(key).flatMap(decode))
       if (mins.size != stats.size) None
-      else Some(sortAnys(mins).drop(1))
+      else Some(mins.sortWith(lessThan).drop(1))
     }
 
   private def decode(encoded: String): Option[Any] = encoded.take(2) match {
@@ -476,12 +478,15 @@ object SnapshotTable {
     case _ => None
   }
 
-  private def sortAnys(vs: Seq[Any]): Seq[Any] = vs.sortWith {
-    case (a: Long, b: Long) => a < b
-    case (a: Double, b: Double) => a < b
-    case (a: String, b: String) => a < b
-    case _ => false
-  }
+  /** The one string order of this format: unsigned UTF-8 bytes — the
+    * order of Spark's UTF8String comparisons (row predicates, min/max,
+    * range clustering, the `search_sorted` kernel) and of parquet's binary
+    * footer stats. Java's `String.compareTo` compares UTF-16 code units
+    * and disagrees with it on supplementary-plane characters, so every
+    * cutpoint sort, key-to-tile search and stats comparison here uses this.
+    */
+  private val utf8Order: Ordering[String] = (x, y) =>
+    UTF8String.fromString(x).binaryCompare(UTF8String.fromString(y))
 
   /** MERGE INTO analog (Delta `whenMatched update / whenNotMatched
     * insert`, plus an optional matched-delete predicate): apply `updates`
@@ -539,13 +544,16 @@ object SnapshotTable {
     *   - No automatic schema evolution on merge (Delta merges with
     *     `mergeSchema`); [[merge]] requires the exact table schema,
     *     [[upsert]] widens.
-    */
-  /** `knownChangedTiles`: (version, tile-id set) a caller already
-    * computed for EXACTLY this update key set via
-    * [[readMatchingTilesWithSet]]; used (and the discovery job skipped)
-    * only when the tagged version is the head this merge reads.
-    */
-  /** `extraStatsCols`: value columns recorded in the per-file stats
+    *
+    * `knownChangedTiles`: (version, tile-id set) a caller already
+    * computed against that version, e.g. via [[readMatchingTilesWithSet]];
+    * used (and the discovery job skipped) only when the tagged version is
+    * the head this merge reads. The set may be any superset of the update
+    * keys' tiles: an extra tile is rewritten with its own content. A
+    * subset fails loudly: an update row whose tile is missing from the set
+    * has no partition pin, and the write fails on it.
+    *
+    * `extraStatsCols`: value columns recorded in the per-file stats
     * BESIDE the pk from the FIRST publish on (later merges carry the
     * header forward automatically) — what lets a maintained table's
     * invariant checks (non-negative counts, magnitude bounds) and
@@ -715,7 +723,8 @@ object SnapshotTable {
       case Some(d: Double) => (1, 0L, d, "")
       case Some(s: String) => (2, 0L, 0.0, s)
       case _ => (3, 0L, 0.0, "")
-    }).map(_.file).toIndexedSeq
+    })(Ordering.Tuple4(Ordering.Int, Ordering.Long,
+      Ordering.Double.TotalOrdering, utf8Order)).map(_.file).toIndexedSeq
 
   /** The rows of `version` living in files whose `pk` range could hold a
     * value of `keys`' `pk` column — the READ-side twin of merge's
@@ -750,11 +759,8 @@ object SnapshotTable {
           keys.select(tileId(spark, col(pk), bs).as("__tile"))
             .distinct().collect().map(_.getInt(0)).toSet }
         val files = filesInTileOrder(st, pk).zipWithIndex
-          .collect { case (f, i) if hit(i) => s"$root/$version/$f" }
-        val full = readVersion(spark, root, version)
-        if (files.isEmpty) (full.limit(0), Some(hit))
-        else (spark.read.schema(full.schema).parquet(files.toSeq: _*),
-          Some(hit))
+          .collect { case (f, i) if hit(i) => f }
+        (readFiles(spark, root, version, files), Some(hit))
       case _ => (readVersion(spark, root, version), None)
     }
   }
@@ -781,10 +787,8 @@ object SnapshotTable {
         val hit = tileIdsLocal(bs, keys)
         hit.map { h =>
           val files = filesInTileOrder(st, pk).zipWithIndex
-            .collect { case (f, i) if h(i) => s"$root/$version/$f" }
-          val full = readVersion(spark, root, version)
-          (if (files.isEmpty) full.limit(0)
-           else spark.read.schema(full.schema).parquet(files.toSeq: _*), h)
+            .collect { case (f, i) if h(i) => f }
+          (readFiles(spark, root, version, files), h)
         }
       case _ => None
     }
@@ -817,23 +821,10 @@ object SnapshotTable {
         }.toSet)
       case _: String if bs.forall(_.isInstanceOf[String]) &&
           keys.forall(k => k == null || k.isInstanceOf[String]) =>
-        // compare as UTF-8 bytes, unsigned — the ordering Spark's
-        // UTF8String `>=` applies (Java String.compareTo diverges on
-        // code points above 0x7F, which would mis-assign tiles)
-        implicit val utf8Ord: Ordering[Array[Byte]] = (x, y) => {
-          var i = 0
-          var c = 0
-          val n = math.min(x.length, y.length)
-          while (i < n && c == 0) {
-            c = (x(i) & 0xff).compare(y(i) & 0xff)
-            i += 1
-          }
-          if (c != 0) c else x.length.compare(y.length)
-        }
-        val a = bs.map(_.asInstanceOf[String].getBytes("UTF-8")).toArray
+        val a = bs.map(_.asInstanceOf[String]).toArray
         Some(keys.iterator.map {
           case null => 0
-          case s => upperBound(a, s.asInstanceOf[String].getBytes("UTF-8"))
+          case s => upperBound(a, s.asInstanceOf[String])(utf8Order)
         }.toSet)
       case _ => None
     }
@@ -874,7 +865,7 @@ object SnapshotTable {
   private def lessThan(a: Any, b: Any): Boolean = (a, b) match {
     case (x: Long, y: Long) => x < y
     case (x: Double, y: Double) => x < y
-    case (x: String, y: String) => x < y
+    case (x: String, y: String) => utf8Order.lt(x, y)
     case _ => false
   }
 
@@ -1090,7 +1081,7 @@ object SnapshotTable {
     require(bits > 0 && (bits & (bits - 1)) == 0, "bloomBits must be a power of two")
     if (files.isEmpty) Nil
     else {
-      val df = spark.read.parquet(files.map(f => s"$dir/$f"): _*)
+      val df = GraftParquet.read(spark, files.map(f => s"$dir/$f"): _*)
       val perCol = cols.flatMap { c =>
         // canonical hash domains (mirrors `encode`'s stats families):
         // every integral width hashes as long, float as double, so a
@@ -1310,7 +1301,7 @@ object SnapshotTable {
         finishCommit(root, version, retain, base, Some(stage))
       }
     } else
-      publishFrom(spark.read.parquet(dir), root, version, base, retain,
+      publishFrom(GraftParquet.read(spark, dir), root, version, base, retain,
         statsCols, clusterFiles)
   }
 
@@ -1448,7 +1439,7 @@ object SnapshotTable {
 
   /** Bounded time travel: read a specific retained version. */
   def readVersion(spark: SparkSession, root: String, version: String): DataFrame =
-    spark.read.parquet(s"$root/$version")
+    GraftParquet.read(spark, s"$root/$version")
 
   /** Per-file column stats of one published data file. Values are the
     * typed encodings of [[encode]]; `None` min/max for a column means the
@@ -1486,8 +1477,8 @@ object SnapshotTable {
     case ("L:", q: Int) => Some(encoded.drop(2).toLong.compare(q.toLong))
     case ("D:", q: Double) => Some(encoded.drop(2).toDouble.compare(q))
     case ("S:", q: String) =>
-      Some(new String(java.util.Base64.getDecoder.decode(encoded.drop(2)),
-        "UTF-8").compareTo(q))
+      Some(utf8Order.compare(new String(
+        java.util.Base64.getDecoder.decode(encoded.drop(2)), "UTF-8"), q))
     case _ => None
   }
 
@@ -1520,8 +1511,8 @@ object SnapshotTable {
         case None => ()
       }
     val df =
-      if (files.isEmpty) spark.read.parquet(dir)
-      else spark.read.parquet(files.map(f => s"$dir/$f"): _*)
+      if (files.isEmpty) GraftParquet.read(spark, dir)
+      else GraftParquet.read(spark, files.map(f => s"$dir/$f"): _*)
     // content fingerprint: sum of a full-row 64-bit hash, accumulated in
     // DECIMAL (exact, order-independent, and safe under ANSI overflow
     // checking). Only atomic columns hash — a nested type anywhere drops
@@ -1585,8 +1576,6 @@ object SnapshotTable {
     */
   private def footerStatsLines(spark: SparkSession, dir: String,
       files0: Seq[String], cols: Seq[String]): Option[Seq[String]] = {
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
     import org.apache.parquet.io.api.Binary
     import org.apache.parquet.schema.{LogicalTypeAnnotation, PrimitiveType}
     import scala.jdk.CollectionConverters._
@@ -1598,68 +1587,64 @@ object SnapshotTable {
     val conf = spark.sparkContext.hadoopConfiguration
     try {
       val lines = names.map { name =>
-        val in = HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(s"$dir/$name"), conf)
-        val reader = ParquetFileReader.open(in)
-        try {
-          val footer = reader.getFooter
-          val schema = footer.getFileMetaData.getSchema
-          val blocks = footer.getBlocks.asScala.toSeq
-          val rowCount = blocks.map(_.getRowCount).sum
-          val encodedCols = cols.flatMap { c =>
-            if (!schema.containsField(c)) throw FooterBail
-            val t = schema.getType(Array(c): _*)
-            if (!t.isPrimitive) throw FooterBail
-            val pt = t.asPrimitiveType()
-            val fam: Char = pt.getPrimitiveTypeName match {
-              case PrimitiveType.PrimitiveTypeName.INT32 |
-                   PrimitiveType.PrimitiveTypeName.INT64 =>
-                pt.getLogicalTypeAnnotation match {
-                  case null => 'L'
-                  case i: LogicalTypeAnnotation.IntLogicalTypeAnnotation
-                    if i.isSigned => 'L'
-                  case _ => throw FooterBail
-                }
-              case PrimitiveType.PrimitiveTypeName.BINARY =>
-                pt.getLogicalTypeAnnotation match {
-                  case _: LogicalTypeAnnotation.StringLogicalTypeAnnotation => 'S'
-                  case _ => throw FooterBail
-                }
-              case _ => throw FooterBail
-            }
-            var minL = 0L; var maxL = 0L
-            var minB: Binary = null; var maxB: Binary = null
-            var sawValue = false
-            blocks.foreach { b =>
-              val cc = b.getColumns.asScala
-                .find(_.getPath.toDotString == c).getOrElse(throw FooterBail)
-              val st = cc.getStatistics
-              if (st == null || st.isEmpty) throw FooterBail
-              if (st.hasNonNullValue) {
-                if (fam == 'L') {
-                  val mn = st.genericGetMin.asInstanceOf[Number].longValue()
-                  val mx = st.genericGetMax.asInstanceOf[Number].longValue()
-                  if (!sawValue || mn < minL) minL = mn
-                  if (!sawValue || mx > maxL) maxL = mx
-                } else {
-                  val mn = st.genericGetMin.asInstanceOf[Binary]
-                  val mx = st.genericGetMax.asInstanceOf[Binary]
-                  if (minB == null || mn.compareTo(minB) < 0) minB = mn
-                  if (maxB == null || mx.compareTo(maxB) > 0) maxB = mx
-                }
-                sawValue = true
-              } else if (!st.isNumNullsSet ||
-                  st.getNumNulls != cc.getValueCount) throw FooterBail
-            }
-            if (!sawValue) Seq("X", "X") // all-null: non-prunable marker
-            else if (fam == 'L') Seq(encode(minL), encode(maxL))
-            else Seq(
-              encode(new String(minB.getBytes, "UTF-8")),
-              encode(new String(maxB.getBytes, "UTF-8")))
+        val footer = GraftParquet.footer(conf,
+          new org.apache.hadoop.fs.Path(s"$dir/$name"))
+        val schema = footer.getFileMetaData.getSchema
+        val blocks = footer.getBlocks.asScala.toSeq
+        val rowCount = blocks.map(_.getRowCount).sum
+        val encodedCols = cols.flatMap { c =>
+          if (!schema.containsField(c)) throw FooterBail
+          val t = schema.getType(Array(c): _*)
+          if (!t.isPrimitive) throw FooterBail
+          val pt = t.asPrimitiveType()
+          val fam: Char = pt.getPrimitiveTypeName match {
+            case PrimitiveType.PrimitiveTypeName.INT32 |
+                 PrimitiveType.PrimitiveTypeName.INT64 =>
+              pt.getLogicalTypeAnnotation match {
+                case null => 'L'
+                case i: LogicalTypeAnnotation.IntLogicalTypeAnnotation
+                  if i.isSigned => 'L'
+                case _ => throw FooterBail
+              }
+            case PrimitiveType.PrimitiveTypeName.BINARY =>
+              pt.getLogicalTypeAnnotation match {
+                case _: LogicalTypeAnnotation.StringLogicalTypeAnnotation => 'S'
+                case _ => throw FooterBail
+              }
+            case _ => throw FooterBail
           }
-          ((name +: encodedCols) ++ Seq(rowCount.toString, "X"))
-            .mkString("\t")
-        } finally reader.close()
+          var minL = 0L; var maxL = 0L
+          var minB: Binary = null; var maxB: Binary = null
+          var sawValue = false
+          blocks.foreach { b =>
+            val cc = b.getColumns.asScala
+              .find(_.getPath.toDotString == c).getOrElse(throw FooterBail)
+            val st = cc.getStatistics
+            if (st == null || st.isEmpty) throw FooterBail
+            if (st.hasNonNullValue) {
+              if (fam == 'L') {
+                val mn = st.genericGetMin.asInstanceOf[Number].longValue()
+                val mx = st.genericGetMax.asInstanceOf[Number].longValue()
+                if (!sawValue || mn < minL) minL = mn
+                if (!sawValue || mx > maxL) maxL = mx
+              } else {
+                val mn = st.genericGetMin.asInstanceOf[Binary]
+                val mx = st.genericGetMax.asInstanceOf[Binary]
+                if (minB == null || mn.compareTo(minB) < 0) minB = mn
+                if (maxB == null || mx.compareTo(maxB) > 0) maxB = mx
+              }
+              sawValue = true
+            } else if (!st.isNumNullsSet ||
+                st.getNumNulls != cc.getValueCount) throw FooterBail
+          }
+          if (!sawValue) Seq("X", "X") // all-null: non-prunable marker
+          else if (fam == 'L') Seq(encode(minL), encode(maxL))
+          else Seq(
+            encode(new String(minB.getBytes, "UTF-8")),
+            encode(new String(maxB.getBytes, "UTF-8")))
+        }
+        ((name +: encodedCols) ++ Seq(rowCount.toString, "X"))
+          .mkString("\t")
       }
       Some(lines)
     } catch {
@@ -1793,13 +1778,13 @@ object SnapshotTable {
       readVersion(spark, root, version).filter(lit(false))
     else readStatsVersion(root, version) match {
       case Some(stats) =>
-        val sorted = ranges.sortBy(_._1)
+        val sorted = ranges.sortBy(_._1)(utf8Order)
         val los = sorted.map(_._1).toArray
         // prefMaxHi(j) = max upper among sorted(0..j) — lets the
         // "any range with lo <= fmax has hi >= fmin" test run on the
         // binary-searched prefix in O(1)
         val prefMaxHi = sorted.map(_._2)
-          .scanLeft("")((m, h) => if (h > m) h else m).drop(1).toArray
+          .scanLeft("")(utf8Order.max).drop(1).toArray
         val kept = stats.filter { fs =>
           (fs.mins.get(column).flatMap(decode),
             fs.maxs.get(column).flatMap(decode)) match {
@@ -1807,9 +1792,10 @@ object SnapshotTable {
               var lo = 0; var hi = los.length - 1; var j = -1
               while (lo <= hi) {
                 val m = (lo + hi) >>> 1
-                if (los(m) <= fmax) { j = m; lo = m + 1 } else hi = m - 1
+                if (utf8Order.lteq(los(m), fmax)) { j = m; lo = m + 1 }
+                else hi = m - 1
               }
-              j >= 0 && prefMaxHi(j) >= fmin
+              j >= 0 && utf8Order.gteq(prefMaxHi(j), fmin)
             case _ => true // non-prunable stats: keep (pruning may only
               // skip PROVABLY irrelevant files)
           }
@@ -1824,7 +1810,7 @@ object SnapshotTable {
   private def readFiles(spark: SparkSession, root: String, v: String,
       files: Seq[String]): DataFrame =
     if (files.isEmpty) readVersion(spark, root, v).filter(lit(false))
-    else spark.read.parquet(files.map(f => s"$root/$v/$f"): _*)
+    else GraftParquet.read(spark, files.map(f => s"$root/$v/$f"): _*)
 
   /** Read the latest snapshot restricted to files whose [min, max] on
     * `column` intersects [lower, upper] (inclusive). Falls back to the

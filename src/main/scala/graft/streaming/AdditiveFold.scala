@@ -33,8 +33,8 @@ object AdditiveFold {
     * the table at `root`, whose schema is (key, carried..., cnt), under
     * version `v<batchId>`. Idempotent per batchId (merge short-circuits a
     * committed head). `deltaCnt` and `cnt` may be the same name.
-    */
-  /** `localKeys`: the batch's key values when the CALLER already holds
+    *
+    * `localKeys`: the batch's key values when the CALLER already holds
     * them on the driver (its own batch-scale collect) — the fold-base
     * tile discovery then runs as driver binary-search math
     * ([[SnapshotTable.readMatchingTilesLocal]]) instead of a Spark job.

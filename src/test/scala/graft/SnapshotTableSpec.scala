@@ -606,6 +606,51 @@ class SnapshotTableSpec extends SparkSpec {
     assert(none.inputFiles.length <= 1)
   }
 
+  test("supplementary-plane string keys: driver-side tile and range pruning agree with a full scan") {
+    import spark.implicits._
+    // UTF-8 byte order (Spark's) puts ASCII < U+FF21 < U+1F600; Java's
+    // UTF-16 order puts U+1F600's surrogate pair BEFORE U+FF21
+    val families = Seq("a", "Ａ", "😀")
+    val keys = for (p <- families; i <- 0 until 100) yield f"$p$i%03d"
+    val dim = keys.zipWithIndex.map { case (k, i) => (k, i.toLong) }.toDF("k", "v")
+    def rows(df: org.apache.spark.sql.DataFrame, ks: Seq[String]) =
+      df.filter(col("k").isin(ks: _*)).collect()
+        .map(r => (r.getString(0), r.getLong(1))).toSet
+    val probe = Seq("a099", "Ａ000", "Ａ099", "😀000",
+      "😀001", "😀050", "😀099")
+    val emoji = keys.filter(_.startsWith(families(2))).take(11)
+    // one file per family (cutpoints in both non-ASCII families), and a
+    // count-balanced layout whose files straddle the family borders
+    val aligned = freshRoot("utf8aligned")
+    SnapshotTable.publishAligned(dim, aligned, "v1", "k",
+      families.tail.map(_ + "000"), statsCols = Seq("k"))
+    val clustered = freshRoot("utf8clustered")
+    SnapshotTable.publish(dim, clustered, "v1",
+      statsCols = Seq("k"), clusterFiles = Some(4))
+    Seq(aligned, clustered).foreach { root =>
+      val cuts = SnapshotTable.keyBoundaries(root, "v1", "k").get
+        .map(_.asInstanceOf[String])
+      assert(families.tail.forall(f => cuts.exists(_.startsWith(f))),
+        s"precondition: cutpoints must reach both non-ASCII families: $cuts")
+      val full = SnapshotTable.readVersion(spark, root, "v1")
+      val want = rows(full, probe)
+      assert(want.size == probe.size)
+      val tiles = SnapshotTable.readMatchingTilesLocal(spark, root, "v1",
+        "k", probe)
+      assert(tiles.isDefined, s"$root: the layout is range-disjoint in " +
+        "Spark's order, so the driver-side path must apply")
+      assert(rows(tiles.get._1, probe) == want,
+        s"$root: readMatchingTilesLocal must hold every probed key's row")
+      probe.foreach { k =>
+        assert(rows(SnapshotTable.pointLookup(spark, root, "k", k).get,
+          Seq(k)) == want.filter(_._1 == k), s"$root: pointLookup lost $k")
+      }
+      assert(rows(SnapshotTable.readPrunedRanges(spark, root, "v1", "k",
+        Seq(emoji.head -> emoji.last)), emoji) == rows(full, emoji),
+        s"$root: readPrunedRanges must keep every file holding the range")
+    }
+  }
+
   private def stageDirs(root: String): Seq[String] =
     Option(new java.io.File(root).listFiles()).getOrElse(Array.empty)
       .filter(f => f.isDirectory && f.getName.startsWith(".stage_"))
