@@ -65,20 +65,6 @@ object GraftSession {
   def tune(spark: SparkSession): SparkSession = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    // join-strategy lever (r14 optimization round, measured and
-    // REJECTED as a default): SPARK_GRAFT_PREFER_SMJ=false lets the
-    // planner pick shuffled-hash joins where their size conditions hold
-    // and lets AQE rewrite sort-merge to shuffled-hash at runtime
-    // (guide §3.1). A/B over the full 189-query suite at sf0.1:
-    // total_min 175.3 → 182.8 s (run1 246.1 → 272.7) — this engine's
-    // joins are either already broadcast under AQE or iterate over
-    // cached tiny frames where the sort is not the cost. Env-gated so
-    // a future box/scale can re-measure without a code change.
-    sys.env.get("SPARK_GRAFT_PREFER_SMJ").foreach { v =>
-      spark.conf.set("spark.sql.join.preferSortMergeJoin", v)
-      if (v == "false") spark.conf.set(
-        "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64m")
-    }
     // static conf in builder sessions; settable at runtime too — see the
     // builder note (AQE coalescing inside cached plans)
     try spark.conf.set(

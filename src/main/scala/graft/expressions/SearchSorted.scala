@@ -202,7 +202,7 @@ object SearchSorted {
     * equals itself (`GreaterThanOrEqual` codegen compares through the
     * same rule), so a NaN key routes to the LAST tile consistently.
     */
-  private[expressions] def cmpDouble(x: Double, y: Double): Int =
+  private[graft] def cmpDouble(x: Double, y: Double): Int =
     if (x.isNaN && y.isNaN) 0
     else if (x.isNaN) 1
     else if (y.isNaN) -1

@@ -151,8 +151,17 @@ object InvertedIndex {
   /** Term lookup through the PREFIX range of the composite key. */
   private[graft] def termLookup(spark: SparkSession, dir: String,
       term: String): DataFrame =
-    SnapshotTable.readPruned(spark, dir, "tok_doc", term + ":", term + ";")
-      .get.filter(col("token") === term)
+    prefixRead(spark, dir, term).filter(col("token") === term)
+
+  /** The files of `dir`'s head that can hold a `term:` posting key — the
+    * prefix-range plan both the index and its LSM segments read through.
+    */
+  private[graft] def prefixRead(spark: SparkSession, dir: String,
+      term: String): DataFrame = {
+    val head = SnapshotTable.latestVersion(dir).get
+    SnapshotTable.readFiles(spark, dir, SnapshotTable.plan(spark, dir, head,
+      "tok_doc", SnapshotTable.Prune.Range("tok_doc", term + ":", term + ";")))
+  }
 
   /** The index maintained INCREMENTALLY: half the corpus publishes v1,
     * the other half arrives as a posting batch applied with

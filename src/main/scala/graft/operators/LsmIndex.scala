@@ -315,8 +315,8 @@ object LsmIndex {
   private[graft] def termLookup(spark: SparkSession, root: String,
       term: String): DataFrame =
     liveSegments(root)
-      .map(s => SnapshotTable.readPruned(spark, s"$root/$s", "tok_doc",
-        term + ":", term + ";").get.filter(col("token") === term))
+      .map(s => InvertedIndex.prefixRead(spark, s"$root/$s", term)
+        .filter(col("token") === term))
       .reduce(_ unionByName _)
 
   /** The index maintained as LSM segments: the corpus arrives as FOUR

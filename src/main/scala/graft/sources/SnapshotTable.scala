@@ -34,9 +34,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * FILE-LEVEL DATA SKIPPING (the Delta/Iceberg stats half): [[publish]]
   * can record per-file min/max for chosen columns into a `_STATS` file
   * inside the version directory (written BEFORE the marker move, so a
-  * published version always has its stats). [[readPruned]] /
-  * [[pointLookup]] consult the stats and hand Spark only the files whose
-  * [min, max] intersects the predicate — a dim point-lookup (the
+  * published version always has its stats). [[plan]] consults the stats
+  * and [[readFiles]] hands Spark only the files whose [min, max] can
+  * satisfy the predicate ([[Prune]]) — a dim point-lookup (the
   * reference reads one HBase row by pk, `RT/utils/DimUtil.java:22-27`)
   * touches ONE file of a pk-clustered snapshot instead of scanning the
   * table. Skipping composes with, not replaces, parquet row-group
@@ -266,7 +266,7 @@ object SnapshotTable {
     *      own file — contiguous z runs = aligned key-space tiles, and the
     *      layout is a pure function of the data (no boundary sampling);
     *   3. per-file min/max stats on every z column feed the same
-    *      [[readPruned]]/[[pointLookup]] path as linear clustering.
+    *      [[plan]]/[[pointLookup]] path as linear clustering.
     *
     * `pk` must be unique per row (the rank tiebreaker — dim tables have
     * one by construction). `bits` caps at 62/d so the z value fits a
@@ -464,29 +464,8 @@ object SnapshotTable {
     */
   def keyBoundaries(root: String, version: String,
       key: String): Option[Seq[Any]] =
-    readStatsVersion(root, version).flatMap { stats =>
-      val mins = stats.flatMap(fs => fs.mins.get(key).flatMap(decode))
-      if (mins.size != stats.size) None
-      else Some(mins.sortWith(lessThan).drop(1))
-    }
-
-  private def decode(encoded: String): Option[Any] = encoded.take(2) match {
-    case "L:" => Some(encoded.drop(2).toLong)
-    case "D:" => Some(encoded.drop(2).toDouble)
-    case "S:" => Some(new String(
-      java.util.Base64.getDecoder.decode(encoded.drop(2)), "UTF-8"))
-    case _ => None
-  }
-
-  /** The one string order of this format: unsigned UTF-8 bytes — the
-    * order of Spark's UTF8String comparisons (row predicates, min/max,
-    * range clustering, the `search_sorted` kernel) and of parquet's binary
-    * footer stats. Java's `String.compareTo` compares UTF-16 code units
-    * and disagrees with it on supplementary-plane characters, so every
-    * cutpoint sort, key-to-tile search and stats comparison here uses this.
-    */
-  private val utf8Order: Ordering[String] = (x, y) =>
-    UTF8String.fromString(x).binaryCompare(UTF8String.fromString(y))
+    layout(root, version).flatMap(_.byMin(key))
+      .map(_.drop(1).map(_._2.value))
 
   /** MERGE INTO analog (Delta `whenMatched update / whenNotMatched
     * insert`, plus an optional matched-delete predicate): apply `updates`
@@ -545,13 +524,13 @@ object SnapshotTable {
     *     `mergeSchema`); [[merge]] requires the exact table schema,
     *     [[upsert]] widens.
     *
-    * `knownChangedTiles`: (version, tile-id set) a caller already
-    * computed against that version, e.g. via [[readMatchingTilesWithSet]];
-    * used (and the discovery job skipped) only when the tagged version is
-    * the head this merge reads. The set may be any superset of the update
-    * keys' tiles: an extra tile is rewritten with its own content. A
-    * subset fails loudly: an update row whose tile is missing from the set
-    * has no partition pin, and the write fails on it.
+    * `knownPlan`: a [[plan]] a caller already made against the head this
+    * merge reads, e.g. the [[Prune.Keys]] plan of the same update keys;
+    * its tile set is used (and the discovery job skipped) only when the
+    * plan's version is that head and it has one. The set may be any
+    * superset of the update keys' tiles: an extra tile is rewritten with
+    * its own content. A subset fails loudly: an update row whose tile is
+    * missing from the set has no partition pin, and the write fails on it.
     *
     * `extraStatsCols`: value columns recorded in the per-file stats
     * BESIDE the pk from the FIRST publish on (later merges carry the
@@ -563,7 +542,7 @@ object SnapshotTable {
       deleteWhen: Option[Column] = None, retain: Int = 2,
       clusterFiles: Option[Int] = None,
       rowFingerprints: Boolean = true,
-      knownChangedTiles: Option[(String, Set[Int])] = None,
+      knownPlan: Option[Plan] = None,
       extraStatsCols: Seq[String] = Nil): Unit = {
     require(version.matches("v\\d+"), s"version must be v<digits>, got $version")
     val spark = updates.sparkSession
@@ -602,34 +581,28 @@ object SnapshotTable {
     val ups = updates.persist()
     try mergeInto(ups, root, pk, version, vOld, current, deleteWhen, retain,
       clusterFiles, rowFingerprints,
-      knownChangedTiles.collect { case (v, t) if v == vOld => t },
-      extraStatsCols)
+      knownPlan.filter(_.version == vOld).flatMap(_.tiles), extraStatsCols)
     finally { ups.unpersist(blocking = false); () }
   }
 
   private def mergeInto(updates: DataFrame, root: String, pk: String,
       version: String, vOld: String, current: DataFrame,
       deleteWhen: Option[Column], retain: Int,
-      clusterFiles: Option[Int], rowFingerprints: Boolean = true,
-      knownChangedTiles: Option[Set[Int]] = None,
-      extraStatsCols: Seq[String] = Nil): Unit = {
+      clusterFiles: Option[Int], rowFingerprints: Boolean,
+      knownTiles: Option[Set[Int]], extraStatsCols: Seq[String]): Unit = {
     val spark = updates.sparkSession
     // null predicate = not-deleted (SQL MERGE semantics), not delete:
     // filter(!d) alone would drop null-condition rows
     val inserts = deleteWhen.foldLeft(updates)((u, d) =>
       u.filter(!coalesce(d, lit(false))))
-    val stats = readStatsVersion(root, vOld)
-    val bounds = keyBoundaries(root, vOld, pk)
-    (stats, bounds) match {
-      case (Some(st), Some(bs)) if bs.nonEmpty && rangeDisjoint(st, pk) =>
+    val lay = layout(root, vOld)
+    lay.flatMap(l => l.tiles(pk).map(t => (l, t))) match {
+      case Some((l, (filesByTile, cuts))) =>
         // tile id of each update row against the broadcast cutpoints
-        val tile = tileId(spark, col(pk), bs)
-        val changed = knownChangedTiles.getOrElse(
-          graft.Trace(s"merge:tiles $root $version") {
-            updates.select(tile.as("__tile")).distinct()
-              .collect().map(_.getInt(0)).toSet })
-        // file order by min(pk) IS tile order (how keyBoundaries derives)
-        val filesByTile = filesInTileOrder(st, pk)
+        val tile = tileId(spark, col(pk), cuts.map(_.value))
+        // the layout is tiled, so a Keys plan always carries its tile set
+        val changed = knownTiles.getOrElse(planOn(spark, root, vOld, pk,
+          Prune.Keys(updates), l).tiles.get)
         val (chFiles, keepFiles) = filesByTile.zipWithIndex
           .partition { case (_, i) => changed(i) }
         withStage(root, version) { dir =>
@@ -637,14 +610,13 @@ object SnapshotTable {
           // no-op merge: clone the version (copies + verbatim sidecars)
           java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
           copyFiles(root, vOld, dir, filesByTile)
-          writeStatsLines(dir, statsHeader(root, vOld),
-            statsLines(root, vOld, filesByTile.toSet))
+          writeStatsLines(dir, l.header, l.lines)
           bloomLines(root, vOld, filesByTile.toSet).foreach {
             case (bits, ls) => writeBloomLines(dir, bits, ls)
           }
         } else {
-          val oldChanged = spark.read.schema(current.schema)
-            .parquet(chFiles.map { case (f, _) => s"$root/$vOld/$f" }: _*)
+          val oldChanged = readFiles(spark, root,
+            Plan(vOld, Some(chFiles.map(_._1)), None))
           val denseIx = chFiles.map(_._2).zipWithIndex.toMap
           val tileToDense = element_at(
             typedLit(filesByTile.indices.map(i =>
@@ -672,23 +644,22 @@ object SnapshotTable {
             .getOrElse(Array.empty)
             .filter(f => f.isFile && f.getName.endsWith(".parquet"))
             .map(_.getName).toSeq
-          copyFiles(root, vOld, dir, keepFiles.map(_._1))
-          val cols = statsHeader(root, vOld)
-          writeStatsLines(dir, cols,
-            statsLines(root, vOld, keepFiles.map(_._1).toSet) ++
-              computeStatsLines(spark, dir, newFiles, cols, rowFingerprints))
+          val kept = keepFiles.map(_._1)
+          copyFiles(root, vOld, dir, kept)
+          writeStatsLines(dir, l.header, l.linesOf(kept.toSet) ++
+            computeStatsLines(spark, dir, newFiles, l.header, rowFingerprints))
           // bloom sidecar rides along: carried files keep their filters,
           // fresh tiles get new ones with the same columns and sizing
-          bloomLines(root, vOld, keepFiles.map(_._1).toSet).foreach {
-            case (bits, kept) =>
+          bloomLines(root, vOld, kept.toSet).foreach {
+            case (bits, keptLines) =>
               val bcols = readBlooms(root, vOld).get.cols.toSeq.sorted
               writeBloomLines(dir, bits,
-                kept ++ computeBloomLines(spark, dir, newFiles, bcols, bits))
+                keptLines ++ computeBloomLines(spark, dir, newFiles, bcols, bits))
           }
         }
         finishCommit(root, version, retain, Some(vOld), Some(dir))
         }
-      case _ =>
+      case None =>
         // same pk-to-front USING-join reorder as the tile path — restore
         val merged = current
           .join(updates.select(col(pk)), Seq(pk), "left_anti")
@@ -704,170 +675,23 @@ object SnapshotTable {
         // preserve the table's existing stats header on the fallback
         // rewrite — a one-off non-tile-mergeable batch must not silently
         // drop the extra stats columns later guards/prunes rely on
-        val fbCols = readStatsVersion(root, vOld) match {
-          case Some(_) => statsHeader(root, vOld)
-          case None => (Seq(pk) ++ extraStatsCols).distinct
-        }
+        val fbCols = lay.map(_.header)
+          .getOrElse((Seq(pk) ++ extraStatsCols).distinct)
         publishFrom(merged, root, version, Some(vOld), retain, fbCols,
           clusterFiles, bcols, bbits, rowFingerprints)
     }
   }
 
-  /** Data files of a version in TILE order — ascending min(pk) from the
-    * stats, the order [[keyBoundaries]]' cutpoints index into (shared by
-    * merge's changed-tile rewrite and [[readMatchingTiles]]).
-    */
-  private def filesInTileOrder(st: Seq[FileStats], pk: String): IndexedSeq[String] =
-    st.sortBy(fs => fs.mins.get(pk).flatMap(decode) match {
-      case Some(l: Long) => (0, l, 0.0, "")
-      case Some(d: Double) => (1, 0L, d, "")
-      case Some(s: String) => (2, 0L, 0.0, s)
-      case _ => (3, 0L, 0.0, "")
-    })(Ordering.Tuple4(Ordering.Int, Ordering.Long,
-      Ordering.Double.TotalOrdering, utf8Order)).map(_.file).toIndexedSeq
-
-  /** The rows of `version` living in files whose `pk` range could hold a
-    * value of `keys`' `pk` column — the READ-side twin of merge's
-    * changed-tile discovery, for consumers that need the current rows of
-    * a batch-sized key set without scanning the table (e.g. the additive
-    * streaming folds: old count + delta for the batch's keys only). Any
-    * row of `version` whose `pk` appears in `keys` is guaranteed
-    * included (same cutpoint math as the merge that placed it); rows in
-    * untouched tiles are pruned. Falls back to the full version read
-    * when stats are absent or the layout is not range-disjoint on `pk`.
-    * The key→tile assignment is one metadata-scale action over `keys`
-    * (assumed batch-sized — the same contract as merge's update set).
-    */
-  def readMatchingTiles(spark: SparkSession, root: String, version: String,
-      pk: String, keys: DataFrame): DataFrame =
-    readMatchingTilesWithSet(spark, root, version, pk, keys)._1
-
-  /** [[readMatchingTiles]] that also exposes the tile-id set it computed
-    * (None on the stats-less fallback). A caller that immediately
-    * [[merge]]s the SAME key set against the SAME version can hand the
-    * set back (`knownChangedTiles`) and spare merge its own identical
-    * key→tile discovery job — the additive-fold commit pattern.
-    */
-  private[graft] def readMatchingTilesWithSet(spark: SparkSession,
-      root: String, version: String, pk: String,
-      keys: DataFrame): (DataFrame, Option[Set[Int]]) = {
-    val stats = readStatsVersion(root, version)
-    val bounds = keyBoundaries(root, version, pk)
-    (stats, bounds) match {
-      case (Some(st), Some(bs)) if bs.nonEmpty && rangeDisjoint(st, pk) =>
-        val hit = graft.Trace(s"read:tiles $root $version") {
-          keys.select(tileId(spark, col(pk), bs).as("__tile"))
-            .distinct().collect().map(_.getInt(0)).toSet }
-        val files = filesInTileOrder(st, pk).zipWithIndex
-          .collect { case (f, i) if hit(i) => f }
-        (readFiles(spark, root, version, files), Some(hit))
-      case _ => (readVersion(spark, root, version), None)
-    }
-  }
-
-  /** Driver-side twin of [[readMatchingTilesWithSet]] for a key set that
-    * is ALREADY on the driver (bounded by the caller's batch-scale
-    * contract — the same bound readMatchingTiles' key collect assumes):
-    * the tile-id set comes from a binary search of the version's boundary
-    * cutpoints, so the key→tile discovery costs ZERO Spark jobs. Returns
-    * the pruned frame plus the hit set; None when the version lacks
-    * stats/boundaries, the layout is not range-disjoint on `pk`, or a key
-    * falls outside the cutpoints' type family — callers then run the
-    * distributed discovery exactly as before. Tile semantics match
-    * [[tileId]]'s kernel bit for bit: id = count of boundaries at or
-    * below the key; nulls land in tile 0.
-    */
-  private[graft] def readMatchingTilesLocal(spark: SparkSession,
-      root: String, version: String, pk: String,
-      keys: Iterable[Any]): Option[(DataFrame, Set[Int])] = {
-    val stats = readStatsVersion(root, version)
-    val bounds = keyBoundaries(root, version, pk)
-    (stats, bounds) match {
-      case (Some(st), Some(bs)) if bs.nonEmpty && rangeDisjoint(st, pk) =>
-        val hit = tileIdsLocal(bs, keys)
-        hit.map { h =>
-          val files = filesInTileOrder(st, pk).zipWithIndex
-            .collect { case (f, i) if h(i) => f }
-          (readFiles(spark, root, version, files), h)
-        }
-      case _ => None
-    }
-  }
-
-  /** Tile ids of driver-side keys against sorted cutpoints — the scalar
-    * mirror of [[tileId]] (count of boundaries `<=` key, one comparison
-    * family at a time). None when any key is outside the boundaries' type
-    * family (the caller must fall back — guessing a coercion here could
-    * diverge from the codegen kernel's).
-    */
-  private def tileIdsLocal(bs: Seq[Any], keys: Iterable[Any]): Option[Set[Int]] = {
-    def upperBound[T](a: Array[T], k: T)(implicit ord: Ordering[T]): Int = {
-      var lo = 0; var hi = a.length
-      while (lo < hi) {
-        val m = (lo + hi) >>> 1
-        if (ord.lteq(a(m), k)) lo = m + 1 else hi = m
-      }
-      lo
-    }
-    bs.head match {
-      case _: Long if bs.forall(_.isInstanceOf[Long]) &&
-          keys.forall(k => k == null || k.isInstanceOf[Long] ||
-            k.isInstanceOf[Int]) =>
-        val a = bs.map(_.asInstanceOf[Long]).toArray
-        Some(keys.iterator.map {
-          case null => 0
-          case i: Int => upperBound(a, i.toLong)
-          case l => upperBound(a, l.asInstanceOf[Long])
-        }.toSet)
-      case _: String if bs.forall(_.isInstanceOf[String]) &&
-          keys.forall(k => k == null || k.isInstanceOf[String]) =>
-        val a = bs.map(_.asInstanceOf[String]).toArray
-        Some(keys.iterator.map {
-          case null => 0
-          case s => upperBound(a, s.asInstanceOf[String])(utf8Order)
-        }.toSet)
-      case _ => None
-    }
-  }
-
   /** Whether a [[merge]] into `root`'s version `v` would take the
-    * tile-local path on `pk`: stats present, boundaries derivable, and
-    * the file layout range-disjoint. Callers choosing between merge and
+    * tile-local path on `pk`: the version's layout is tiled on `pk`
+    * ([[Layout.tiles]]). Callers choosing between merge and
     * a cheaper full-rewrite strategy (e.g. the CDC dim sink) should gate
     * on this — a non-tile-mergeable table (hash layout, or z-order whose
     * per-file pk ranges overlap) would otherwise pay merge's fallback
     * full rewrite PLUS a stats pass every batch.
     */
   def tileMergeable(root: String, version: String, pk: String): Boolean =
-    readStatsVersion(root, version).exists(st =>
-      keyBoundaries(root, version, pk).exists(_.nonEmpty) &&
-        rangeDisjoint(st, pk))
-
-  /** True when the per-file [min, max] ranges on `key` are strictly
-    * disjoint in min-order — the layout property the tile-local merge
-    * path depends on (with a unique pk, equal adjacent boundaries would
-    * mean one value in two files, so strict comparison is exact). Any
-    * undecodable value fails safe.
-    */
-  private def rangeDisjoint(stats: Seq[FileStats], key: String): Boolean = {
-    val ranges = stats.map(fs => (fs.mins.get(key).flatMap(decode),
-      fs.maxs.get(key).flatMap(decode)))
-    if (ranges.exists(r => r._1.isEmpty || r._2.isEmpty)) false
-    else {
-      val sorted = ranges.map(r => (r._1.get, r._2.get))
-        .sortWith((a, b) => lessThan(a._1, b._1))
-      sorted.zip(sorted.drop(1)).forall { case ((_, aMax), (bMin, _)) =>
-        lessThan(aMax, bMin)
-      }
-    }
-  }
-
-  private def lessThan(a: Any, b: Any): Boolean = (a, b) match {
-    case (x: Long, y: Long) => x < y
-    case (x: Double, y: Double) => x < y
-    case (x: String, y: String) => utf8Order.lt(x, y)
-    case _ => false
-  }
+    layout(root, version).exists(_.tiles(pk).isDefined)
 
   private def copyFiles(root: String, vFrom: String, dstDir: String,
       files: Seq[String]): Unit =
@@ -877,19 +701,6 @@ object SnapshotTable {
         java.nio.file.Paths.get(s"$dstDir/$f"),
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
     }
-
-  private def statsHeader(root: String, version: String): Seq[String] = {
-    val p = java.nio.file.Paths.get(s"$root/$version/_STATS")
-    java.nio.file.Files.readString(p).split("\n").head.split("\t").toSeq
-  }
-
-  /** Raw `_STATS` body lines of a version, restricted to `files`. */
-  private def statsLines(root: String, version: String,
-      files: Set[String]): Seq[String] = {
-    val p = java.nio.file.Paths.get(s"$root/$version/_STATS")
-    java.nio.file.Files.readString(p).split("\n").toSeq.drop(1)
-      .filter(l => l.nonEmpty && files(l.split("\t").head))
-  }
 
   private def writeStatsLines(dir: String, cols: Seq[String],
       lines: Seq[String]): Unit = {
@@ -1452,34 +1263,75 @@ object SnapshotTable {
       mins: Map[String, String], maxs: Map[String, String],
       count: Option[Long] = None, fingerprint: Option[String] = None)
 
-  /** Typed, order-preserving-per-type encoding for stats values. Strings
-    * are Base64-wrapped (raw strings could contain the field separator);
-    * unknown runtime types become the non-prunable marker.
+  /** A stats or query value tagged with its type family — the typed half
+    * of the format's ONE key order. Integral widths share the long
+    * family and float/double the double family, as in the stats encoding;
+    * [[compare]] orders values within a family and refuses across them.
     */
-  private def encode(v: Any): String = v match {
-    case null => "X"
-    case l: Long => s"L:$l"
-    case i: Int => s"L:${i.toLong}"
-    case s: Short => s"L:${s.toLong}"
-    case b: Byte => s"L:${b.toLong}"
-    case d: Double => s"D:$d"
-    case f: Float => s"D:${f.toDouble}"
-    case s: String => "S:" + java.util.Base64.getEncoder
-      .encodeToString(s.getBytes("UTF-8"))
-    case _ => "X"
+  private sealed trait Key { def value: Any }
+  private final case class LongKey(value: Long) extends Key
+  private final case class DoubleKey(value: Double) extends Key
+  private final case class StringKey(value: String) extends Key
+
+  /** The key of a runtime value; None for null and unsupported types. */
+  private def key(v: Any): Option[Key] = v match {
+    case l: Long => Some(LongKey(l))
+    case i: Int => Some(LongKey(i.toLong))
+    case s: Short => Some(LongKey(s.toLong))
+    case b: Byte => Some(LongKey(b.toLong))
+    case d: Double => Some(DoubleKey(d))
+    case f: Float => Some(DoubleKey(f.toDouble))
+    case s: String => Some(StringKey(s))
+    case _ => None
   }
 
-  /** Compare an encoded stats value against a query value of the same
-    * family. None = not comparable → caller must keep the file.
+  /** Typed, order-preserving-per-type encoding for stats values. Strings
+    * are Base64-wrapped (raw strings could contain the field separator);
+    * null and unknown runtime types become the non-prunable marker.
     */
-  private def cmp(encoded: String, v: Any): Option[Int] = (encoded.take(2), v) match {
-    case ("L:", q: Long) => Some(encoded.drop(2).toLong.compare(q))
-    case ("L:", q: Int) => Some(encoded.drop(2).toLong.compare(q.toLong))
-    case ("D:", q: Double) => Some(encoded.drop(2).toDouble.compare(q))
-    case ("S:", q: String) =>
-      Some(utf8Order.compare(new String(
-        java.util.Base64.getDecoder.decode(encoded.drop(2)), "UTF-8"), q))
+  private def encode(v: Any): String = key(v) match {
+    case Some(LongKey(l)) => s"L:$l"
+    case Some(DoubleKey(d)) => s"D:$d"
+    case Some(StringKey(s)) => "S:" + java.util.Base64.getEncoder
+      .encodeToString(s.getBytes("UTF-8"))
+    case None => "X"
+  }
+
+  private def decode(encoded: String): Option[Key] = encoded.take(2) match {
+    case "L:" => Some(LongKey(encoded.drop(2).toLong))
+    case "D:" => Some(DoubleKey(encoded.drop(2).toDouble))
+    case "S:" => Some(StringKey(new String(
+      java.util.Base64.getDecoder.decode(encoded.drop(2)), "UTF-8")))
     case _ => None
+  }
+
+  /** The one key order of this format, and Spark's: doubles compare as
+    * Spark SQL does (NaN largest, -0.0 equals 0.0 — the `search_sorted`
+    * kernel's rule), strings by unsigned UTF-8 bytes (UTF8String order,
+    * which parquet's binary footer stats share; Java's `String.compareTo`
+    * compares UTF-16 code units and disagrees on supplementary-plane
+    * characters). None across families — callers must then keep a file,
+    * never guess a coercion.
+    */
+  private def compare(a: Key, b: Key): Option[Int] = (a, b) match {
+    case (LongKey(x), LongKey(y)) => Some(java.lang.Long.compare(x, y))
+    case (DoubleKey(x), DoubleKey(y)) =>
+      Some(graft.expressions.SearchSorted.cmpDouble(x, y))
+    case (StringKey(x), StringKey(y)) =>
+      Some(UTF8String.fromString(x).binaryCompare(UTF8String.fromString(y)))
+    case _ => None
+  }
+
+  private def lt(a: Key, b: Key): Boolean = compare(a, b).exists(_ < 0)
+
+  /** Count of `sorted` entries at or below `k` (all one family with it). */
+  private def upperBound(sorted: IndexedSeq[Key], k: Key): Int = {
+    var lo = 0; var hi = sorted.length
+    while (lo < hi) {
+      val m = (lo + hi) >>> 1
+      if (compare(sorted(m), k).exists(_ <= 0)) lo = m + 1 else hi = m
+    }
+    lo
   }
 
   /** Build `_STATS` for a freshly written version directory: one read of
@@ -1557,7 +1409,7 @@ object SnapshotTable {
   /** Per-file stats lines from the parquet FOOTERS alone — no Spark job.
     *
     * Exactness contract (the reason for the strict whitelist): stats
-    * feed correctness-relevant pruning (readMatchingTiles' guarantee,
+    * feed correctness-relevant pruning ([[plan]]'s file and tile choice,
     * keyBoundaries' tile cutpoints), so footer values must equal what
     * the scan-path `min`/`max` aggregation would produce, bit for bit.
     *  - signed INT32/INT64 (no logical annotation or signed int
@@ -1659,182 +1511,240 @@ object SnapshotTable {
     */
   def statsMinLong(root: String, version: String,
       column: String): Option[Long] =
-    readStatsVersion(root, version).flatMap { sts =>
-      val vals = sts.map(_.mins.get(column).flatMap(decode))
-      if (vals.isEmpty || vals.exists(v => !v.exists(_.isInstanceOf[Long])))
-        None
-      else Some(vals.map(_.get.asInstanceOf[Long]).min)
-    }
+    readStatsVersion(root, version)
+      .flatMap(sts => allLongs(sts.map(_.mins.get(column)))).map(_.min)
 
   /** Max over all files of |min|/|max| decoded LONG stats on `col` —
     * the metadata form of a magnitude-bound guard. None as above.
     */
   def statsMaxAbsLong(root: String, version: String,
       column: String): Option[Long] =
-    readStatsVersion(root, version).flatMap { sts =>
-      val vals = sts.flatMap(fs =>
-        Seq(fs.mins.get(column).flatMap(decode),
-          fs.maxs.get(column).flatMap(decode)))
-      if (vals.isEmpty || vals.exists(v => !v.exists(_.isInstanceOf[Long])))
-        None
-      else Some(vals.map(v => math.abs(v.get.asInstanceOf[Long])).max)
-    }
+    readStatsVersion(root, version)
+      .flatMap(sts => allLongs(sts.flatMap(fs =>
+        Seq(fs.mins.get(column), fs.maxs.get(column)))))
+      .map(_.map(math.abs).max)
+
+  /** The decoded longs of `encoded` — None when it is empty or any entry
+    * is not a decodable long.
+    */
+  private def allLongs(encoded: Seq[Option[String]]): Option[Seq[Long]] = {
+    val longs = encoded.flatMap(_.flatMap(decode))
+      .collect { case LongKey(l) => l }
+    if (encoded.isEmpty || longs.size != encoded.size) None else Some(longs)
+  }
 
   /** The published version's per-file stats, if recorded. */
   def readStats(root: String): Option[Seq[FileStats]] =
     latestVersion(root).flatMap(v => readStatsVersion(root, v))
 
   /** Per-file stats of a specific retained version, if recorded. */
-  def readStatsVersion(root: String, version: String): Option[Seq[FileStats]] = {
+  def readStatsVersion(root: String, version: String): Option[Seq[FileStats]] =
+    layout(root, version).map(_.stats)
+
+  /** One version's `_STATS`, read and parsed once per [[plan]], [[merge]]
+    * or [[tileMergeable]] call: the header, the raw body lines (merge
+    * carries an untouched file's line verbatim) and the parsed per-file
+    * stats, with the key orders derived from them.
+    */
+  private final class Layout(val header: Seq[String], val lines: Seq[String]) {
+    val stats: Seq[FileStats] = lines.map { line =>
+      val f = line.split("\t")
+      val tail = f.drop(1 + 2 * header.size)
+      FileStats(f(0),
+        header.zipWithIndex.map { case (c, i) => c -> f(1 + 2 * i) }.toMap,
+        header.zipWithIndex.map { case (c, i) => c -> f(2 + 2 * i) }.toMap,
+        tail.headOption.map(_.toLong),
+        tail.lift(1).filter(_ != "X"))
+    }
+
+    def linesOf(files: Set[String]): Seq[String] =
+      lines.zip(stats).collect { case (l, fs) if files(fs.file) => l }
+
+    /** (file, min, max) on `column` in ascending min order — None unless
+      * every file has [min, max] stats on `column`, all in one family.
+      */
+    def byMin(column: String): Option[IndexedSeq[(String, Key, Key)]] = {
+      val ranges = stats.map(fs => for {
+        lo <- fs.mins.get(column).flatMap(decode)
+        hi <- fs.maxs.get(column).flatMap(decode)
+      } yield (fs.file, lo, hi))
+      val known = ranges.flatten
+      val oneFamily = known.forall { case (_, lo, hi) =>
+        compare(lo, known.head._2).isDefined &&
+          compare(hi, known.head._2).isDefined
+      }
+      if (known.size < ranges.size || !oneFamily) None
+      else Some(known.sortWith((a, b) => lt(a._2, b._2)).toIndexedSeq)
+    }
+
+    /** The pk TILE order, when the layout has one: at least two files
+      * whose [min, max] ranges on `pk` are strictly disjoint (with a
+      * unique pk, equal adjacent bounds would be one value in two files).
+      * Returns the files by ascending min and the interior cutpoints —
+      * tile i holds `cut(i-1) <= pk < cut(i)`, as [[tileId]] assigns.
+      * Merge rewrites such a layout tile-locally; hash or z-order layouts
+      * and missing stats have no tiles.
+      */
+    def tiles(pk: String): Option[(IndexedSeq[String], IndexedSeq[Key])] =
+      byMin(pk)
+        .filter(fs => fs.size >= 2 &&
+          fs.zip(fs.tail).forall { case (a, b) => lt(a._3, b._2) })
+        .map(fs => (fs.map(_._1), fs.tail.map(_._2)))
+  }
+
+  private def layout(root: String, version: String): Option[Layout] = {
     val p = java.nio.file.Paths.get(s"$root/$version/_STATS")
     if (!java.nio.file.Files.exists(p)) None
     else {
       val lines = java.nio.file.Files.readString(p).split("\n").toSeq
-      val cols = lines.head.split("\t").toSeq
-      Some(lines.tail.filter(_.nonEmpty).map { line =>
-        val f = line.split("\t")
-        val tail = f.drop(1 + 2 * cols.size)
-        FileStats(f(0),
-          cols.zipWithIndex.map { case (c, i) => c -> f(1 + 2 * i) }.toMap,
-          cols.zipWithIndex.map { case (c, i) => c -> f(2 + 2 * i) }.toMap,
-          tail.headOption.map(_.toLong),
-          tail.lift(1).filter(_ != "X"))
-      })
+      Some(new Layout(lines.head.split("\t").toSeq,
+        lines.tail.filter(_.nonEmpty)))
     }
   }
 
-  /** Files of `stats` whose [min, max] on `column` intersects
-    * [lower, upper]; files without comparable stats are kept (pruning may
-    * only skip PROVABLY irrelevant files).
+  /** A pruning predicate for [[plan]]. Pruning is file-granular: a plan
+    * keeps every file that can hold a matching row (a file without
+    * comparable stats is always kept), so callers still apply their row
+    * predicate.
     */
-  private def keptByRange(stats: Seq[FileStats], column: String,
-      lower: Any, upper: Any): Seq[FileStats] =
-    stats.filter { fs =>
-      val below = fs.maxs.get(column).flatMap(cmp(_, lower)).exists(_ < 0)
-      val above = fs.mins.get(column).flatMap(cmp(_, upper)).exists(_ > 0)
-      !(below || above)
+  sealed trait Prune
+  object Prune {
+
+    /** Rows whose pk is among `frame`'s pk values — a batch-sized key
+      * set, the same contract as merge's update set. The key-to-tile
+      * discovery is one metadata-scale job over `frame`, or, when `local`
+      * holds the same keys on the driver in the cutpoints' family, a
+      * driver-side binary search with no job. Prunes only a layout with
+      * tiles on pk; any other plan is the whole version.
+      */
+    final case class Keys(frame: DataFrame,
+        local: Option[Iterable[Any]] = None) extends Prune
+
+    /** Rows with `lo <= column <= hi`. */
+    final case class Range(column: String, lo: Any, hi: Any) extends Prune
+
+    /** Rows whose string `column` lies in ANY of the inclusive `ranges`
+      * (batch-scale by contract, like [[Keys]]); zero ranges hold zero
+      * rows.
+      */
+    final case class Ranges(column: String,
+        ranges: Seq[(String, String)]) extends Prune
+
+    /** Rows with `column` OUTSIDE [lo, hi] — the complement prune: a
+      * file is skipped only when its stats prove every row lies inside
+      * the band (the residual table's active-set discovery: tiles whose
+      * |r| is provably under the push threshold never load).
+      */
+    final case class Outside(column: String, lo: Any, hi: Any) extends Prune
+  }
+
+  /** What a pruned read of `version` touches.
+    *  - `files`: the kept data files; None reads the whole version
+    *    directory (no stats to prune with, or a [[Prune.Keys]] prune of a
+    *    layout without tiles).
+    *  - `tiles`: the kept files' indices in the pk tile order
+    *    ([[Layout.tiles]]) — what [[merge]]'s `knownPlan` consumes. None
+    *    when the layout has no tiles on pk.
+    */
+  final case class Plan(version: String, files: Option[Seq[String]],
+      tiles: Option[Set[Int]]) {
+
+    /** The union of two plans of one version — what a caller that read
+      * through both has touched. An unknown side makes the union unknown.
+      */
+    def ++(o: Plan): Plan = {
+      require(version == o.version, s"plans of $version and ${o.version}")
+      Plan(version, for { a <- files; b <- o.files } yield (a ++ b).distinct,
+        for { a <- tiles; b <- o.tiles } yield a ++ b)
+    }
+  }
+
+  /** THE pruning planner: which files of `root`'s `version` can hold the
+    * rows `prune` selects, and their tile ids in `pk`'s tile order. One
+    * `_STATS` read; no Spark job, except a [[Prune.Keys]] discovery that
+    * cannot run on the driver. Read the result with [[readFiles]].
+    */
+  def plan(spark: SparkSession, root: String, version: String, pk: String,
+      prune: Prune): Plan =
+    layout(root, version) match {
+      case Some(l) => planOn(spark, root, version, pk, prune, l)
+      case None => prune match {
+        case Prune.Ranges(_, rs) if rs.isEmpty => Plan(version, Some(Nil), None)
+        case _ => Plan(version, None, None)
+      }
     }
 
-  /** The COMPLEMENT prune: files that can hold a row OUTSIDE
-    * [lower, upper] — i.e. skip only files whose stats prove every row
-    * lies inside the band. The active-set discovery read of a residual
-    * table (PLANS.md "incremental residual-push"): tiles whose |r| is
-    * provably under the push threshold never load. Falls back to the
-    * full version when stats are missing; files with missing min/max on
-    * `column` are conservatively KEPT (non-prunable). Like
-    * [[readPrunedVersion]], the result is file-granular — callers still
-    * apply the row predicate.
-    */
-  def readOutsideRange(spark: SparkSession, root: String, version: String,
-      column: String, lower: Any, upper: Any): DataFrame =
-    readOutsideRangeWithTiles(spark, root, version, column, lower, upper,
-      column)._1
-
-  /** [[readOutsideRange]] that also reports WHICH tiles (file indices in
-    * `pk`'s tile order) survived the complement prune — a caller that
-    * later merges rows discovered here can fold the set into merge's
-    * `knownChangedTiles` hint instead of re-running discovery. The set is
-    * None when stats are absent or the layout is not range-disjoint on
-    * `pk` (the frame is then the conservative full/kept read as before).
-    */
-  private[graft] def readOutsideRangeWithTiles(spark: SparkSession,
-      root: String, version: String, column: String, lower: Any, upper: Any,
-      pk: String): (DataFrame, Option[Set[Int]]) =
-    readStatsVersion(root, version) match {
-      case Some(stats) =>
-        val kept = stats.filterNot { fs =>
-          val minIn = fs.mins.get(column).flatMap(cmp(_, lower)).exists(_ >= 0)
-          val maxIn = fs.maxs.get(column).flatMap(cmp(_, upper)).exists(_ <= 0)
-          minIn && maxIn
-        }.map(_.file)
-        val tiles =
-          if (rangeDisjoint(stats, pk)) {
-            val keptSet = kept.toSet
-            Some(filesInTileOrder(stats, pk).zipWithIndex
-              .collect { case (f, i) if keptSet(f) => i }.toSet)
-          } else None
-        (readFiles(spark, root, version, kept), tiles)
-      case None => (readVersion(spark, root, version), None)
+  private def planOn(spark: SparkSession, root: String, version: String,
+      pk: String, prune: Prune, l: Layout): Plan = {
+    val tiled = l.tiles(pk)
+    def cmp(a: Option[Key], b: Option[Key]): Option[Int] =
+      for { x <- a; y <- b; c <- compare(x, y) } yield c
+    // the files whose decoded [min, max] on `column` pass `test`
+    def keep(column: String)(test: (Option[Key], Option[Key]) => Boolean) = {
+      val kept = l.stats.filter(fs => test(fs.mins.get(column).flatMap(decode),
+        fs.maxs.get(column).flatMap(decode))).map(_.file)
+      val keptSet = kept.toSet
+      Plan(version, Some(kept), tiled.map { case (files, _) =>
+        files.indices.filter(i => keptSet(files(i))).toSet })
     }
-
-  /** The MULTI-RANGE prune: files whose [min, max] on `column` intersects
-    * ANY of `ranges` — the "all out-edges of a batch's touched sources"
-    * read the incremental residual-push wrapper needs (PLANS.md): each
-    * touched source contributes one key-prefix range, and a table
-    * clustered by that key loads only the tiles holding those sources'
-    * rows. String-typed because the one consumer probes string sort keys;
-    * files with missing/other-typed stats are conservatively KEPT.
-    *
-    * Driver cost: ranges sort once (the caller's range list is
-    * batch-scale by contract — the same bound as [[readMatchingTiles]]'
-    * key-to-tile collect), then each file binary-searches the sorted
-    * lowers with a prefix-max over uppers: files·log(ranges), metadata
-    * work at any table size. Like every pruned read, the result is
-    * file-granular — callers still apply the row predicate.
-    */
-  def readPrunedRanges(spark: SparkSession, root: String, version: String,
-      column: String, ranges: Seq[(String, String)]): DataFrame =
-    if (ranges.isEmpty) // zero ranges hold zero rows, with or without stats
-      readVersion(spark, root, version).filter(lit(false))
-    else readStatsVersion(root, version) match {
-      case Some(stats) =>
-        val sorted = ranges.sortBy(_._1)(utf8Order)
-        val los = sorted.map(_._1).toArray
-        // prefMaxHi(j) = max upper among sorted(0..j) — lets the
-        // "any range with lo <= fmax has hi >= fmin" test run on the
-        // binary-searched prefix in O(1)
-        val prefMaxHi = sorted.map(_._2)
-          .scanLeft("")(utf8Order.max).drop(1).toArray
-        val kept = stats.filter { fs =>
-          (fs.mins.get(column).flatMap(decode),
-            fs.maxs.get(column).flatMap(decode)) match {
-            case (Some(fmin: String), Some(fmax: String)) =>
-              var lo = 0; var hi = los.length - 1; var j = -1
-              while (lo <= hi) {
-                val m = (lo + hi) >>> 1
-                if (utf8Order.lteq(los(m), fmax)) { j = m; lo = m + 1 }
-                else hi = m - 1
-              }
-              j >= 0 && utf8Order.gteq(prefMaxHi(j), fmin)
-            case _ => true // non-prunable stats: keep (pruning may only
-              // skip PROVABLY irrelevant files)
-          }
+    prune match {
+      case Prune.Keys(frame, local) => tiled match {
+        case None => Plan(version, None, None)
+        case Some((files, cuts)) =>
+          val hit = local.flatMap(localTiles(cuts, _)).getOrElse(
+            graft.Trace(s"plan:tiles $root $version") {
+              frame.select(tileId(spark, col(pk), cuts.map(_.value))
+                .as("__tile")).distinct().collect().map(_.getInt(0)).toSet })
+          Plan(version, Some(files.indices.filter(hit).map(files)), Some(hit))
+      }
+      case Prune.Range(column, lo, hi) => keep(column) { (mn, mx) =>
+        !(cmp(mx, key(lo)).exists(_ < 0) || cmp(mn, key(hi)).exists(_ > 0)) }
+      case Prune.Outside(column, lo, hi) => keep(column) { (mn, mx) =>
+        !(cmp(mn, key(lo)).exists(_ >= 0) && cmp(mx, key(hi)).exists(_ <= 0)) }
+      case Prune.Ranges(column, ranges) =>
+        // ranges sort once; each file then binary-searches the sorted
+        // lowers, and a prefix max over the uppers answers "does any range
+        // starting at or below the file's max end at or above its min" in
+        // O(1): files·log(ranges) driver work at any table size
+        val sorted = ranges.map { case (a, b) => (StringKey(a), StringKey(b)) }
+          .sortWith((x, y) => lt(x._1, y._1))
+        val los: IndexedSeq[Key] = sorted.map(_._1).toIndexedSeq
+        val maxHi = sorted.map(_._2).scanLeft(StringKey(""))((m, h) =>
+          if (lt(m, h)) h else m).tail.toIndexedSeq
+        keep(column) {
+          case (Some(mn: StringKey), Some(mx: StringKey)) =>
+            val j = upperBound(los, mx) - 1
+            j >= 0 && !lt(maxHi(j), mn)
+          case _ => ranges.nonEmpty // other stats: keep
         }
-        readFiles(spark, root, version, kept.map(_.file))
-      case None => readVersion(spark, root, version)
     }
+  }
 
-  /** A frame over exactly `files` of version `v` (schema-preserving empty
-    * frame when none survive pruning).
+  /** Tile ids of driver-side keys — the scalar mirror of [[tileId]]'s
+    * kernel, bit for bit: the count of cutpoints at or below the key,
+    * nulls in tile 0. None when a key is outside the cutpoints' family
+    * (a guessed coercion could diverge from the kernel's).
     */
-  private def readFiles(spark: SparkSession, root: String, v: String,
-      files: Seq[String]): DataFrame =
-    if (files.isEmpty) readVersion(spark, root, v).filter(lit(false))
-    else GraftParquet.read(spark, files.map(f => s"$root/$v/$f"): _*)
+  private def localTiles(cuts: IndexedSeq[Key],
+      keys: Iterable[Any]): Option[Set[Int]] = {
+    val ids = keys.iterator.map {
+      case null => Some(0)
+      case k => key(k).filter(compare(_, cuts.head).isDefined)
+        .map(upperBound(cuts, _))
+    }.toSeq
+    if (ids.forall(_.isDefined)) Some(ids.flatten.toSet) else None
+  }
 
-  /** Read the latest snapshot restricted to files whose [min, max] on
-    * `column` intersects [lower, upper] (inclusive). Falls back to the
-    * full scan when no stats exist. The returned frame is NOT yet
-    * filtered — skipping is file-granular; callers apply their row
-    * predicate as usual.
+  /** The frame of a [[plan]]: exactly its files (a schema-preserving
+    * empty frame when none survive), or the whole version.
     */
-  def readPruned(spark: SparkSession, root: String, column: String,
-      lower: Any, upper: Any): Option[DataFrame] =
-    latestVersion(root).map(v =>
-      readPrunedVersion(spark, root, v, column, lower, upper))
-
-  /** [[readPruned]] against an explicit version — consumers that read a
-    * table several ways inside one derivation pin every read to ONE
-    * captured head instead of re-resolving `_LATEST` per call (a
-    * concurrent writer's commit between calls would otherwise mix
-    * versions within a single result).
-    */
-  def readPrunedVersion(spark: SparkSession, root: String, version: String,
-      column: String, lower: Any, upper: Any): DataFrame =
-    readStatsVersion(root, version) match {
-      case Some(stats) => readFiles(spark, root, version,
-        keptByRange(stats, column, lower, upper).map(_.file))
-      case None => readVersion(spark, root, version)
+  def readFiles(spark: SparkSession, root: String, plan: Plan): DataFrame =
+    plan.files match {
+      case None => readVersion(spark, root, plan.version)
+      case Some(fs) if fs.isEmpty =>
+        readVersion(spark, root, plan.version).filter(lit(false))
+      case Some(fs) =>
+        GraftParquet.read(spark, fs.map(f => s"$root/${plan.version}/$f"): _*)
     }
 
   /** Dim point-lookup (reference: `RT/utils/DimUtil.java:22-27`, one
@@ -1848,41 +1758,37 @@ object SnapshotTable {
   def pointLookup(spark: SparkSession, root: String, pkCol: String,
       value: Any): Option[DataFrame] =
     latestVersion(root).map { v =>
-      val frame = readStatsVersion(root, v) match {
-        case Some(stats) =>
-          val ranged = keptByRange(stats, pkCol, value, value).map(_.file)
-          val kept = readBlooms(root, v) match {
-            case Some(bl) if bl.cols.contains(pkCol) =>
-              // normalize the probe against the column's sidecar family
-              // first: a cross-class probe (e.g. a String against a
-              // long column) bypasses the bloom — false keeps are safe,
-              // wrong-domain hashing that skips everything is not.
-              // A tagged "O" (other-typed) column bypasses outright —
-              // no canonical probe domain exists. Sidecars written
-              // before the family tag bypass too: inferring the family
-              // from the PROBE's runtime class would reintroduce the
-              // wrong-domain skip for exactly the cross-class probes the
-              // tag exists to catch (the build's family is unknowable
-              // from a legacy sidecar, and bypass only ever KEEPS files).
-              // The legacy bypass is correctness-safe but a silent
-              // pruning regression for pre-tag tables — surface it once
-              // per root so the operator knows a republish restores it.
-              val family = bl.fams.get(pkCol)
-              if (family.isEmpty && legacyBloomWarned.add(root))
-                org.slf4j.LoggerFactory.getLogger(getClass).warn(
-                  s"$root: _BLOOM sidecar predates the type-family tag; " +
-                    "bloom pruning is bypassed (range pruning still " +
-                    "applies). Republish the table to regain it.")
-              family.flatMap(bloomProbe(_, value)) match {
-                case Some(p) => ranged.filter(f => bl.mayContain(pkCol, f, p))
-                case None => ranged
-              }
-            case _ => ranged
+      val ranged = plan(spark, root, v, pkCol, Prune.Range(pkCol, value, value))
+      val kept = ranged.files.map(files => readBlooms(root, v) match {
+        case Some(bl) if bl.cols.contains(pkCol) =>
+          // normalize the probe against the column's sidecar family
+          // first: a cross-class probe (e.g. a String against a
+          // long column) bypasses the bloom — false keeps are safe,
+          // wrong-domain hashing that skips everything is not.
+          // A tagged "O" (other-typed) column bypasses outright —
+          // no canonical probe domain exists. Sidecars written
+          // before the family tag bypass too: inferring the family
+          // from the PROBE's runtime class would reintroduce the
+          // wrong-domain skip for exactly the cross-class probes the
+          // tag exists to catch (the build's family is unknowable
+          // from a legacy sidecar, and bypass only ever KEEPS files).
+          // The legacy bypass is correctness-safe but a silent
+          // pruning regression for pre-tag tables — surface it once
+          // per root so the operator knows a republish restores it.
+          val family = bl.fams.get(pkCol)
+          if (family.isEmpty && legacyBloomWarned.add(root))
+            org.slf4j.LoggerFactory.getLogger(getClass).warn(
+              s"$root: _BLOOM sidecar predates the type-family tag; " +
+                "bloom pruning is bypassed (range pruning still " +
+                "applies). Republish the table to regain it.")
+          family.flatMap(bloomProbe(_, value)) match {
+            case Some(p) => files.filter(f => bl.mayContain(pkCol, f, p))
+            case None => files
           }
-          readFiles(spark, root, v, kept)
-        case None => readVersion(spark, root, v)
-      }
-      frame.filter(col(pkCol) === lit(value))
+        case _ => files
+      })
+      readFiles(spark, root, Plan(v, kept, None))
+        .filter(col(pkCol) === lit(value))
     }
 
   /** CHANGE DATA FEED between two retained versions (the Delta
@@ -1916,20 +1822,15 @@ object SnapshotTable {
     require(oldDf.schema == newDf.schema,
       s"diff requires identical schemas; $vOld vs $vNew differ")
     val kept = diffFiles(root, vOld, vNew)
-    def side(df: DataFrame, version: String, files: Option[Seq[String]]) =
-      files match {
-        case Some(Nil) => df.filter(lit(false))
-        case Some(fs) => spark.read.schema(df.schema)
-          .parquet(fs.map(f => s"$root/$version/$f"): _*)
-        case None => df
-      }
+    def side(version: String, files: Option[Seq[String]]) =
+      readFiles(spark, root, Plan(version, files, None))
     val dataCols = oldDf.columns.toSeq.map(col)
     def keyed(df: DataFrame, h: String, row: String) =
       df.select(col(pk).as("__pk"),
         xxhash64(dataCols: _*).as(h), struct(dataCols: _*).as(row))
     val j = graft.CacheRegistry.persist(
-      keyed(side(oldDf, vOld, kept.map(_._1)), "__oh", "__orow")
-        .join(keyed(side(newDf, vNew, kept.map(_._2)), "__nh", "__nrow"),
+      keyed(side(vOld, kept.map(_._1)), "__oh", "__orow")
+        .join(keyed(side(vNew, kept.map(_._2)), "__nh", "__nrow"),
           Seq("__pk"), "full_outer"))
     val changed = j.filter(col("__oh").isNotNull && col("__nh").isNotNull &&
       col("__oh") =!= col("__nh"))

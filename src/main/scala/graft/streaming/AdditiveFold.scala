@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
   *    version) from self-reading its own committed output into a
   *    double-counted fold that merge would then short-circuit anyway;
   *  - the previous-table side is tile-pruned to the batch's keys
-  *    ([[SnapshotTable.readMatchingTiles]] — the changed-tile discovery
+  *    (a [[SnapshotTable.Prune.Keys]] plan — the changed-tile discovery
   *    merge itself runs), so the fold's join is batch-sized on BOTH
   *    sides: per-batch cost stays ∝ batch at any table size, which a
   *    plain left join against the full table would not (the preserved
@@ -37,7 +37,7 @@ object AdditiveFold {
     * `localKeys`: the batch's key values when the CALLER already holds
     * them on the driver (its own batch-scale collect) — the fold-base
     * tile discovery then runs as driver binary-search math
-    * ([[SnapshotTable.readMatchingTilesLocal]]) instead of a Spark job.
+    * ([[SnapshotTable.Prune.Keys]]' `local`) instead of a Spark job.
     * Purely a fast path: when absent, or when the table's layout can't
     * take it, the distributed discovery runs exactly as before.
     */
@@ -85,21 +85,18 @@ object AdditiveFold {
         .filter(_.drop(1).toLong < batchId)
       val keyAndCarried = col(key) +: carried.map(col)
       // the fold-base tile discovery doubles as merge's changed-tile
-      // discovery (same key set, same version) — the set rides through
-      // knownChangedTiles so merge skips its identical job
-      var foldTiles: Option[(String, Set[Int])] = None
+      // discovery (same key set, same version) — the plan rides through
+      // knownPlan so merge skips its identical job
+      var foldPlan: Option[SnapshotTable.Plan] = None
       val updated = prev match {
         case None => deltas.select(keyAndCarried :+ col(deltaCnt).as(cnt): _*)
         case Some(p) =>
-          val (tiles, hit) = localKeys
-            .flatMap(ks =>
-              SnapshotTable.readMatchingTilesLocal(spark, root, p, key, ks))
-            .map { case (df, h) => (df, Some(h)) }
-            .getOrElse(SnapshotTable.readMatchingTilesWithSet(
-              spark, root, p, key, deltas.select(col(key))))
-          foldTiles = hit.map(h => (p, h))
+          val plan = SnapshotTable.plan(spark, root, p, key,
+            SnapshotTable.Prune.Keys(deltas.select(col(key)), localKeys))
+          foldPlan = Some(plan)
           deltas
-            .join(tiles.select(col(key), col(cnt).as("__old")),
+            .join(SnapshotTable.readFiles(spark, root, plan)
+              .select(col(key), col(cnt).as("__old")),
               Seq(key), "left")
             .select(keyAndCarried :+
               combine(col("__old"), col(deltaCnt)).as(cnt): _*)
@@ -108,7 +105,7 @@ object AdditiveFold {
       // footer-based stats (no read-back scan) are enough
       SnapshotTable.merge(updated, root, key, s"v$batchId",
         clusterFiles = Some(clusterFiles), rowFingerprints = false,
-        knownChangedTiles = foldTiles,
+        knownPlan = foldPlan,
         extraStatsCols = extraStatsCols)
       // the overdraw guard runs POST-commit (matching the original
       // post-merge tile-read check's crash semantics — the fold commits,

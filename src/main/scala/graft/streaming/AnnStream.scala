@@ -66,10 +66,16 @@ object AnnStream {
       }
       .start()
 
+  /** The files of `root` at `head` that can hold an `sk` in [lo, hi]. */
+  private def readSk(spark: SparkSession, root: String, head: String,
+      lo: String, hi: String): DataFrame =
+    SnapshotTable.readFiles(spark, root, SnapshotTable.plan(spark, root,
+      head, "sk", SnapshotTable.Prune.Range("sk", lo, hi)))
+
   /** The stored centroid model (cid, cv, cnrm) at a published head. */
   private def centroids(spark: SparkSession, root: String,
       head: String): DataFrame =
-    SnapshotTable.readPrunedVersion(spark, root, head, "sk", "m:", "m;")
+    readSk(spark, root, head, "m:", "m;")
       .filter(col("sk").startsWith("m:"))
       .select(col("vec_id").as("cid"), col("v").as("cv"),
         col("nrm").as("cnrm"))
@@ -149,7 +155,7 @@ object AnnStream {
     */
   def cellBalance(spark: SparkSession, root: String): Option[DataFrame] =
     SnapshotTable.latestVersion(root).map { head =>
-      SnapshotTable.readPrunedVersion(spark, root, head, "sk", "g:", "g;")
+      readSk(spark, root, head, "g:", "g;")
         .filter(col("sk").startsWith("g:"))
         .select(col("cell"), col("cnt").as("postings"))
     }
@@ -177,8 +183,7 @@ object AnnStream {
       s"AnnStream.recluster id $batchId is behind $root's published " +
         s"$head: fresh checkpoint against an existing table")
     if (head.drop(1).toLong >= batchId) return // replay: already current
-    val posts = SnapshotTable
-      .readPrunedVersion(spark, root, head, "sk", "c:", "c;")
+    val posts = readSk(spark, root, head, "c:", "c;")
       .filter(col("sk").startsWith("c:"))
       .select(col("vec_id"), col("v"), col("nrm"))
     val (newCents, _) =
@@ -223,8 +228,7 @@ object AnnStream {
       val cells = probed.select(col("cell")).distinct()
         .collect().map(_.getLong(0)).sorted
       val cand = cells.map { c =>
-          SnapshotTable.readPrunedVersion(spark, root, head, "sk",
-              padCell(c) + ":", padCell(c) + ";")
+          readSk(spark, root, head, padCell(c) + ":", padCell(c) + ";")
             .filter(col("sk").startsWith(padCell(c) + ":"))
         }
         .reduceOption(_ unionByName _)

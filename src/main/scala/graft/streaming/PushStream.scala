@@ -38,14 +38,14 @@ import org.apache.spark.sql.functions._
   *    ([[PushRank]]'s operator), so an edge change alters exactly one
   *    summand and the residual repair is the batch-neighborhood join
   *    `Δr(v) = Σ_u term(p_u, ppm_new) − term(p_u, ppm_old)` over
-  *    touched sources' out-edges only ([[SnapshotTable.readPrunedRanges]]
-  *    — one key-prefix range per touched source).
+  *    touched sources' out-edges only (a [[SnapshotTable.Prune.Ranges]]
+  *    plan — one key-prefix range per touched source).
   *  - PUSH-ROUND cancellation: a synchronized threshold-push round
   *    changes stored residuals ONLY at active nodes and their
   *    out-neighbors (the uniform gterm shift cancels against `shift` for
   *    everyone else), so each round's write set is the frontier
   *    neighborhood; converged tiles are discovered-and-skipped by the
-  *    complement prune ([[SnapshotTable.readOutsideRange]]).
+  *    complement prune ([[SnapshotTable.Prune.Outside]]).
   *
   * Within a batch the seed + `rounds` push rounds evolve an in-memory
   * OVERLAY of changed rows; the state table commits ONCE per batch
@@ -191,20 +191,27 @@ object PushStream {
         case None => (0L, 0L, 0L)
       }
       // accumulated changed-tile hint for the single state merge below:
-      // every read of prevStateV records its hit tiles; the union is a
+      // every read of prevStateV adds its plan; the union's tiles are a
       // SUPERSET of the overlay's tiles (overlay rows only ever come from
       // those reads or from new nodes, whose tiles ride the stateBatch
-      // hit — rewriting an extra tile reproduces identical content), so
-      // merge can skip its own discovery job. Any read without a hit set
+      // plan — rewriting an extra tile reproduces identical content), so
+      // merge can skip its own discovery job. Any plan without a tile set
       // drops the hint and merge discovers as before.
-      var tilesAcc: Option[Set[Int]] =
-        if (prevStateV.isDefined) Some(Set.empty) else None
-      def accTiles(h: Option[Set[Int]]): Unit =
-        tilesAcc = for { a <- tilesAcc; b <- h } yield a ++ b
+      var statePlans: Option[SnapshotTable.Plan] =
+        prevStateV.map(SnapshotTable.Plan(_, Some(Nil), Some(Set.empty)))
+      def readState(pv: String, prune: SnapshotTable.Prune): DataFrame = {
+        val plan = SnapshotTable.plan(spark, rt.state, pv, "node", prune)
+        statePlans = statePlans.map(_ ++ plan)
+        SnapshotTable.readFiles(spark, rt.state, plan)
+      }
+      def readEdges(version: String, ranges: Seq[(String, String)]) =
+        SnapshotTable.readFiles(spark, rt.edges, SnapshotTable.plan(spark,
+          rt.edges, version, "edge_key",
+          SnapshotTable.Prune.Ranges("edge_key", ranges)))
 
       // ---- 3. touched sources and their old/new out-edges -----------
       // one "<src> " prefix range per touched source — driver list is
-      // batch-scale by the same contract as readMatchingTiles' key
+      // batch-scale by the same contract as Prune.Keys' key
       // collect ('!' sorts between the ' ' separator and digit '0', so
       // the range brackets exactly this source's keys). ADAPTIVE: past
       // RangeListCap sources (a bulk load, not an incremental batch) a
@@ -226,8 +233,7 @@ object PushStream {
       def outEdgesOf(version: String): DataFrame =
         (if (srcRanges.isEmpty && nSrcs > 0)
           SnapshotTable.readVersion(spark, rt.edges, version)
-        else SnapshotTable.readPrunedRanges(spark, rt.edges, version,
-          "edge_key", srcRanges))
+        else readEdges(version, srcRanges))
           .filter(col("n") > 0)
           .join(srcs, Seq("src"), "left_semi")
           .select(col("src"), col("dst"), col("n"))
@@ -255,17 +261,9 @@ object PushStream {
       // state ∩ srcs ⊆ batchNodes); in the local regime the key→tile
       // discovery is driver binary-search math, zero jobs
       val stateBatch = graft.CacheRegistry.persist(prevStateV.map { pv =>
-        val viaLocal =
-          if (local) SnapshotTable.readMatchingTilesLocal(
-            spark, rt.state, pv, "node", batchNodeIds.toSeq)
-          else None
-        val (base, hit) = viaLocal match {
-          case Some((df, h)) => (df, Some(h))
-          case None => SnapshotTable.readMatchingTilesWithSet(
-            spark, rt.state, pv, "node", batchNodes)
-        }
-        accTiles(hit)
-        base.join(batchNodes, Seq("node"), "left_semi")
+        readState(pv, SnapshotTable.Prune.Keys(batchNodes,
+            if (local) Some(batchNodeIds.toSeq) else None))
+          .join(batchNodes, Seq("node"), "left_semi")
       }.getOrElse(emptyState(spark)))
 
       // ---- 4+5 fused: node-set growth AND dangling flips in ONE job --
@@ -338,10 +336,8 @@ object PushStream {
           .union(seedDr.select(col("node")))
           .union(newNodes).distinct())
       val stateCand = prevStateV.map { pv =>
-        val (base, hit) = SnapshotTable.readMatchingTilesWithSet(
-          spark, rt.state, pv, "node", candNodes)
-        accTiles(hit)
-        base.join(candNodes, Seq("node"), "left_semi")
+        readState(pv, SnapshotTable.Prune.Keys(candNodes))
+          .join(candNodes, Seq("node"), "left_semi")
       }.getOrElse(emptyState(spark))
       // a node new this batch starts at p = 0 with the full uniform
       // residual: stored = b + gterm − shift so that r_true = b + gterm
@@ -373,11 +369,9 @@ object PushStream {
         // never load), overlay taking precedence
         val shiftPre = shift
         val fromTable = prevStateV.map { pv =>
-          val (base, hit) = SnapshotTable.readOutsideRangeWithTiles(
-            spark, rt.state, pv, "r", -eps - shiftPre, eps - shiftPre,
-            "node")
-          accTiles(hit)
-          base.join(overlay.select(col("node")), Seq("node"), "left_anti")
+          readState(pv,
+              SnapshotTable.Prune.Outside("r", -eps - shiftPre, eps - shiftPre))
+            .join(overlay.select(col("node")), Seq("node"), "left_anti")
         }.getOrElse(emptyState(spark))
         // the active frame is persisted LAZILY (the bounded collect below
         // is its first action and populates the cache); the round's
@@ -440,9 +434,7 @@ object PushStream {
                     .collect().map(_.getLong(0)) }))
               idsOpt match {
                 case Some(ids) =>
-                  SnapshotTable.readPrunedRanges(spark, rt.edges, v,
-                      "edge_key",
-                      ids.sorted.map(s => (s"$s ", s"$s!")).toSeq)
+                  readEdges(v, ids.sorted.map(s => (s"$s ", s"$s!")).toSeq)
                     .filter(col("n") > 0)
                     .join(ids.toSeq.toDF("src"), Seq("src"), "left_semi")
                     .select(col("src"), col("dst"), col("n"))
@@ -470,10 +462,8 @@ object PushStream {
           val needFromTable = drR.select(col("node"))
             .join(overlay.select(col("node")), Seq("node"), "left_anti")
           val tableRows = prevStateV.map { pv =>
-            val (base, hit) = SnapshotTable.readMatchingTilesWithSet(
-              spark, rt.state, pv, "node", needFromTable)
-            accTiles(hit)
-            base.join(needFromTable, Seq("node"), "left_semi")
+            readState(pv, SnapshotTable.Prune.Keys(needFromTable))
+              .join(needFromTable, Seq("node"), "left_semi")
           }.getOrElse(emptyState(spark))
           // pushed node: p += r_true, stored r ← (incoming dr − shiftPre)
           // (gterm's uniform shift cancels into `shift` for everyone);
@@ -506,14 +496,14 @@ object PushStream {
         case None => SnapshotTable.publish(overlay, rt.state, v,
           statsCols = Seq("node", "r"), clusterFiles = Some(clusterFiles),
           rowFingerprints = false)
-        case Some(pv) =>
-          // tilesAcc is the union of every prevStateV read's hit tiles —
-          // a SUPERSET of the overlay's tiles (see its declaration), so
-          // merge skips its own key→tile discovery job; an extra tile
+        case Some(_) =>
+          // statePlans is the union of every prevStateV read's plan — its
+          // tiles are a SUPERSET of the overlay's (see its declaration),
+          // so merge skips its own key→tile discovery job; an extra tile
           // rewrites to identical content
           SnapshotTable.merge(overlay, rt.state, "node", v,
             clusterFiles = Some(clusterFiles), rowFingerprints = false,
-            knownChangedTiles = tilesAcc.map(t => (pv, t)))
+            knownPlan = statePlans)
       } }
       import spark.implicits._
       traced(batchId, "scalars_commit") { SnapshotTable.publish(Seq((nn1, dang, shift)).toDF(

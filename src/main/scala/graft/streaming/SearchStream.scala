@@ -30,7 +30,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * `d:` < `l:`), so each serving read prunes to its kind's tiles:
   * query formulation reads only `d:` tiles, the counter row only `a:`,
   * and candidate doc lengths only the `l:` tiles
-  * [[SnapshotTable.readMatchingTiles]] discovers from the candidate ids.
+  * a [[SnapshotTable.Prune.Keys]] plan discovers from the candidate ids.
   *
   * [[serve]] is the query-time path: query terms off the maintained df
   * rows (one TakeOrdered over the vocab relation — query FORMULATION; a
@@ -155,13 +155,21 @@ object SearchStream {
     } finally { post.unpersist(blocking = false); () }
   }
 
+  /** The rows of the stats table `sr` at `head` that `prune` on the
+    * `sk` key can need.
+    */
+  private def readSk(spark: SparkSession, sr: String, head: String,
+      prune: SnapshotTable.Prune): DataFrame =
+    SnapshotTable.readFiles(spark, sr,
+      SnapshotTable.plan(spark, sr, head, "sk", prune))
+
   /** The maintained df relation (token, df) at a published head — the
     * query-formulation input, pruned to the `d:` tiles.
     */
   private[graft] def dfRelation(spark: SparkSession, root: String,
       head: String): DataFrame =
-    SnapshotTable.readPrunedVersion(spark, statsRoot(root), head,
-        "sk", "d:", "d;")
+    readSk(spark, statsRoot(root), head,
+        SnapshotTable.Prune.Range("sk", "d:", "d;"))
       .filter(col("sk").startsWith("d:"))
       .select(col("token"), col("cnt").as("df"))
 
@@ -192,8 +200,8 @@ object SearchStream {
     val qtRows = panelRows.map { case (_, t, df) => (t, df) }.distinct
     // avgdl via the SAME double-op sequence the corpus derivation uses
     // (long * 1.0 / long), so maintained scores are bit-equal
-    val stats = SnapshotTable
-      .readPrunedVersion(spark, sr, head, "sk", "a:", "a;")
+    val stats =
+      readSk(spark, sr, head, SnapshotTable.Prune.Range("sk", "a:", "a;"))
       .groupBy()
       .agg(max(when(col("sk") === "a:n_docs", col("cnt"))).as("n_docs"),
         max(when(col("sk") === "a:total_dl", col("cnt"))).as("total_dl"))
@@ -209,8 +217,8 @@ object SearchStream {
     val cand = graft.CacheRegistry.persist(postings)
     // candidate doc lengths: candidate TILES of the `l:` key range,
     // never the corpus — the join stays candidate-proportional
-    val dl = SnapshotTable.readMatchingTiles(spark, sr, head, "sk",
-        cand.select(dlKey(col("doc_id")).as("sk")))
+    val dl = readSk(spark, sr, head,
+        SnapshotTable.Prune.Keys(cand.select(dlKey(col("doc_id")).as("sk"))))
       .filter(col("sk").startsWith("l:"))
       .select(col("doc_id"), col("cnt").as("dl"))
     Retrieval.bm25Scores(cand, qterms, dl, stats)

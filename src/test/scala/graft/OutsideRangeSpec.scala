@@ -3,13 +3,17 @@ package graft
 import graft.sources.SnapshotTable
 import org.apache.spark.sql.functions._
 
-/** [[SnapshotTable.readOutsideRange]] — the complement prune the
+/** [[SnapshotTable.Prune.Outside]] — the complement prune the
   * incremental residual-push design needs for active-set discovery
   * (PLANS.md): skip only files whose stats PROVE every row lies inside
   * the band; everything outside the band must always load.
   */
 class OutsideRangeSpec extends SparkSpec {
   import spark.implicits._
+
+  private def readOutside(root: String, lo: Any, hi: Any) =
+    SnapshotTable.readFiles(spark, root, SnapshotTable.plan(spark, root, "v1",
+      "r", SnapshotTable.Prune.Outside("r", lo, hi)))
 
   test("complement prune keeps every outside row and skips all-inside files") {
     val root =
@@ -22,7 +26,7 @@ class OutsideRangeSpec extends SparkSpec {
         .otherwise(col("id") % 5 - 2L)).as("r"))
     SnapshotTable.publish(t, root, "v1", retain = 2,
       statsCols = Seq("r"), clusterFiles = Some(8))
-    val read = SnapshotTable.readOutsideRange(spark, root, "v1", "r",
+    val read = readOutside(root,
       java.lang.Long.valueOf(-10L), java.lang.Long.valueOf(10L))
     val expectOutside = t.filter(abs(col("r")) > 10).collect()
       .map(_.getLong(0)).toSet
@@ -40,7 +44,7 @@ class OutsideRangeSpec extends SparkSpec {
     val root2 =
       java.nio.file.Files.createTempDirectory("outside_range2").toString
     SnapshotTable.publish(t, root2, "v1", retain = 2)
-    assert(SnapshotTable.readOutsideRange(spark, root2, "v1", "r",
+    assert(readOutside(root2,
       java.lang.Long.valueOf(-10L), java.lang.Long.valueOf(10L))
       .count() == 400L)
     graft.operators.SnapshotDiff.rmTree(root)

@@ -102,11 +102,13 @@ class ParquetReadSpec extends SparkSpec {
         val reads = Seq[(String, () => Option[DataFrame])](
           "readVersion" -> (() =>
             Some(SnapshotTable.readVersion(spark, root, "v1"))),
-          "readPrunedRanges" -> (() => Some(SnapshotTable.readPrunedRanges(
-            spark, root, "v1", pk, Seq("k0100" -> "k0120")))),
-          "readMatchingTilesLocal" -> (() => SnapshotTable
-            .readMatchingTilesLocal(spark, root, "v1", pk, Seq(probe))
-            .map(_._1)),
+          "Ranges plan" -> (() => Some(SnapshotTable.readFiles(spark, root,
+            SnapshotTable.plan(spark, root, "v1", pk,
+              SnapshotTable.Prune.Ranges(pk, Seq("k0100" -> "k0120")))))),
+          "local Keys plan" -> (() => Some(SnapshotTable.readFiles(spark,
+            root, SnapshotTable.plan(spark, root, "v1", pk,
+              SnapshotTable.Prune.Keys(base.filter(col(pk) === lit(probe))
+                .select(pk), Some(Seq(probe))))))),
           "pointLookup" -> (() =>
             SnapshotTable.pointLookup(spark, root, pk, probe)))
         reads.foreach { case (name, read) =>

@@ -20,6 +20,15 @@ class SnapshotTableSpec extends SparkSpec {
     root
   }
 
+  /** The head of `root`, pruned to the files whose [min, max] on `c` can
+    * hold a value in [lo, hi].
+    */
+  private def readRange(root: String, c: String, lo: Any, hi: Any) = {
+    val v = SnapshotTable.latestVersion(root).get
+    SnapshotTable.readFiles(spark, root,
+      SnapshotTable.plan(spark, root, v, c, SnapshotTable.Prune.Range(c, lo, hi)))
+  }
+
   private def df(rows: Seq[(Long, String)]) = {
     import spark.implicits._
     rows.toDF("id", "val")
@@ -101,7 +110,7 @@ class SnapshotTableSpec extends SparkSpec {
     assert(hit.collect().map(_.getString(1)).toSeq == Seq("name_4321"))
     // a selective range prunes to the covering subset, result identical
     // to the unpruned filter
-    val ranged = SnapshotTable.readPruned(spark, root, "id", 1000L, 1999L).get
+    val ranged = readRange(root, "id", 1000L, 1999L)
     assert(ranged.inputFiles.length < 8,
       s"range read should skip files, scans ${ranged.inputFiles.length}")
     val got = ranged.filter(col("id").between(1000L, 1999L)).count()
@@ -132,7 +141,7 @@ class SnapshotTableSpec extends SparkSpec {
     val lroot = freshRoot("zlin")
     SnapshotTable.publish(dim, lroot, "v1",
       statsCols = Seq("id", "code"), clusterFiles = Some(16))
-    val linB = SnapshotTable.readPruned(spark, lroot, "code", "c4000", "c4099").get
+    val linB = readRange(lroot, "code", "c4000", "c4099")
     assert(linB.inputFiles.length >= 15,
       s"linear-on-id files each span code's range; expected ~16 kept, got ${linB.inputFiles.length}")
 
@@ -143,10 +152,10 @@ class SnapshotTableSpec extends SparkSpec {
       pk = "id", zCols = Seq("id", "code"), nFiles = 16)
     val stats = SnapshotTable.readStats(zroot).get
     assert(stats.size == 16, s"expected 16 file-stats entries, got ${stats.size}")
-    val zA = SnapshotTable.readPruned(spark, zroot, "id", 7000L, 7099L).get
+    val zA = readRange(zroot, "id", 7000L, 7099L)
     assert(zA.inputFiles.length <= 8,
       s"z-order should prune on id, kept ${zA.inputFiles.length} of 16")
-    val zB = SnapshotTable.readPruned(spark, zroot, "code", "c4000", "c4099").get
+    val zB = readRange(zroot, "code", "c4000", "c4099")
     assert(zB.inputFiles.length <= 8,
       s"z-order should prune on code, kept ${zB.inputFiles.length} of 16")
     // pruned reads are file-granular supersets: row filters on top give
@@ -229,7 +238,7 @@ class SnapshotTableSpec extends SparkSpec {
       format_string("n%05d", (col("id") * 7919) % 40000).as("nat"))
     SnapshotTable.publish(dim, root, "v1", retain = 4, statsCols = Seq("id"),
       clusterFiles = Some(8), bloomCols = Seq("nat"))
-    val ranged = SnapshotTable.readPruned(spark, root, "nat", "n07777", "n07777").get
+    val ranged = readRange(root, "nat", "n07777", "n07777")
     assert(ranged.inputFiles.length == 8,
       s"sanity: range stats cannot prune a scattered key, kept ${ranged.inputFiles.length}")
     val hit = SnapshotTable.pointLookup(spark, root, "nat", "n07777").get
@@ -335,7 +344,7 @@ class SnapshotTableSpec extends SparkSpec {
     val v4 = SnapshotTable.compact(spark, root, "v4", 16,
       statsCols = Seq("id", "code"), zOrderPk = Some("id"))
     assert(v4.contains("v4") && SnapshotTable.latestVersion(root).contains("v4"))
-    val zB = SnapshotTable.readPruned(spark, root, "code", "c0400", "c0499").get
+    val zB = readRange(root, "code", "c0400", "c0499")
     assert(zB.inputFiles.length <= 8,
       s"z-compacted table should prune on code, kept ${zB.inputFiles.length} of 16")
     assert(SnapshotTable.read(spark, root).get
@@ -356,8 +365,8 @@ class SnapshotTableSpec extends SparkSpec {
     val root = freshRoot("zurl")
     SnapshotTable.publishZOrdered(dim, root, "v1",
       pk = "id", zCols = Seq("id", "code"), nFiles = 16)
-    val zB = SnapshotTable.readPruned(spark, root, "code",
-      "https://example.com/page/c4000", "https://example.com/page/c4099").get
+    val zB = readRange(root, "code",
+      "https://example.com/page/c4000", "https://example.com/page/c4099")
     assert(zB.inputFiles.length <= 8,
       s"prefix-stripped surrogate should keep code pruning, kept ${zB.inputFiles.length} of 16")
     assert(zB.filter(col("code").between("https://example.com/page/c4000",
@@ -592,7 +601,10 @@ class SnapshotTableSpec extends SparkSpec {
       statsCols = Seq("id"), clusterFiles = Some(8))
     import spark.implicits._
     val keys = Seq(7L, 8L, 399L).toDF("id")
-    val got = SnapshotTable.readMatchingTiles(spark, root, "v1", "id", keys)
+    def readKeys(keys: org.apache.spark.sql.DataFrame) =
+      SnapshotTable.readFiles(spark, root, SnapshotTable.plan(spark, root,
+        "v1", "id", SnapshotTable.Prune.Keys(keys)))
+    val got = readKeys(keys)
     val scanned = got.inputFiles.length
     assert(scanned < 8 && scanned >= 1,
       s"a 3-key probe must read a strict subset of the 8 tiles, read $scanned")
@@ -601,8 +613,7 @@ class SnapshotTableSpec extends SparkSpec {
     assert(hit == Set(7L -> "v7", 8L -> "v8", 399L -> "v399"),
       "every probed key's current row must be present in the pruned read")
     // absent keys: the read still covers their WOULD-BE tiles (no more)
-    val none = SnapshotTable.readMatchingTiles(spark, root, "v1", "id",
-      Seq(1000L).toDF("id"))
+    val none = readKeys(Seq(1000L).toDF("id"))
     assert(none.inputFiles.length <= 1)
   }
 
@@ -635,19 +646,25 @@ class SnapshotTableSpec extends SparkSpec {
       val full = SnapshotTable.readVersion(spark, root, "v1")
       val want = rows(full, probe)
       assert(want.size == probe.size)
-      val tiles = SnapshotTable.readMatchingTilesLocal(spark, root, "v1",
-        "k", probe)
-      assert(tiles.isDefined, s"$root: the layout is range-disjoint in " +
+      // the key frame fails if evaluated: only the driver-side path may
+      // answer the plan
+      val unevaluable = probe.toDF("k")
+        .select(raise_error(lit("distributed discovery ran")).cast("string").as("k"))
+      val tiles = SnapshotTable.plan(spark, root, "v1", "k",
+        SnapshotTable.Prune.Keys(unevaluable, Some(probe)))
+      assert(tiles.tiles.isDefined, s"$root: the layout is range-disjoint in " +
         "Spark's order, so the driver-side path must apply")
-      assert(rows(tiles.get._1, probe) == want,
-        s"$root: readMatchingTilesLocal must hold every probed key's row")
+      assert(rows(SnapshotTable.readFiles(spark, root, tiles), probe) == want,
+        s"$root: the local Keys plan must hold every probed key's row")
       probe.foreach { k =>
         assert(rows(SnapshotTable.pointLookup(spark, root, "k", k).get,
           Seq(k)) == want.filter(_._1 == k), s"$root: pointLookup lost $k")
       }
-      assert(rows(SnapshotTable.readPrunedRanges(spark, root, "v1", "k",
-        Seq(emoji.head -> emoji.last)), emoji) == rows(full, emoji),
-        s"$root: readPrunedRanges must keep every file holding the range")
+      assert(rows(SnapshotTable.readFiles(spark, root, SnapshotTable.plan(
+        spark, root, "v1", "k",
+        SnapshotTable.Prune.Ranges("k", Seq(emoji.head -> emoji.last)))),
+        emoji) == rows(full, emoji),
+        s"$root: a Ranges plan must keep every file holding the range")
     }
   }
 
@@ -745,7 +762,7 @@ class SnapshotTableSpec extends SparkSpec {
     val r1 = SnapshotTable.read(spark, root1).get
     assert(r1.count() == 100 && r1.inputFiles.length == 3)
     // file contents respect the numeric boundary semantics
-    val perFile = SnapshotTable.readPruned(spark, root1, "score", 8.0, 9.0).get
+    val perFile = readRange(root1, "score", 8.0, 9.0)
     assert(perFile.inputFiles.length == 1,
       "a selective double predicate must prune to the single covering tile")
     // long key with Double cutpoints — the lossy direction must stay on

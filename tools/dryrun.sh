@@ -7,6 +7,9 @@
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
+echo "== t1: smoke (Verify entry @ sf0.001)"
+sbt -batch "runMain graft.Verify /root/testdata/sf0.001 /tmp/graft_dryrun_t1"
+
 echo "== t2: Verify @ sf0.01 + oracle compare"
 sbt -batch "runMain graft.Verify /root/testdata/sf0.01 /tmp/graft_dryrun_out"
 python3 tools/check_oracle.py /root/testdata/sf0.01 /tmp/graft_dryrun_out
