@@ -200,8 +200,8 @@ object SearchStream {
     val qtRows = panelRows.map { case (_, t, df) => (t, df) }.distinct
     // avgdl via the SAME double-op sequence the corpus derivation uses
     // (long * 1.0 / long), so maintained scores are bit-equal
-    val stats =
-      readSk(spark, sr, head, SnapshotTable.Prune.Range("sk", "a:", "a;"))
+    val stats = readSk(spark, sr, head,
+        SnapshotTable.Prune.Range("sk", "a:", "a;"))
       .groupBy()
       .agg(max(when(col("sk") === "a:n_docs", col("cnt"))).as("n_docs"),
         max(when(col("sk") === "a:total_dl", col("cnt"))).as("total_dl"))
