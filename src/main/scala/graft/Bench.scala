@@ -8,10 +8,10 @@ import org.apache.spark.sql.SparkSession
   * noisy capture must not look like a plan regression):
   *  - queries run in sorted-name order — adding a query never reshuffles
   *    which one runs first;
-  *  - the three session-shared frames (enriched events, normalized
-  *    vectors, ngram sketches) are materialized in an untimed warmup and
-  *    reported as their own `shared_build` field, so no timed query is
-  *    charged their build;
+  *  - the session-shared frames ([[operators.Warmup.sharedFrames]]) are
+  *    materialized in an untimed warmup and reported as their own
+  *    `shared_build` field (per-frame seconds in the result file's
+  *    `shared_frames`), so no timed query is charged their build;
   *  - each query runs twice; `queries`/`value` keep run 1 (comparable to
   *    BASELINE.md's single-run harness), `queries_min`/`total_min` report
   *    the per-query min — the load-robust number to read under container
@@ -105,9 +105,11 @@ object Bench {
       spark.range(1000).selectExpr("sum(id) AS s").count()
       spark.read.parquet(s"$sfDir/region.parquet").groupBy("r_name").count().count()
     } catch { case _: Throwable => () }
-    val sharedBuild =
+    val sharedFrames =
       try operators.Warmup.sharedFrames(spark, sfDir)
-      catch { case _: Throwable => -1.0 }
+      catch { case _: Throwable => Nil }
+    val sharedBuild =
+      if (sharedFrames.isEmpty) -1.0 else sharedFrames.map(_._2).sum
     // optional comma-separated subset for targeted profiling
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     val errors = scala.collection.mutable.ArrayBuffer.empty[String]
@@ -148,11 +150,10 @@ object Bench {
     // x 2 maps pushed the line past the driver artifact's tail window,
     // truncating the blob's head — 3dp keeps the whole record in the tail
     def fmt(v: Double) = "%.3f".formatLocal(java.util.Locale.ROOT, v)
-    def json(sel: ((String, Double, Double)) => (String, Double)) = results
-      .map { r => val (k, v) = sel(r); s"\"" + k + "\":" + fmt(v) }
-      .mkString("{", ",", "}")
-    val qs = json { case (k, v, _) => (k, v) }
-    val qsMin = json { case (k, _, m) => (k, m) }
+    def json(kv: Seq[(String, Double)]) =
+      kv.map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
+    val qs = json(results.map { case (k, v, _) => (k, v) })
+    val qsMin = json(results.map { case (k, _, m) => (k, m) })
     CacheRegistry.clearAll()
     val errs = errors.map("\"" + _ + "\"").mkString("[", ",", "]")
     val total = results.map(_._2).sum
@@ -174,7 +175,11 @@ object Bench {
     // or segregate lever-mode numbers instead of ingesting them silently
     val approxLever = sys.env.get("SPARK_GRAFT_APPROX_DISTINCT")
       .map(v => "\"" + v + "\"").getOrElse("null")
-    val line = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","shared_build":${fmt(sharedBuild)},"total_min":${fmt(totalMin)},"queries":$qs,"queries_min":$qsMin,"errors":$errs,"sf":"$sfDir","ts_ms":${System.currentTimeMillis()},"harness_wall_sec":${fmt(wallSec)},"loadavg_start":${jsonArr(loadStart)},"loadavg_end":${jsonArr(loadEnd)},"load_threshold":$loadThreshold,"host_cpus":${Runtime.getRuntime.availableProcessors()},"contended":$contended,"shared_rebuilds":$sharedRebuilds,"levers":{"approx_distinct":$approxLever,"shuffle_partitions":$shufflePartitions,"cpus":$cpus}}"""
+    // the file record and the stdout summary share every field but the
+    // per-query maps, built once (one ts_ms for both)
+    val head = s""""metric":"total","value":${fmt(total)},"unit":"sec","shared_build":${fmt(sharedBuild)},"total_min":${fmt(totalMin)}"""
+    val tail = s""""errors":$errs,"sf":"$sfDir","ts_ms":${System.currentTimeMillis()},"harness_wall_sec":${fmt(wallSec)},"loadavg_start":${jsonArr(loadStart)},"loadavg_end":${jsonArr(loadEnd)},"load_threshold":$loadThreshold,"host_cpus":${Runtime.getRuntime.availableProcessors()},"contended":$contended,"shared_rebuilds":$sharedRebuilds,"levers":{"approx_distinct":$approxLever,"shuffle_partitions":$shufflePartitions,"cpus":$cpus}"""
+    val line = s"""{$head,"queries":$qs,"queries_min":$qsMin,"shared_frames":${json(sharedFrames)},$tail}"""
     // stdout goes through sbt, which interleaves its own log lines — also
     // land the result in a file so a gate never depends on log scraping
     try java.nio.file.Files.write(benchOut, (line + "\n").getBytes("UTF-8"))
@@ -191,13 +196,11 @@ object Bench {
       .groupBy { case (n, _, _) => n.takeWhile(_ != '_') }
       .toSeq.sortBy(_._1)
       .map { case (fam, rs) =>
-        val q = rs.map { case (k, v, _) => "\"" + k + "\":" + fmt(v) }
-          .mkString("{", ",", "}")
-        val qm = rs.map { case (k, _, m) => "\"" + k + "\":" + fmt(m) }
-          .mkString("{", ",", "}")
+        val q = json(rs.map { case (k, v, _) => (k, v) })
+        val qm = json(rs.map { case (k, _, m) => (k, m) })
         s"""{"metric":"family","family":"$fam","value":${fmt(rs.map(_._2).sum)},"value_min":${fmt(rs.map(_._3).sum)},"n":${rs.size},"queries":$q,"queries_min":$qm}"""
       }
-    val summary = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","shared_build":${fmt(sharedBuild)},"total_min":${fmt(totalMin)},"n_queries":${results.size},"errors":$errs,"sf":"$sfDir","ts_ms":${System.currentTimeMillis()},"harness_wall_sec":${fmt(wallSec)},"loadavg_start":${jsonArr(loadStart)},"loadavg_end":${jsonArr(loadEnd)},"load_threshold":$loadThreshold,"host_cpus":${Runtime.getRuntime.availableProcessors()},"contended":$contended,"shared_rebuilds":$sharedRebuilds,"levers":{"approx_distinct":$approxLever,"shuffle_partitions":$shufflePartitions,"cpus":$cpus}}"""
+    val summary = s"""{$head,"n_queries":${results.size},$tail}"""
     spark.stop()
     familyLines.foreach(println)
     println(summary)

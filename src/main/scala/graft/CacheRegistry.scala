@@ -161,12 +161,11 @@ object CacheRegistry {
     }
   }
 
-  /** Test visibility: how many per-query persists are registered, and the
-    * column names of each — specs pin persist BUDGETS for composed
-    * operators (e.g. distNtileScores: one wide base + N slim rank frames,
-    * never N wide ones) without reaching into Spark's cache manager.
+  /** Test visibility: the column names of each registered per-query
+    * persist — specs pin persist BUDGETS for composed operators (e.g.
+    * distNtileScores: one wide base + N slim rank frames, never N wide
+    * ones) without reaching into Spark's cache manager.
     */
-  private[graft] def registeredCount: Int = synchronized { registered.size }
   private[graft] def registeredSchemas: Seq[Seq[String]] = synchronized {
     registered.map(_.schema.fieldNames.toSeq).toSeq
   }

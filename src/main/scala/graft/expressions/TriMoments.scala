@@ -16,7 +16,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StructField, S
   * Exists because the declarative form — a nested
   * `transform(slice(...))` lambda building d(d+1)/2 structs per row —
   * evaluates INTERPRETED per element and allocates a struct per cell:
-  * DimCeilingProbe measured it at ~88 ms/row at d = 1024, making the
+  * measured at ~88 ms/row at d = 1024 (BASELINE.md), making the
   * lambda (not the shuffle, not the driver solve) the spectral family's
   * real ceiling. This kernel is the [[TopCells]]/[[BloomHits]] move a
   * third time: one codegen'd virtual call per row into a tight primitive

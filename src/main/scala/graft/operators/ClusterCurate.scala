@@ -49,8 +49,8 @@ object ClusterCurate {
   /** Train k centers on any `(vec_id, v, nrm)` frame (seeds = the first k
     * vec_ids) and return the trained per-vector assignment
     * `(vec_id, true_label, cell, ccos_bp)` — the queries bind it to the
-    * planted fixture; `tools.ClusterScaleProbe` reuses it at synthetic
-    * corpus sizes with k scaled √n-style.
+    * planted fixture (the 1x/10x/100x captures in BASELINE.md round 11
+    * ran it at synthetic corpus sizes with k scaled √n-style).
     */
   private[graft] def trainOn(e: DataFrame, k: Int): DataFrame = {
     val seeds = e.filter(col("vec_id") < k)

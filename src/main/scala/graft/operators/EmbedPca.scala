@@ -154,7 +154,7 @@ object EmbedPca {
       // expansion is the codegen'd [[graft.expressions.TriMoments]]
       // kernel (position-packed, row-major) — the interpreted
       // nested-transform lambda it replaced was the family's measured
-      // ceiling at d = 1024 (DimCeilingProbe, ~88 ms/row); aggregated
+      // ceiling at d = 1024 (~88 ms/row, BASELINE.md); aggregated
       // values are bit-identical, so every downstream hash stands
       graft.expressions.TriMoments.register(fx.sparkSession)
       val moments = fx

@@ -67,9 +67,11 @@ object PushStream {
     * back to one full scan + semi-join, the right plan when the touched
     * set approaches the corpus (bulk loads, initial convergence). The
     * incremental steady state — the regime this wrapper exists for —
-    * stays far below it.
+    * stays far below it. A var only as a test seam (like
+    * `SnapshotTable.onBeforeCommit`): specs set it to 0 to drive every
+    * batch down the distributed path; [[applyBatch]] reads it once.
     */
-  private val RangeListCap = 100000L
+  private[graft] var RangeListCap = 100000L
 
   /** The three roots of one maintained push-rank: the additive edge
     * table, the (node, out_n, p, r) state, and the 1-row scalar sidecar
@@ -106,12 +108,6 @@ object PushStream {
     SnapshotTable.versions(root).map(_.drop(1).toLong)
       .filter(_ < batchId).maxOption.map(i => s"v$i")
 
-  /** One micro-batch of SIGNED edge-count deltas (src, dst, n_d): fold
-    * into the edge table, restore the Bellman invariant for the new
-    * graph (delta seeding), run `rounds` synchronized threshold-push
-    * rounds at `eps`, commit. Idempotent per batchId; `eps`/`rounds`
-    * must be stable across replays (same-caller contract as iters).
-    */
   /** Env-gated phase tracer (`SPARK_GRAFT_TRACE=1`): stderr lines with
     * per-phase seconds, for attributing a batch's wall time to its
     * sequential driver actions without an event-log round-trip.
@@ -119,11 +115,18 @@ object PushStream {
   private def traced[T](batchId: Long, label: String)(body: => T): T =
     graft.Trace(s"push b$batchId $label")(body)
 
+  /** One micro-batch of SIGNED edge-count deltas (src, dst, n_d): fold
+    * into the edge table, restore the Bellman invariant for the new
+    * graph (delta seeding), run `rounds` synchronized threshold-push
+    * rounds at `eps`, commit. Idempotent per batchId; `eps`/`rounds`
+    * must be stable across replays (same-caller contract as iters).
+    */
   def applyBatch(deltas0: DataFrame, batchId: Long, rt: Roots,
       eps: Long, rounds: Int, clusterFiles: Int = 8): Unit = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     require(eps >= 0, s"eps must be >= 0, got $eps")
     val spark = deltas0.sparkSession
+    val cap = RangeListCap
     val committed = SnapshotTable.latestVersion(rt.scalars)
       .map(_.drop(1).toLong)
     committed.foreach { lv =>
@@ -156,8 +159,8 @@ object PushStream {
       // distributed path below runs exactly as before.
       val batchPairs = traced(batchId, "batch_collect") {
         deltas.select(col("src"), col("dst"))
-          .limit(RangeListCap.toInt + 1).collect() }
-      val local = batchPairs.length <= RangeListCap
+          .limit(cap.toInt + 1).collect() }
+      val local = batchPairs.length <= cap
 
       // ---- 1. additive edge fold (exactly-once inside AdditiveFold) --
       // a retraction may cancel an edge exactly (n = 0 keeps the key,
@@ -222,13 +225,13 @@ object PushStream {
         if (local) batchPairs.map(_.getLong(0)).distinct.sorted
         else traced(batchId, "srcs_collect") {
           deltas.select(col("src")).distinct()
-            .limit(RangeListCap.toInt + 1).collect().map(_.getLong(0)) }
+            .limit(cap.toInt + 1).collect().map(_.getLong(0)) }
       val nSrcs = srcIds.length.toLong
       val srcs =
         if (local) srcIds.toSeq.toDF("src")
         else graft.CacheRegistry.persist(deltas.select(col("src")).distinct())
       val srcRanges =
-        if (nSrcs > RangeListCap) Nil
+        if (nSrcs > cap) Nil
         else srcIds.sorted.map(s => (s"$s ", s"$s!")).toSeq
       def outEdgesOf(version: String): DataFrame =
         (if (srcRanges.isEmpty && nSrcs > 0)
@@ -388,7 +391,7 @@ object PushStream {
         // right plan when the frontier IS the corpus.
         val actRows = traced(batchId, s"active_collect_r$k") {
           active.select(col("node"), col("out_n"), col("r"))
-            .limit(RangeListCap.toInt + 1).collect() }
+            .limit(cap.toInt + 1).collect() }
         if (actRows.isEmpty) {
           // an empty active set makes this and all remaining rounds the
           // identity (the oracle's CASE mirrors this as a no-op)
@@ -400,7 +403,7 @@ object PushStream {
             col("out_n"), col("r").as("r_a"))
           // pushed dangling mass re-spreads uniformly: scalar, not rows
           val (dangDelta, nASrcs, aSrcIdsOpt) =
-            if (actRows.length <= RangeListCap) {
+            if (actRows.length <= cap) {
               var dd = 0L
               val b = Array.newBuilder[Long]
               actRows.foreach { r =>
@@ -428,7 +431,7 @@ object PushStream {
             if (nASrcs == 0) emptyEdges(spark)
             else {
               val idsOpt = aSrcIdsOpt.orElse(
-                if (nASrcs > RangeListCap) None
+                if (nASrcs > cap) None
                 else Some(traced(batchId, s"asrc_collect_r$k") {
                   activeS.filter(col("out_n") > 0).select(col("src"))
                     .collect().map(_.getLong(0)) }))
@@ -505,7 +508,6 @@ object PushStream {
             clusterFiles = Some(clusterFiles), rowFingerprints = false,
             knownPlan = statePlans)
       } }
-      import spark.implicits._
       traced(batchId, "scalars_commit") { SnapshotTable.publish(Seq((nn1, dang, shift)).toDF(
         "nn", "dang", "shift"), rt.scalars, v) }
     } finally {

@@ -168,8 +168,8 @@ class BehaviorSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("transformWithState funnel agrees with mapGroupsWithState") {
-    import graft.streaming.{FunnelProcessor, FunnelTimes, StageEvent, StatefulOps}
+  test("streamed funnel on the ordering fixture split over two batches") {
+    import graft.streaming.{FunnelTimes, StageEvent, StatefulOps}
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import org.apache.spark.sql.streaming.OutputMode
     implicit val sqlCtx = spark.sqlContext
@@ -180,34 +180,20 @@ class BehaviorSpec extends SparkSpec {
       (2L, 2, 3 * H), (3L, 3, 2 * H), (3L, 2, 3 * H), (4L, 2, 80 * H))
     def toEv(xs: Seq[(Long, Int, Long)]) =
       xs.map { case (u, s, t) => StageEvent(u, s, tsOf(t), t) }
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    spark.conf.set("spark.sql.streaming.stateStore.rocksdb.compactOnCommit", "false")
-    spark.conf.set("spark.sql.streaming.stateStore.rocksdb.blockCacheSizeMB", "16")
-    spark.conf.set("spark.sql.streaming.stateStore.rocksdb.writeBufferSizeMB", "16")
-    spark.conf.set("spark.sql.streaming.stateStore.rocksdb.maxOpenFiles", "100")
-    def finalStates(build: org.apache.spark.sql.Dataset[StageEvent] =>
-        org.apache.spark.sql.Dataset[FunnelTimes], qn: String) = {
-      val mem = MemoryStream[StageEvent]
-      val q = build(mem.toDS()).writeStream.format("memory").queryName(qn)
-        .outputMode(OutputMode.Update).start()
-      try {
-        Seq(batch1, batch2).foreach { b =>
-          mem.addData(toEv(b): _*); q.processAllAvailable()
-        }
-        spark.table(qn).as[FunnelTimes].collect().groupBy(_.user_id)
-          .map { case (u, rs) =>
-            u -> ((rs.map(_.t1).max, rs.map(_.t2).max, rs.map(_.t3).max))
-          }
-      } finally q.stop()
-    }
+    val mem = MemoryStream[StageEvent]
+    val q = StatefulOps.funnelProgress(mem.toDS()).writeStream.format("memory")
+      .queryName("fmgws").outputMode(OutputMode.Update).start()
     try {
-      val tws = finalStates(FunnelProcessor(_), "ftws")
-      val mgws = finalStates(StatefulOps.funnelProgress, "fmgws")
-      assert(tws === mgws, s"APIs disagree: $tws vs $mgws")
-      assert(tws(1L) === ((1 * H, 2 * H, 3 * H)))
-      assert(tws(4L) === ((1 * H, -1L, -1L))) // window expired
-    } finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+      Seq(batch1, batch2).foreach { b =>
+        mem.addData(toEv(b): _*); q.processAllAvailable()
+      }
+      val got = spark.table("fmgws").as[FunnelTimes].collect().groupBy(_.user_id)
+        .map { case (u, rs) =>
+          u -> ((rs.map(_.t1).max, rs.map(_.t2).max, rs.map(_.t3).max))
+        }
+      assert(got(1L) === ((1 * H, 2 * H, 3 * H)))
+      assert(got(4L) === ((1 * H, -1L, -1L))) // window expired
+    } finally q.stop()
   }
 
   test("funnel progression survives a restart from checkpoint") {

