@@ -217,16 +217,8 @@ object InvertedIndex {
       root: String, files: Option[Int] = None): Unit = {
     if (batch.isEmpty) return
     val version = s"v$batchId"
-    // only the HEAD can be a genuine foreachBatch replay (the checkpoint
-    // advances after the function returns); a lower id colliding with a
-    // retained committed version is a fresh-checkpoint restart whose new
-    // rows merge would silently swallow as a fake replay
-    SnapshotTable.latestVersion(root).map(_.drop(1).toLong).foreach { lv =>
-      require(batchId >= lv,
-        s"index stream batch $batchId is behind $root's published v$lv: " +
-          "fresh checkpoint against an existing index — wipe both " +
-          "together or resume the original checkpoint.")
-    }
+    graft.streaming.VersionedState.requireNotBehind("index stream", root,
+      batchId, "the index")
     val post = keyedPostings(batch).persist()
     // the cluster count only shapes a BOOTSTRAP or full-rewrite fallback
     // (tile-local merges keep the table's layout) — compute it ONLY on

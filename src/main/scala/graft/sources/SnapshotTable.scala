@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.GraftParquet
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, DataType, DoubleType, FloatType,
+  IntegerType, LongType, ShortType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** A minimal versioned-snapshot TABLE FORMAT — the engine's stand-in for
@@ -132,34 +134,54 @@ object SnapshotTable {
     }
   }
 
-  /** Unique per-attempt staging directory for `version` under `root`.
-    * Every writer writes its data and sidecars HERE — invisible to
-    * readers and to competing writers — and the commit (under the
-    * per-root lock, after the CAS base check) atomically renames the
-    * staging directory to `$root/$version`. Unique attempt names are
-    * what make the version id safe to contend for: two writers that
-    * both target head+1 can no longer stomp each other's files with
-    * mode-overwrite, because neither ever writes to the shared path;
-    * the CAS loser's staging directory is deleted, the winner's is
-    * renamed (the Delta discipline — unique data-file names plus
-    * put-if-absent commits — applied at directory granularity).
+  /** THE staged write: every public write entry commits through here.
+    *
+    * `base` is the CAS base — the head this write's content derives from
+    * (`None` = an empty table). Entries that only write pass the head at
+    * call entry; entries that READ the table (merge, compact, upsert)
+    * pass the head they read, so a competing commit in between conflicts
+    * instead of being silently overwritten.
+    *
+    * Replay short-circuit: when `version` IS the committed head the write
+    * returns without staging. The marker moves LAST, so a committed
+    * `version` means the batch fully applied (foreachBatch's at-least-once
+    * replay); re-writing it would overwrite the live directory — under
+    * concurrent readers, and for a merge the very files its carry step
+    * copies from — to reproduce content the replay contract guarantees is
+    * already there. Versions are immutable once committed; a caller
+    * wanting DIFFERENT content under the head's id is violating the
+    * version discipline, not replaying. `replay = false` (compaction, whose
+    * id the caller picks past the head) makes that case an error instead.
+    * Any other version must advance past `base`.
+    *
+    * `fill` writes the data and sidecars into a writer-unique staging
+    * directory (`.stage_v<n>_<nonce>` — invisible to readers and to
+    * competing writers), and the commit (under the per-root lock, after
+    * the CAS base check) atomically renames it to `$root/$version`.
+    * Unique attempt names are what make the version id safe to contend
+    * for: two writers that both target head+1 never write to the shared
+    * path; the CAS loser's stage is deleted, the winner's is renamed (the
+    * Delta discipline — unique data-file names plus put-if-absent
+    * commits — applied at directory granularity). ANY failure — a write
+    * error, a stats pass, a CAS conflict — deletes the stage on the way
+    * out, so a failed attempt never leaks a data-sized orphan (each retry
+    * would otherwise stage under a fresh nonce and accumulate copies that
+    * the sweep can't reclaim on tables whose head never passes the
+    * version, e.g. the LSM segment roots that only ever publish v1).
     */
-  private def stagePath(root: String, version: String): String =
-    s"$root/.stage_${version}_${java.util.UUID.randomUUID().toString.take(8)}"
-
-  /** Run a staged write: `body` receives the staging path and must end
-    * in a commit that renames it away. ANY failure — a write error, a
-    * stats pass, a CAS conflict — deletes the stage on the way out, so
-    * a failed attempt never leaks a data-sized orphan (each retry would
-    * otherwise stage under a fresh nonce and accumulate copies that the
-    * sweep can't reclaim on tables whose head never passes the version,
-    * e.g. the LSM segment roots that only ever publish v1).
-    */
-  private def withStage[T](root: String, version: String)(
-      body: String => T): T = {
-    val stage = stagePath(root, version)
-    try body(stage)
-    catch {
+  private def staged(root: String, version: String, retain: Int,
+      base: Option[String], replay: Boolean = true)(
+      fill: String => Unit): Unit = {
+    require(version.matches("v\\d+"), s"version must be v<digits>, got $version")
+    if (replay && base.contains(version)) return
+    base.foreach(b => require(version.drop(1).toLong > b.drop(1).toLong,
+      s"$root: version $version must advance the published $b"))
+    val stage =
+      s"$root/.stage_${version}_${java.util.UUID.randomUUID().toString.take(8)}"
+    try {
+      fill(stage)
+      finishCommit(root, version, retain, base, Some(stage))
+    } catch {
       case e: Throwable =>
         rmTree(new java.io.File(stage)) // idempotent if already cleaned
         throw e
@@ -184,36 +206,17 @@ object SnapshotTable {
   def publish(df: DataFrame, root: String, version: String, retain: Int = 2,
       statsCols: Seq[String] = Nil, clusterFiles: Option[Int] = None,
       bloomCols: Seq[String] = Nil, bloomBits: Int = 1 << 17,
-      rowFingerprints: Boolean = true): Unit = {
-    val head = latestVersion(root)
-    // replay short-circuit (merge's discipline, generalized to every
-    // public publish entry): re-publishing the committed head would
-    // mode-overwrite the LIVE directory — deleting its files under
-    // concurrent readers mid-air — to reproduce content the at-least-once
-    // replay contract already guarantees is there. Versions are immutable
-    // once committed; a caller wanting DIFFERENT content under the head's
-    // id is violating the version discipline, not replaying.
-    if (head.contains(version)) return
-    publishFrom(df, root, version, head, retain, statsCols,
-      clusterFiles, bloomCols, bloomBits, rowFingerprints)
-  }
+      rowFingerprints: Boolean = true): Unit =
+    staged(root, version, retain, latestVersion(root))(publishInto(df, _,
+      statsCols, clusterFiles, bloomSpec(bloomCols, bloomBits), rowFingerprints))
 
-  /** [[publish]] with an explicit CAS base: the head version this write's
-    * content derived from (`None` = derived from an empty table). The
-    * public overload captures the head at entry; internal callers that
-    * READ the table earlier (merge, compact, upsert) pass the head they
-    * actually read, so a competing commit in between conflicts instead of
-    * being silently overwritten.
-    */
-  private[sources] def publishFrom(df: DataFrame, root: String,
-      version: String, base: Option[String], retain: Int,
-      statsCols: Seq[String] = Nil, clusterFiles: Option[Int] = None,
-      bloomCols: Seq[String] = Nil, bloomBits: Int = 1 << 17,
+  /** [[publish]]'s body, writing into a stage of [[staged]]. */
+  private def publishInto(df: DataFrame, stage: String, statsCols: Seq[String],
+      clusterFiles: Option[Int] = None, bloom: Option[BloomSidecar] = None,
       rowFingerprints: Boolean = true): Unit = {
-    require(version.matches("v\\d+"), s"version must be v<digits>, got $version")
     require(clusterFiles.isEmpty || statsCols.nonEmpty,
       "clusterFiles requires at least one stats column to cluster by")
-    require(bloomCols.isEmpty || statsCols.nonEmpty,
+    require(bloom.isEmpty || statsCols.nonEmpty,
       "bloomCols requires stats (pointLookup prunes by range first)")
     // a clustered publish evaluates `df` TWICE (repartitionByRange's
     // boundary-sampling pass, then the write) — cache an uncached input
@@ -233,12 +236,9 @@ object SnapshotTable {
           .sortWithinPartitions(col(statsCols.head))
         case None => in
       }
-      withStage(root, version) { stage =>
-        graft.Trace(s"publish:write $root $version") {
-          out.write.mode("overwrite").parquet(stage) }
-        commitVersion(df.sparkSession, root, version, retain, statsCols,
-          bloomCols, bloomBits, base, stage, rowFingerprints)
-      }
+      graft.Trace(s"publish:write $stage") {
+        out.write.mode("overwrite").parquet(stage) }
+      writeSidecars(df.sparkSession, stage, statsCols, bloom, rowFingerprints)
     } finally { if (cacheIn) { in.unpersist(blocking = false); () } }
   }
 
@@ -276,19 +276,14 @@ object SnapshotTable {
   def publishZOrdered(df: DataFrame, root: String, version: String,
       pk: String, zCols: Seq[String], nFiles: Int, retain: Int = 2,
       bits: Int = 8, bloomCols: Seq[String] = Nil,
-      bloomBits: Int = 1 << 17): Unit = {
-    val head = latestVersion(root)
-    if (head.contains(version)) return // committed-head replay (see publish)
-    publishZOrderedFrom(df, root, version, head, pk, zCols,
-      nFiles, retain, bits, bloomCols, bloomBits)
-  }
+      bloomBits: Int = 1 << 17): Unit =
+    staged(root, version, retain, latestVersion(root))(zOrderInto(df, _,
+      pk, zCols, nFiles, bits, bloomSpec(bloomCols, bloomBits)))
 
-  /** [[publishZOrdered]] with an explicit CAS base — see [[publishFrom]]. */
-  private[sources] def publishZOrderedFrom(df: DataFrame, root: String,
-      version: String, base: Option[String], pk: String, zCols: Seq[String],
-      nFiles: Int, retain: Int = 2, bits: Int = 8,
-      bloomCols: Seq[String] = Nil, bloomBits: Int = 1 << 17): Unit = {
-    require(version.matches("v\\d+"), s"version must be v<digits>, got $version")
+  /** [[publishZOrdered]]'s body, writing into a stage of [[staged]]. */
+  private def zOrderInto(df: DataFrame, stage: String, pk: String,
+      zCols: Seq[String], nFiles: Int, bits: Int,
+      bloom: Option[BloomSidecar]): Unit = {
     require(zCols.size >= 2, "z-ordering needs >= 2 columns (use clusterFiles for 1)")
     require(zCols.size * bits <= 62, s"${zCols.size} cols x $bits bits overflows a long")
     val d = zCols.size
@@ -313,20 +308,26 @@ object SnapshotTable {
       buckets.withColumn("__z", z), pk, nFiles,
       Seq(graft.operators.Ranks.NtileSpec("__file", col("__z"), asc = true,
         carryAs = Some("__z"))))
-    withStage(root, version) { stage =>
-      df.join(fileOf, pk)
-        .withColumn("__pin",
-          element_at(typedLit(partitionPins(nFiles)), col("__file")))
-        .repartition(nFiles, col("__pin"))
-        // z-sorted within each file: row groups inherit tight rectangles
-        // too (same row-group rationale as the linear publish)
-        .sortWithinPartitions(col("__z"), col(pk))
-        .drop("__z", "__file", "__pin")
-        .write.mode("overwrite").parquet(stage)
-      commitVersion(df.sparkSession, root, version, retain, zCols,
-        bloomCols, bloomBits, base, stage)
-    }
+    // z-sorted within each file: row groups inherit tight rectangles too
+    // (same row-group rationale as the linear publish)
+    writePinned(df.join(fileOf, pk), stage, nFiles, col("__file"),
+      Seq(col("__z"), col(pk)), "__z", "__file")
+    writeSidecars(df.sparkSession, stage, zCols, bloom)
   }
+
+  /** Write `df` into `dir` as `n` files, each row into the file numbered
+    * by the int column `slot` (1-based) and sorted by `sortBy` within its
+    * file; `drop` names helper columns to leave out of the data. The
+    * slot routes through its [[partitionPins]] pin, so every tile gets
+    * its own output partition deterministically, with no sampling.
+    */
+  private def writePinned(df: DataFrame, dir: String, n: Int, slot: Column,
+      sortBy: Seq[Column], drop: String*): Unit =
+    df.withColumn("__pin", element_at(typedLit(partitionPins(n)), slot))
+      .repartition(n, col("__pin"))
+      .sortWithinPartitions(sortBy: _*)
+      .drop("__pin" +: drop: _*)
+      .write.mode("overwrite").parquet(dir)
 
   /** For each target partition p < n, the smallest non-negative int whose
     * Murmur3 hash (seed 42 — what `repartition(n, col)`'s HashPartitioning
@@ -367,92 +368,64 @@ object SnapshotTable {
   def publishAligned(df: DataFrame, root: String, version: String,
       key: String, boundaries: Seq[Any], retain: Int = 2,
       statsCols: Seq[String] = Nil, bloomCols: Seq[String] = Nil,
-      bloomBits: Int = 1 << 17): Unit = {
-    require(version.matches("v\\d+"), s"version must be v<digits>, got $version")
-    require(boundaries.nonEmpty, "publishAligned needs at least one cutpoint")
-    val base = latestVersion(root)
-    if (base.contains(version)) return // committed-head replay (see publish)
-    val n = boundaries.size + 1
-    val fileId = tileId(df.sparkSession, col(key), boundaries,
-      Some(df.schema(key).dataType))
-    withStage(root, version) { stage =>
-      df.withColumn("__pin",
-          element_at(typedLit(partitionPins(n)), fileId + 1))
-        .repartition(n, col("__pin"))
-        .sortWithinPartitions(col(key))
-        .drop("__pin")
-        .write.mode("overwrite").parquet(stage)
-      commitVersion(df.sparkSession, root, version, retain,
-        if (statsCols.nonEmpty) statsCols else Seq(key), bloomCols, bloomBits,
-        base, stage)
+      bloomBits: Int = 1 << 17): Unit =
+    staged(root, version, retain, latestVersion(root)) { stage =>
+      require(boundaries.nonEmpty, "publishAligned needs at least one cutpoint")
+      writePinned(df, stage, boundaries.size + 1, tileId(df.sparkSession,
+        col(key), boundaries, Some(df.schema(key).dataType)) + 1, Seq(col(key)))
+      writeSidecars(df.sparkSession, stage,
+        if (statsCols.nonEmpty) statsCols else Seq(key),
+        bloomSpec(bloomCols, bloomBits))
     }
-  }
 
-  /** File/tile id of `key` against value cutpoints — the count of
+  /** File/tile id of `keyCol` against value cutpoints — the count of
     * boundaries at or below the key, as one codegen'd binary-search
     * kernel ([[graft.expressions.SearchSorted]]): O(log files) per row
     * with a constant-depth plan. The per-boundary `when(...)` fold this
     * replaces was O(files) per row and overflowed the analyzer's stack
     * at the 4096-tile layouts a 100x corpus publishes.
     */
-  private def tileId(spark: SparkSession, key: Column,
-      boundaries: Seq[Any], keyType: Option[org.apache.spark.sql.types.DataType] = None): Column = {
-    import org.apache.spark.sql.types.{ByteType, ShortType, IntegerType,
-      LongType, FloatType, DoubleType, StringType}
+  private def tileId(spark: SparkSession, keyCol: Column,
+      boundaries: Seq[Any], keyType: Option[DataType] = None): Column = {
     if (boundaries.isEmpty) return lit(0)
-    val longs = boundaries.collect {
-      case b: Byte => b.toLong
-      case s: Short => s.toLong
-      case i: Int => i.toLong
-      case l: Long => l
+    // the kernel compares within one type family ([[key]]'s): it takes
+    // cutpoints of ONE family that is also the key column's. `keyType`
+    // absent (internal callers — boundaries decoded from the key's own
+    // stats) takes the cutpoints' family. The only coercion is the
+    // lossless lift of integral cutpoints onto a floating key (a double
+    // key with integer cutpoints is publishAligned's public Seq[Any]
+    // contract); a LONG key with double cutpoints, keys outside the three
+    // families (decimal, date, timestamp) and mixed or null cutpoints
+    // fall to the coercing fold, since casting either side could move a
+    // boundary across a key value.
+    val keys = boundaries.flatMap(key)
+    val target = keys.map(_.family).distinct match {
+      case Seq(f) if keys.size == boundaries.size =>
+        keyType.map(family) match {
+          case None => Some(f)
+          case Some(Some(kf)) if kf == f || (kf == "D" && f == "L") => Some(kf)
+          case _ => None
+        }
+      case _ => None
     }
-    // the kernel compares within one type family; coerce the CUTPOINTS to
-    // the key column's family when they differ (a double key with integer
-    // cutpoints is publishAligned's public Seq[Any] contract — the legacy
-    // when-fold coerced via lit(), the kernel must not regress it). Only
-    // the lossless direction lifts (integral cutpoints -> double); a
-    // LONG key with double cutpoints falls through to the fold, since
-    // casting either side could move a boundary across a key value.
-    val wantFamily: Option[Char] = keyType.collect {
-      case ByteType | ShortType | IntegerType | LongType => 'L'
-      case FloatType | DoubleType => 'D'
-      case StringType => 'S'
-    }
-    // keyType ABSENT (internal callers — boundaries decoded from the
-    // key's own stats, families match by construction) keeps the kernel;
-    // keyType PRESENT but outside the kernel's three families (decimal,
-    // date, timestamp — publishAligned's public Seq[Any] surface) must
-    // fall to the coercing fold, not reach the kernel's type check
-    val familyKnown = keyType.isEmpty || wantFamily.isDefined
-    val arr =
-      if (!familyKnown) None
-      else if (longs.size == boundaries.size && wantFamily.contains('D'))
-        Some(typedLit(longs.map(_.toDouble).toArray))
-      else if (longs.size == boundaries.size && !wantFamily.contains('S'))
-        Some(typedLit(longs.toArray))
-      else if (boundaries.forall(b =>
-        b.isInstanceOf[Double] || b.isInstanceOf[Float]) &&
-        !wantFamily.exists(f => f == 'L' || f == 'S'))
-        Some(typedLit(boundaries.map {
-          case d: Double => d
-          case f: Float => f.toDouble
-        }.toArray))
-      else if (boundaries.forall(_.isInstanceOf[String]) &&
-        !wantFamily.exists(f => f == 'L' || f == 'D'))
-        Some(typedLit(boundaries.map(_.asInstanceOf[String]).toArray))
-      else None
-    arr match {
-      case Some(a) =>
+    target match {
+      case Some(f) =>
+        val arr = f match {
+          case "L" => typedLit(keys.collect { case LongKey(l) => l }.toArray)
+          case "D" => typedLit(keys.collect {
+            case LongKey(l) => l.toDouble
+            case DoubleKey(d) => d
+          }.toArray)
+          case _ => typedLit(keys.collect { case StringKey(s) => s }.toArray)
+        }
         graft.expressions.SearchSorted.register(spark)
-        call_function("search_sorted", key, a)
+        call_function("search_sorted", keyCol, arr)
       case None =>
-        // types outside the kernel's families (date/timestamp/decimal
-        // cutpoints, mixed numerics — publishAligned's public Seq[Any]
-        // contract) keep the legacy per-boundary fold: correct via
-        // lit() coercion, O(boundaries) per row with the documented
-        // ~2-4k depth ceiling — every layout THIS library derives
-        // (keyBoundaries decodes long/double/string) takes the kernel
-        boundaries.map(b => when(key >= lit(b), 1).otherwise(0))
+        // the legacy per-boundary fold: correct via lit() coercion,
+        // O(boundaries) per row with the documented ~2-4k depth ceiling —
+        // every layout THIS library derives (keyBoundaries decodes
+        // long/double/string) takes the kernel
+        boundaries.map(b => when(keyCol >= lit(b), 1).otherwise(0))
           .reduce(_ + _)
     }
   }
@@ -544,57 +517,57 @@ object SnapshotTable {
       rowFingerprints: Boolean = true,
       knownPlan: Option[Plan] = None,
       extraStatsCols: Seq[String] = Nil): Unit = {
-    require(version.matches("v\\d+"), s"version must be v<digits>, got $version")
-    val spark = updates.sparkSession
-    val vOld = latestVersion(root) match {
-      case None =>
-        // first publish: nothing to match, inserts only; CAS base None =
-        // the empty table this merge derived from
-        return publishFrom(
-          deleteWhen.foldLeft(updates)((u, d) =>
-            u.filter(!coalesce(d, lit(false)))),
-          root, version, None, retain, (Seq(pk) ++ extraStatsCols).distinct,
-          clusterFiles, rowFingerprints = rowFingerprints)
-      // REPLAYED batch (foreachBatch at-least-once): the marker moves
-      // LAST, so a committed `version` means the batch fully applied —
-      // re-applying a merge to its own output would overwrite the very
-      // files the carry step copies from. Skip; the table already holds
-      // the batch (merge is idempotent in content, so skipping IS the
-      // identical republish). A crash BEFORE the marker move leaves the
-      // marker on the previous version and the normal path below cleans
-      // the partial directory up.
-      case Some(v) if v == version => return ()
-      case Some(v) =>
-        require(version.drop(1).toLong > v.drop(1).toLong,
-          s"merge version must advance the published $v, got $version")
-        v
-    }
-    val current = readVersion(spark, root, vOld)
-    require(updates.schema.fields.map(f => (f.name, f.dataType)).toSeq ==
-      current.schema.fields.map(f => (f.name, f.dataType)).toSeq,
-      "merge updates must match the table schema (names and types); " +
-        s"updates=${updates.schema.fields.map(f => s"${f.name}:${f.dataType.simpleString}").mkString(",")} " +
-        s"table=${current.schema.fields.map(f => s"${f.name}:${f.dataType.simpleString}").mkString(",")}")
-    // three consumers read the update set (tile discovery, the matched-key
-    // anti join, the insert union) — persist it for the merge's duration
-    // rather than re-evaluating an arbitrary source frame three times
-    val ups = updates.persist()
-    try mergeInto(ups, root, pk, version, vOld, current, deleteWhen, retain,
-      clusterFiles, rowFingerprints,
-      knownPlan.filter(_.version == vOld).flatMap(_.tiles), extraStatsCols)
-    finally { ups.unpersist(blocking = false); () }
-  }
-
-  private def mergeInto(updates: DataFrame, root: String, pk: String,
-      version: String, vOld: String, current: DataFrame,
-      deleteWhen: Option[Column], retain: Int,
-      clusterFiles: Option[Int], rowFingerprints: Boolean,
-      knownTiles: Option[Set[Int]], extraStatsCols: Seq[String]): Unit = {
     val spark = updates.sparkSession
     // null predicate = not-deleted (SQL MERGE semantics), not delete:
     // filter(!d) alone would drop null-condition rows
-    val inserts = deleteWhen.foldLeft(updates)((u, d) =>
-      u.filter(!coalesce(d, lit(false))))
+    def inserts(u: DataFrame) =
+      deleteWhen.foldLeft(u)((u, d) => u.filter(!coalesce(d, lit(false))))
+    val base = latestVersion(root)
+    staged(root, version, retain, base) { stage => base match {
+      case None =>
+        // first publish: nothing to match, inserts only
+        publishInto(inserts(updates), stage, (Seq(pk) ++ extraStatsCols).distinct,
+          clusterFiles, rowFingerprints = rowFingerprints)
+      case Some(vOld) =>
+        val current = readVersion(spark, root, vOld)
+        require(updates.schema.fields.map(f => (f.name, f.dataType)).toSeq ==
+          current.schema.fields.map(f => (f.name, f.dataType)).toSeq,
+          "merge updates must match the table schema (names and types); " +
+            s"updates=${updates.schema.fields.map(f => s"${f.name}:${f.dataType.simpleString}").mkString(",")} " +
+            s"table=${current.schema.fields.map(f => s"${f.name}:${f.dataType.simpleString}").mkString(",")}")
+        // three consumers read the update set (tile discovery, the
+        // matched-key anti join, the insert union) — persist it for the
+        // merge's duration rather than re-evaluating an arbitrary source
+        // frame three times
+        val ups = updates.persist()
+        try mergeInto(ups, inserts(ups), root, pk, stage, vOld, current,
+          clusterFiles, rowFingerprints,
+          knownPlan.filter(_.version == vOld).flatMap(_.tiles), extraStatsCols)
+        finally { ups.unpersist(blocking = false); () }
+    } }
+  }
+
+  private def mergeInto(updates: DataFrame, inserts: DataFrame, root: String,
+      pk: String, dir: String, vOld: String, current: DataFrame,
+      clusterFiles: Option[Int], rowFingerprints: Boolean,
+      knownTiles: Option[Set[Int]], extraStatsCols: Seq[String]): Unit = {
+    val spark = updates.sparkSession
+    // matched rows leave `old`, update rows insert. USING-join semantics
+    // move the pk to column 0; restore the table's order or the NEXT
+    // merge's schema check rejects its own output (only visible on tables
+    // whose pk is not already the first column — every dim was, the
+    // inverted index isn't). No broadcast hint: AQE converts to a
+    // broadcast join at runtime when the batch's key set is actually
+    // small, and a table-scale update set (SnapshotDiff.merged passes
+    // one) stays a shuffle join instead of OOMing the driver.
+    def applied(old: DataFrame) = old
+      .join(updates.select(col(pk)), Seq(pk), "left_anti")
+      .unionByName(inserts)
+      .select(current.columns.map(col).toIndexedSeq: _*)
+    // read once: the tile path carries its lines, the fallback its
+    // columns and sizing — a table published with a `_BLOOM` must not
+    // silently lose its secondary-key pruning after a merge
+    val bloom = bloomSidecar(root, vOld)
     val lay = layout(root, vOld)
     lay.flatMap(l => l.tiles(pk).map(t => (l, t))) match {
       case Some((l, (filesByTile, cuts))) =>
@@ -605,15 +578,10 @@ object SnapshotTable {
           Prune.Keys(updates), l).tiles.get)
         val (chFiles, keepFiles) = filesByTile.zipWithIndex
           .partition { case (_, i) => changed(i) }
-        withStage(root, version) { dir =>
-        if (chFiles.isEmpty) {
+        val newFiles = if (chFiles.isEmpty) {
           // no-op merge: clone the version (copies + verbatim sidecars)
           java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
-          copyFiles(root, vOld, dir, filesByTile)
-          writeStatsLines(dir, l.header, l.lines)
-          bloomLines(root, vOld, filesByTile.toSet).foreach {
-            case (bits, ls) => writeBloomLines(dir, bits, ls)
-          }
+          Nil
         } else {
           val oldChanged = readFiles(spark, root,
             Plan(vOld, Some(chFiles.map(_._1)), None))
@@ -621,64 +589,28 @@ object SnapshotTable {
           val tileToDense = element_at(
             typedLit(filesByTile.indices.map(i =>
               denseIx.getOrElse(i, -1)).toArray), tile + 1)
-          // no broadcast hint: AQE converts to a broadcast join at
-          // runtime when the batch's key set is actually small, and a
-          // table-scale update set (SnapshotDiff.merged passes one)
-          // stays a shuffle join instead of OOMing the driver
-          // USING-join semantics move the pk to column 0; restore the
-          // table's order or the NEXT merge's schema check rejects its
-          // own output (only visible on tables whose pk is not already
-          // the first column — every dim was, the inverted index isn't)
-          val merged = oldChanged
-            .join(updates.select(col(pk)), Seq(pk), "left_anti")
-            .unionByName(inserts)
-            .select(current.columns.map(col).toIndexedSeq: _*)
-          graft.Trace(s"merge:write $root $version") { merged
-            .withColumn("__pin", element_at(
-              typedLit(partitionPins(chFiles.size)), tileToDense + 1))
-            .repartition(chFiles.size, col("__pin"))
-            .sortWithinPartitions(col(pk))
-            .drop("__pin")
-            .write.mode("overwrite").parquet(dir) }
-          val newFiles = Option(new java.io.File(dir).listFiles())
-            .getOrElse(Array.empty)
-            .filter(f => f.isFile && f.getName.endsWith(".parquet"))
-            .map(_.getName).toSeq
-          val kept = keepFiles.map(_._1)
-          copyFiles(root, vOld, dir, kept)
-          writeStatsLines(dir, l.header, l.linesOf(kept.toSet) ++
-            computeStatsLines(spark, dir, newFiles, l.header, rowFingerprints))
-          // bloom sidecar rides along: carried files keep their filters,
-          // fresh tiles get new ones with the same columns and sizing
-          bloomLines(root, vOld, kept.toSet).foreach {
-            case (bits, keptLines) =>
-              val bcols = readBlooms(root, vOld).get.cols.toSeq.sorted
-              writeBloomLines(dir, bits,
-                keptLines ++ computeBloomLines(spark, dir, newFiles, bcols, bits))
-          }
+          graft.Trace(s"merge:write $dir") {
+            writePinned(applied(oldChanged), dir, chFiles.size,
+              tileToDense + 1, Seq(col(pk))) }
+          dataFiles(dir)
         }
-        finishCommit(root, version, retain, Some(vOld), Some(dir))
-        }
+        // untouched files are carried with their sidecar lines verbatim;
+        // fresh tiles get new lines with the same columns and sizing
+        val kept = keepFiles.map(_._1)
+        copyFiles(root, vOld, dir, kept)
+        writeSidecar(dir, "_STATS", l.header.mkString("\t"),
+          l.linesOf(kept.toSet) ++ (if (newFiles.isEmpty) Nil else
+            computeStatsLines(spark, dir, newFiles, l.header, rowFingerprints)))
+        bloom.foreach(b => writeSidecar(dir, "_BLOOM", b.header,
+          b.linesOf(kept.toSet) ++
+            computeBloomLines(spark, dir, newFiles, b.cols, b.bits)))
       case None =>
-        // same pk-to-front USING-join reorder as the tile path — restore
-        val merged = current
-          .join(updates.select(col(pk)), Seq(pk), "left_anti")
-          .unionByName(inserts)
-          .select(current.columns.map(col).toIndexedSeq: _*)
-        // full-rewrite fallback: carry the previous version's bloom
-        // sidecar columns/sizing forward — a table published with a
-        // `_BLOOM` must not silently lose its secondary-key pruning
-        // after one non-tile-mergeable batch
-        val (bcols, bbits) = readBlooms(root, vOld)
-          .map(bl => (bl.cols.toSeq.sorted, bl.bits))
-          .getOrElse((Nil, 1 << 17))
-        // preserve the table's existing stats header on the fallback
-        // rewrite — a one-off non-tile-mergeable batch must not silently
+        // full-rewrite fallback, preserving the table's existing stats
+        // header — a one-off non-tile-mergeable batch must not silently
         // drop the extra stats columns later guards/prunes rely on
-        val fbCols = lay.map(_.header)
-          .getOrElse((Seq(pk) ++ extraStatsCols).distinct)
-        publishFrom(merged, root, version, Some(vOld), retain, fbCols,
-          clusterFiles, bcols, bbits, rowFingerprints)
+        publishInto(applied(current), dir,
+          lay.map(_.header).getOrElse((Seq(pk) ++ extraStatsCols).distinct),
+          clusterFiles, bloom, rowFingerprints)
     }
   }
 
@@ -702,12 +634,48 @@ object SnapshotTable {
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
     }
 
-  private def writeStatsLines(dir: String, cols: Seq[String],
+  /** The parquet data files directly under `dir`, by name. */
+  private def dataFiles(dir: String): Seq[String] =
+    Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
+      .filter(f => f.isFile && f.getName.endsWith(".parquet"))
+      .map(_.getName).toSeq.sorted
+
+  /** Write sidecar `name` (`_STATS` or `_BLOOM`) into `dir`: one header
+    * line, then the per-file body lines, sorted.
+    */
+  private def writeSidecar(dir: String, name: String, header: String,
       lines: Seq[String]): Unit = {
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$dir/_STATS"),
-      cols.mkString("\t") + "\n" + lines.sorted.mkString("\n") + "\n")
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/$name"),
+      header + "\n" + lines.sorted.mkString("\n") + "\n")
     ()
+  }
+
+  /** Sidecar `name` of `dir` as its header and non-empty body lines;
+    * None when the version has none.
+    */
+  private def readSidecar(dir: String,
+      name: String): Option[(String, Seq[String])] = {
+    val p = java.nio.file.Paths.get(s"$dir/$name")
+    if (!java.nio.file.Files.exists(p)) None
+    else {
+      val lines = java.nio.file.Files.readString(p).split("\n").toSeq
+      Some((lines.head, lines.tail.filter(_.nonEmpty)))
+    }
+  }
+
+  /** The sidecars of a freshly written stage, before its commit (a
+    * published version never lacks its stats or blooms): `_STATS` over
+    * `statsCols`, `_BLOOM` as `bloom` specifies. File names survive the
+    * commit rename unchanged — sidecar lines carry names, not paths.
+    */
+  private def writeSidecars(spark: SparkSession, stage: String,
+      statsCols: Seq[String], bloom: Option[BloomSidecar],
+      rowFingerprints: Boolean = true): Unit = {
+    if (statsCols.nonEmpty) writeSidecar(stage, "_STATS",
+      statsCols.mkString("\t"),
+      computeStatsLines(spark, stage, Nil, statsCols, rowFingerprints))
+    bloom.foreach(b => writeSidecar(stage, "_BLOOM", b.header,
+      computeBloomLines(spark, stage, dataFiles(stage), b.cols, b.bits)))
   }
 
   // ---- Bloom-filter file skipping (the `_BLOOM` sidecar) -------------
@@ -729,11 +697,11 @@ object SnapshotTable {
   private val BloomSeeds = 1 to 4
 
   /** `fams` records each column's canonical hash family as written by
-    * the build ("L" integral, "D" floating, "S" string) — what lets a
-    * probe detect a cross-class value and bypass the filter instead of
-    * hashing in the wrong domain. Columns from sidecars written before
-    * the family tag are absent (probes then fall back to the value's
-    * runtime class).
+    * the build ("L" integral, "D" floating, "S" string — [[family]]) —
+    * what lets a probe detect a cross-class value and bypass the filter
+    * instead of hashing in the wrong domain. Columns from sidecars
+    * written before the family tag are absent ([[pointLookup]] then
+    * bypasses the filter).
     */
   final case class Blooms(bits: Int, cols: Set[String],
       words: Map[(String, String), Array[Long]],
@@ -749,71 +717,41 @@ object SnapshotTable {
   }
 
   /** Driver-side twin of the build's `xxhash64(col, lit(seed))`. The
-    * build canonicalizes integral columns to long and float to double
-    * ([[computeBloomLines]]); the probe widens the same way so both
-    * sides hash the same domain regardless of runtime width.
+    * build canonicalizes each column to its family's widest type
+    * ([[computeBloomLines]]); the probe takes its [[key]], which widens
+    * the same way, so both sides hash the same domain regardless of
+    * runtime width.
     */
   private def bloomHash(value: Any, seed: Int): Long = {
     import org.apache.spark.sql.catalyst.expressions.{Literal, XxHash64}
-    val v = value match {
-      case i: Int => Literal(i.toLong)
-      case s: Short => Literal(s.toLong)
-      case b: Byte => Literal(b.toLong)
-      case f: Float => Literal(f.toDouble)
-      case other => Literal(other)
-    }
-    XxHash64(Seq(v, Literal(seed)), 42L).eval().asInstanceOf[Long]
+    XxHash64(Seq(Literal(key(value).fold(value)(_.value)), Literal(seed)), 42L)
+      .eval().asInstanceOf[Long]
   }
 
-  /** The probe value for a bloom lookup against a column whose sidecar
-    * family tag is `family` ("L" integral, "D" floating, "S" string) —
-    * None when the probe's type CLASS differs from the column's. Range
-    * pruning fails safe on an incomparable probe (keeps the file), but
-    * a bloom probe hashed in the wrong domain matches no filter and
-    * would wrongly SKIP every file even though the row filter could
-    * still coerce-match — so a cross-class probe must bypass the bloom
-    * entirely, and same-class probes normalize to the build's canonical
-    * width before hashing.
+  /** A `_BLOOM` sidecar's sizing and columns — what a write builds — and,
+    * for a published version, its raw body lines: a rewrite of that
+    * version (merge's tile path and fallback, compaction) carries the
+    * columns and sizing forward and an untouched file's lines verbatim.
     */
-  private def bloomProbe(family: String, value: Any): Option[Any] =
-    (family, value) match {
-      case ("L", v: Long) => Some(v)
-      case ("L", v: Int) => Some(v.toLong)
-      case ("L", v: Short) => Some(v.toLong)
-      case ("L", v: Byte) => Some(v.toLong)
-      case ("D", v: Double) => Some(v)
-      case ("D", v: Float) => Some(v.toDouble)
-      case ("S", v: String) => Some(v)
-      case _ => None
-    }
-
-  /** A column's canonical hash family tag for the sidecar. */
-  private def bloomFamily(dt: org.apache.spark.sql.types.DataType): String = {
-    import org.apache.spark.sql.types._
-    dt match {
-      case ByteType | ShortType | IntegerType | LongType => "L"
-      case FloatType | DoubleType => "D"
-      case StringType => "S"
-      case _ => "O"
-    }
+  private final case class BloomSidecar(bits: Int, cols: Seq[String],
+      lines: Seq[String] = Nil) {
+    def header: String = s"bits=$bits"
+    def linesOf(files: Set[String]): Seq[String] =
+      lines.filter(l => files(l.split("\t")(1)))
   }
 
-  private def writeBlooms(spark: SparkSession, dir: String,
-      cols: Seq[String], bits: Int): Unit = {
-    val files = Option(new java.io.File(dir).listFiles())
-      .getOrElse(Array.empty)
-      .filter(f => f.isFile && f.getName.endsWith(".parquet"))
-      .map(_.getName).toSeq
-    writeBloomLines(dir, bits, computeBloomLines(spark, dir, files, cols, bits))
-  }
+  private def bloomSpec(cols: Seq[String], bits: Int): Option[BloomSidecar] =
+    if (cols.isEmpty) None else Some(BloomSidecar(bits, cols))
 
-  private def writeBloomLines(dir: String, bits: Int,
-      lines: Seq[String]): Unit = {
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$dir/_BLOOM"),
-      s"bits=$bits\n" + lines.sorted.mkString("\n") + "\n")
-    ()
-  }
+  /** The `_BLOOM` sidecar of `root`'s `version` — one raw read; None
+    * when it has none (or no columns).
+    */
+  private def bloomSidecar(root: String,
+      version: String): Option[BloomSidecar] =
+    readSidecar(s"$root/$version", "_BLOOM").map { case (header, lines) =>
+      BloomSidecar(header.stripPrefix("bits=").toInt,
+        lines.map(_.split("\t")(0)).distinct.sorted, lines)
+    }.filter(_.cols.nonEmpty)
 
   // parsed-sidecar memo: a version directory is immutable once published,
   // so its parsed filters can be reused across lookups (a dim point-read
@@ -850,13 +788,10 @@ object SnapshotTable {
       }
     }
 
-  private def parseBlooms(root: String, version: String): Option[Blooms] = {
-    val p = java.nio.file.Paths.get(s"$root/$version/_BLOOM")
-    if (!java.nio.file.Files.exists(p)) None
-    else {
-      val lines = java.nio.file.Files.readString(p).split("\n").toSeq
-      val bits = lines.head.stripPrefix("bits=").toInt
-      val parsed = lines.tail.filter(_.nonEmpty).map { l =>
+  private def parseBlooms(root: String, version: String): Option[Blooms] =
+    readSidecar(s"$root/$version", "_BLOOM").map { case (header, lines) =>
+      val bits = header.stripPrefix("bits=").toInt
+      val parsed = lines.map { l =>
         val parts = l.split("\t", 4)
         val (c, f, b64) = (parts(0), parts(1), parts(2))
         val fam = if (parts.length >= 4) Some(parts(3)) else None
@@ -867,24 +802,9 @@ object SnapshotTable {
         ((c, f) -> ws, fam.map(c -> _))
       }
       val entries = parsed.map(_._1)
-      Some(Blooms(bits, entries.map(_._1._1).toSet, entries.toMap,
-        parsed.flatMap(_._2).toMap))
+      Blooms(bits, entries.map(_._1._1).toSet, entries.toMap,
+        parsed.flatMap(_._2).toMap)
     }
-  }
-
-  /** Raw `_BLOOM` body lines of a version restricted to `files`, with the
-    * sidecar's bits — Nil when no sidecar exists.
-    */
-  private def bloomLines(root: String, version: String,
-      files: Set[String]): Option[(Int, Seq[String])] = {
-    val p = java.nio.file.Paths.get(s"$root/$version/_BLOOM")
-    if (!java.nio.file.Files.exists(p)) None
-    else {
-      val lines = java.nio.file.Files.readString(p).split("\n").toSeq
-      Some((lines.head.stripPrefix("bits=").toInt,
-        lines.tail.filter(l => l.nonEmpty && files(l.split("\t")(1)))))
-    }
-  }
 
   /** Per-(column, file) bloom lines for just `files` of a version dir. */
   private def computeBloomLines(spark: SparkSession, dir: String,
@@ -893,15 +813,14 @@ object SnapshotTable {
     if (files.isEmpty) Nil
     else {
       val df = GraftParquet.read(spark, files.map(f => s"$dir/$f"): _*)
+      val fams = cols.map(c => c -> family(df.schema(c).dataType)).toMap
       val perCol = cols.flatMap { c =>
-        // canonical hash domains (mirrors `encode`'s stats families):
-        // every integral width hashes as long, float as double, so a
-        // probe of any width in the same class agrees with the build
-        val v = df.schema(c).dataType match {
-          case org.apache.spark.sql.types.ByteType |
-               org.apache.spark.sql.types.ShortType |
-               org.apache.spark.sql.types.IntegerType => col(c).cast("long")
-          case org.apache.spark.sql.types.FloatType => col(c).cast("double")
+        // canonical hash domains (the stats encoding's families): every
+        // integral width hashes as long, float as double, so a probe of
+        // any width in the same class agrees with the build
+        val v = fams(c) match {
+          case Some("L") => col(c).cast("long")
+          case Some("D") => col(c).cast("double")
           case _ => col(c)
         }
         BloomSeeds.map { s =>
@@ -914,7 +833,6 @@ object SnapshotTable {
           (col("__pos") / 64).cast("int").as("__word"))
         .agg(expr("bit_or(shiftleft(1L, CAST(pmod(__pos, 64) AS INT)))").as("__bits"))
         .collect()
-      val fams = cols.map(c => c -> bloomFamily(df.schema(c).dataType)).toMap
       rows.groupBy(r => (r.getString(1), r.getString(0).split('/').last))
         .toSeq.map { case ((c, f), rs) =>
           val ws = new Array[Long](bits >> 6)
@@ -922,7 +840,7 @@ object SnapshotTable {
           val bb = java.nio.ByteBuffer.allocate(ws.length * 8)
           ws.foreach(bb.putLong)
           s"$c\t$f\t" + java.util.Base64.getEncoder.encodeToString(bb.array()) +
-            s"\t${fams(c)}"
+            s"\t${fams(c).getOrElse("O")}"
         }
     }
   }
@@ -953,29 +871,24 @@ object SnapshotTable {
       targetFiles: Int, statsCols: Seq[String] = Nil,
       zOrderPk: Option[String] = None, retain: Int = 2): Option[String] =
     latestVersion(root).map { v =>
-      require(version.matches("v\\d+") && version.drop(1).toLong > v.drop(1).toLong,
-        s"compaction version must be v<digits> after the published $v, got $version")
-      val df = readVersion(spark, root, v)
-      // a compaction is a layout rewrite, not a capability change: the
-      // previous version's bloom sidecar columns/sizing carry forward
-      // (fresh filters are rebuilt for the new files)
-      val (bcols, bbits) = readBlooms(root, v)
-        .map(bl => (bl.cols.toSeq.sorted, bl.bits))
-        .getOrElse((Nil, 1 << 17))
-      zOrderPk match {
-        case Some(pk) =>
-          require(statsCols.size >= 2, "z-order compaction needs >= 2 statsCols")
-          publishZOrderedFrom(df, root, version, Some(v), pk, statsCols,
-            targetFiles, retain, bloomCols = bcols, bloomBits = bbits)
-        case None if statsCols.nonEmpty =>
-          publishFrom(df, root, version, Some(v), retain, statsCols,
-            Some(targetFiles), bcols, bbits)
-        case None =>
-          require(bcols.isEmpty,
-            "compacting away stats would orphan the bloom sidecar " +
-              "(pointLookup prunes by range first) — pass statsCols")
-          publishFrom(df.repartition(targetFiles), root, version, Some(v),
-            retain)
+      staged(root, version, retain, Some(v), replay = false) { stage =>
+        val df = readVersion(spark, root, v)
+        // a compaction is a layout rewrite, not a capability change: the
+        // previous version's bloom sidecar columns/sizing carry forward
+        // (fresh filters are rebuilt for the new files)
+        val bloom = bloomSidecar(root, v)
+        zOrderPk match {
+          case Some(pk) =>
+            require(statsCols.size >= 2, "z-order compaction needs >= 2 statsCols")
+            zOrderInto(df, stage, pk, statsCols, targetFiles, 8, bloom)
+          case None if statsCols.nonEmpty =>
+            publishInto(df, stage, statsCols, Some(targetFiles), bloom)
+          case None =>
+            require(bloom.isEmpty,
+              "compacting away stats would orphan the bloom sidecar " +
+                "(pointLookup prunes by range first) — pass statsCols")
+            publishInto(df.repartition(targetFiles), stage, Nil)
+        }
       }
       version
     }
@@ -1011,18 +924,13 @@ object SnapshotTable {
       // `spark.read.parquet(dir)` surface is consistent except inside
       // this window — the manifest is the consistency boundary, exactly
       // as in any manifest-based table format.
-      val names = Option(new java.io.File(s"$root/$v").listFiles())
-        .getOrElse(Array.empty)
-        .filter(f => f.isFile &&
-          (f.getName.endsWith(".parquet") || f.getName == "_STATS" ||
-            f.getName == "_BLOOM"))
-        .map(_.getName).sorted.toSeq
-      names.foreach { n =>
+      val listed = dataFiles(s"$root/$v")
+      (Seq("_BLOOM", "_STATS").filter(n =>
+        new java.io.File(s"$root/$v/$n").isFile) ++ listed).foreach { n =>
         Files.copy(Paths.get(s"$root/$v/$n"), Paths.get(s"$dir/$n"),
           StandardCopyOption.REPLACE_EXISTING); ()
       }
       val schemaJson = readVersion(spark, root, v).schema.json
-      val listed = names.filter(_.endsWith(".parquet"))
       val fileList = listed.map(n => "\"" + n + "\"").mkString("[", ",", "]")
       val tmp = Paths.get(s"$dir/._MANIFEST.json.tmp")
       Files.writeString(tmp,
@@ -1033,10 +941,8 @@ object SnapshotTable {
       // post-swap cleanup: every managed data file the NEW manifest does
       // not list is stale (a previous export's parts, including ones a
       // crashed export orphaned without any manifest)
-      Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
-        .filter(f => f.isFile && f.getName.endsWith(".parquet") &&
-          !listed.contains(f.getName))
-        .foreach(f => Files.delete(f.toPath))
+      dataFiles(dir).filterNot(listed.contains)
+        .foreach(n => Files.delete(Paths.get(s"$dir/$n")))
       v
     }
 
@@ -1074,47 +980,37 @@ object SnapshotTable {
     */
   def importTable(spark: SparkSession, dir: String, root: String,
       version: String, retain: Int = 2, statsCols: Seq[String] = Nil,
-      clusterFiles: Option[Int] = None): Unit = {
-    require(version.matches("v\\d+"), s"version must be v<digits>, got $version")
-    val base = latestVersion(root)
-    if (base.contains(version)) return // committed-head replay (see publish)
-    val manifest = new java.io.File(s"$dir/_MANIFEST.json")
-    if (manifest.isFile) {
-      import java.nio.file.{Files, Paths, StandardCopyOption}
-      // copy ONLY the manifest's data-file list (not whatever .parquet
-      // happens to sit in the directory — a foreign or stale stray file
-      // must not ride into the committed version uncovered by _STATS)
-      val listed = manifestFiles(dir).getOrElse(Seq.empty)
-      require(listed.nonEmpty,
-        s"$dir/_MANIFEST.json: no data files listed")
-      listed.foreach(n => require(new java.io.File(s"$dir/$n").isFile,
-        s"$dir: manifest lists $n but the file is missing"))
-      // sidecars carry over only when they AGREE with the manifest's
-      // file list — a crashed re-export can leave newer sidecars beside
-      // an older manifest, and stats naming files the version does not
-      // contain would corrupt pruning; skipping them degrades safely to
-      // an unpruned (still correct) table
-      val sidecars = Seq("_STATS", "_BLOOM").filter { n =>
-        val f = new java.io.File(s"$dir/$n")
-        f.isFile && {
-          val body = Files.readString(f.toPath)
-          val mentioned = "[A-Za-z0-9._-]+\\.parquet".r
-            .findAllIn(body).toSet
-          mentioned.nonEmpty && mentioned.subsetOf(listed.toSet)
-        }
-      }
-      withStage(root, version) { stage =>
+      clusterFiles: Option[Int] = None): Unit =
+    staged(root, version, retain, latestVersion(root)) { stage =>
+      if (new java.io.File(s"$dir/_MANIFEST.json").isFile) {
+        import java.nio.file.{Files, Paths, StandardCopyOption}
+        // copy ONLY the manifest's data-file list (not whatever .parquet
+        // happens to sit in the directory — a foreign or stale stray file
+        // must not ride into the committed version uncovered by _STATS)
+        val listed = manifestFiles(dir).getOrElse(Seq.empty)
+        require(listed.nonEmpty,
+          s"$dir/_MANIFEST.json: no data files listed")
+        listed.foreach(n => require(new java.io.File(s"$dir/$n").isFile,
+          s"$dir: manifest lists $n but the file is missing"))
+        // sidecars carry over only when they AGREE with the manifest's
+        // file list — a crashed re-export can leave newer sidecars beside
+        // an older manifest, and stats naming files the version does not
+        // contain would corrupt pruning; skipping them degrades safely to
+        // an unpruned (still correct) table
+        val sidecars = Seq("_STATS", "_BLOOM").filter(n =>
+          readSidecar(dir, n).exists { case (_, lines) =>
+            val mentioned = "[A-Za-z0-9._-]+\\.parquet".r
+              .findAllIn(lines.mkString("\n")).toSet
+            mentioned.nonEmpty && mentioned.subsetOf(listed.toSet)
+          })
         Files.createDirectories(Paths.get(stage))
         (listed ++ sidecars).foreach { n =>
           Files.copy(Paths.get(s"$dir/$n"), Paths.get(s"$stage/$n"),
             StandardCopyOption.REPLACE_EXISTING); ()
         }
-        finishCommit(root, version, retain, base, Some(stage))
-      }
-    } else
-      publishFrom(GraftParquet.read(spark, dir), root, version, base, retain,
-        statsCols, clusterFiles)
-  }
+      } else
+        publishInto(GraftParquet.read(spark, dir), stage, statsCols, clusterFiles)
+    }
 
   /** Long-castable monotonic projection for rank bucketing. Strings map
     * to 7 bytes as a big-endian unsigned integer (zero-padded hex so
@@ -1141,23 +1037,6 @@ object SnapshotTable {
           16, 10).cast("long")
       case _ => col(c)
     }
-
-  /** The shared publish tail: stats before the marker (a published
-    * version always has its stats), then the atomic `_LATEST` move, then
-    * retention pruning.
-    */
-  private def commitVersion(spark: SparkSession, root: String,
-      version: String, retain: Int, statsCols: Seq[String],
-      bloomCols: Seq[String], bloomBits: Int,
-      base: Option[String], stage: String,
-      rowFingerprints: Boolean = true): Unit = {
-    // sidecars are computed against the STAGING directory (file names
-    // survive the commit rename unchanged — stats lines carry names, not
-    // paths), so a published version still never lacks its stats
-    if (statsCols.nonEmpty) writeStats(spark, stage, statsCols, rowFingerprints)
-    if (bloomCols.nonEmpty) writeBlooms(spark, stage, bloomCols, bloomBits)
-    finishCommit(root, version, retain, base, Some(stage))
-  }
 
   /** The marker move + retention half of a commit (stats, if any, must
     * already be in place — a published version never lacks its stats).
@@ -1268,10 +1147,10 @@ object SnapshotTable {
     * family and float/double the double family, as in the stats encoding;
     * [[compare]] orders values within a family and refuses across them.
     */
-  private sealed trait Key { def value: Any }
-  private final case class LongKey(value: Long) extends Key
-  private final case class DoubleKey(value: Double) extends Key
-  private final case class StringKey(value: String) extends Key
+  private sealed abstract class Key(val family: String) { def value: Any }
+  private final case class LongKey(value: Long) extends Key("L")
+  private final case class DoubleKey(value: Double) extends Key("D")
+  private final case class StringKey(value: String) extends Key("S")
 
   /** The key of a runtime value; None for null and unsupported types. */
   private def key(v: Any): Option[Key] = v match {
@@ -1285,15 +1164,24 @@ object SnapshotTable {
     case _ => None
   }
 
+  /** The family of a column type, as [[key]] classifies its values: "L"
+    * integral, "D" floating, "S" string; None for every other type.
+    */
+  private def family(dt: DataType): Option[String] = dt match {
+    case ByteType | ShortType | IntegerType | LongType => Some("L")
+    case FloatType | DoubleType => Some("D")
+    case StringType => Some("S")
+    case _ => None
+  }
+
   /** Typed, order-preserving-per-type encoding for stats values. Strings
     * are Base64-wrapped (raw strings could contain the field separator);
     * null and unknown runtime types become the non-prunable marker.
     */
   private def encode(v: Any): String = key(v) match {
-    case Some(LongKey(l)) => s"L:$l"
-    case Some(DoubleKey(d)) => s"D:$d"
     case Some(StringKey(s)) => "S:" + java.util.Base64.getEncoder
       .encodeToString(s.getBytes("UTF-8"))
+    case Some(k) => s"${k.family}:${k.value}"
     case None => "X"
   }
 
@@ -1334,20 +1222,12 @@ object SnapshotTable {
     lo
   }
 
-  /** Build `_STATS` for a freshly written version directory: one read of
-    * the written files, min/max per (file, column), collected to the
-    * driver (one row per FILE — metadata-sized at any table size) and
-    * written as a tab-separated typed table. Runs before the `_LATEST`
-    * move, so readers never see a version without its stats.
-    */
-  private def writeStats(spark: SparkSession, dir: String, cols: Seq[String],
-      rowFingerprints: Boolean = true): Unit =
-    writeStatsLines(dir, cols,
-      computeStatsLines(spark, dir, Nil, cols, rowFingerprints))
-
   /** Per-file stats lines for a version directory — all files when
     * `files` is empty, else just the named ones (the merge path computes
-    * stats for freshly written tiles only, carrying the rest verbatim).
+    * stats for freshly written tiles only, carrying the rest verbatim):
+    * one read of the files, min/max per (file, column), collected to the
+    * driver (one row per FILE — metadata-sized at any table size) as
+    * tab-separated typed values.
     */
   private def computeStatsLines(spark: SparkSession, dir: String,
       files: Seq[String], cols: Seq[String],
@@ -1431,11 +1311,7 @@ object SnapshotTable {
     import org.apache.parquet.io.api.Binary
     import org.apache.parquet.schema.{LogicalTypeAnnotation, PrimitiveType}
     import scala.jdk.CollectionConverters._
-    val names =
-      if (files0.nonEmpty) files0
-      else Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
-        .filter(f => f.isFile && f.getName.endsWith(".parquet"))
-        .map(_.getName).toSeq.sorted
+    val names = if (files0.nonEmpty) files0 else dataFiles(dir)
     val conf = spark.sparkContext.hadoopConfiguration
     try {
       val lines = names.map { name =>
@@ -1592,15 +1468,10 @@ object SnapshotTable {
         .map(fs => (fs.map(_._1), fs.tail.map(_._2)))
   }
 
-  private def layout(root: String, version: String): Option[Layout] = {
-    val p = java.nio.file.Paths.get(s"$root/$version/_STATS")
-    if (!java.nio.file.Files.exists(p)) None
-    else {
-      val lines = java.nio.file.Files.readString(p).split("\n").toSeq
-      Some(new Layout(lines.head.split("\t").toSeq,
-        lines.tail.filter(_.nonEmpty)))
+  private def layout(root: String, version: String): Option[Layout] =
+    readSidecar(s"$root/$version", "_STATS").map { case (header, lines) =>
+      new Layout(header.split("\t").toSeq, lines)
     }
-  }
 
   /** A pruning predicate for [[plan]]. Pruning is file-granular: a plan
     * keeps every file that can hold a matching row (a file without
@@ -1761,8 +1632,8 @@ object SnapshotTable {
       val ranged = plan(spark, root, v, pkCol, Prune.Range(pkCol, value, value))
       val kept = ranged.files.map(files => readBlooms(root, v) match {
         case Some(bl) if bl.cols.contains(pkCol) =>
-          // normalize the probe against the column's sidecar family
-          // first: a cross-class probe (e.g. a String against a
+          // the probe's [[key]] hashes only in the column's sidecar
+          // family: a cross-class probe (e.g. a String against a
           // long column) bypasses the bloom — false keeps are safe,
           // wrong-domain hashing that skips everything is not.
           // A tagged "O" (other-typed) column bypasses outright —
@@ -1775,14 +1646,14 @@ object SnapshotTable {
           // The legacy bypass is correctness-safe but a silent
           // pruning regression for pre-tag tables — surface it once
           // per root so the operator knows a republish restores it.
-          val family = bl.fams.get(pkCol)
-          if (family.isEmpty && legacyBloomWarned.add(root))
+          val fam = bl.fams.get(pkCol)
+          if (fam.isEmpty && legacyBloomWarned.add(root))
             org.slf4j.LoggerFactory.getLogger(getClass).warn(
               s"$root: _BLOOM sidecar predates the type-family tag; " +
                 "bloom pruning is bypassed (range pruning still " +
                 "applies). Republish the table to regain it.")
-          family.flatMap(bloomProbe(_, value)) match {
-            case Some(p) => files.filter(f => bl.mayContain(pkCol, f, p))
+          fam.flatMap(f => key(value).filter(_.family == f)) match {
+            case Some(k) => files.filter(f => bl.mayContain(pkCol, f, k.value))
             case None => files
           }
         case _ => files
@@ -1886,24 +1757,19 @@ object SnapshotTable {
       retain: Int = 2, statsCols: Seq[String] = Nil,
       clusterFiles: Option[Int] = None): Unit = {
     val base = latestVersion(root)
-    // committed-head replay short-circuit (the publish/merge/import
-    // discipline, which upsert previously lacked — it relied on
-    // re-overwriting the live directory): a keep-latest merge of the
-    // same updates over the same base is idempotent in content, so
-    // skipping IS the identical republish, without re-running the merge
-    // or racing the commit's head-advance invariant
-    if (base.contains(version)) return
-    val merged = base.map(readVersion(updates.sparkSession, root, _)) match {
-      case Some(existing) =>
-        val w = Window.partitionBy(col(pk)).orderBy(col("_prio").desc)
-        updates.withColumn("_prio", lit(1))
-          .unionByName(existing.withColumn("_prio", lit(0)), allowMissingColumns = true)
-          .withColumn("_rn", row_number().over(w))
-          .filter(col("_rn") === 1)
-          .drop("_prio", "_rn")
-      case None => updates
+    staged(root, version, retain, base) { stage =>
+      val merged = base.map(readVersion(updates.sparkSession, root, _)) match {
+        case Some(existing) =>
+          val w = Window.partitionBy(col(pk)).orderBy(col("_prio").desc)
+          updates.withColumn("_prio", lit(1))
+            .unionByName(existing.withColumn("_prio", lit(0)), allowMissingColumns = true)
+            .withColumn("_rn", row_number().over(w))
+            .filter(col("_rn") === 1)
+            .drop("_prio", "_rn")
+        case None => updates
+      }
+      publishInto(merged, stage, statsCols, clusterFiles)
     }
-    publishFrom(merged, root, version, base, retain, statsCols, clusterFiles)
   }
 
   /** Delete retained-window stragglers: keep the newest `retain` version
@@ -1914,11 +1780,8 @@ object SnapshotTable {
     val head = latestVersion(root)
     val keep = head.toSet
     val dir = new java.io.File(root)
-    val versions = Option(dir.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.matches("v\\d+"))
-      .sortBy(f => -f.getName.drop(1).toLong)
-    versions.drop(math.max(retain, 1)).filterNot(f => keep(f.getName))
-      .foreach(rmTree)
+    versions(root).reverse.drop(math.max(retain, 1)).filterNot(keep)
+      .foreach(v => rmTree(new java.io.File(dir, v)))
     // stale staging directories: a stage whose embedded version id is
     // STRICTLY below the committed head can never win its CAS (its base
     // is at least two commits behind), so it is a crashed writer's

@@ -89,13 +89,8 @@ object AnnStream {
       clusterFiles: Int = 8): Unit = {
     if (batch.isEmpty) return
     val spark = batch.sparkSession
-    val head = SnapshotTable.latestVersion(root)
-    head.map(_.drop(1).toLong).foreach { lv =>
-      require(batchId >= lv,
-        s"AnnStream batch $batchId is behind $root's published v$lv: " +
-          "fresh checkpoint against an existing table — wipe the table " +
-          "and the checkpoint together, or resume the original.")
-    }
+    val head = VersionedState.requireNotBehind("AnnStream", root, batchId,
+      "the table").map(lv => s"v$lv")
     val (cents, modelDelta) = head match {
       case Some(h) => (centroids(spark, root, h), None)
       case None =>

@@ -44,15 +44,8 @@ object CollocStream {
     // pairRoot with a surviving uniRoot (or vice versa) would slip a
     // head-only check and double-count the surviving table's merges,
     // silently corrupting lift scores
-    Seq(pairRoot, uniRoot).foreach { root =>
-      SnapshotTable.latestVersion(root).map(_.drop(1).toLong).foreach { lv =>
-        require(batchId >= lv,
-          s"CollocStream batch $batchId is behind $root's published " +
-            s"v$lv: fresh checkpoint against existing tables — wipe " +
-            "pairRoot, uniRoot and the checkpoint together, or resume " +
-            "the original.")
-      }
-    }
+    Seq(pairRoot, uniRoot).foreach(VersionedState.requireNotBehind(
+      "CollocStream", _, batchId, "pairRoot, uniRoot"))
     // the exactly-once fold discipline (committed-head base, replay
     // self-read filter, tile-pruned join, persisted deltas) lives in
     // AdditiveFold, shared with RankStream and LineDedupStream

@@ -49,12 +49,8 @@ object DivergenceStream {
   def applyBatch(batch: DataFrame, batchId: Long, root: String,
       clusterFiles: Int = 8): Unit = {
     if (batch.isEmpty) return
-    SnapshotTable.latestVersion(root).map(_.drop(1).toLong).foreach { lv =>
-      require(batchId >= lv,
-        s"DivergenceStream batch $batchId is behind $root's published " +
-          s"v$lv: fresh checkpoint against an existing table — wipe the " +
-          "table and the checkpoint together, or resume the original.")
-    }
+    VersionedState.requireNotBehind("DivergenceStream", root, batchId,
+      "the table")
     val deltas = graft.operators.CorpusStats.sourceTokenCounts(batch)
       .select(concat_ws("\u0001", col("source"), col("token")).as("sk"),
         col("source"), col("token"), col("cnt"))

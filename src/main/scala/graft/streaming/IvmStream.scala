@@ -50,30 +50,14 @@ object IvmStream {
     if (batch.isEmpty) return
     val spark = batch.sparkSession
     val version = s"v$batchId"
-    // Stale-checkpoint guard: a stream restarted on a FRESH checkpoint
-    // against an existing dimRoot re-numbers batches from 0, and the
-    // merge's monotonicity require would then fail every batch forever
-    // with a message naming only the version arithmetic. Detect it here:
-    // a batch id below the published HEAD can never be genuine — a
-    // foreachBatch replay is always the LAST applied batch (the
-    // checkpoint only advances after the function returns), so only
-    // batchId == head qualifies as a replay (merge then short-circuits
-    // and the view recomputes idempotently). Accepting any RETAINED
-    // committed version here would let a fresh-checkpoint restart whose
-    // renumbered id collides with one silently DROP its new data as a
-    // fake replay.
-    SnapshotTable.latestVersion(dimRoot).map(_.drop(1).toLong).foreach { lv =>
-      require(batchId >= lv,
-        s"IvmStream batch $batchId is behind $dimRoot's published v$lv: " +
-          "the stream was restarted on a fresh checkpoint against an " +
-          "existing dim table (micro-batch ids re-number from 0). " +
-          "dimRoot, viewRoot and the checkpoint share the batch-id " +
-          "sequence and must be wiped together — or resume from the " +
-          "original checkpoint.")
-    }
-    def before(root: String): Option[String] =
-      SnapshotTable.versions(root).filter(_.drop(1).toLong < batchId).lastOption
-    val dimPrev = before(dimRoot)
+    // a stream restarted on a FRESH checkpoint against an existing
+    // dimRoot re-numbers batches from 0, and the merge's monotonicity
+    // require would then fail every batch forever with a message naming
+    // only the version arithmetic; a replay (batchId == head) passes,
+    // merge short-circuits and the view recomputes idempotently
+    VersionedState.requireNotBehind("IvmStream", dimRoot, batchId,
+      "dimRoot, viewRoot")
+    val dimPrev = VersionedState.below(dimRoot, batchId)
     // batch-scoped registry release: diff registers its join frame in
     // the per-query registry and the view publish is the last consumer
     // (the DedupStream precedent) — scoped keeps the release per batch
@@ -94,7 +78,7 @@ object IvmStream {
     val deltaAgg = delta.groupBy(bucket.as("bucket"))
       .agg(sum(sign).as("d_rows"),
         sums.map(c => sum(sign * col(c)).as(s"d_$c")): _*)
-    val newView = before(viewRoot)
+    val newView = VersionedState.below(viewRoot, batchId)
       .map(v => SnapshotTable.readVersion(spark, viewRoot, v)) match {
       case None => deltaAgg.select(col("bucket") +:
           col("d_rows").as("n_rows") +:

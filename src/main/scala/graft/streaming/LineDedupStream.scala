@@ -49,12 +49,8 @@ object LineDedupStream {
   def applyBatch(batch: DataFrame, batchId: Long, root: String,
       clusterFiles: Int = 8): Unit = {
     if (batch.isEmpty) return
-    SnapshotTable.latestVersion(root).map(_.drop(1).toLong).foreach { lv =>
-      require(batchId >= lv,
-        s"LineDedupStream batch $batchId is behind $root's published " +
-          s"v$lv: fresh checkpoint against an existing table — wipe the " +
-          "table and the checkpoint together, or resume the original.")
-    }
+    VersionedState.requireNotBehind("LineDedupStream", root, batchId,
+      "the table")
     // per-doc-distinct BEFORE counting: a segment repeated inside one doc
     // is one df unit, exactly as the batch query counts it. The
     // exactly-once fold discipline lives in AdditiveFold (shared with

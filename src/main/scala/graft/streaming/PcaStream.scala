@@ -71,12 +71,7 @@ object PcaStream {
   def applyBatch(batch: DataFrame, batchId: Long, root: String,
       clusterFiles: Int = 8): Unit = {
     if (batch.isEmpty) return
-    SnapshotTable.latestVersion(root).map(_.drop(1).toLong).foreach { lv =>
-      require(batchId >= lv,
-        s"PcaStream batch $batchId is behind $root's published v$lv: " +
-          "fresh checkpoint against an existing table — wipe the table " +
-          "and the checkpoint together, or resume the original.")
-    }
+    VersionedState.requireNotBehind("PcaStream", root, batchId, "the table")
     // persisted cache boundary: without it CollapseProject inlines the
     // floor transform into the pair lambda and re-floors d times per row
     // (the PLANS.md lambda trap EmbedPca documents)

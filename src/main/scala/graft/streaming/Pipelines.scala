@@ -206,6 +206,14 @@ object Pipelines {
   def routeCdcBatch(batch: DataFrame, batchId: Long, config: DataFrame, outDir: String): Unit = {
     val spark = batch.sparkSession
     val cfg = config.collect() // config table is tiny by contract
+    // a dim's versions are this stream's batch ids, so a batch behind a
+    // dim's head is a restart on a fresh checkpoint: fail it by name
+    // before anything is derived or written. A replay (batchId == head)
+    // passes and short-circuits in the dim's merge or upsert below.
+    cfg.filter(_.getAs[String]("sink_type") != "kafka").foreach(row =>
+      VersionedState.requireNotBehind("CDC dim route",
+        s"$outDir/dim/${row.getAs[String]("sink_table")}", batchId,
+        "the dim table"))
     val live = batch.filter(col("type") =!= "delete")
     cfg.foreach { row =>
       val (src, op, sinkType, sinkTable, cols, pk) = (
@@ -243,17 +251,13 @@ object Pipelines {
         //    falls back to the widening upsert (stats drop; the next
         //    compact restores the merge regime).
         val dimRoot = s"$outDir/dim/$sinkTable"
-        // the merge route needs: a tile-mergeable layout (stats + range-
+        // the merge route needs a tile-mergeable layout (stats + range-
         // disjoint files — a z-order compaction's overlapping pk ranges
-        // would trap every batch in merge's full-rewrite fallback), a
-        // matching schema, AND a batch id ABOVE the published version
-        // (a stream restarted on a fresh checkpoint re-numbers from 0;
-        // merge's monotonicity guard would fail that batch forever,
-        // where the upsert below just keeps publishing)
+        // would trap every batch in merge's full-rewrite fallback) and a
+        // matching schema
         val canMerge = graft.sources.SnapshotTable.latestVersion(dimRoot)
           .exists { v =>
-            batchId > v.drop(1).toLong &&
-              graft.sources.SnapshotTable.tileMergeable(dimRoot, v, pk) &&
+            graft.sources.SnapshotTable.tileMergeable(dimRoot, v, pk) &&
               graft.sources.SnapshotTable.readVersion(spark, dimRoot, v)
                 .schema.fields.map(f => (f.name, f.dataType)).toSeq ==
                 newest.schema.fields.map(f => (f.name, f.dataType)).toSeq

@@ -101,13 +101,6 @@ object PushStream {
       expr("(n * 1000000) div (sum(n) OVER (PARTITION BY src))")
         .as("p_ppm"))
 
-  /** Latest version committed strictly BEFORE `batchId` — the replay-safe
-    * read pin (the head itself may already be this batch's own commit).
-    */
-  private def prevOf(root: String, batchId: Long): Option[String] =
-    SnapshotTable.versions(root).map(_.drop(1).toLong)
-      .filter(_ < batchId).maxOption.map(i => s"v$i")
-
   /** Env-gated phase tracer (`SPARK_GRAFT_TRACE=1`): stderr lines with
     * per-phase seconds, for attributing a batch's wall time to its
     * sequential driver actions without an event-log round-trip.
@@ -127,14 +120,8 @@ object PushStream {
     require(eps >= 0, s"eps must be >= 0, got $eps")
     val spark = deltas0.sparkSession
     val cap = RangeListCap
-    val committed = SnapshotTable.latestVersion(rt.scalars)
-      .map(_.drop(1).toLong)
-    committed.foreach { lv =>
-      require(batchId >= lv,
-        s"PushStream batch $batchId is behind ${rt.scalars}'s v$lv: " +
-          "fresh checkpoint against existing tables — wipe all three " +
-          "roots and the checkpoint together, or resume the original.")
-    }
+    val committed = VersionedState.requireNotBehind("PushStream",
+      rt.scalars, batchId, "all three roots")
     if (committed.contains(batchId)) return // scalars commit LAST: done
     val v = s"v$batchId"
     val deltas = deltas0.groupBy(col("src"), col("dst"))
@@ -184,9 +171,9 @@ object PushStream {
         else None) }
 
       // ---- 2. pinned reads + previous scalars -----------------------
-      val prevStateV = prevOf(rt.state, batchId)
-      val prevEdgeV = prevOf(rt.edges, batchId)
-      val (nn0, dang0, shift0) = prevOf(rt.scalars, batchId) match {
+      val prevStateV = VersionedState.below(rt.state, batchId)
+      val prevEdgeV = VersionedState.below(rt.edges, batchId)
+      val (nn0, dang0, shift0) = VersionedState.below(rt.scalars, batchId) match {
         case Some(pv) =>
           val r = SnapshotTable.readVersion(spark, rt.scalars, pv)
             .collect().head

@@ -83,12 +83,8 @@ object RankStream {
       }
       return
     }
-    SnapshotTable.latestVersion(edgeRoot).map(_.drop(1).toLong).foreach { lv =>
-      require(batchId >= lv,
-        s"RankStream batch $batchId is behind $edgeRoot's published v$lv: " +
-          "fresh checkpoint against existing tables — wipe edgeRoot, " +
-          "rankRoot and the checkpoint together, or resume the original.")
-    }
+    VersionedState.requireNotBehind("RankStream", edgeRoot, batchId,
+      "edgeRoot, rankRoot")
     // the exactly-once additive fold (committed-head base, replay
     // self-read filter, tile-pruned batch-sized join, persisted deltas)
     // lives in AdditiveFold, shared with CollocStream and LineDedupStream

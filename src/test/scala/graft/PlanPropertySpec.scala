@@ -4,7 +4,7 @@ import graft.sources.SnapshotTable
 import graft.sources.SnapshotTable.Prune
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StringType, StructField, StructType}
 import org.scalacheck.{Gen, Prop, Test}
 import org.scalacheck.Prop.propBoolean
 import org.scalacheck.rng.Seed
@@ -12,9 +12,11 @@ import org.scalacheck.rng.Seed
 /** Random-key properties of the pruning planner ([[SnapshotTable.plan]])
   * on both tiled layouts a table can carry: range-clustered ([[SnapshotTable.publish]]
   * with `clusterFiles`) and value-aligned ([[SnapshotTable.publishAligned]]).
-  * Keys are longs or strings, the strings mixing ASCII, U+FF21.. and
-  * supplementary-plane code points (where UTF-16 order and Spark's UTF-8
-  * order disagree); probe sets also carry nulls.
+  * Keys are longs, doubles or strings: the doubles mix integers,
+  * fractions, NaN and ±Infinity (probes also draw -0.0 and 0.0), the
+  * strings ASCII, U+FF21.. and supplementary-plane code points (where
+  * UTF-16 order and Spark's UTF-8 order disagree); probe sets also carry
+  * nulls.
   *
   *  - A Keys plan from driver-side keys equals the Keys plan from a frame
   *    of the same keys: the binary search agrees with the codegen kernel.
@@ -38,6 +40,13 @@ class PlanPropertySpec extends SparkSpec {
       2 -> Gen.choose(0x1F600, 0x1F604).map(cp => new String(Character.toChars(cp))))
     Gen.choose(1, 3).flatMap(n => Gen.listOfN(n, char)).map(_.mkString)
   }
+  // integers, fractions and the values Spark orders specially; `+ 0.0`
+  // keeps -0.0 out of the keys (Spark equates it with 0.0, so it would
+  // duplicate a key), while the probes draw both zeros
+  private val doubleKey: Gen[Any] = Gen.frequency(
+    3 -> Gen.choose(-50, 50).map(_.toDouble),
+    3 -> Gen.choose(-50.0, 50.0).map(_ + 0.0),
+    1 -> Gen.oneOf(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity))
 
   private def freshRoot(tag: String): String = {
     val root = s"${sys.props("java.io.tmpdir")}/graft_planprop_$tag"
@@ -62,11 +71,16 @@ class PlanPropertySpec extends SparkSpec {
     assert(res.passed, s"$name: ${org.scalacheck.util.Pretty.pretty(res)}")
   }
 
-  private def family(tag: String, dt: DataType, gen: Gen[Any]): Unit = {
-    val keys = Gen.listOfN(400, gen).pureApply(Gen.Parameters.default,
-      Seed(601L)).distinct.take(200)
+  /** `extraProbes` joins the probe and bound draws; `cutAt` is both a key
+    * and a cutpoint of the aligned layout, so probes can land on it.
+    */
+  private def family(tag: String, dt: DataType, gen: Gen[Any],
+      extraProbes: Seq[Any] = Nil, cutAt: Seq[Any] = Nil): Unit = {
+    val keys = (cutAt ++ Gen.listOfN(400, gen).pureApply(Gen.Parameters.default,
+      Seed(601L))).distinct.take(200)
     val table = keyFrame(dt, keys, ("v", i => i.toLong, LongType))
-    val cuts = Gen.pick(5, keys).pureApply(Gen.Parameters.default, Seed(602L)).toSeq
+    val cuts = (cutAt ++ Gen.pick(5, keys).pureApply(Gen.Parameters.default,
+      Seed(602L))).distinct
     val clustered = freshRoot(s"${tag}_clustered")
     SnapshotTable.publish(table, clustered, "v1",
       statsCols = Seq("k"), clusterFiles = Some(6))
@@ -77,10 +91,18 @@ class PlanPropertySpec extends SparkSpec {
       assert(SnapshotTable.tileMergeable(root, "v1", "k"),
         s"$root: precondition: the layout must have pk tiles")
       val full = SnapshotTable.readVersion(spark, root, "v1")
-      def rows(df: DataFrame) = df.collect().map(r => (r.get(0), r.getLong(1))).toSet
+      // a double key compares by its string form: Scala's `==` on a boxed
+      // NaN is false, so a set holding NaN would never equal itself
+      def rows(df: DataFrame) = df.collect().map(r => (r.get(0) match {
+        case d: Double => d.toString
+        case k => k
+      }, r.getLong(1))).toSet
 
+      val probeGen = Gen.frequency(4 -> Gen.oneOf(keys), 3 -> gen,
+        1 -> Gen.const(null))
       val probes = Gen.choose(0, 8).flatMap(n => Gen.listOfN(n,
-        Gen.frequency(4 -> Gen.oneOf(keys), 3 -> gen, 1 -> Gen.const(null))))
+        if (extraProbes.isEmpty) probeGen
+        else Gen.frequency(4 -> probeGen, 1 -> Gen.oneOf(extraProbes))))
       check(s"$root keys", Prop.forAllNoShrink(probes) { probe =>
         val frame = keyFrame(dt, probe)
         val local = SnapshotTable.plan(spark, root, "v1", "k",
@@ -108,8 +130,9 @@ class PlanPropertySpec extends SparkSpec {
       val edges = full.groupBy(input_file_name())
         .agg(min(col("k")), max(col("k"))).collect()
         .flatMap(r => Seq(r.get(1), r.get(2))).toSeq
-      val bound = Gen.frequency(3 -> Gen.oneOf(edges), 1 -> Gen.oneOf(keys),
-        1 -> gen)
+      val bound = Gen.frequency(Seq(3 -> Gen.oneOf(edges),
+        1 -> Gen.oneOf(keys), 1 -> gen) ++
+        extraProbes.headOption.map(_ => 1 -> Gen.oneOf(extraProbes)): _*)
       val bounds = Gen.zip(bound, bound)
       check(s"$root range", Prop.forAllNoShrink(bounds) { case (lo, hi) =>
         needs(Prune.Range("k", lo, hi), col("k").between(lo, hi))
@@ -127,5 +150,10 @@ class PlanPropertySpec extends SparkSpec {
 
   test("planner: local and frame Keys plans agree and keep every key's rows; Range/Outside keep every needed file (unicode string keys)") {
     family("string", StringType, stringKey)
+  }
+
+  test("planner: local and frame Keys plans agree and keep every key's rows; Range/Outside keep every needed file (double keys with NaN, ±Infinity and ±0.0 probes)") {
+    family("double", DoubleType, doubleKey, extraProbes = Seq(-0.0, 0.0),
+      cutAt = Seq(0.0))
   }
 }

@@ -413,9 +413,22 @@ class SnapshotTableSpec extends SparkSpec {
     // and an Int/Long probe must land in the same domain (a runtime-type
     // hash would match no filter and wrongly skip every file)
     val dim = spark.range(8000L).select(col("id"),
-      pmod(col("id") * 7919, lit(100)).cast("short").as("code16"))
+      pmod(col("id") * 7919, lit(100)).cast("short").as("code16"),
+      pmod(col("id") * 7919, lit(100)).cast("byte").as("code8"),
+      (pmod(col("id") * 7919, lit(100)) / 4).cast("float").as("q32"))
     SnapshotTable.publish(dim, root, "v1", retain = 2, statsCols = Seq("id"),
-      clusterFiles = Some(8), bloomCols = Seq("code16"))
+      clusterFiles = Some(8), bloomCols = Seq("code16", "code8", "q32"))
+    // BYTE and FLOAT keys take the same canonical domains (long, double):
+    // each value appears 80 times, whatever width the probe carries
+    // (57 / 4 = 14.25 is exact in a float)
+    Seq[Any](57.toByte, 57.toShort, 57, 57L).foreach { p =>
+      val hit = SnapshotTable.pointLookup(spark, root, "code8", p).get
+      assert(hit.count() == 80L, s"byte column probed as ${p.getClass}")
+    }
+    Seq[Any](14.25f, 14.25d).foreach { p =>
+      val hit = SnapshotTable.pointLookup(spark, root, "q32", p).get
+      assert(hit.count() == 80L, s"float column probed as ${p.getClass}")
+    }
     val asInt = SnapshotTable.pointLookup(spark, root, "code16", 57).get
     assert(asInt.count() == 80L,
       "an Int probe against a short column must not be bloom-skipped to empty")

@@ -245,6 +245,31 @@ class StreamingPipelineSpec extends SparkSpec {
     assert(dimRows == Map("2" -> "25")) // within-batch seq then latest batch win
   }
 
+  test("cdc dim route: a batch behind the dim's head fails as a fresh checkpoint") {
+    val out = java.nio.file.Files.createTempDirectory("cdcfresh").toString
+    val cfg = Seq(("t", "update", "hbase", "dim_t", "id,val", "id"))
+      .toDF("source_table", "operate_type", "sink_type", "sink_table",
+        "sink_columns", "sink_pk")
+    val cols = Seq("database", "tableName", "type", "op_seq", "after")
+    def batch(id: String, v: String) =
+      Seq(("g", "t", "update", 1L, Map("id" -> id, "val" -> v))).toDF(cols: _*)
+    Pipelines.routeCdcBatch(batch("k1", "a"), 5L, cfg, out)
+    // a replay of the head batch still short-circuits
+    Pipelines.routeCdcBatch(batch("k1", "a"), 5L, cfg, out)
+    val root = s"$out/dim/dim_t"
+    // a restart on a fresh checkpoint re-numbers batch ids from 0
+    val e = intercept[IllegalArgumentException] {
+      Pipelines.routeCdcBatch(batch("k2", "b"), 1L, cfg, out)
+    }
+    assert(e.getMessage.contains("fresh checkpoint"), e.getMessage)
+    val stages = new java.io.File(root).listFiles()
+      .filter(_.getName.startsWith(".stage_")).map(_.getName)
+    assert(stages.isEmpty, s"rejected batch left stages ${stages.mkString(",")}")
+    assert(graft.sources.SnapshotTable.latestVersion(root).contains("v5"))
+    assert(Pipelines.readDim(spark, out, "dim_t").get.collect()
+      .map(r => r.getString(0) -> r.getString(1)).toSeq == Seq("k1" -> "a"))
+  }
+
   test("cdc dim sink upgrades to tile-local merges after a stats compaction") {
     val out = java.nio.file.Files.createTempDirectory("cdcmerge").toString
     val cfg = Seq(("t", "update", "hbase", "dim_t", "id,val", "id"))
