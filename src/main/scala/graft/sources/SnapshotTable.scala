@@ -76,12 +76,6 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object SnapshotTable {
 
-  /** Roots already warned about a legacy (pre-family-tag) `_BLOOM`
-    * sidecar — the bypass is logged once per table, not per lookup.
-    */
-  private val legacyBloomWarned =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
   /** Per-root commit monitors — same-JVM writers serialize here; the
     * `._COMMITLOCK` file lock inside extends the exclusion to writers in
     * other processes on a shared filesystem.
@@ -198,26 +192,19 @@ object SnapshotTable {
     * `clusterFiles = Some(n)` range-partitions the write by the FIRST
     * stats column into n files — skipping only pays when the key is
     * clustered across files (random placement gives every file the full
-    * key range and nothing prunes). `bloomCols` additionally records a
-    * per-file Bloom filter sidecar for those columns (`bloomBits` bits
-    * per file, ≈ 10 per distinct value for ~1% false keeps) — what lets
-    * [[pointLookup]] prune on a column the table is NOT clustered by.
+    * key range and nothing prunes).
     */
   def publish(df: DataFrame, root: String, version: String, retain: Int = 2,
       statsCols: Seq[String] = Nil, clusterFiles: Option[Int] = None,
-      bloomCols: Seq[String] = Nil, bloomBits: Int = 1 << 17,
       rowFingerprints: Boolean = true): Unit =
     staged(root, version, retain, latestVersion(root))(publishInto(df, _,
-      statsCols, clusterFiles, bloomSpec(bloomCols, bloomBits), rowFingerprints))
+      statsCols, clusterFiles, rowFingerprints))
 
   /** [[publish]]'s body, writing into a stage of [[staged]]. */
   private def publishInto(df: DataFrame, stage: String, statsCols: Seq[String],
-      clusterFiles: Option[Int] = None, bloom: Option[BloomSidecar] = None,
-      rowFingerprints: Boolean = true): Unit = {
+      clusterFiles: Option[Int] = None, rowFingerprints: Boolean = true): Unit = {
     require(clusterFiles.isEmpty || statsCols.nonEmpty,
       "clusterFiles requires at least one stats column to cluster by")
-    require(bloom.isEmpty || statsCols.nonEmpty,
-      "bloomCols requires stats (pointLookup prunes by range first)")
     // a clustered publish evaluates `df` TWICE (repartitionByRange's
     // boundary-sampling pass, then the write) — cache an uncached input
     // for the publish's duration so arbitrary caller plans (the additive
@@ -238,81 +225,8 @@ object SnapshotTable {
       }
       graft.Trace(s"publish:write $stage") {
         out.write.mode("overwrite").parquet(stage) }
-      writeSidecars(df.sparkSession, stage, statsCols, bloom, rowFingerprints)
+      writeStats(df.sparkSession, stage, statsCols, rowFingerprints)
     } finally { if (cacheIn) { in.unpersist(blocking = false); () } }
-  }
-
-  /** Z-ORDER clustered publish: multi-column data skipping. Linear
-    * clustering ([[publish]] with `clusterFiles`) prunes on the lead
-    * stats column only — a predicate on the SECOND key still touches
-    * every file, because each file spans that column's full range. Here
-    * each file covers a small hyper-rectangle of the key space instead
-    * (the Delta `OPTIMIZE ZORDER BY` semantics), so a selective
-    * predicate on ANY z column prunes to ~n^((d-1)/d) of n files rather
-    * than all of them.
-    *
-    * Mechanics — all metadata-light, no single-task stage anywhere:
-    *   1. each z column is rank-bucketed into 2^`bits` EXACT quantile
-    *      buckets via [[graft.operators.Ranks.distNtileScores]] (all
-    *      columns share ONE range exchange). Rank-, not value-space:
-    *      skewed keys still spread evenly across files, which linear
-    *      value binning (Delta's synthetic range_partition_id) also
-    *      does — and strings ride a monotonic 7-byte big-endian
-    *      surrogate, which only shapes clustering, never pruning
-    *      correctness (stats are computed from the real values);
-    *   2. bucket bits interleave into one z value (column i claims bit
-    *      positions j·d+i); a second exact ntile cuts the z order into
-    *      `nFiles` equal-count runs and pinned hashing gives each run its
-    *      own file — contiguous z runs = aligned key-space tiles, and the
-    *      layout is a pure function of the data (no boundary sampling);
-    *   3. per-file min/max stats on every z column feed the same
-    *      [[plan]]/[[pointLookup]] path as linear clustering.
-    *
-    * `pk` must be unique per row (the rank tiebreaker — dim tables have
-    * one by construction). `bits` caps at 62/d so the z value fits a
-    * long; 8 bits/column resolves 256 tiles per dimension, far past any
-    * realistic per-table file count.
-    */
-  def publishZOrdered(df: DataFrame, root: String, version: String,
-      pk: String, zCols: Seq[String], nFiles: Int, retain: Int = 2,
-      bits: Int = 8, bloomCols: Seq[String] = Nil,
-      bloomBits: Int = 1 << 17): Unit =
-    staged(root, version, retain, latestVersion(root))(zOrderInto(df, _,
-      pk, zCols, nFiles, bits, bloomSpec(bloomCols, bloomBits)))
-
-  /** [[publishZOrdered]]'s body, writing into a stage of [[staged]]. */
-  private def zOrderInto(df: DataFrame, stage: String, pk: String,
-      zCols: Seq[String], nFiles: Int, bits: Int,
-      bloom: Option[BloomSidecar]): Unit = {
-    require(zCols.size >= 2, "z-ordering needs >= 2 columns (use clusterFiles for 1)")
-    require(zCols.size * bits <= 62, s"${zCols.size} cols x $bits bits overflows a long")
-    val d = zCols.size
-    val specs = zCols.zipWithIndex.map { case (c, i) =>
-      graft.operators.Ranks.NtileSpec(s"__zb_$i",
-        zSurrogate(df, c), asc = true)
-    }
-    val buckets = graft.operators.Ranks.distNtileScores(df, pk, 1 << bits, specs)
-    val z = (for { j <- 0 until bits; i <- 0 until d } yield
-      shiftleft(shiftright((col(s"__zb_$i") - 1).cast("long"), j)
-        .bitwiseAND(lit(1L)), j * d + i))
-      .reduce(_ bitwiseOR _)
-    // file id = EXACT ntile of z (equal row counts, adapts to the joint
-    // key density — correlated z columns concentrate mass on the curve's
-    // diagonal, and equal-count tiling still yields equal files there),
-    // placed by pinned hash. A repartitionByRange here would re-SAMPLE
-    // file boundaries every run (RangePartitioner's seed rides the RDD
-    // id), smearing tiles across files differently per session; exact
-    // ranks + pinned placement make the layout a pure function of the
-    // data, so pruning selectivity is reproducible.
-    val fileOf = graft.operators.Ranks.distNtileScores(
-      buckets.withColumn("__z", z), pk, nFiles,
-      Seq(graft.operators.Ranks.NtileSpec("__file", col("__z"), asc = true,
-        carryAs = Some("__z"))))
-    // z-sorted within each file: row groups inherit tight rectangles too
-    // (same row-group rationale as the linear publish)
-    writePinned(df.join(fileOf, pk), stage, nFiles, col("__file"),
-      Seq(col("__z"), col(pk)), "__z", "__file")
-    writeSidecars(df.sparkSession, stage, zCols, bloom)
   }
 
   /** Write `df` into `dir` as `n` files, each row into the file numbered
@@ -367,15 +281,13 @@ object SnapshotTable {
     */
   def publishAligned(df: DataFrame, root: String, version: String,
       key: String, boundaries: Seq[Any], retain: Int = 2,
-      statsCols: Seq[String] = Nil, bloomCols: Seq[String] = Nil,
-      bloomBits: Int = 1 << 17): Unit =
+      statsCols: Seq[String] = Nil): Unit =
     staged(root, version, retain, latestVersion(root)) { stage =>
       require(boundaries.nonEmpty, "publishAligned needs at least one cutpoint")
       writePinned(df, stage, boundaries.size + 1, tileId(df.sparkSession,
         col(key), boundaries, Some(df.schema(key).dataType)) + 1, Seq(col(key)))
-      writeSidecars(df.sparkSession, stage,
-        if (statsCols.nonEmpty) statsCols else Seq(key),
-        bloomSpec(bloomCols, bloomBits))
+      writeStats(df.sparkSession, stage,
+        if (statsCols.nonEmpty) statsCols else Seq(key))
     }
 
   /** File/tile id of `keyCol` against value cutpoints — the count of
@@ -564,10 +476,6 @@ object SnapshotTable {
       .join(updates.select(col(pk)), Seq(pk), "left_anti")
       .unionByName(inserts)
       .select(current.columns.map(col).toIndexedSeq: _*)
-    // read once: the tile path carries its lines, the fallback its
-    // columns and sizing — a table published with a `_BLOOM` must not
-    // silently lose its secondary-key pruning after a merge
-    val bloom = bloomSidecar(root, vOld)
     val lay = layout(root, vOld)
     lay.flatMap(l => l.tiles(pk).map(t => (l, t))) match {
       case Some((l, (filesByTile, cuts))) =>
@@ -598,19 +506,16 @@ object SnapshotTable {
         // fresh tiles get new lines with the same columns and sizing
         val kept = keepFiles.map(_._1)
         copyFiles(root, vOld, dir, kept)
-        writeSidecar(dir, "_STATS", l.header.mkString("\t"),
+        writeSidecar(dir, l.header.mkString("\t"),
           l.linesOf(kept.toSet) ++ (if (newFiles.isEmpty) Nil else
             computeStatsLines(spark, dir, newFiles, l.header, rowFingerprints)))
-        bloom.foreach(b => writeSidecar(dir, "_BLOOM", b.header,
-          b.linesOf(kept.toSet) ++
-            computeBloomLines(spark, dir, newFiles, b.cols, b.bits)))
       case None =>
         // full-rewrite fallback, preserving the table's existing stats
         // header — a one-off non-tile-mergeable batch must not silently
         // drop the extra stats columns later guards/prunes rely on
         publishInto(applied(current), dir,
           lay.map(_.header).getOrElse((Seq(pk) ++ extraStatsCols).distinct),
-          clusterFiles, bloom, rowFingerprints)
+          clusterFiles, rowFingerprints)
     }
   }
 
@@ -618,9 +523,9 @@ object SnapshotTable {
     * tile-local path on `pk`: the version's layout is tiled on `pk`
     * ([[Layout.tiles]]). Callers choosing between merge and
     * a cheaper full-rewrite strategy (e.g. the CDC dim sink) should gate
-    * on this — a non-tile-mergeable table (hash layout, or z-order whose
-    * per-file pk ranges overlap) would otherwise pay merge's fallback
-    * full rewrite PLUS a stats pass every batch.
+    * on this — a non-tile-mergeable table (a hash layout, whose per-file
+    * pk ranges overlap) would otherwise pay merge's fallback full rewrite
+    * PLUS a stats pass every batch.
     */
   def tileMergeable(root: String, version: String, pk: String): Boolean =
     layout(root, version).exists(_.tiles(pk).isDefined)
@@ -640,22 +545,21 @@ object SnapshotTable {
       .filter(f => f.isFile && f.getName.endsWith(".parquet"))
       .map(_.getName).toSeq.sorted
 
-  /** Write sidecar `name` (`_STATS` or `_BLOOM`) into `dir`: one header
-    * line, then the per-file body lines, sorted.
+  /** Write the `_STATS` sidecar into `dir`: one header line, then the
+    * per-file body lines, sorted.
     */
-  private def writeSidecar(dir: String, name: String, header: String,
+  private def writeSidecar(dir: String, header: String,
       lines: Seq[String]): Unit = {
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/$name"),
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/_STATS"),
       header + "\n" + lines.sorted.mkString("\n") + "\n")
     ()
   }
 
-  /** Sidecar `name` of `dir` as its header and non-empty body lines;
-    * None when the version has none.
+  /** The `_STATS` sidecar of `dir` as its header and non-empty body
+    * lines; None when the version has none.
     */
-  private def readSidecar(dir: String,
-      name: String): Option[(String, Seq[String])] = {
-    val p = java.nio.file.Paths.get(s"$dir/$name")
+  private def readSidecar(dir: String): Option[(String, Seq[String])] = {
+    val p = java.nio.file.Paths.get(s"$dir/_STATS")
     if (!java.nio.file.Files.exists(p)) None
     else {
       val lines = java.nio.file.Files.readString(p).split("\n").toSeq
@@ -663,187 +567,15 @@ object SnapshotTable {
     }
   }
 
-  /** The sidecars of a freshly written stage, before its commit (a
-    * published version never lacks its stats or blooms): `_STATS` over
-    * `statsCols`, `_BLOOM` as `bloom` specifies. File names survive the
-    * commit rename unchanged — sidecar lines carry names, not paths.
+  /** The `_STATS` of a freshly written stage over `statsCols`, before its
+    * commit (a published version never lacks its stats); none when
+    * `statsCols` is empty. File names survive the commit rename unchanged
+    * — sidecar lines carry names, not paths.
     */
-  private def writeSidecars(spark: SparkSession, stage: String,
-      statsCols: Seq[String], bloom: Option[BloomSidecar],
-      rowFingerprints: Boolean = true): Unit = {
-    if (statsCols.nonEmpty) writeSidecar(stage, "_STATS",
-      statsCols.mkString("\t"),
+  private def writeStats(spark: SparkSession, stage: String,
+      statsCols: Seq[String], rowFingerprints: Boolean = true): Unit =
+    if (statsCols.nonEmpty) writeSidecar(stage, statsCols.mkString("\t"),
       computeStatsLines(spark, stage, Nil, statsCols, rowFingerprints))
-    bloom.foreach(b => writeSidecar(stage, "_BLOOM", b.header,
-      computeBloomLines(spark, stage, dataFiles(stage), b.cols, b.bits)))
-  }
-
-  // ---- Bloom-filter file skipping (the `_BLOOM` sidecar) -------------
-  //
-  // Per-(file, column) Bloom filters let a POINT lookup skip files on a
-  // column the table is not clustered by — a secondary/natural key whose
-  // min/max spans every file. k = 4 bit positions per value from seeded
-  // 64-bit hashes; `bits` is caller-sized (≈ 10 bits per distinct value
-  // per file for ~1% false keeps). Building is one pass over the written
-  // files: positions explode (4 rows/value/column), partial bit_or
-  // combines map-side to at most files x bits/64 words (each task reads
-  // one file, so per-task state is one file's words). The driver then
-  // assembles words per (column, file) — bounded by files x bits/64
-  // longs, the same metadata scale as `_STATS` — and writes the sidecar
-  // before the marker move. False positives only KEEP files (never skip
-  // a file containing the value); a column or file absent from the
-  // sidecar is kept.
-
-  private val BloomSeeds = 1 to 4
-
-  /** `fams` records each column's canonical hash family as written by
-    * the build ("L" integral, "D" floating, "S" string — [[family]]) —
-    * what lets a probe detect a cross-class value and bypass the filter
-    * instead of hashing in the wrong domain. Columns from sidecars
-    * written before the family tag are absent ([[pointLookup]] then
-    * bypasses the filter).
-    */
-  final case class Blooms(bits: Int, cols: Set[String],
-      words: Map[(String, String), Array[Long]],
-      fams: Map[String, String] = Map.empty) {
-    def mayContain(column: String, file: String, value: Any): Boolean =
-      words.get((column, file)) match {
-        case None => true // no filter for this pair: must keep
-        case Some(ws) => BloomSeeds.forall { s =>
-          val pos = ((bloomHash(value, s) % bits) + bits) % bits
-          (ws(pos.toInt >> 6) >> (pos.toInt & 63) & 1L) == 1L
-        }
-      }
-  }
-
-  /** Driver-side twin of the build's `xxhash64(col, lit(seed))`. The
-    * build canonicalizes each column to its family's widest type
-    * ([[computeBloomLines]]); the probe takes its [[key]], which widens
-    * the same way, so both sides hash the same domain regardless of
-    * runtime width.
-    */
-  private def bloomHash(value: Any, seed: Int): Long = {
-    import org.apache.spark.sql.catalyst.expressions.{Literal, XxHash64}
-    XxHash64(Seq(Literal(key(value).fold(value)(_.value)), Literal(seed)), 42L)
-      .eval().asInstanceOf[Long]
-  }
-
-  /** A `_BLOOM` sidecar's sizing and columns — what a write builds — and,
-    * for a published version, its raw body lines: a rewrite of that
-    * version (merge's tile path and fallback, compaction) carries the
-    * columns and sizing forward and an untouched file's lines verbatim.
-    */
-  private final case class BloomSidecar(bits: Int, cols: Seq[String],
-      lines: Seq[String] = Nil) {
-    def header: String = s"bits=$bits"
-    def linesOf(files: Set[String]): Seq[String] =
-      lines.filter(l => files(l.split("\t")(1)))
-  }
-
-  private def bloomSpec(cols: Seq[String], bits: Int): Option[BloomSidecar] =
-    if (cols.isEmpty) None else Some(BloomSidecar(bits, cols))
-
-  /** The `_BLOOM` sidecar of `root`'s `version` — one raw read; None
-    * when it has none (or no columns).
-    */
-  private def bloomSidecar(root: String,
-      version: String): Option[BloomSidecar] =
-    readSidecar(s"$root/$version", "_BLOOM").map { case (header, lines) =>
-      BloomSidecar(header.stripPrefix("bits=").toInt,
-        lines.map(_.split("\t")(0)).distinct.sorted, lines)
-    }.filter(_.cols.nonEmpty)
-
-  // parsed-sidecar memo: a version directory is immutable once published,
-  // so its parsed filters can be reused across lookups (a dim point-read
-  // path does thousands; re-parsing a multi-MB sidecar per lookup would
-  // eat the pruning win). Entries carry the sidecar's mtime: a deleted-
-  // and-republished root reusing the same version id (the rm-then-rerun
-  // pattern harness queries follow) gets a fresh parse instead of stale
-  // filters that would silently mis-skip. Small LRU — entries are the
-  // sidecar's size.
-  private val bloomCache =
-    new java.util.LinkedHashMap[String, (Long, Option[Blooms])](8, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, (Long, Option[Blooms])]): Boolean =
-        size > 4
-    }
-
-  /** The `_BLOOM` sidecar of a version, if present (parsed once per
-    * distinct sidecar file — keyed by path + modification time).
-    */
-  def readBlooms(root: String, version: String): Option[Blooms] =
-    bloomCache.synchronized {
-      val k = s"$root/$version"
-      val p = java.nio.file.Paths.get(s"$k/_BLOOM")
-      val mtime =
-        if (java.nio.file.Files.exists(p))
-          java.nio.file.Files.getLastModifiedTime(p).toMillis
-        else -1L
-      val hit = bloomCache.get(k)
-      if (hit != null && hit._1 == mtime) hit._2
-      else {
-        val parsed = parseBlooms(root, version)
-        bloomCache.put(k, (mtime, parsed))
-        parsed
-      }
-    }
-
-  private def parseBlooms(root: String, version: String): Option[Blooms] =
-    readSidecar(s"$root/$version", "_BLOOM").map { case (header, lines) =>
-      val bits = header.stripPrefix("bits=").toInt
-      val parsed = lines.map { l =>
-        val parts = l.split("\t", 4)
-        val (c, f, b64) = (parts(0), parts(1), parts(2))
-        val fam = if (parts.length >= 4) Some(parts(3)) else None
-        val bb = java.nio.ByteBuffer.wrap(java.util.Base64.getDecoder.decode(b64))
-        val ws = new Array[Long](bits >> 6)
-        var i = 0
-        while (i < ws.length) { ws(i) = bb.getLong(); i += 1 }
-        ((c, f) -> ws, fam.map(c -> _))
-      }
-      val entries = parsed.map(_._1)
-      Blooms(bits, entries.map(_._1._1).toSet, entries.toMap,
-        parsed.flatMap(_._2).toMap)
-    }
-
-  /** Per-(column, file) bloom lines for just `files` of a version dir. */
-  private def computeBloomLines(spark: SparkSession, dir: String,
-      files: Seq[String], cols: Seq[String], bits: Int): Seq[String] = {
-    require(bits > 0 && (bits & (bits - 1)) == 0, "bloomBits must be a power of two")
-    if (files.isEmpty) Nil
-    else {
-      val df = GraftParquet.read(spark, files.map(f => s"$dir/$f"): _*)
-      val fams = cols.map(c => c -> family(df.schema(c).dataType)).toMap
-      val perCol = cols.flatMap { c =>
-        // canonical hash domains (the stats encoding's families): every
-        // integral width hashes as long, float as double, so a probe of
-        // any width in the same class agrees with the build
-        val v = fams(c) match {
-          case Some("L") => col(c).cast("long")
-          case Some("D") => col(c).cast("double")
-          case _ => col(c)
-        }
-        BloomSeeds.map { s =>
-          df.select(input_file_name().as("__file"), lit(c).as("__col"),
-            pmod(xxhash64(v, lit(s)), lit(bits.toLong)).as("__pos"))
-        }
-      }.reduce(_ unionAll _)
-      val rows = perCol
-        .groupBy(col("__file"), col("__col"),
-          (col("__pos") / 64).cast("int").as("__word"))
-        .agg(expr("bit_or(shiftleft(1L, CAST(pmod(__pos, 64) AS INT)))").as("__bits"))
-        .collect()
-      rows.groupBy(r => (r.getString(1), r.getString(0).split('/').last))
-        .toSeq.map { case ((c, f), rs) =>
-          val ws = new Array[Long](bits >> 6)
-          rs.foreach(r => ws(r.getInt(2)) = r.getLong(3))
-          val bb = java.nio.ByteBuffer.allocate(ws.length * 8)
-          ws.foreach(bb.putLong)
-          s"$c\t$f\t" + java.util.Base64.getEncoder.encodeToString(bb.array()) +
-            s"\t${fams(c).getOrElse("O")}"
-        }
-    }
-  }
 
   /** OPTIMIZE-style maintenance: rewrite the CURRENT version as new
     * version `version`, clustered — the compaction pass a streaming dim
@@ -854,9 +586,8 @@ object SnapshotTable {
     * fresh stats), the rewrite publishes through the same atomic marker
     * move as any version — readers see the old layout or the new one,
     * never a half-compacted state — and retention ages the fragmented
-    * version out. With `zOrderPk` set (and ≥ 2 statsCols) the rewrite
-    * z-orders; otherwise it range-clusters by the lead stats column, or
-    * just bin-packs to `targetFiles` when no stats are wanted.
+    * version out. The rewrite range-clusters by the lead column of
+    * `statsCols` (which must be non-empty) into `targetFiles` files.
     *
     * `version` is the CALLER's to choose because this format has one
     * publisher per table root: a streaming dim sink names versions by
@@ -868,30 +599,16 @@ object SnapshotTable {
     * published to compact.
     */
   def compact(spark: SparkSession, root: String, version: String,
-      targetFiles: Int, statsCols: Seq[String] = Nil,
-      zOrderPk: Option[String] = None, retain: Int = 2): Option[String] =
+      targetFiles: Int, statsCols: Seq[String],
+      retain: Int = 2): Option[String] = {
+    require(statsCols.nonEmpty,
+      "compact needs at least one stats column to cluster by")
     latestVersion(root).map { v =>
-      staged(root, version, retain, Some(v), replay = false) { stage =>
-        val df = readVersion(spark, root, v)
-        // a compaction is a layout rewrite, not a capability change: the
-        // previous version's bloom sidecar columns/sizing carry forward
-        // (fresh filters are rebuilt for the new files)
-        val bloom = bloomSidecar(root, v)
-        zOrderPk match {
-          case Some(pk) =>
-            require(statsCols.size >= 2, "z-order compaction needs >= 2 statsCols")
-            zOrderInto(df, stage, pk, statsCols, targetFiles, 8, bloom)
-          case None if statsCols.nonEmpty =>
-            publishInto(df, stage, statsCols, Some(targetFiles), bloom)
-          case None =>
-            require(bloom.isEmpty,
-              "compacting away stats would orphan the bloom sidecar " +
-                "(pointLookup prunes by range first) — pass statsCols")
-            publishInto(df.repartition(targetFiles), stage, Nil)
-        }
-      }
+      staged(root, version, retain, Some(v), replay = false)(publishInto(
+        readVersion(spark, root, v), _, statsCols, Some(targetFiles)))
       version
     }
+  }
 
   /** Export the latest published version as a PLAIN parquet directory
     * plus a `_MANIFEST.json` — the open-format interop boundary: a
@@ -901,10 +618,12 @@ object SnapshotTable {
     * Delta `CONVERT TO DELTA parquet.`dir``, Iceberg's `add_files`) —
     * the manifest and `_`-prefixed sidecars are ignored by parquet
     * readers per the Hadoop hidden-file convention. Data files and the
-    * `_STATS`/`_BLOOM` skipping sidecars are copied BYTE-IDENTICAL; the
-    * manifest records provenance (source root, version, schema as Spark
+    * `_STATS` skipping sidecar are copied BYTE-IDENTICAL; the manifest
+    * records provenance (source root, version, schema as Spark
     * schema-JSON, file list) so [[importTable]] restores the snapshot —
-    * files, stats, blooms — bit-for-bit without a rewrite or a scan.
+    * files and stats — bit-for-bit without a rewrite or a scan. Any other
+    * file in the version directory (an older release's Bloom-filter
+    * sidecar) is not exported.
     * Returns the exported version id (None on an unpublished root).
     */
   def exportTable(spark: SparkSession, root: String,
@@ -918,14 +637,14 @@ object SnapshotTable {
       // only then delete the previous export's stale parts. A crash at
       // any point leaves an IMPORTABLE directory: before the manifest
       // swap the old manifest still lists the old parts (all present —
-      // nothing was deleted yet, and importTable skips sidecars that
+      // nothing was deleted yet, and importTable skips stats that
       // disagree with the manifest's list); after it, the new export is
       // complete and only stale extras remain. The raw
       // `spark.read.parquet(dir)` surface is consistent except inside
       // this window — the manifest is the consistency boundary, exactly
       // as in any manifest-based table format.
       val listed = dataFiles(s"$root/$v")
-      (Seq("_BLOOM", "_STATS").filter(n =>
+      (Seq("_STATS").filter(n =>
         new java.io.File(s"$root/$v/$n").isFile) ++ listed).foreach { n =>
         Files.copy(Paths.get(s"$root/$v/$n"), Paths.get(s"$dir/$n"),
           StandardCopyOption.REPLACE_EXISTING); ()
@@ -964,10 +683,11 @@ object SnapshotTable {
     *
     * Two regimes, detected from the directory:
     *   - a [[exportTable]] directory (`_MANIFEST.json` present): the
-    *     manifest's data files and any `_STATS`/`_BLOOM` sidecars are
-    *     copied back byte-identical and committed — a full round trip
-    *     (publish → export → import) reproduces the original version's
-    *     files, skipping metadata included, with no rewrite and no scan;
+    *     manifest's data files and its `_STATS` sidecar are copied back
+    *     byte-identical and committed — a full round trip (publish →
+    *     export → import) reproduces the original version's files,
+    *     skipping metadata included, with no rewrite and no scan; any
+    *     other file (an older release's Bloom-filter sidecar) is ignored;
     *   - a FOREIGN plain-parquet table (what a Delta/Iceberg user hands
     *     over after their own export): the data is read and published
     *     through the normal path, clustered by `statsCols`/`clusterFiles`
@@ -992,50 +712,23 @@ object SnapshotTable {
           s"$dir/_MANIFEST.json: no data files listed")
         listed.foreach(n => require(new java.io.File(s"$dir/$n").isFile,
           s"$dir: manifest lists $n but the file is missing"))
-        // sidecars carry over only when they AGREE with the manifest's
-        // file list — a crashed re-export can leave newer sidecars beside
-        // an older manifest, and stats naming files the version does not
-        // contain would corrupt pruning; skipping them degrades safely to
-        // an unpruned (still correct) table
-        val sidecars = Seq("_STATS", "_BLOOM").filter(n =>
-          readSidecar(dir, n).exists { case (_, lines) =>
-            val mentioned = "[A-Za-z0-9._-]+\\.parquet".r
-              .findAllIn(lines.mkString("\n")).toSet
-            mentioned.nonEmpty && mentioned.subsetOf(listed.toSet)
-          })
+        // stats carry over only when they AGREE with the manifest's file
+        // list — a crashed re-export can leave newer stats beside an older
+        // manifest, and stats naming files the version does not contain
+        // would corrupt pruning; skipping them degrades safely to an
+        // unpruned (still correct) table
+        val stats = readSidecar(dir).filter { case (_, lines) =>
+          val mentioned = "[A-Za-z0-9._-]+\\.parquet".r
+            .findAllIn(lines.mkString("\n")).toSet
+          mentioned.nonEmpty && mentioned.subsetOf(listed.toSet)
+        }.map(_ => "_STATS")
         Files.createDirectories(Paths.get(stage))
-        (listed ++ sidecars).foreach { n =>
+        (listed ++ stats).foreach { n =>
           Files.copy(Paths.get(s"$dir/$n"), Paths.get(s"$stage/$n"),
             StandardCopyOption.REPLACE_EXISTING); ()
         }
       } else
         publishInto(GraftParquet.read(spark, dir), stage, statsCols, clusterFiles)
-    }
-
-  /** Long-castable monotonic projection for rank bucketing. Strings map
-    * to 7 bytes as a big-endian unsigned integer (zero-padded hex so
-    * shorter strings compare correctly) — UTF-8 byte order equals
-    * code-point order, so the projection is order-preserving up to ties
-    * past the 7 bytes, which only blur tile boundaries, never results
-    * (stats are computed from the real values; pruning stays correct).
-    *
-    * The 7-byte window starts AFTER the column's longest common prefix:
-    * a dim keyed by URL ("https://..." everywhere) would otherwise
-    * collapse every value to one surrogate and z-clustering on that
-    * column would silently degrade to the pk tiebreaker's order. The
-    * LCP comes from min/max alone (the LCP of a sorted set's extremes
-    * is the set's LCP) — one metadata-sized aggregate on the driver.
-    */
-  private def zSurrogate(df: DataFrame, c: String): Column =
-    df.schema(c).dataType match {
-      case org.apache.spark.sql.types.StringType =>
-        val row = df.agg(min(col(c)).as("lo"), max(col(c)).as("hi")).head()
-        val (lo, hi) = (Option(row.getString(0)).getOrElse(""),
-          Option(row.getString(1)).getOrElse(""))
-        val lcp = lo.zip(hi).takeWhile { case (a, b) => a == b }.size
-        conv(rpad(hex(substring(col(c), lcp + 1, 7).cast("binary")), 14, "0"),
-          16, 10).cast("long")
-      case _ => col(c)
     }
 
   /** The marker move + retention half of a commit (stats, if any, must
@@ -1242,9 +935,16 @@ object SnapshotTable {
         case Some(lines) => return lines
         case None => ()
       }
+    // a fresh stage reads by its file list: as a directory, Spark warns
+    // "All paths were ignored" on the dot-prefixed stage name. A list
+    // past the parallel-listing threshold would launch a listing job, so
+    // a stage with more files than that keeps the directory read.
+    val names = if (files.nonEmpty) files else dataFiles(dir)
     val df =
-      if (files.isEmpty) GraftParquet.read(spark, dir)
-      else GraftParquet.read(spark, files.map(f => s"$dir/$f"): _*)
+      if (files.isEmpty && (names.isEmpty || names.size > spark.conf.get(
+          "spark.sql.sources.parallelPartitionDiscovery.threshold", "32").toInt))
+        GraftParquet.read(spark, dir)
+      else GraftParquet.read(spark, names.map(f => s"$dir/$f"): _*)
     // content fingerprint: sum of a full-row 64-bit hash, accumulated in
     // DECIMAL (exact, order-independent, and safe under ANSI overflow
     // checking). Only atomic columns hash — a nested type anywhere drops
@@ -1458,8 +1158,8 @@ object SnapshotTable {
       * unique pk, equal adjacent bounds would be one value in two files).
       * Returns the files by ascending min and the interior cutpoints —
       * tile i holds `cut(i-1) <= pk < cut(i)`, as [[tileId]] assigns.
-      * Merge rewrites such a layout tile-locally; hash or z-order layouts
-      * and missing stats have no tiles.
+      * Merge rewrites such a layout tile-locally; hash layouts and missing
+      * stats have no tiles.
       */
     def tiles(pk: String): Option[(IndexedSeq[String], IndexedSeq[Key])] =
       byMin(pk)
@@ -1469,7 +1169,7 @@ object SnapshotTable {
   }
 
   private def layout(root: String, version: String): Option[Layout] =
-    readSidecar(s"$root/$version", "_STATS").map { case (header, lines) =>
+    readSidecar(s"$root/$version").map { case (header, lines) =>
       new Layout(header.split("\t").toSeq, lines)
     }
 
@@ -1620,45 +1320,13 @@ object SnapshotTable {
 
   /** Dim point-lookup (reference: `RT/utils/DimUtil.java:22-27`, one
     * HBase row by pk): stats-pruned scan + the pk filter — one file's
-    * worth of IO on a pk-clustered snapshot. When the version carries a
-    * `_BLOOM` sidecar for `pkCol` ([[publish]]'s `bloomCols`), files
-    * whose filter excludes the value are also skipped — that is what
-    * prunes equality lookups on a column the table is NOT clustered by
-    * (a secondary/natural key), where min/max spans everything.
+    * worth of IO on a pk-clustered snapshot.
     */
   def pointLookup(spark: SparkSession, root: String, pkCol: String,
       value: Any): Option[DataFrame] =
     latestVersion(root).map { v =>
-      val ranged = plan(spark, root, v, pkCol, Prune.Range(pkCol, value, value))
-      val kept = ranged.files.map(files => readBlooms(root, v) match {
-        case Some(bl) if bl.cols.contains(pkCol) =>
-          // the probe's [[key]] hashes only in the column's sidecar
-          // family: a cross-class probe (e.g. a String against a
-          // long column) bypasses the bloom — false keeps are safe,
-          // wrong-domain hashing that skips everything is not.
-          // A tagged "O" (other-typed) column bypasses outright —
-          // no canonical probe domain exists. Sidecars written
-          // before the family tag bypass too: inferring the family
-          // from the PROBE's runtime class would reintroduce the
-          // wrong-domain skip for exactly the cross-class probes the
-          // tag exists to catch (the build's family is unknowable
-          // from a legacy sidecar, and bypass only ever KEEPS files).
-          // The legacy bypass is correctness-safe but a silent
-          // pruning regression for pre-tag tables — surface it once
-          // per root so the operator knows a republish restores it.
-          val fam = bl.fams.get(pkCol)
-          if (fam.isEmpty && legacyBloomWarned.add(root))
-            org.slf4j.LoggerFactory.getLogger(getClass).warn(
-              s"$root: _BLOOM sidecar predates the type-family tag; " +
-                "bloom pruning is bypassed (range pruning still " +
-                "applies). Republish the table to regain it.")
-          fam.flatMap(f => key(value).filter(_.family == f)) match {
-            case Some(k) => files.filter(f => bl.mayContain(pkCol, f, k.value))
-            case None => files
-          }
-        case _ => files
-      })
-      readFiles(spark, root, Plan(v, kept, None))
+      readFiles(spark, root,
+        plan(spark, root, v, pkCol, Prune.Range(pkCol, value, value)))
         .filter(col(pkCol) === lit(value))
     }
 
@@ -1678,13 +1346,14 @@ object SnapshotTable {
     * and fingerprint — and the scan reads only the UNMATCHED files on
     * each side. A clustered table whose changes concentrate in a few
     * tiles (the common dim-update pattern) diffs by scanning just those
-    * tiles; the deterministic layout ([[publishZOrdered]], and
-    * [[publish]]'s range clustering for stable key populations) is what
-    * makes tile boundaries line up between versions so untouched tiles
-    * fingerprint-match. Missing or incomparable stats on either side fall
-    * back to the full diff — skipping is an optimization, never a
-    * correctness dependence (up to the 64-bit fingerprint, the same
-    * confidence bar as the row-sameness hash).
+    * tiles; a layout whose tile boundaries line up between versions
+    * ([[publishAligned]]'s value cutpoints, [[merge]]'s tile-local
+    * rewrite, and [[publish]]'s range clustering for stable key
+    * populations) is what lets untouched tiles fingerprint-match. Missing
+    * or incomparable stats on either side fall back to the full diff —
+    * skipping is an optimization, never a correctness dependence (up to
+    * the 64-bit fingerprint, the same confidence bar as the row-sameness
+    * hash).
     */
   def diff(spark: SparkSession, root: String, vOld: String, vNew: String,
       pk: String): DataFrame = {

@@ -252,9 +252,7 @@ object Pipelines {
         //    compact restores the merge regime).
         val dimRoot = s"$outDir/dim/$sinkTable"
         // the merge route needs a tile-mergeable layout (stats + range-
-        // disjoint files — a z-order compaction's overlapping pk ranges
-        // would trap every batch in merge's full-rewrite fallback) and a
-        // matching schema
+        // disjoint files) and a matching schema
         val canMerge = graft.sources.SnapshotTable.latestVersion(dimRoot)
           .exists { v =>
             graft.sources.SnapshotTable.tileMergeable(dimRoot, v, pk) &&

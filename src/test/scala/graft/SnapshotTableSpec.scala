@@ -130,61 +130,6 @@ class SnapshotTableSpec extends SparkSpec {
     assert(shit.collect().map(_.getLong(1)).toSeq == Seq(777L))
   }
 
-  test("z-order clustering prunes on EITHER key column; linear only on the lead") {
-    // two independent uniform keys: id 0..9999 and code = a permuted
-    // string key ((id * 7919) % 10000 is a permutation — 7919 is prime)
-    val dim = spark.range(10000L).select(col("id"),
-      format_string("c%04d", (col("id") * 7919) % 10000).as("code"))
-
-    // linear clustering on id: the SECOND column's narrow range prunes
-    // nothing — every file spans code's full range
-    val lroot = freshRoot("zlin")
-    SnapshotTable.publish(dim, lroot, "v1",
-      statsCols = Seq("id", "code"), clusterFiles = Some(16))
-    val linB = readRange(lroot, "code", "c4000", "c4099")
-    assert(linB.inputFiles.length >= 15,
-      s"linear-on-id files each span code's range; expected ~16 kept, got ${linB.inputFiles.length}")
-
-    // z-order on (id, code): BOTH columns' narrow ranges prune to a
-    // minority of the 16 files (each file is a key-space tile)
-    val zroot = freshRoot("zord")
-    SnapshotTable.publishZOrdered(dim, zroot, "v1",
-      pk = "id", zCols = Seq("id", "code"), nFiles = 16)
-    val stats = SnapshotTable.readStats(zroot).get
-    assert(stats.size == 16, s"expected 16 file-stats entries, got ${stats.size}")
-    val zA = readRange(zroot, "id", 7000L, 7099L)
-    assert(zA.inputFiles.length <= 8,
-      s"z-order should prune on id, kept ${zA.inputFiles.length} of 16")
-    val zB = readRange(zroot, "code", "c4000", "c4099")
-    assert(zB.inputFiles.length <= 8,
-      s"z-order should prune on code, kept ${zB.inputFiles.length} of 16")
-    // pruned reads are file-granular supersets: row filters on top give
-    // exactly the unclustered answer
-    assert(zA.filter(col("id").between(7000L, 7099L)).count() == 100L)
-    val zBRows = zB.filter(col("code").between("c4000", "c4099"))
-      .select("id").as[Long](org.apache.spark.sql.Encoders.scalaLong)
-      .collect().toSet
-    val truth = dim.filter(col("code").between("c4000", "c4099"))
-      .select("id").as[Long](org.apache.spark.sql.Encoders.scalaLong)
-      .collect().toSet
-    assert(zBRows == truth && truth.size == 100,
-      s"z-pruned rows must equal the full-scan rows (${zBRows.size} vs ${truth.size})")
-    // the whole table is still intact under z layout
-    assert(SnapshotTable.read(spark, zroot).get.count() == 10000L)
-    // the layout is a pure function of the data: a re-publish produces
-    // the identical tile rectangles (exact ntiles + pinned placement —
-    // a sampled range split here varied run-to-run with the session's
-    // RDD-id seed, which is exactly what this pins against)
-    val zroot2 = freshRoot("zord2")
-    SnapshotTable.publishZOrdered(dim, zroot2, "v1",
-      pk = "id", zCols = Seq("id", "code"), nFiles = 16)
-    def rects(root: String) = SnapshotTable.readStats(root).get
-      .map(s => (s.mins("id"), s.maxs("id"), s.mins("code"), s.maxs("code")))
-      .sorted
-    assert(rects(zroot2) == rects(zroot),
-      "re-published z layout must carry identical per-file stats")
-  }
-
   test("diff emits exact change rows; fingerprint matching skips untouched tiles") {
     val root = freshRoot("diff")
     val v1 = spark.range(8000L).select(col("id"), (col("id") % 97).as("v"))
@@ -228,38 +173,6 @@ class SnapshotTableSpec extends SparkSpec {
       s"identical versions must fingerprint-match every tile, kept " +
         s"${k3o.size}/${k3n.size}")
     assert(SnapshotTable.diff(spark, root, "v2", "v3", "id").count() == 0L)
-  }
-
-  test("bloom sidecar prunes point lookups on an unclustered column; merge carries it") {
-    val root = freshRoot("bloom")
-    // pk-clustered dim with a SCATTERED secondary key: every file spans
-    // nat's full range, so min/max alone keeps all 8 files for any nat
-    val dim = spark.range(40000L).select(col("id"),
-      format_string("n%05d", (col("id") * 7919) % 40000).as("nat"))
-    SnapshotTable.publish(dim, root, "v1", retain = 4, statsCols = Seq("id"),
-      clusterFiles = Some(8), bloomCols = Seq("nat"))
-    val ranged = readRange(root, "nat", "n07777", "n07777")
-    assert(ranged.inputFiles.length == 8,
-      s"sanity: range stats cannot prune a scattered key, kept ${ranged.inputFiles.length}")
-    val hit = SnapshotTable.pointLookup(spark, root, "nat", "n07777").get
-    assert(hit.inputFiles.length <= 2,
-      s"bloom should prune the scattered-key lookup, kept ${hit.inputFiles.length}")
-    assert(hit.count() == 1L)
-    // an absent key is (near-)provably nowhere: nothing to scan, no rows
-    val miss = SnapshotTable.pointLookup(spark, root, "nat", "zzzzz").get
-    assert(miss.inputFiles.length <= 2 && miss.count() == 0L)
-    // pk lookups still prune by range alone
-    assert(SnapshotTable.pointLookup(spark, root, "id", 1234L).get
-      .inputFiles.length == 1)
-    // a merge carries filters for untouched tiles and builds fresh ones
-    // for the rewritten tile, so secondary-key lookups keep pruning
-    val ups = spark.range(5L).select(col("id"), lit("nXXXXX").as("nat"))
-    SnapshotTable.merge(ups, root, "id", "v2", retain = 4)
-    val hit2 = SnapshotTable.pointLookup(spark, root, "nat", "n07777").get
-    assert(hit2.inputFiles.length <= 2 && hit2.count() == 1L,
-      s"post-merge bloom lookup kept ${hit2.inputFiles.length}")
-    assert(SnapshotTable.pointLookup(spark, root, "nat", "nXXXXX").get
-      .count() == 5L)
   }
 
   test("merge rewrites only changed tiles; carried files and stats are verbatim") {
@@ -340,107 +253,55 @@ class SnapshotTableSpec extends SparkSpec {
     assert(hit.inputFiles.length == 1,
       s"compacted point lookup should prune to 1 file, scans ${hit.inputFiles.length}")
 
-    // z-order compaction: the same table re-optimized for both keys
-    val v4 = SnapshotTable.compact(spark, root, "v4", 16,
-      statsCols = Seq("id", "code"), zOrderPk = Some("id"))
-    assert(v4.contains("v4") && SnapshotTable.latestVersion(root).contains("v4"))
-    val zB = readRange(root, "code", "c0400", "c0499")
-    assert(zB.inputFiles.length <= 8,
-      s"z-compacted table should prune on code, kept ${zB.inputFiles.length} of 16")
-    assert(SnapshotTable.read(spark, root).get
-      .collect().map(r => (r.getLong(0), r.getString(1))).toSet == before)
     // a stale/colliding version id fails loudly instead of overwriting
     intercept[IllegalArgumentException] {
-      SnapshotTable.compact(spark, root, "v4", 4, statsCols = Seq("id"))
+      SnapshotTable.compact(spark, root, "v3", 4, statsCols = Seq("id"))
     }
+    // compaction range-clusters by the lead stats column: none is an error
+    val noStats = intercept[IllegalArgumentException] {
+      SnapshotTable.compact(spark, root, "v4", 4, statsCols = Nil)
+    }
+    assert(noStats.getMessage.contains("stats column"), noStats.getMessage)
+    assert(SnapshotTable.latestVersion(root).contains("v3"))
   }
 
-  test("z-order string buckets survive a long shared prefix (URL-keyed dim)") {
-    // every key shares a 24-char prefix — a naive first-7-bytes
-    // surrogate would collapse all rows to one bucket and the code
-    // column would stop pruning entirely
-    val dim = spark.range(10000L).select(col("id"),
-      format_string("https://example.com/page/c%04d",
-        (col("id") * 7919) % 10000).as("code"))
-    val root = freshRoot("zurl")
-    SnapshotTable.publishZOrdered(dim, root, "v1",
-      pk = "id", zCols = Seq("id", "code"), nFiles = 16)
-    val zB = readRange(root, "code",
-      "https://example.com/page/c4000", "https://example.com/page/c4099")
-    assert(zB.inputFiles.length <= 8,
-      s"prefix-stripped surrogate should keep code pruning, kept ${zB.inputFiles.length} of 16")
-    assert(zB.filter(col("code").between("https://example.com/page/c4000",
-      "https://example.com/page/c4099")).count() == 100L)
-  }
-
-  test("bloom sidecar survives the merge full-rewrite fallback and compaction") {
-    val root = freshRoot("bloomcarry")
+  test("merge on a non-tiled layout falls back to a clustered full rewrite that keeps the stats header and bootstraps the tile regime") {
+    val root = freshRoot("fallback")
     // UNCLUSTERED layout: per-file pk ranges overlap, so a merge cannot
     // take the tile path and must fall back to the full rewrite
     val dim = spark.range(20000L).select(
       ((col("id") * 7919) % 20000).as("id"),
       format_string("n%05d", (col("id") * 104729) % 20000).as("nat"))
       .repartition(8)
-    SnapshotTable.publish(dim, root, "v1", retain = 4, statsCols = Seq("id"),
-      bloomCols = Seq("nat"))
+    SnapshotTable.publish(dim, root, "v1", retain = 4,
+      statsCols = Seq("id", "nat"))
     assert(!SnapshotTable.tileMergeable(root, "v1", "id"),
       "sanity: the fixture must force merge's fallback path")
+    def rows(v: String) = SnapshotTable.readVersion(spark, root, v).collect()
+      .map(r => r.getLong(0) -> r.getString(1)).toMap
     val ups = spark.range(3L).select(col("id"), lit("nYYYYY").as("nat"))
+      .unionByName(spark.range(20000L, 20002L).select(col("id"), lit("nNEW").as("nat")))
+    val want2 = rows("v1") ++ (0L until 3L).map(_ -> "nYYYYY") ++
+      (20000L until 20002L).map(_ -> "nNEW")
     SnapshotTable.merge(ups, root, "id", "v2", retain = 4,
       clusterFiles = Some(8))
-    val carried = SnapshotTable.readBlooms(root, "v2")
-    assert(carried.exists(_.cols == Set("nat")),
-      "fallback rewrite must re-publish the bloom sidecar, not drop it")
-    val hit = SnapshotTable.pointLookup(spark, root, "nat", "n07777").get
-    assert(hit.inputFiles.length <= 2 && hit.count() == 1L,
-      s"post-fallback bloom lookup kept ${hit.inputFiles.length}")
-    // compaction is a layout rewrite — the sidecar carries there too
-    SnapshotTable.compact(spark, root, "v9", 4, statsCols = Seq("id"))
-    assert(SnapshotTable.readBlooms(root, "v9").exists(_.cols == Set("nat")),
-      "compaction must rebuild the bloom sidecar for the new files")
-    val hit2 = SnapshotTable.pointLookup(spark, root, "nat", "n07777").get
-    assert(hit2.inputFiles.length <= 2 && hit2.count() == 1L,
-      s"post-compaction bloom lookup kept ${hit2.inputFiles.length}")
-    // compacting a bloom'd table WITHOUT stats would orphan the sidecar
-    intercept[IllegalArgumentException] {
-      SnapshotTable.compact(spark, root, "v10", 4)
-    }
-  }
-
-  test("bloom probe normalizes integral widths; cross-class probes bypass the bloom") {
-    val root = freshRoot("bloomtype")
-    // SHORT secondary key: the build hashes the canonical long domain,
-    // and an Int/Long probe must land in the same domain (a runtime-type
-    // hash would match no filter and wrongly skip every file)
-    val dim = spark.range(8000L).select(col("id"),
-      pmod(col("id") * 7919, lit(100)).cast("short").as("code16"),
-      pmod(col("id") * 7919, lit(100)).cast("byte").as("code8"),
-      (pmod(col("id") * 7919, lit(100)) / 4).cast("float").as("q32"))
-    SnapshotTable.publish(dim, root, "v1", retain = 2, statsCols = Seq("id"),
-      clusterFiles = Some(8), bloomCols = Seq("code16", "code8", "q32"))
-    // BYTE and FLOAT keys take the same canonical domains (long, double):
-    // each value appears 80 times, whatever width the probe carries
-    // (57 / 4 = 14.25 is exact in a float)
-    Seq[Any](57.toByte, 57.toShort, 57, 57L).foreach { p =>
-      val hit = SnapshotTable.pointLookup(spark, root, "code8", p).get
-      assert(hit.count() == 80L, s"byte column probed as ${p.getClass}")
-    }
-    Seq[Any](14.25f, 14.25d).foreach { p =>
-      val hit = SnapshotTable.pointLookup(spark, root, "q32", p).get
-      assert(hit.count() == 80L, s"float column probed as ${p.getClass}")
-    }
-    val asInt = SnapshotTable.pointLookup(spark, root, "code16", 57).get
-    assert(asInt.count() == 80L,
-      "an Int probe against a short column must not be bloom-skipped to empty")
-    val asLong = SnapshotTable.pointLookup(spark, root, "code16", 57L).get
-    assert(asLong.count() == 80L)
-    val asShort = SnapshotTable.pointLookup(spark, root, "code16", 57.toShort).get
-    assert(asShort.count() == 80L)
-    // cross-class probe (string vs integral): bloom must be BYPASSED —
-    // all range-kept files stay, because wrong-domain hashing proves nothing
-    val crossClass = SnapshotTable.pointLookup(spark, root, "code16", "57").get
-    assert(crossClass.inputFiles.length == 8,
-      s"cross-class probe must keep all files, kept ${crossClass.inputFiles.length}")
+    val header = java.nio.file.Files.readString(
+      java.nio.file.Paths.get(s"$root/v2/_STATS")).split("\n").head
+    assert(header == "id\tnat",
+      s"the fallback rewrite must keep the table's stats header, got $header")
+    assert(SnapshotTable.tileMergeable(root, "v2", "id"),
+      "a clustered fallback rewrite must bootstrap the tile regime")
+    assert(rows("v2") == want2, "fallback rows must equal the keep-latest result")
+    // the next merge takes the tile path: untouched v2 files carry over
+    val ups3 = spark.range(100L, 103L).select(col("id"), lit("nZZZZZ").as("nat"))
+    SnapshotTable.merge(ups3, root, "id", "v3", retain = 4)
+    def names(v: String) = new java.io.File(s"$root/$v").listFiles()
+      .filter(f => f.getName.endsWith(".parquet")).map(_.getName).toSet
+    val carried = names("v2") intersect names("v3")
+    assert(carried.size >= 5,
+      s"the second merge must carry untouched tiles, carried ${carried.size} " +
+        s"of ${names("v3").size}")
+    assert(rows("v3") == want2 ++ (100L until 103L).map(_ -> "nZZZZZ"))
   }
 
   test("merge treats a NULL delete predicate as not-deleted (SQL MERGE semantics)") {
@@ -503,7 +364,7 @@ class SnapshotTableSpec extends SparkSpec {
     val root = freshRoot("exp")
     val rows = (1L to 200L).map(i => i -> s"val_$i")
     SnapshotTable.publish(df(rows), root, "v1",
-      statsCols = Seq("id"), clusterFiles = Some(4), bloomCols = Seq("val"))
+      statsCols = Seq("id"), clusterFiles = Some(4))
     val exp = freshRoot("expdir")
     assert(SnapshotTable.exportTable(spark, root, exp).contains("v1"))
 
@@ -528,9 +389,89 @@ class SnapshotTableSpec extends SparkSpec {
     val hit = SnapshotTable.pointLookup(spark, root2, "id", 7L).get
     assert(hit.count() == 1L && hit.inputFiles.length < all,
       "carried _STATS must keep pruning after import")
-    val byVal = SnapshotTable.pointLookup(spark, root2, "val", "val_7").get
-    assert(byVal.count() == 1L && byVal.inputFiles.length < all,
-      "carried _BLOOM must keep secondary-key pruning after import")
+  }
+
+  test("a legacy _BLOOM sidecar is ignored: import, read, lookup, merge and compact never fail on it") {
+    val root = freshRoot("legacybloom")
+    val rows = (1L to 400L).map(i => i -> f"n${(i * 7919) % 400}%05d")
+    SnapshotTable.publish(df(rows), root, "v1", retain = 4,
+      statsCols = Seq("id"), clusterFiles = Some(4))
+    val exp = freshRoot("legacybloomexp")
+    assert(SnapshotTable.exportTable(spark, root, exp).contains("v1"))
+    // the sidecar as older releases wrote it: a `bits=<n>` header, then
+    // one `col\tfile\tbase64\tfamily` line per (column, file). All-zero
+    // filters: a reader that still honoured them would skip every file
+    def writeBloom(dir: String): Unit = {
+      val zeros = java.util.Base64.getEncoder.encodeToString(new Array[Byte](16))
+      val files = new java.io.File(dir).listFiles().map(_.getName)
+        .filter(_.endsWith(".parquet")).sorted
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/_BLOOM"),
+        "bits=128\n" + files.map(f => s"val\t$f\t$zeros\tS").mkString("\n") + "\n")
+      ()
+    }
+    writeBloom(exp)
+    writeBloom(s"$root/v1")
+    def bloomIn(r: String, v: String) = new java.io.File(s"$r/$v/_BLOOM").exists()
+    def got(r: String) = SnapshotTable.read(spark, r).get
+      .collect().map(r => (r.getLong(0), r.getString(1))).toSet
+
+    val imported = freshRoot("legacybloomimp")
+    SnapshotTable.importTable(spark, exp, imported, "v1")
+    assert(got(imported) == rows.toSet && !bloomIn(imported, "v1"))
+
+    assert(got(root) == rows.toSet)
+    val (k, v) = rows(6)
+    assert(SnapshotTable.pointLookup(spark, root, "val", v).get.collect()
+      .map(r => (r.getLong(0), r.getString(1))).toSeq == Seq(k -> v),
+      "a lookup on the old bloom column must ignore the sidecar")
+    SnapshotTable.merge(df(Seq(k -> "merged", 401L -> "new")), root, "id", "v2",
+      retain = 4)
+    val merged = rows.toSet - (k -> v) + (k -> "merged") + (401L -> "new")
+    assert(got(root) == merged && !bloomIn(root, "v2"))
+    SnapshotTable.compact(spark, root, "v3", 2, statsCols = Seq("id"))
+    assert(got(root) == merged && !bloomIn(root, "v3"))
+  }
+
+  test("a stats commit reads its stage by file list: no 'All paths were ignored' warning") {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val source = "org.apache.spark.sql.execution.datasources.DataSource"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("stage-warn", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLoggerName == source) {
+          seen.add(e.getMessage.getFormattedMessage); ()
+        }
+    }
+    // the session first: starting Spark reconfigures log4j2, which would
+    // drop an appender attached before it. The appender joins the logger
+    // config the DataSource logger already resolves to: a config of its
+    // own would copy the root's additivity (off) and silence the console
+    // for that logger for the rest of the JVM
+    spark.conf.get("spark.app.name")
+    val config = LogManager.getLogger(source).asInstanceOf[Logger].get()
+    appender.start()
+    config.addAppender(appender, null, null)
+    val root = freshRoot("stagewarn")
+    val hidden = freshRoot("stagewarn_probe") + "/.hidden"
+    try {
+      // control: a dot-prefixed directory read does log the warning
+      df(Seq(1L -> "a")).write.parquet(hidden)
+      spark.read.parquet(hidden).collect()
+      SnapshotTable.publish(
+        spark.range(400L).select(col("id"), (col("id") % 7).as("v")), root,
+        "v1", statsCols = Seq("id"), clusterFiles = Some(4))
+    } finally { config.removeAppender(appender.getName); appender.stop() }
+    val ignored = seen.toArray.map(_.toString)
+      .filter(_.contains("All paths were ignored"))
+    assert(ignored.exists(_.contains(".hidden")),
+      s"control: the appender must see Spark's warning, saw ${seen.size} lines")
+    assert(SnapshotTable.readStats(root).get.size == 4)
+    assert(!ignored.exists(_.contains(".stage_")),
+      s"a stats pass must not read its stage as a directory: ${ignored.mkString("; ")}")
   }
 
   test("foreign plain-parquet import publishes clustered and tile-mergeable") {

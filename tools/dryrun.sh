@@ -3,7 +3,8 @@
 #   t1 smoke (entry at sf0.001) -> t2 correctness (Verify + DuckDB oracle
 #   at sf0.01) -> perfbench self-tests and one untraced run per workload
 #   registered in BENCHMARK.json -> bench (sf0.1, one JSON line) -> full
-#   test suite.
+#   test suite -> report: known-warning counts in the Verify (sf0.01) and
+#   test logs, and code-line counts (reports only, never a gate).
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
@@ -11,7 +12,9 @@ echo "== t1: smoke (Verify entry @ sf0.001)"
 sbt -batch "runMain graft.Verify /root/testdata/sf0.001 /tmp/graft_dryrun_t1"
 
 echo "== t2: Verify @ sf0.01 + oracle compare"
+{
 sbt -batch "runMain graft.Verify /root/testdata/sf0.01 /tmp/graft_dryrun_out"
+} 2>&1 | tee /tmp/graft_dryrun_verify.log
 python3 tools/check_oracle.py /root/testdata/sf0.01 /tmp/graft_dryrun_out
 
 echo "== perfbench self-tests"
@@ -42,6 +45,19 @@ bad = {k: summary[k] for k in ("errors", "shared_rebuilds") if summary[k]}
 sys.exit("bench: " + json.dumps(bad) if bad else 0)'
 
 echo "== tests"
-sbt -batch test
+sbt -batch test 2>&1 | tee /tmp/graft_dryrun_test.log
+
+echo "== report: known warnings per log (counts only, not a gate)"
+# the test log holds one "All paths were ignored:" line by design: the
+# SnapshotTableSpec control read of a dot-prefixed directory
+for log in /tmp/graft_dryrun_verify.log /tmp/graft_dryrun_test.log; do
+  for w in "All paths were ignored:" "WindowExec: No Partition Defined" \
+      "already exists on this machine; not re-adding it"; do
+    echo "$(grep -c -- "$w" "$log" || true) $w ($log)"
+  done
+done
+echo "== report: code lines (tools/loc.py: physical, code, path)"
+python3 tools/loc.py src/main/scala
+python3 tools/loc.py src/main/scala/graft/sources/SnapshotTable.scala
 
 echo "DRYRUN OK"
