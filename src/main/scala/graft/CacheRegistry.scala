@@ -94,13 +94,6 @@ object CacheRegistry {
     * a `LogicalRDD` leaf while the persist stays registry-managed, and —
     * unlike the stock `createDataFrame(df.rdd, schema)` round-trip —
     * never converts rows to the external format.
-    */
-  def materialize(df: DataFrame): DataFrame = materializeCounted(df)._1
-
-  /** [[materialize]] that also returns the row count its eager
-    * materialization already paid for — callers that next ask "is it
-    * empty?" (the push rounds' drain check) read the returned count
-    * instead of launching a second job against the cache.
     *
     * The cut is the `localCheckpoint` sequence
     * ([[org.apache.spark.sql.GraftPlanUtil.cutLineageEager]]): rows stay
@@ -111,10 +104,10 @@ object CacheRegistry {
     * partitioning survives onto the new leaf — downstream consumers
     * keyed the same way plan no fresh exchange.
     */
-  def materializeCounted(df: DataFrame): (DataFrame, Long) = {
-    val (cut, rdd, n) = org.apache.spark.sql.GraftPlanUtil.cutLineageEager(df)
+  def materialize(df: DataFrame): DataFrame = {
+    val (cut, rdd) = org.apache.spark.sql.GraftPlanUtil.cutLineageEager(df)
     synchronized { registeredRdds += rdd }
-    (cut, n)
+    cut
   }
 
   /** Release ONE materialized frame early (before its scope/query

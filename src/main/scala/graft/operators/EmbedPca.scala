@@ -703,8 +703,8 @@ object EmbedPca {
       def vAt(ver: Int) =
         graft.streaming.PcaStream.modelAt(spark, root, s"v$ver").v
       // the monitor reads consecutive HEADS as they publish — the
-      // retention window (default retain = 2) always holds the pair,
-      // so the drift trail needs no extended history
+      // retention window (the head and the version before it) holds the
+      // pair, so the drift trail needs no extended history
       val rows = (0 to 2).flatMap { k =>
         val slice = emb.filter(pmod(col("vec_id"), lit(3)) === k)
         // loud on an empty mod-3 slice (small or filtered fixture):

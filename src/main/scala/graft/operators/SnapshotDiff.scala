@@ -78,14 +78,14 @@ object SnapshotDiff {
       rmTree(dir)
       val orders = Tables.load(spark, sfDir, "orders")
       SnapshotTable.publish(rollup(orders, None, Some("1996-01-01")),
-        dir, "v1", retain = 2, statsCols = Seq("o_custkey"),
+        dir, "v1", statsCols = Seq("o_custkey"),
         clusterFiles = Some(8))
       // the new version publishes on the OLD version's file grid
       // (value-stable boundaries), so tiles whose customers didn't
       // change fingerprint-match and the diff never scans them
       val bounds = SnapshotTable.keyBoundaries(dir, "v1", "o_custkey").get
       SnapshotTable.publishAligned(rollup(orders, Some("1993-01-01"), None),
-        dir, "v2", "o_custkey", bounds, retain = 2)
+        dir, "v2", "o_custkey", bounds)
       SnapshotTable.diff(spark, dir, "v1", "v2", "o_custkey")
         .orderBy(col("o_custkey"), col("_change_type"))
     }
@@ -139,13 +139,13 @@ object SnapshotDiff {
       rmTree(dir)
       val orders = Tables.load(spark, sfDir, "orders")
       SnapshotTable.publish(rollup(orders, None, Some("1996-01-01")),
-        dir, "v1", retain = 2, statsCols = Seq("o_custkey"),
+        dir, "v1", statsCols = Seq("o_custkey"),
         clusterFiles = Some(8))
       val amended = rollup(orders, None, None)
         .join(rollup(orders, Some("1996-01-01"), None).select("o_custkey"),
           Seq("o_custkey"), "left_semi")
       SnapshotTable.merge(amended, dir, "o_custkey", "v2",
-        deleteWhen = Some(col("order_ct") > 15), retain = 2)
+        deleteWhen = Some(col("order_ct") > 15))
       SnapshotTable.read(spark, dir).get.orderBy("o_custkey")
     }
 
@@ -193,11 +193,11 @@ object SnapshotDiff {
       rmTree(dir)
       val orders = Tables.load(spark, sfDir, "orders")
       SnapshotTable.publish(rollup(orders, None, Some("1996-01-01")),
-        dir, "v1", retain = 2, statsCols = Seq("o_custkey"),
+        dir, "v1", statsCols = Seq("o_custkey"),
         clusterFiles = Some(8))
       val bounds = SnapshotTable.keyBoundaries(dir, "v1", "o_custkey").get
       SnapshotTable.publishAligned(rollup(orders, Some("1993-01-01"), None),
-        dir, "v2", "o_custkey", bounds, retain = 2)
+        dir, "v2", "o_custkey", bounds)
       val bucket = pmod(col("o_custkey"), lit(B.toLong)).as("bucket")
       val base = SnapshotTable.readVersion(spark, dir, "v1")
         .groupBy(bucket)
@@ -255,9 +255,9 @@ object SnapshotDiff {
       rmTree(dir); rmTree(expDir); rmTree(impDir)
       val orders = Tables.load(spark, sfDir, "orders")
       SnapshotTable.publish(rollup(orders, None, None), dir, "v1",
-        retain = 2, statsCols = Seq("o_custkey"), clusterFiles = Some(8))
+        statsCols = Seq("o_custkey"), clusterFiles = Some(8))
       SnapshotTable.exportTable(spark, dir, expDir)
-      SnapshotTable.importTable(spark, expDir, impDir, "v1")
+      SnapshotTable.importTable(expDir, impDir, "v1")
       SnapshotTable.read(spark, impDir).get.orderBy("o_custkey")
     }
 

@@ -2,7 +2,6 @@ package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.GraftParquet
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ByteType, DataType, DoubleType, FloatType,
   IntegerType, LongType, ShortType, StringType}
@@ -26,12 +25,13 @@ import org.apache.spark.unsafe.types.UTF8String
   *    (idempotent replay).
   *  - READER ISOLATION: a reader resolves `_LATEST` once and then reads a
   *    version directory that no concurrent publish mutates (publishes go
-  *    to NEW directories). Retention keeps the previous `retain − 1`
-  *    versions on disk, so a reader holding yesterday's resolution keeps
-  *    working through a publish — and `readVersion` gives bounded time
-  *    travel over the retained window.
-  *  - RETENTION: versions beyond `retain` are pruned oldest-first
-  *    (numeric `v<n>` order), bounding storage like Delta VACUUM.
+  *    to NEW directories). Retention keeps the previous version on disk,
+  *    so a reader holding the last resolution keeps working through a
+  *    publish — and `readVersion` gives bounded time travel over the
+  *    retained window.
+  *  - RETENTION: versions beyond the newest [[Retain]] are pruned
+  *    oldest-first (numeric `v<n>` order), bounding storage like Delta
+  *    VACUUM.
   *
   * FILE-LEVEL DATA SKIPPING (the Delta/Iceberg stats half): [[publish]]
   * can record per-file min/max for chosen columns into a `_STATS` file
@@ -71,10 +71,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * put-if-absent-commit discipline, at directory granularity).
   *
   * Reference semantic anchor: the Phoenix dim upsert
-  * (`RT/app/function/DimSinkFunction.java:22-76`) — [[upsert]] is its
-  * keep-latest merge, published as a snapshot version.
+  * (`RT/app/function/DimSinkFunction.java:22-76`) — [[merge]] is its
+  * keep-latest write, published as a snapshot version.
   */
 object SnapshotTable {
+
+  /** Committed versions kept on disk: the head and the one before it. */
+  private val Retain = 2
 
   /** Per-root commit monitors — same-JVM writers serialize here; the
     * `._COMMITLOCK` file lock inside extends the exclusion to writers in
@@ -132,7 +135,7 @@ object SnapshotTable {
     *
     * `base` is the CAS base — the head this write's content derives from
     * (`None` = an empty table). Entries that only write pass the head at
-    * call entry; entries that READ the table (merge, compact, upsert)
+    * call entry; entries that READ the table (merge, compact)
     * pass the head they read, so a competing commit in between conflicts
     * instead of being silently overwritten.
     *
@@ -163,7 +166,7 @@ object SnapshotTable {
     * the sweep can't reclaim on tables whose head never passes the
     * version, e.g. the LSM segment roots that only ever publish v1).
     */
-  private def staged(root: String, version: String, retain: Int,
+  private def staged(root: String, version: String,
       base: Option[String], replay: Boolean = true)(
       fill: String => Unit): Unit = {
     require(version.matches("v\\d+"), s"version must be v<digits>, got $version")
@@ -174,7 +177,7 @@ object SnapshotTable {
       s"$root/.stage_${version}_${java.util.UUID.randomUUID().toString.take(8)}"
     try {
       fill(stage)
-      finishCommit(root, version, retain, base, Some(stage))
+      finishCommit(root, version, base, Some(stage))
     } catch {
       case e: Throwable =>
         rmTree(new java.io.File(stage)) // idempotent if already cleaned
@@ -186,7 +189,7 @@ object SnapshotTable {
     graft.operators.SnapshotDiff.rmTree(f.getPath)
 
   /** Write `df` as version `version` (must be `v<digits>`) under `root`
-    * and atomically publish it as latest; prune beyond `retain`.
+    * and atomically publish it as latest; prune beyond [[Retain]].
     *
     * `statsCols` turns on per-file min/max stats for those columns.
     * `clusterFiles = Some(n)` range-partitions the write by the FIRST
@@ -194,10 +197,10 @@ object SnapshotTable {
     * clustered across files (random placement gives every file the full
     * key range and nothing prunes).
     */
-  def publish(df: DataFrame, root: String, version: String, retain: Int = 2,
+  def publish(df: DataFrame, root: String, version: String,
       statsCols: Seq[String] = Nil, clusterFiles: Option[Int] = None,
       rowFingerprints: Boolean = true): Unit =
-    staged(root, version, retain, latestVersion(root))(publishInto(df, _,
+    staged(root, version, latestVersion(root))(publishInto(df, _,
       statsCols, clusterFiles, rowFingerprints))
 
   /** [[publish]]'s body, writing into a stage of [[staged]]. */
@@ -277,17 +280,16 @@ object SnapshotTable {
     * accumulates, re-balance with [[compact]] (boundaries re-derive and
     * the next diff pays one full rescan: the standard cluster-maintenance
     * trade). File `i` holds rows with `boundaries(i-1) <= key <
-    * boundaries(i)` (file 0 everything below, nulls included).
+    * boundaries(i)` (file 0 everything below, nulls included). Stats
+    * are on `key`.
     */
   def publishAligned(df: DataFrame, root: String, version: String,
-      key: String, boundaries: Seq[Any], retain: Int = 2,
-      statsCols: Seq[String] = Nil): Unit =
-    staged(root, version, retain, latestVersion(root)) { stage =>
+      key: String, boundaries: Seq[Any]): Unit =
+    staged(root, version, latestVersion(root)) { stage =>
       require(boundaries.nonEmpty, "publishAligned needs at least one cutpoint")
       writePinned(df, stage, boundaries.size + 1, tileId(df.sparkSession,
         col(key), boundaries, Some(df.schema(key).dataType)) + 1, Seq(col(key)))
-      writeStats(df.sparkSession, stage,
-        if (statsCols.nonEmpty) statsCols else Seq(key))
+      writeStats(df.sparkSession, stage, Seq(key))
     }
 
   /** File/tile id of `keyCol` against value cutpoints — the count of
@@ -354,11 +356,12 @@ object SnapshotTable {
 
   /** MERGE INTO analog (Delta `whenMatched update / whenNotMatched
     * insert`, plus an optional matched-delete predicate): apply `updates`
-    * (keyed by `pk`, same schema as the table) to the CURRENT version and
-    * publish the result as `version`, rewriting ONLY the tiles that
-    * receive changes. Matched rows are replaced by their update row
-    * (or removed when `deleteWhen` holds on the update row); unmatched
-    * update rows insert. A NULL `deleteWhen` result means NOT deleted
+    * (keyed by `pk`) to the CURRENT version and publish the result as
+    * `version`, rewriting ONLY the tiles that receive changes — the
+    * format's one keep-latest write, the dim sink's upsert by pk.
+    * Matched rows are replaced by their update row (or removed when
+    * `deleteWhen` holds on the update row); unmatched update rows
+    * insert. A NULL `deleteWhen` result means NOT deleted
     * (the SQL MERGE `WHEN MATCHED AND <cond>` contract: an unknown
     * condition does not fire the delete clause) — the row applies as a
     * normal update/insert.
@@ -386,6 +389,14 @@ object SnapshotTable {
     * `clusterFiles` is set (which is also how the first publish and the
     * fallback BOOTSTRAP the tile regime for later batches).
     *
+    * Schema rule. `updates` must hold `pk`, and a column it shares with
+    * the table must keep its type (a changed type fails by name). The
+    * same column set, in any order, merges as above. A different set
+    * (the dynamic-DDL path) takes the full rewrite: old and update rows
+    * union by name, each side null-filling the columns it lacks, so the
+    * table keeps every column it had and the stats header carries over.
+    * A replay of the committed head returns before any schema check.
+    *
     * DIVERGENCE vs Delta `MERGE INTO` (the interop checklist for a user
     * arriving from Delta — semantic deltas, not missing plumbing):
     *   - MATCHED UPDATE is whole-row replacement: Delta's
@@ -401,13 +412,13 @@ object SnapshotTable {
     *     `MERGE_CARDINALITY_VIOLATION` when two source rows match one
     *     target row; here both rows land (the matched row is removed
     *     once, both updates insert) and the table ends with a duplicate
-    *     pk. Dedup first ([[upsert]] is the keep-latest form).
+    *     pk. Dedup the batch by pk first (the CDC dim route keeps the
+    *     latest change per key).
     *   - No `WHEN NOT MATCHED BY SOURCE` clause (Delta can delete target
     *     rows absent from the source); full-table deletes go through a
     *     filtered [[publish]].
-    *   - No automatic schema evolution on merge (Delta merges with
-    *     `mergeSchema`); [[merge]] requires the exact table schema,
-    *     [[upsert]] widens.
+    *   - Schema evolution is always on and additive (Delta needs
+    *     `mergeSchema`), and a column set change rewrites the table.
     *
     * `knownPlan`: a [[plan]] a caller already made against the head this
     * merge reads, e.g. the [[Prune.Keys]] plan of the same update keys;
@@ -424,7 +435,7 @@ object SnapshotTable {
     * value-band pruning run on metadata instead of a read-back job.
     */
   def merge(updates: DataFrame, root: String, pk: String, version: String,
-      deleteWhen: Option[Column] = None, retain: Int = 2,
+      deleteWhen: Option[Column] = None,
       clusterFiles: Option[Int] = None,
       rowFingerprints: Boolean = true,
       knownPlan: Option[Plan] = None,
@@ -435,28 +446,32 @@ object SnapshotTable {
     def inserts(u: DataFrame) =
       deleteWhen.foldLeft(u)((u, d) => u.filter(!coalesce(d, lit(false))))
     val base = latestVersion(root)
-    staged(root, version, retain, base) { stage => base match {
-      case None =>
-        // first publish: nothing to match, inserts only
-        publishInto(inserts(updates), stage, (Seq(pk) ++ extraStatsCols).distinct,
-          clusterFiles, rowFingerprints = rowFingerprints)
-      case Some(vOld) =>
-        val current = readVersion(spark, root, vOld)
-        require(updates.schema.fields.map(f => (f.name, f.dataType)).toSeq ==
-          current.schema.fields.map(f => (f.name, f.dataType)).toSeq,
-          "merge updates must match the table schema (names and types); " +
-            s"updates=${updates.schema.fields.map(f => s"${f.name}:${f.dataType.simpleString}").mkString(",")} " +
-            s"table=${current.schema.fields.map(f => s"${f.name}:${f.dataType.simpleString}").mkString(",")}")
-        // three consumers read the update set (tile discovery, the
-        // matched-key anti join, the insert union) — persist it for the
-        // merge's duration rather than re-evaluating an arbitrary source
-        // frame three times
-        val ups = updates.persist()
-        try mergeInto(ups, inserts(ups), root, pk, stage, vOld, current,
-          clusterFiles, rowFingerprints,
-          knownPlan.filter(_.version == vOld).flatMap(_.tiles), extraStatsCols)
-        finally { ups.unpersist(blocking = false); () }
-    } }
+    staged(root, version, base) { stage =>
+      require(updates.columns.contains(pk),
+        s"$root: merge updates lack the pk column $pk")
+      base match {
+        case None =>
+          // first publish: nothing to match, inserts only
+          publishInto(inserts(updates), stage,
+            (Seq(pk) ++ extraStatsCols).distinct, clusterFiles,
+            rowFingerprints = rowFingerprints)
+        case Some(vOld) =>
+          val current = readVersion(spark, root, vOld)
+          val types = current.schema.fields.map(f => f.name -> f.dataType).toMap
+          updates.schema.fields.foreach(f => types.get(f.name).foreach(t =>
+            require(t == f.dataType, s"$root: merge column ${f.name} changes " +
+              s"type from ${t.simpleString} to ${f.dataType.simpleString}")))
+          // three consumers read the update set (tile discovery, the
+          // matched-key anti join, the insert union) — persist it for the
+          // merge's duration rather than re-evaluating an arbitrary source
+          // frame three times
+          val ups = updates.persist()
+          try mergeInto(ups, inserts(ups), root, pk, stage, vOld, current,
+            clusterFiles, rowFingerprints,
+            knownPlan.filter(_.version == vOld).flatMap(_.tiles), extraStatsCols)
+          finally { ups.unpersist(blocking = false); () }
+      }
+    }
   }
 
   private def mergeInto(updates: DataFrame, inserts: DataFrame, root: String,
@@ -471,13 +486,18 @@ object SnapshotTable {
     // inverted index isn't). No broadcast hint: AQE converts to a
     // broadcast join at runtime when the batch's key set is actually
     // small, and a table-scale update set (SnapshotDiff.merged passes
-    // one) stays a shuffle join instead of OOMing the driver.
+    // one) stays a shuffle join instead of OOMing the driver. Columns
+    // only one side has null-fill on the other; new ones go last.
+    val cols = current.columns ++ updates.columns.filterNot(current.columns.contains)
     def applied(old: DataFrame) = old
       .join(updates.select(col(pk)), Seq(pk), "left_anti")
-      .unionByName(inserts)
-      .select(current.columns.map(col).toIndexedSeq: _*)
+      .unionByName(inserts, allowMissingColumns = true)
+      .select(cols.map(col).toIndexedSeq: _*)
     val lay = layout(root, vOld)
-    lay.flatMap(l => l.tiles(pk).map(t => (l, t))) match {
+    // a column-set change rewrites every file: carried files would keep
+    // the old schema
+    val sameCols = updates.columns.toSet == current.columns.toSet
+    lay.filter(_ => sameCols).flatMap(l => l.tiles(pk).map(t => (l, t))) match {
       case Some((l, (filesByTile, cuts))) =>
         // tile id of each update row against the broadcast cutpoints
         val tile = tileId(spark, col(pk), cuts.map(_.value))
@@ -521,11 +541,9 @@ object SnapshotTable {
 
   /** Whether a [[merge]] into `root`'s version `v` would take the
     * tile-local path on `pk`: the version's layout is tiled on `pk`
-    * ([[Layout.tiles]]). Callers choosing between merge and
-    * a cheaper full-rewrite strategy (e.g. the CDC dim sink) should gate
-    * on this — a non-tile-mergeable table (a hash layout, whose per-file
-    * pk ranges overlap) would otherwise pay merge's fallback full rewrite
-    * PLUS a stats pass every batch.
+    * ([[Layout.tiles]]). A caller that sizes `clusterFiles` from its data
+    * needs the size only when it is not (a hash layout, whose per-file pk
+    * ranges overlap, or no stats): merge then takes its full rewrite.
     */
   def tileMergeable(root: String, version: String, pk: String): Boolean =
     layout(root, version).exists(_.tiles(pk).isDefined)
@@ -579,9 +597,10 @@ object SnapshotTable {
 
   /** OPTIMIZE-style maintenance: rewrite the CURRENT version as new
     * version `version`, clustered — the compaction pass a streaming dim
-    * sink needs after many small upserts have fragmented the table (each
-    * [[upsert]] writes task-count files; a point lookup on a fragmented
-    * table keeps many small files no matter how good the stats are).
+    * sink needs once unclustered writes have fragmented the table (an
+    * unclustered full-rewrite [[merge]] writes task-count files; a point
+    * lookup on a fragmented table keeps many small files no matter how
+    * good the stats are).
     * Data is byte-identical by construction (same rows, new layout +
     * fresh stats), the rewrite publishes through the same atomic marker
     * move as any version — readers see the old layout or the new one,
@@ -599,12 +618,11 @@ object SnapshotTable {
     * published to compact.
     */
   def compact(spark: SparkSession, root: String, version: String,
-      targetFiles: Int, statsCols: Seq[String],
-      retain: Int = 2): Option[String] = {
+      targetFiles: Int, statsCols: Seq[String]): Option[String] = {
     require(statsCols.nonEmpty,
       "compact needs at least one stats column to cluster by")
     latestVersion(root).map { v =>
-      staged(root, version, retain, Some(v), replay = false)(publishInto(
+      staged(root, version, Some(v), replay = false)(publishInto(
         readVersion(spark, root, v), _, statsCols, Some(targetFiles)))
       version
     }
@@ -679,56 +697,45 @@ object SnapshotTable {
         .filter(_.nonEmpty).map(_.stripPrefix("\"").stripSuffix("\"")))
   }
 
-  /** Import a parquet directory as `root`'s next published version.
-    *
-    * Two regimes, detected from the directory:
-    *   - a [[exportTable]] directory (`_MANIFEST.json` present): the
-    *     manifest's data files and its `_STATS` sidecar are copied back
-    *     byte-identical and committed — a full round trip (publish →
-    *     export → import) reproduces the original version's files,
-    *     skipping metadata included, with no rewrite and no scan; any
-    *     other file (an older release's Bloom-filter sidecar) is ignored;
-    *   - a FOREIGN plain-parquet table (what a Delta/Iceberg user hands
-    *     over after their own export): the data is read and published
-    *     through the normal path, clustered by `statsCols`/`clusterFiles`
-    *     so the imported table starts life tile-mergeable rather than
-    *     inheriting a foreign layout that would force full-rewrite
-    *     merges.
+  /** Import an [[exportTable]] directory as `root`'s next published
+    * version: the manifest's data files and its `_STATS` sidecar are
+    * copied back byte-identical and committed — a full round trip
+    * (publish → export → import) reproduces the original version's
+    * files, skipping metadata included, with no rewrite and no scan. Any
+    * other file (an older release's Bloom-filter sidecar) is ignored. A
+    * directory without `_MANIFEST.json` fails by name: a foreign parquet
+    * table goes in through [[publish]].
     *
     * Commits under the same CAS as every writer — importing into a root
     * a concurrent writer advanced raises [[SnapshotConflictException]].
     */
-  def importTable(spark: SparkSession, dir: String, root: String,
-      version: String, retain: Int = 2, statsCols: Seq[String] = Nil,
-      clusterFiles: Option[Int] = None): Unit =
-    staged(root, version, retain, latestVersion(root)) { stage =>
-      if (new java.io.File(s"$dir/_MANIFEST.json").isFile) {
-        import java.nio.file.{Files, Paths, StandardCopyOption}
-        // copy ONLY the manifest's data-file list (not whatever .parquet
-        // happens to sit in the directory — a foreign or stale stray file
-        // must not ride into the committed version uncovered by _STATS)
-        val listed = manifestFiles(dir).getOrElse(Seq.empty)
-        require(listed.nonEmpty,
-          s"$dir/_MANIFEST.json: no data files listed")
-        listed.foreach(n => require(new java.io.File(s"$dir/$n").isFile,
-          s"$dir: manifest lists $n but the file is missing"))
-        // stats carry over only when they AGREE with the manifest's file
-        // list — a crashed re-export can leave newer stats beside an older
-        // manifest, and stats naming files the version does not contain
-        // would corrupt pruning; skipping them degrades safely to an
-        // unpruned (still correct) table
-        val stats = readSidecar(dir).filter { case (_, lines) =>
-          val mentioned = "[A-Za-z0-9._-]+\\.parquet".r
-            .findAllIn(lines.mkString("\n")).toSet
-          mentioned.nonEmpty && mentioned.subsetOf(listed.toSet)
-        }.map(_ => "_STATS")
-        Files.createDirectories(Paths.get(stage))
-        (listed ++ stats).foreach { n =>
-          Files.copy(Paths.get(s"$dir/$n"), Paths.get(s"$stage/$n"),
-            StandardCopyOption.REPLACE_EXISTING); ()
-        }
-      } else
-        publishInto(GraftParquet.read(spark, dir), stage, statsCols, clusterFiles)
+  def importTable(dir: String, root: String, version: String): Unit =
+    staged(root, version, latestVersion(root)) { stage =>
+      import java.nio.file.{Files, Paths, StandardCopyOption}
+      require(new java.io.File(s"$dir/_MANIFEST.json").isFile,
+        s"$dir: no _MANIFEST.json — importTable reads exportTable directories")
+      // copy ONLY the manifest's data-file list (not whatever .parquet
+      // happens to sit in the directory — a foreign or stale stray file
+      // must not ride into the committed version uncovered by _STATS)
+      val listed = manifestFiles(dir).getOrElse(Seq.empty)
+      require(listed.nonEmpty, s"$dir/_MANIFEST.json: no data files listed")
+      listed.foreach(n => require(new java.io.File(s"$dir/$n").isFile,
+        s"$dir: manifest lists $n but the file is missing"))
+      // stats carry over only when they AGREE with the manifest's file
+      // list — a crashed re-export can leave newer stats beside an older
+      // manifest, and stats naming files the version does not contain
+      // would corrupt pruning; skipping them degrades safely to an
+      // unpruned (still correct) table
+      val stats = readSidecar(dir).filter { case (_, lines) =>
+        val mentioned = "[A-Za-z0-9._-]+\\.parquet".r
+          .findAllIn(lines.mkString("\n")).toSet
+        mentioned.nonEmpty && mentioned.subsetOf(listed.toSet)
+      }.map(_ => "_STATS")
+      Files.createDirectories(Paths.get(stage))
+      (listed ++ stats).foreach { n =>
+        Files.copy(Paths.get(s"$dir/$n"), Paths.get(s"$stage/$n"),
+          StandardCopyOption.REPLACE_EXISTING); ()
+      }
     }
 
   /** The marker move + retention half of a commit (stats, if any, must
@@ -747,7 +754,7 @@ object SnapshotTable {
     * exists to prevent (its overwrite already stomped the winner's
     * directory; the loud failure is what makes the stomp recoverable).
     */
-  private def finishCommit(root: String, version: String, retain: Int,
+  private def finishCommit(root: String, version: String,
       base: Option[String], stage: Option[String] = None): Unit = {
     onBeforeCommit(root, version)
     withCommitLock(root) {
@@ -791,7 +798,7 @@ object SnapshotTable {
       java.nio.file.Files.move(tmp, java.nio.file.Paths.get(s"$root/_LATEST"),
         java.nio.file.StandardCopyOption.ATOMIC_MOVE,
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      prune(root, retain)
+      prune(root)
     }
   }
 
@@ -1416,40 +1423,15 @@ object SnapshotTable {
     }
   }
 
-  /** Keep-latest upsert: merge `updates` over the current snapshot by
-    * `pk` (update rows win; schema may widen — existing rows null-fill
-    * new columns) and publish the result as `version`. The merge reads
-    * the PUBLISHED version only, so a replayed batch reproduces the
-    * identical new version.
+  /** Delete retained-window stragglers: keep the newest [[Retain]]
+    * version directories by numeric order, remove the rest. Never touches
+    * the published version.
     */
-  def upsert(updates: DataFrame, root: String, pk: String, version: String,
-      retain: Int = 2, statsCols: Seq[String] = Nil,
-      clusterFiles: Option[Int] = None): Unit = {
-    val base = latestVersion(root)
-    staged(root, version, retain, base) { stage =>
-      val merged = base.map(readVersion(updates.sparkSession, root, _)) match {
-        case Some(existing) =>
-          val w = Window.partitionBy(col(pk)).orderBy(col("_prio").desc)
-          updates.withColumn("_prio", lit(1))
-            .unionByName(existing.withColumn("_prio", lit(0)), allowMissingColumns = true)
-            .withColumn("_rn", row_number().over(w))
-            .filter(col("_rn") === 1)
-            .drop("_prio", "_rn")
-        case None => updates
-      }
-      publishInto(merged, stage, statsCols, clusterFiles)
-    }
-  }
-
-  /** Delete retained-window stragglers: keep the newest `retain` version
-    * directories by numeric order, remove the rest. Never touches the
-    * published version.
-    */
-  private def prune(root: String, retain: Int): Unit = {
+  private def prune(root: String): Unit = {
     val head = latestVersion(root)
     val keep = head.toSet
     val dir = new java.io.File(root)
-    versions(root).reverse.drop(math.max(retain, 1)).filterNot(keep)
+    versions(root).reverse.drop(Retain).filterNot(keep)
       .foreach(v => rmTree(new java.io.File(dir, v)))
     // stale staging directories: a stage whose embedded version id is
     // STRICTLY below the committed head can never win its CAS (its base

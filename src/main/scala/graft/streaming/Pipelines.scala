@@ -188,6 +188,12 @@ object Pipelines {
       .agg(count(lit(1)).as("ct"), approx_count_distinct(col("doc_id")).as("doc_ct_approx"))
   }
 
+  /** Files a CDC dim's first publish range-clusters into (the streaming
+    * twins' `clusterFiles` default): the layout every later batch merges
+    * into tile by tile.
+    */
+  private val DimClusterFiles = 8
+
   /** P6/K2-K5 as a live query: config-driven CDC routing inside
     * foreachBatch. The envelope must carry an `op_seq` column (change
     * sequence from the source log) so same-key changes within one batch
@@ -201,15 +207,23 @@ object Pipelines {
     *    (`RT/app/function/DimSinkFunction.java:22-76`) — published as a
     *    versioned snapshot `out/dim/<table>/v<batchId>` with an atomically
     *    moved `_LATEST` marker, so readers never observe a partial rewrite
-    *    and a replayed batch republishes the identical version.
+    *    and a replayed batch short-circuits on the committed version. One
+    *    [[graft.sources.SnapshotTable.merge]] call per batch: the first
+    *    publish clusters into [[DimClusterFiles]] files with pk stats, so
+    *    every later batch rewrites only the tiles it touches, and a
+    *    `sink_columns` change (dynamic DDL) takes merge's full rewrite.
+    *    Compaction stays optional maintenance. A routed row without its
+    *    pk (Phoenix rejects a null PK) fails the batch by table and pk
+    *    before anything is written: dim routes run before kafka routes.
     */
   def routeCdcBatch(batch: DataFrame, batchId: Long, config: DataFrame, outDir: String): Unit = {
-    val spark = batch.sparkSession
-    val cfg = config.collect() // config table is tiny by contract
+    // config table is tiny by contract; dim routes first, so a batch a
+    // dim rejects writes nothing
+    val cfg = config.collect().sortBy(_.getAs[String]("sink_type") == "kafka")
     // a dim's versions are this stream's batch ids, so a batch behind a
     // dim's head is a restart on a fresh checkpoint: fail it by name
     // before anything is derived or written. A replay (batchId == head)
-    // passes and short-circuits in the dim's merge or upsert below.
+    // passes and short-circuits in the dim's merge below.
     cfg.filter(_.getAs[String]("sink_type") != "kafka").foreach(row =>
       VersionedState.requireNotBehind("CDC dim route",
         s"$outDir/dim/${row.getAs[String]("sink_table")}", batchId,
@@ -220,9 +234,15 @@ object Pipelines {
         row.getAs[String]("source_table"), row.getAs[String]("operate_type"),
         row.getAs[String]("sink_type"), row.getAs[String]("sink_table"),
         row.getAs[String]("sink_columns").split(",").toSeq, row.getAs[String]("sink_pk"))
+      // a dim row without its pk fails the first job that reads it, so
+      // the check costs no job of its own
+      def field(c: String) =
+        if (sinkType == "kafka" || c != pk) element_at(col("after"), c)
+        else coalesce(element_at(col("after"), c), raise_error(lit(
+          s"CDC dim route: a row for $sinkTable has no $pk (null primary key)")))
       val routed = live
         .filter(col("tableName") === src && col("type") === op)
-        .select(col("op_seq") +: cols.map(c => element_at(col("after"), c).as(c)): _*)
+        .select(col("op_seq") +: cols.map(c => field(c).as(c)): _*)
       if (sinkType == "kafka") {
         routed.drop("op_seq").write.mode("overwrite")
           .parquet(s"$outDir/kafka/$sinkTable/batch=$batchId")
@@ -233,37 +253,8 @@ object Pipelines {
           .partitionBy(col(pk)).orderBy(col("op_seq").desc)
         val newest = routed.withColumn("_rn", row_number().over(wNew))
           .filter(col("_rn") === 1).drop("_rn", "op_seq")
-        // Two regimes, self-upgrading at the first compaction:
-        //  - before any stats exist (fresh table, or pk-hash-partitioned
-        //    upsert output), keep-latest upsert — full rewrite per batch,
-        //    schema may widen. Per-batch stats would be pointless here:
-        //    hash-partitioned files span the full key range and the stats
-        //    pass re-reads the whole table each micro-batch.
-        //  - once periodic maintenance has clustered the table and
-        //    recorded pk stats (SnapshotTable.compact(root,
-        //    v<nextUnusedBatchId>, ..., statsCols = Seq(pk)) — version id
-        //    coordinated with this sink's batch-id naming, see compact's
-        //    doc), every following batch applies as a tile-local MERGE:
-        //    only the tiles the batch touches are rewritten, untouched
-        //    files and their stats carry over — per-batch cost follows
-        //    the BATCH size, not the table size, and the carried
-        //    fingerprints keep version diffs cheap. A schema change
-        //    falls back to the widening upsert (stats drop; the next
-        //    compact restores the merge regime).
-        val dimRoot = s"$outDir/dim/$sinkTable"
-        // the merge route needs a tile-mergeable layout (stats + range-
-        // disjoint files) and a matching schema
-        val canMerge = graft.sources.SnapshotTable.latestVersion(dimRoot)
-          .exists { v =>
-            graft.sources.SnapshotTable.tileMergeable(dimRoot, v, pk) &&
-              graft.sources.SnapshotTable.readVersion(spark, dimRoot, v)
-                .schema.fields.map(f => (f.name, f.dataType)).toSeq ==
-                newest.schema.fields.map(f => (f.name, f.dataType)).toSeq
-          }
-        if (canMerge)
-          graft.sources.SnapshotTable.merge(newest, dimRoot, pk, s"v$batchId")
-        else
-          graft.sources.SnapshotTable.upsert(newest, dimRoot, pk, s"v$batchId")
+        graft.sources.SnapshotTable.merge(newest, s"$outDir/dim/$sinkTable",
+          pk, s"v$batchId", clusterFiles = Some(DimClusterFiles))
       }
     }
   }

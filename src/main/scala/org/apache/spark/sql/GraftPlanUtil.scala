@@ -29,16 +29,15 @@ object GraftPlanUtil {
     *    never the unoptimized initial one.
     *
     * Returns (cut frame, the cached internal-row RDD — callers own its
-    * unpersist, `graft.CacheRegistry` tracks it — and the row count the
-    * materialization already paid for).
+    * unpersist, `graft.CacheRegistry` tracks it).
     */
-  def cutLineageEager(df: Dataset[Row]): (Dataset[Row], RDD[_], Long) = {
+  def cutLineageEager(df: Dataset[Row]): (Dataset[Row], RDD[_]) = {
     val cdf = df.asInstanceOf[classic.Dataset[Row]]
     // per-partition copy: operators reuse mutable UnsafeRow buffers
     val rdd: RDD[InternalRow] = cdf.queryExecution.toRdd.map(_.copy())
     rdd.persist(StorageLevel.MEMORY_AND_DISK)
-    val n = rdd.count() // executes the plan once; the RDD is now the cache
+    rdd.count() // executes the plan once; the RDD is now the cache
     val leaf = execution.LogicalRDD.fromDataset(rdd, cdf, isStreaming = false)
-    (classic.Dataset.ofRows(cdf.sparkSession, leaf), rdd, n)
+    (classic.Dataset.ofRows(cdf.sparkSession, leaf), rdd)
   }
 }

@@ -24,7 +24,7 @@ class OutsideRangeSpec extends SparkSpec {
     val t = spark.range(400).select(col("id").as("node"),
       (when(col("id") < 8, col("id") * 1000L - 4000L)
         .otherwise(col("id") % 5 - 2L)).as("r"))
-    SnapshotTable.publish(t, root, "v1", retain = 2,
+    SnapshotTable.publish(t, root, "v1",
       statsCols = Seq("r"), clusterFiles = Some(8))
     val read = readOutside(root,
       java.lang.Long.valueOf(-10L), java.lang.Long.valueOf(10L))
@@ -43,7 +43,7 @@ class OutsideRangeSpec extends SparkSpec {
     // soundness of the fallback: a version with no stats returns all
     val root2 =
       java.nio.file.Files.createTempDirectory("outside_range2").toString
-    SnapshotTable.publish(t, root2, "v1", retain = 2)
+    SnapshotTable.publish(t, root2, "v1")
     assert(readOutside(root2,
       java.lang.Long.valueOf(-10L), java.lang.Long.valueOf(10L))
       .count() == 400L)

@@ -85,8 +85,7 @@ class PlanPropertySpec extends SparkSpec {
     SnapshotTable.publish(table, clustered, "v1",
       statsCols = Seq("k"), clusterFiles = Some(6))
     val aligned = freshRoot(s"${tag}_aligned")
-    SnapshotTable.publishAligned(table, aligned, "v1", "k", cuts,
-      statsCols = Seq("k"))
+    SnapshotTable.publishAligned(table, aligned, "v1", "k", cuts)
     Seq(clustered, aligned).foreach { root =>
       assert(SnapshotTable.tileMergeable(root, "v1", "k"),
         s"$root: precondition: the layout must have pk tiles")

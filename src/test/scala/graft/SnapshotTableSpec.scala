@@ -69,26 +69,76 @@ class SnapshotTableSpec extends SparkSpec {
     assert(new java.io.File(s"$root/v2").exists(), "v2 within retention must survive")
   }
 
-  test("upsert merges keep-latest by pk, replays idempotently, widens schema") {
-    val root = freshRoot("upsert")
-    SnapshotTable.upsert(df(Seq(1L -> "a", 2L -> "b")), root, "id", "v1")
-    SnapshotTable.upsert(df(Seq(2L -> "B", 3L -> "c")), root, "id", "v2")
+  test("merge keeps the latest row per pk, replays idempotently, widens the column set") {
+    val root = freshRoot("keeplatest")
+    SnapshotTable.merge(df(Seq(1L -> "a", 2L -> "b")), root, "id", "v1")
+    SnapshotTable.merge(df(Seq(2L -> "B", 3L -> "c")), root, "id", "v2")
     def snap() = SnapshotTable.read(spark, root).get
       .select("id", "val").collect().map(r => (r.getLong(0), r.getString(1))).toSet
     val after = snap()
     assert(after == Set(1L -> "a", 2L -> "B", 3L -> "c"))
-    // replay of the SAME batch republishes the identical version
-    SnapshotTable.upsert(df(Seq(2L -> "B", 3L -> "c")), root, "id", "v2")
+    // replay of the SAME batch leaves the committed version as it is
+    SnapshotTable.merge(df(Seq(2L -> "B", 3L -> "c")), root, "id", "v2")
     assert(snap() == after, "replayed batch must reproduce the identical snapshot")
-    // schema widening: new column appears, old rows null-fill
+    // a wider column set: the new column appears, old rows null-fill
     import spark.implicits._
-    val widened = Seq((4L, "d", "extra")).toDF("id", "val", "note")
-    SnapshotTable.upsert(widened, root, "id", "v3")
-    val rows = SnapshotTable.read(spark, root).get
-      .select("id", "val", "note").collect()
+    val widened = Seq((4L, "d", "extra"), (1L, "A", "upd")).toDF("id", "val", "note")
+    SnapshotTable.merge(widened, root, "id", "v3")
+    val table = SnapshotTable.read(spark, root).get
+    assert(table.columns.toSeq == Seq("id", "val", "note"))
+    val rows = table.collect()
       .map(r => (r.getLong(0), r.getString(1), Option(r.getString(2)))).toSet
-    assert(rows == Set((1L, "a", None), (2L, "B", None), (3L, "c", None),
+    assert(rows == Set((1L, "A", Some("upd")), (2L, "B", None), (3L, "c", None),
       (4L, "d", Some("extra"))))
+  }
+
+  test("merge with a narrowed column set keeps the table's columns and stats header; the pk is required") {
+    import spark.implicits._
+    val root = freshRoot("narrow")
+    val wide = (1L to 40L).map(i => (i, s"v$i", s"n$i")).toDF("id", "val", "note")
+    SnapshotTable.publish(wide, root, "v1",
+      statsCols = Seq("id", "note"), clusterFiles = Some(4))
+    // the update set lacks `note`: updated and inserted rows null-fill it,
+    // untouched rows keep theirs, and the table keeps the column
+    SnapshotTable.merge(df(Seq(3L -> "V3", 41L -> "v41")), root, "id", "v2",
+      clusterFiles = Some(4))
+    val table = SnapshotTable.read(spark, root).get
+    assert(table.columns.toSeq == Seq("id", "val", "note"))
+    val rows = table.collect()
+      .map(r => r.getLong(0) -> (r.getString(1), Option(r.getString(2)))).toMap
+    assert(rows.size == 41 && rows(3L) == ("V3", None) &&
+      rows(41L) == ("v41", None) && rows(7L) == ("v7", Some("n7")))
+    val header = java.nio.file.Files.readString(
+      java.nio.file.Paths.get(s"$root/v2/_STATS")).split("\n").head
+    assert(header == "id\tnote", s"the stats header must carry over, got $header")
+    assert(SnapshotTable.tileMergeable(root, "v2", "id"))
+    // an update set without the pk fails by name; the head stays
+    val noPk = intercept[IllegalArgumentException] {
+      SnapshotTable.merge(Seq("x").toDF("val"), root, "id", "v3")
+    }
+    assert(noPk.getMessage.contains("lack the pk column id"), noPk.getMessage)
+    assert(SnapshotTable.latestVersion(root).contains("v2"))
+  }
+
+  test("merge fails by name on a shared column whose type changed; a replay of the head is not checked") {
+    import spark.implicits._
+    val root = freshRoot("retype")
+    SnapshotTable.publish(df(Seq(1L -> "a", 2L -> "b")), root, "v1",
+      statsCols = Seq("id"), clusterFiles = Some(2))
+    val retyped = Seq((2L, 20L)).toDF("id", "val")
+    val e = intercept[IllegalArgumentException] {
+      SnapshotTable.merge(retyped, root, "id", "v2")
+    }
+    assert(e.getMessage.contains("column val changes type from string to bigint"),
+      e.getMessage)
+    assert(SnapshotTable.latestVersion(root).contains("v1"))
+    assert(!new java.io.File(root).listFiles().exists(_.getName.startsWith(".stage_")),
+      "a rejected merge must leave no stage behind")
+    // the replay short-circuit runs first: re-sending the committed head's
+    // id returns without reading the table
+    SnapshotTable.merge(retyped, root, "id", "v1")
+    assert(SnapshotTable.read(spark, root).get.collect()
+      .map(r => (r.getLong(0), r.getString(1))).toSet == Set(1L -> "a", 2L -> "b"))
   }
 
   test("file-level skipping: a point lookup on a clustered snapshot reads ONE file of eight") {
@@ -133,7 +183,7 @@ class SnapshotTableSpec extends SparkSpec {
   test("diff emits exact change rows; fingerprint matching skips untouched tiles") {
     val root = freshRoot("diff")
     val v1 = spark.range(8000L).select(col("id"), (col("id") % 97).as("v"))
-    SnapshotTable.publish(v1, root, "v1", retain = 4,
+    SnapshotTable.publish(v1, root, "v1",
       statsCols = Seq("id"), clusterFiles = Some(8))
     // v2 on v1's file grid: update one key run, delete another, append new
     // keys past the max — three tiles' worth of change in an 8-tile table
@@ -143,7 +193,7 @@ class SnapshotTableSpec extends SparkSpec {
         when(col("id").between(100, 109), col("v") + 1000).otherwise(col("v")))
       .unionByName(spark.range(8000L, 8010L).select(col("id"), lit(-1L).as("v")))
     val bounds = SnapshotTable.keyBoundaries(root, "v1", "id").get
-    SnapshotTable.publishAligned(v2, root, "v2", "id", bounds, retain = 4)
+    SnapshotTable.publishAligned(v2, root, "v2", "id", bounds)
     val d = SnapshotTable.diff(spark, root, "v1", "v2", "id")
     // exact change classes
     val got = d.collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2)))
@@ -167,7 +217,8 @@ class SnapshotTableSpec extends SparkSpec {
       s"diff should scan only changed tiles of 8, kept " +
         s"${keptOld.size} old + ${keptNew.size} new")
     // an identical republish diffs to zero rows without scanning anything
-    SnapshotTable.publishAligned(v2, root, "v3", "id", bounds, retain = 4)
+    // (v3 retires v1; only v2 and v3 are read from here on)
+    SnapshotTable.publishAligned(v2, root, "v3", "id", bounds)
     val (k3o, k3n) = SnapshotTable.diffFiles(root, "v2", "v3").get
     assert(k3o.isEmpty && k3n.isEmpty,
       s"identical versions must fingerprint-match every tile, kept " +
@@ -178,7 +229,7 @@ class SnapshotTableSpec extends SparkSpec {
   test("merge rewrites only changed tiles; carried files and stats are verbatim") {
     val root = freshRoot("merge")
     val base = spark.range(8000L).select(col("id"), (col("id") % 97).as("v"))
-    SnapshotTable.publish(base, root, "v1", retain = 4,
+    SnapshotTable.publish(base, root, "v1",
       statsCols = Seq("id"), clusterFiles = Some(8))
     // one merge batch carrying all three clauses: matched-update (keys
     // 100-109), matched-delete (keys 300-302, flagged v < 0), and
@@ -188,7 +239,7 @@ class SnapshotTableSpec extends SparkSpec {
       .unionByName(spark.range(300L, 303L).select(col("id"), lit(-1L).as("v")))
       .unionByName(spark.range(8000L, 8005L).select(col("id"), lit(7L).as("v")))
     SnapshotTable.merge(ups, root, "id", "v2",
-      deleteWhen = Some(col("v") < 0), retain = 4)
+      deleteWhen = Some(col("v") < 0))
     val got = SnapshotTable.read(spark, root).get.collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val want = (0L until 8000L).filterNot(k => k >= 300L && k <= 302L)
@@ -222,7 +273,7 @@ class SnapshotTableSpec extends SparkSpec {
     // at-least-once replay: re-merging the committed batch is a no-op
     // (a naive re-apply would overwrite the files the carry copies from)
     SnapshotTable.merge(ups, root, "id", "v2",
-      deleteWhen = Some(col("v") < 0), retain = 4)
+      deleteWhen = Some(col("v") < 0))
     val replayed = SnapshotTable.read(spark, root).get.collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(replayed == want, "replayed merge must leave the table unchanged")
@@ -230,14 +281,16 @@ class SnapshotTableSpec extends SparkSpec {
 
   test("compact rewrites a fragmented table into a clustered version, data intact") {
     val root = freshRoot("compact")
-    // a fragmented table: 16 files of unclustered rows, then an upsert
-    // that fragments further (task-count files per upsert)
+    // a fragmented table: 16 files of unclustered rows, then an
+    // unclustered merge, a full rewrite into task-count files
     val dim = spark.range(2000L).select(col("id"),
       format_string("c%04d", (col("id") * 7919) % 2000).as("code"))
     SnapshotTable.publish(dim.repartition(16), root, "v1")
-    SnapshotTable.upsert(
+    SnapshotTable.merge(
       spark.range(5L).select(col("id"), lit("cXXXX").as("code")),
       root, "id", "v2")
+    assert(!SnapshotTable.tileMergeable(root, "v2", "id"),
+      "sanity: the unclustered merge must leave a non-tiled layout")
     val before = SnapshotTable.read(spark, root).get
       .collect().map(r => (r.getLong(0), r.getString(1))).toSet
 
@@ -273,7 +326,7 @@ class SnapshotTableSpec extends SparkSpec {
       ((col("id") * 7919) % 20000).as("id"),
       format_string("n%05d", (col("id") * 104729) % 20000).as("nat"))
       .repartition(8)
-    SnapshotTable.publish(dim, root, "v1", retain = 4,
+    SnapshotTable.publish(dim, root, "v1",
       statsCols = Seq("id", "nat"))
     assert(!SnapshotTable.tileMergeable(root, "v1", "id"),
       "sanity: the fixture must force merge's fallback path")
@@ -283,7 +336,7 @@ class SnapshotTableSpec extends SparkSpec {
       .unionByName(spark.range(20000L, 20002L).select(col("id"), lit("nNEW").as("nat")))
     val want2 = rows("v1") ++ (0L until 3L).map(_ -> "nYYYYY") ++
       (20000L until 20002L).map(_ -> "nNEW")
-    SnapshotTable.merge(ups, root, "id", "v2", retain = 4,
+    SnapshotTable.merge(ups, root, "id", "v2",
       clusterFiles = Some(8))
     val header = java.nio.file.Files.readString(
       java.nio.file.Paths.get(s"$root/v2/_STATS")).split("\n").head
@@ -294,7 +347,8 @@ class SnapshotTableSpec extends SparkSpec {
     assert(rows("v2") == want2, "fallback rows must equal the keep-latest result")
     // the next merge takes the tile path: untouched v2 files carry over
     val ups3 = spark.range(100L, 103L).select(col("id"), lit("nZZZZZ").as("nat"))
-    SnapshotTable.merge(ups3, root, "id", "v3", retain = 4)
+    // v3 retires v1; only v2 and v3 are read from here on
+    SnapshotTable.merge(ups3, root, "id", "v3")
     def names(v: String) = new java.io.File(s"$root/$v").listFiles()
       .filter(f => f.getName.endsWith(".parquet")).map(_.getName).toSet
     val carried = names("v2") intersect names("v3")
@@ -375,7 +429,7 @@ class SnapshotTableSpec extends SparkSpec {
 
     // byte-identical restore into a fresh root, no rewrite, no scan
     val root2 = freshRoot("imp")
-    SnapshotTable.importTable(spark, exp, root2, "v1")
+    SnapshotTable.importTable(exp, root2, "v1")
     val got = SnapshotTable.read(spark, root2).get
       .collect().map(r => (r.getLong(0), r.getString(1))).toSet
     assert(got == rows.toSet)
@@ -394,7 +448,7 @@ class SnapshotTableSpec extends SparkSpec {
   test("a legacy _BLOOM sidecar is ignored: import, read, lookup, merge and compact never fail on it") {
     val root = freshRoot("legacybloom")
     val rows = (1L to 400L).map(i => i -> f"n${(i * 7919) % 400}%05d")
-    SnapshotTable.publish(df(rows), root, "v1", retain = 4,
+    SnapshotTable.publish(df(rows), root, "v1",
       statsCols = Seq("id"), clusterFiles = Some(4))
     val exp = freshRoot("legacybloomexp")
     assert(SnapshotTable.exportTable(spark, root, exp).contains("v1"))
@@ -416,7 +470,7 @@ class SnapshotTableSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getString(1))).toSet
 
     val imported = freshRoot("legacybloomimp")
-    SnapshotTable.importTable(spark, exp, imported, "v1")
+    SnapshotTable.importTable(exp, imported, "v1")
     assert(got(imported) == rows.toSet && !bloomIn(imported, "v1"))
 
     assert(got(root) == rows.toSet)
@@ -424,8 +478,7 @@ class SnapshotTableSpec extends SparkSpec {
     assert(SnapshotTable.pointLookup(spark, root, "val", v).get.collect()
       .map(r => (r.getLong(0), r.getString(1))).toSeq == Seq(k -> v),
       "a lookup on the old bloom column must ignore the sidecar")
-    SnapshotTable.merge(df(Seq(k -> "merged", 401L -> "new")), root, "id", "v2",
-      retain = 4)
+    SnapshotTable.merge(df(Seq(k -> "merged", 401L -> "new")), root, "id", "v2")
     val merged = rows.toSet - (k -> v) + (k -> "merged") + (401L -> "new")
     assert(got(root) == merged && !bloomIn(root, "v2"))
     SnapshotTable.compact(spark, root, "v3", 2, statsCols = Seq("id"))
@@ -474,18 +527,18 @@ class SnapshotTableSpec extends SparkSpec {
       s"a stats pass must not read its stage as a directory: ${ignored.mkString("; ")}")
   }
 
-  test("foreign plain-parquet import publishes clustered and tile-mergeable") {
-    val root = freshRoot("foreign")
-    val exp = freshRoot("foreigndir")
-    val rows = (1L to 100L).map(i => i -> s"v$i")
-    df(rows).write.mode("overwrite").parquet(exp) // no manifest: foreign
-    SnapshotTable.importTable(spark, exp, root, "v1",
-      statsCols = Seq("id"), clusterFiles = Some(4))
-    val got = SnapshotTable.read(spark, root).get
-      .collect().map(r => (r.getLong(0), r.getString(1))).toSet
-    assert(got == rows.toSet)
-    assert(SnapshotTable.tileMergeable(root, "v1", "id"),
-      "a foreign import must start life tile-mergeable, not inherit layout")
+  test("importTable fails by name on a directory without _MANIFEST.json") {
+    val root = freshRoot("nomanifest")
+    val dir = freshRoot("nomanifestdir")
+    df((1L to 100L).map(i => i -> s"v$i")).write.mode("overwrite").parquet(dir)
+    val e = intercept[IllegalArgumentException] {
+      SnapshotTable.importTable(dir, root, "v1")
+    }
+    assert(e.getMessage.contains(s"$dir: no _MANIFEST.json"), e.getMessage)
+    assert(SnapshotTable.latestVersion(root).isEmpty)
+    assert(Option(new java.io.File(root).listFiles()).getOrElse(Array.empty)
+      .forall(f => !f.getName.startsWith(".stage_") && !f.getName.startsWith("v")),
+      "a refused import must leave no stage and no version")
   }
 
   test("replay republish of the committed head passes the CAS (idempotence kept)") {
@@ -544,7 +597,7 @@ class SnapshotTableSpec extends SparkSpec {
       s"re-export must replace the previous export's files, got ${plain.count()} rows")
     // and the manifest-driven import restores exactly the head
     val back = freshRoot("reexpback")
-    SnapshotTable.importTable(spark, exp, back, "v1")
+    SnapshotTable.importTable(exp, back, "v1")
     assert(SnapshotTable.read(spark, back).get.count() == 90)
   }
 
@@ -588,7 +641,7 @@ class SnapshotTableSpec extends SparkSpec {
     // count-balanced layout whose files straddle the family borders
     val aligned = freshRoot("utf8aligned")
     SnapshotTable.publishAligned(dim, aligned, "v1", "k",
-      families.tail.map(_ + "000"), statsCols = Seq("k"))
+      families.tail.map(_ + "000"))
     val clustered = freshRoot("utf8clustered")
     SnapshotTable.publish(dim, clustered, "v1",
       statsCols = Seq("k"), clusterFiles = Some(4))
@@ -712,7 +765,7 @@ class SnapshotTableSpec extends SparkSpec {
     // the long-array bounds against the double key at analysis
     val dd = (1 to 100).map(i => (i / 10.0, i.toLong)).toDF("score", "id")
     SnapshotTable.publishAligned(dd, root1, "v1", "score",
-      boundaries = Seq(3, 7), statsCols = Seq("score"))
+      boundaries = Seq(3, 7))
     val r1 = SnapshotTable.read(spark, root1).get
     assert(r1.count() == 100 && r1.inputFiles.length == 3)
     // file contents respect the numeric boundary semantics
@@ -724,7 +777,7 @@ class SnapshotTableSpec extends SparkSpec {
     val root2 = freshRoot("mixlk")
     val ld = (1L to 100L).map(i => (i, s"r$i")).toDF("id", "val")
     SnapshotTable.publishAligned(ld, root2, "v1", "id",
-      boundaries = Seq(30.5, 70.5), statsCols = Seq("id"))
+      boundaries = Seq(30.5, 70.5))
     val r2 = SnapshotTable.read(spark, root2).get
     assert(r2.count() == 100 && r2.inputFiles.length == 3)
   }
@@ -774,7 +827,7 @@ class SnapshotTableSpec extends SparkSpec {
     val dd = (1 to 60).map(i => (BigDecimal(i) / 10, i.toLong))
       .toDF("score", "id")
     SnapshotTable.publishAligned(dd, root, "v1", "score",
-      boundaries = Seq(2, 4), statsCols = Seq("id"))
+      boundaries = Seq(2, 4))
     val r = SnapshotTable.read(spark, root).get
     assert(r.count() == 60 && r.inputFiles.length == 3)
   }

@@ -270,7 +270,7 @@ class StreamingPipelineSpec extends SparkSpec {
       .map(r => r.getString(0) -> r.getString(1)).toSeq == Seq("k1" -> "a"))
   }
 
-  test("cdc dim sink upgrades to tile-local merges after a stats compaction") {
+  test("cdc dim sink merges tile-locally from its second batch, and still after a compaction") {
     val out = java.nio.file.Files.createTempDirectory("cdcmerge").toString
     val cfg = Seq(("t", "update", "hbase", "dim_t", "id,val", "id"))
       .toDF("source_table", "operate_type", "sink_type", "sink_table",
@@ -280,28 +280,64 @@ class StreamingPipelineSpec extends SparkSpec {
       ids.zipWithIndex.map { case (id, i) =>
         ("g", "t", "update", seq0 + i, Map("id" -> f"k$id%04d", "val" -> v))
       }.toDF(cols: _*)
-    // regime 1: no stats yet — full-rewrite upserts
-    Pipelines.routeCdcBatch(mkBatch(0L, 0 until 200, "a"), 0L, cfg, out)
     val root = s"$out/dim/dim_t"
-    // periodic maintenance clusters + records pk stats (version id from
-    // the sink's own sequence, per compact's coordination contract)
-    graft.sources.SnapshotTable.compact(spark, root, "v100",
-      targetFiles = 4, statsCols = Seq("id"))
-    // regime 2: the next micro-batch (two keys in one tile) MERGES —
-    // untouched tiles carry over byte-identically instead of rewriting
-    Pipelines.routeCdcBatch(mkBatch(1000L, Seq(10, 11), "b"), 101L, cfg, out)
-    assert(graft.sources.SnapshotTable.latestVersion(root).contains("v101"))
     def names(v: String) = new java.io.File(s"$root/$v").listFiles()
       .filter(_.getName.endsWith(".parquet")).map(_.getName).toSet
+    def dim() = Pipelines.readDim(spark, out, "dim_t").get.collect()
+      .map(r => r.getString(0) -> r.getString(1)).toMap
+    // the first batch publishes clustered with pk stats: no compaction
+    // stands between it and the tile-local regime
+    Pipelines.routeCdcBatch(mkBatch(0L, 0 until 200, "a"), 0L, cfg, out)
+    assert(graft.sources.SnapshotTable.tileMergeable(root, "v0", "id"))
+    // the second batch (two keys in one tile) carries untouched files
+    Pipelines.routeCdcBatch(mkBatch(500L, Seq(20, 21), "b"), 1L, cfg, out)
+    val carried1 = names("v0") intersect names("v1")
+    assert(carried1.size >= 2 && carried1.size < names("v0").size,
+      s"the second batch should carry untouched tiles, carried ${carried1.size} " +
+        s"of ${names("v0").size}")
+    // compaction stays optional maintenance (version id from the sink's
+    // own sequence, per compact's coordination contract); batches after
+    // it still merge tile-locally
+    graft.sources.SnapshotTable.compact(spark, root, "v100",
+      targetFiles = 4, statsCols = Seq("id"))
+    Pipelines.routeCdcBatch(mkBatch(1000L, Seq(10, 11), "c"), 101L, cfg, out)
+    assert(graft.sources.SnapshotTable.latestVersion(root).contains("v101"))
     val carried = names("v100") intersect names("v101")
     assert(carried.size >= 2,
       s"merge regime should carry untouched tiles, carried ${carried.size} " +
         s"of ${names("v100").size}")
-    val dim = Pipelines.readDim(spark, out, "dim_t").get.collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(dim.size == 200 && dim("k0010") == "b" && dim("k0011") == "b" &&
-      dim("k0000") == "a" && dim("k0199") == "a",
-      s"merged dim content off: ${dim.toSeq.sortBy(_._1).take(3)}")
+    val d = dim()
+    assert(d.size == 200 && d("k0010") == "c" && d("k0011") == "c" &&
+      d("k0020") == "b" && d("k0000") == "a" && d("k0199") == "a",
+      s"merged dim content off: ${d.toSeq.sortBy(_._1).take(3)}")
+  }
+
+  test("cdc dim route: a row without its pk fails the batch by table and pk before anything is written") {
+    val out = java.nio.file.Files.createTempDirectory("cdcnullpk").toString
+    val cfg = Seq(
+      ("t", "update", "kafka", "dwd_t", "order_id,val", "order_id"),
+      ("t", "update", "hbase", "dim_nullpk", "order_id,val", "order_id"))
+      .toDF("source_table", "operate_type", "sink_type", "sink_table",
+        "sink_columns", "sink_pk")
+    val cols = Seq("database", "tableName", "type", "op_seq", "after")
+    def row(seq: Long, after: Map[String, String]) = ("g", "t", "update", seq, after)
+    Pipelines.routeCdcBatch(Seq(row(1L, Map("order_id" -> "o1", "val" -> "a")))
+      .toDF(cols: _*), 0L, cfg, out)
+    // Phoenix rejects a null PK: two malformed rows must not both land
+    // (an anti-join merge keeps every null-pk row), nor one of them
+    val bad = Seq(row(2L, Map("val" -> "x")), row(3L, Map("val" -> "y")),
+      row(4L, Map("order_id" -> "o2", "val" -> "b"))).toDF(cols: _*)
+    val e = intercept[Exception](Pipelines.routeCdcBatch(bad, 1L, cfg, out))
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).mkString(" | ")
+    assert(msgs.contains("dim_nullpk") && msgs.contains("order_id"), msgs)
+    val root = s"$out/dim/dim_nullpk"
+    assert(graft.sources.SnapshotTable.latestVersion(root).contains("v0"))
+    assert(!new java.io.File(root).listFiles().exists(_.getName.startsWith(".stage_")))
+    assert(!new java.io.File(s"$out/kafka/dwd_t/batch=1").exists(),
+      "the rejected batch must write no kafka batch either")
+    assert(Pipelines.readDim(spark, out, "dim_nullpk").get.collect()
+      .map(r => r.getString(0) -> r.getString(1)).toSeq == Seq("o1" -> "a"))
   }
 
   test("streaming session windows (complete mode) equal batch aggregation") {

@@ -1,7 +1,7 @@
 #!/usr/bin/env bash
 # Replicates the driver's per-round flow locally:
 #   t1 smoke (entry at sf0.001) -> t2 correctness (Verify + DuckDB oracle
-#   at sf0.01) -> perfbench self-tests and one untraced run per workload
+#   at sf0.01) -> perfbench and tools self-tests, one untraced run per workload
 #   registered in BENCHMARK.json -> bench (sf0.1, one JSON line) -> full
 #   test suite -> report: known-warning counts in the Verify (sf0.01) and
 #   test logs, and code-line counts (reports only, never a gate).
@@ -17,8 +17,9 @@ sbt -batch "runMain graft.Verify /root/testdata/sf0.01 /tmp/graft_dryrun_out"
 } 2>&1 | tee /tmp/graft_dryrun_verify.log
 python3 tools/check_oracle.py /root/testdata/sf0.01 /tmp/graft_dryrun_out
 
-echo "== perfbench self-tests"
+echo "== perfbench and tools self-tests"
 python3 -m unittest discover -s perfbench -p 'test_*.py'
+python3 -m unittest discover -s tools -p 'test_*.py'
 
 echo "== perfbench smoke: one untraced run per registered workload"
 for w in $(python3 -c 'import json; print(" ".join(w["name"] for w in json.load(open("BENCHMARK.json"))["workloads"]))'); do
@@ -57,7 +58,6 @@ for log in /tmp/graft_dryrun_verify.log /tmp/graft_dryrun_test.log; do
   done
 done
 echo "== report: code lines (tools/loc.py: physical, code, path)"
-python3 tools/loc.py src/main/scala
-python3 tools/loc.py src/main/scala/graft/sources/SnapshotTable.scala
+python3 tools/loc.py src/main/scala src/main/scala/graft/sources/SnapshotTable.scala
 
 echo "DRYRUN OK"

@@ -4,8 +4,10 @@
 Usage: python3 tools/loc.py [--per-file] [PATH ...]
 
 PATH is a .scala file or a directory searched recursively for .scala files
-(default: src/main/scala). Prints `<physical> <code> <path>` per file with
---per-file, then the same for the total.
+(default: src/main/scala). Prints `<physical> <code> <path>` for each PATH
+(preceded by one line per file with --per-file), then, given more than one
+PATH, `<physical> <code> total` over the files of all of them, each file
+counted once.
 
 A code line is a line that is none of:
   - blank;
@@ -52,15 +54,21 @@ def scala_files(path):
 def main(argv):
     per_file = "--per-file" in argv
     paths = [a for a in argv if a != "--per-file"] or ["src/main/scala"]
-    total_p = total_c = 0
+    counted = {}
     for p in paths:
+        path_p = path_c = 0
         for f in scala_files(p):
             fp, fc = count(f)
-            total_p += fp
-            total_c += fc
+            path_p += fp
+            path_c += fc
+            counted[os.path.realpath(f)] = (fp, fc)
             if per_file:
                 print(f"{fp} {fc} {f}")
-    print(f"{total_p} {total_c} {' '.join(paths)}")
+        print(f"{path_p} {path_c} {p}")
+    if len(paths) > 1:
+        total_p = sum(fp for fp, _ in counted.values())
+        total_c = sum(fc for _, fc in counted.values())
+        print(f"{total_p} {total_c} total")
 
 
 if __name__ == "__main__":
