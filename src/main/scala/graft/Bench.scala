@@ -72,18 +72,7 @@ object Bench {
     val loadStart = loadAvg()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // production-rehearsal lever: a 1000-executor cluster runs 2-4k
-    // shuffle partitions; overriding here lets the same harness measure
-    // the static-partition overhead AQE coalescing is expected to absorb
-    val shufflePartitions =
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    GraftSession.tune(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.getOrCreate("graft-bench", s"local[$cpus]")
     // scale-lever measurement: SPARK_GRAFT_APPROX_DISTINCT=true flips the
     // session-wide approx-distinct flag so the lever's benefit is a
     // captured number, not a claim (results then deviate from the oracle
@@ -175,6 +164,7 @@ object Bench {
     // or segregate lever-mode numbers instead of ingesting them silently
     val approxLever = sys.env.get("SPARK_GRAFT_APPROX_DISTINCT")
       .map(v => "\"" + v + "\"").getOrElse("null")
+    val shufflePartitions = spark.conf.get("spark.sql.shuffle.partitions")
     // the file record and the stdout summary share every field but the
     // per-query maps, built once (one ts_ms for both)
     val head = s""""metric":"total","value":${fmt(total)},"unit":"sec","shared_build":${fmt(sharedBuild)},"total_min":${fmt(totalMin)}"""

@@ -2,79 +2,63 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Session factory with the engine's standard configuration.
+/** The one place an engine session is configured: [[getOrCreate]] builds
+  * every session the engine owns (Verify, Bench, Demo, the tools, the
+  * tests), and [[tune]] brings a session built elsewhere to the same
+  * runtime settings.
   *
-  * Local testing runs `local[32]` (single JVM); on a real cluster the same
-  * settings apply except `master`, and shuffle partitions should be sized to
-  * ~2-3x total cores (AQE coalesces the excess at runtime, so a high static
-  * value is safe at 100 TB while 32 keeps local runs snappy).
+  * AQE, its partition coalescing, its skew-join splitting and the runtime
+  * Bloom filter are Spark defaults, so none is set here; `GraftSessionSpec`
+  * pins them, so a Spark upgrade that flips one fails by name. On a real
+  * cluster the same settings apply except `master`, and shuffle partitions
+  * should be sized to ~2-3x total cores (AQE coalesces the excess at
+  * runtime, so a high static value is safe at 100 TB).
   */
 object GraftSession {
 
-  /** Standard builder. AQE is on so skewed shuffles re-plan at runtime
-    * (skew-join splitting + partition coalescing), which is the main
-    * defence this engine relies on when a key distribution at 100 TB
-    * differs from the test scale factors.
-    */
-  def builder(appName: String = "graft", master: String = "local[32]"): SparkSession.Builder =
-    SparkSession
-      .builder()
-      .appName(appName)
-      .master(master)
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      // NOTE (r13 optimization round, measured and REJECTED): setting
-      // coalescePartitions.parallelismFirst=false (+ advisory sizes 16m
-      // and 64m) was A/B-measured over the full 189-query suite at sf0.1
-      // and LOST badly (total_min 237 → 333 s): this engine's shuffles
-      // are CPU-dense per byte (shingle/posting/vector arrays), so
-      // byte-sized coalescing serializes reduce work that the default
-      // parallelism-first split keeps on all cores. On a 100 TB cluster
-      // the advisory size governs — shuffles there are large enough that
-      // both settings coalesce to byte-bounded partitions anyway.
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // runtime bloom-filter pushdown: on a selective join (dedup anti-joins,
-      // contamination, dim-filtered facts) the build side's keys prune the
-      // probe-side SCAN — at 100 TB this skips whole row groups before the
-      // shuffle, with no query-code change
-      .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // let AQE coalesce INSIDE cached plans: off (the default), every
-      // persisted frame materializes at the static shuffle-partition
-      // count and each InMemoryTableScan consumer pays that many tasks —
-      // the dominant overhead in the 2048-partition production rehearsal
-      // (rolling_actives 22.7 s → ~1 s class). The cache is still a
-      // single materialization, so range-boundary-sharing persists
-      // (DistNtileSpec) are unaffected.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      // testdata events.parquet stores TIMESTAMP(NANOS); Spark has no nanos
-      // timestamp type, so surface it as Long and let Tables normalize.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
+  private val confs = Seq(
+    "spark.sql.session.timeZone" -> "UTC",
+    // Spark has no nanos timestamp type: a parquet TIMESTAMP(NANOS) column
+    // reads as a Long and `Tables.normalizeEvents` lands it on the events
+    // contract. The sf0.001, sf0.01 and sf0.1 fixtures store `events.ts` as
+    // timestamp[us]; this stays for nanos input, which ParquetReadSpec writes.
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+    // let AQE coalesce INSIDE cached plans: off (the default), every
+    // persisted frame materializes at the static shuffle-partition
+    // count and each InMemoryTableScan consumer pays that many tasks —
+    // the dominant overhead in the 2048-partition production rehearsal
+    // (rolling_actives 22.7 s → ~1 s class). The cache is still a
+    // single materialization, so range-boundary-sharing persists
+    // (DistNtileSpec) are unaffected.
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true",
+    "spark.ui.enabled" -> "false")
 
+  // Not set, measured and rejected: coalescePartitions.parallelismFirst=
+  // false (+ advisory sizes 16m and 64m) lost over the full 189-query suite
+  // at sf0.1 (total_min 237 → 333 s). This engine's shuffles are CPU-dense
+  // per byte (shingle/posting/vector arrays), so byte-sized coalescing
+  // serializes reduce work that the parallelism-first split keeps on all
+  // cores; at 100 TB both settings coalesce to byte-bounded partitions.
+
+  /** The engine's session. Shuffle partitions follow the session's
+    * `defaultParallelism` (the core count of `local[n]`) unless
+    * `SPARK_GRAFT_SHUFFLE_PARTITIONS` is set: the production-rehearsal
+    * lever, which runs a cluster-scale static partition count to show that
+    * results are partition-count-invariant.
+    */
   def getOrCreate(appName: String = "graft", master: String = "local[32]"): SparkSession = {
-    val spark = builder(appName, master).getOrCreate()
+    val spark = SparkSession.builder().appName(appName).master(master)
+      .config(confs.toMap).getOrCreate()
+    spark.conf.set("spark.sql.shuffle.partitions",
+      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS",
+        spark.sparkContext.defaultParallelism.toString))
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
 
-  /** Apply the configs a driver-created session (Verify/Bench contract mains
-    * build their own) still needs for the testdata to load correctly.
+  /** Apply the runtime confs to a session built outside [[getOrCreate]]
+    * (UI off is a static conf, which only the builder can set).
     */
-  def tune(spark: SparkSession): SparkSession = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    // static conf in builder sessions; settable at runtime too — see the
-    // builder note (AQE coalescing inside cached plans)
-    try spark.conf.set(
-      "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-    catch { case scala.util.control.NonFatal(e) =>
-      // a session that cannot take this conf runs with cached-plan AQE
-      // coalescing off — a silent perf divergence from builder sessions,
-      // so leave a signal instead of discarding the failure
-      System.err.println(
-        s"graft: could not enable cached-plan AQE coalescing: $e") }
-    spark
-  }
+  def tune(spark: SparkSession): Unit =
+    confs.foreach { case (k, v) => if (spark.conf.isModifiable(k)) spark.conf.set(k, v) }
 }

@@ -39,7 +39,6 @@ object Tables {
 
   /** Read one table; `events` goes through [[normalizeEvents]]. */
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    GraftSession.tune(spark)
     val df = GraftParquet.read(spark, path(sfDir, name))
     if (name == "events") normalizeEvents(df) else df
   }

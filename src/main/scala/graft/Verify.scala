@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -7,19 +6,7 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // production-rehearsal lever (same as Bench): run the whole oracle
-    // gate under a cluster-scale static partition count to prove results
-    // are partition-count-invariant, not just plans
-    val shufflePartitions =
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    GraftSession.tune(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.getOrCreate("graft-verify", s"local[$cpus]")
     new java.io.File(outDir).mkdirs()
     // optional comma-separated subset for fast local iteration (the driver
     // never sets it — full dump); oracle_sql.json is filtered to match so
@@ -28,6 +15,8 @@ object Verify {
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
+      // names the query behind the Spark warnings that follow in the log
+      System.err.println(s"[verify] $name")
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

@@ -41,8 +41,8 @@ import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField
   *    below-own-id makes a replay an exact recompute from pre-batch
   *    state, and re-publishing v<id> is byte-identical (a torn version
   *    directory from a pre-publish crash is never read: it is numbered
-  *    AT the replaying batch's id, not below). Matched output upgrades to
-  *    exactly-once with `exactlyOnce = true` ([[ExactlyOnce.write]]).
+  *    AT the replaying batch's id, not below). Matched output is
+  *    exactly-once ([[ExactlyOnce.write]]).
   */
 object AsofStream {
 
@@ -82,12 +82,12 @@ object AsofStream {
   }
 
   /** Start the enrichment stream. Matched fact rows (user_id, tsu,
-    * event_id, value, m_type, m_props, m_tsu, gap_us) append to `outDir`;
+    * event_id, value, m_type, m_props, m_tsu, gap_us) land in `outDir`'s
+    * `batch_id=<id>` partitions;
     * the latest-touch dim state lives as a snapshot table at `stateRoot`.
     */
   def start(events: DataFrame, stateRoot: String, outDir: String,
-      checkpointDir: String, exactlyOnce: Boolean = false,
-      stateDepth: Int = 1): StreamingQuery =
+      checkpointDir: String, stateDepth: Int = 1): StreamingQuery =
     events.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -95,8 +95,7 @@ object AsofStream {
           val spark = batch.sparkSession
           val (matched, newState) =
             enrichBatch(spark, batch, stateRoot, batchId, stateDepth)
-          if (exactlyOnce) ExactlyOnce.write(matched, outDir, batchId)
-          else matched.write.mode("append").parquet(outDir)
+          ExactlyOnce.write(matched, outDir, batchId)
           SnapshotTable.publish(newState, stateRoot, s"v$batchId")
         }
         ()

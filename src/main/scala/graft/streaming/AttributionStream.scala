@@ -27,10 +27,10 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   * conservation invariant).
   *
   * Output: per-batch per-type partial (credit_ct, credit_bp_sum) rows —
-  * sums compose across batches, so a reader aggregates the appended rows
+  * sums compose across batches, so a reader aggregates the committed rows
   * to one-shot totals. Replay follows [[VersionedState]] (read below own
-  * batch id; publishes are idempotent); `exactlyOnce` upgrades the
-  * output commit.
+  * batch id; publishes are idempotent), and the output commit is
+  * exactly-once ([[ExactlyOnce.write]]).
   */
 object AttributionStream {
 
@@ -58,19 +58,19 @@ object AttributionStream {
     (credit, newState)
   }
 
-  /** Start the attribution stream: per-type credit partials append to
-    * `outDir`, windowed touch state lives at `stateRoot`.
+  /** Start the attribution stream: per-type credit partials land in
+    * `outDir`'s `batch_id=<id>` partitions, windowed touch state lives at
+    * `stateRoot`.
     */
   def start(events: DataFrame, stateRoot: String, outDir: String,
-      checkpointDir: String, exactlyOnce: Boolean = false): StreamingQuery =
+      checkpointDir: String): StreamingQuery =
     events.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         if (!batch.isEmpty) {
           val spark = batch.sparkSession
           val (credit, newState) = creditBatch(spark, batch, stateRoot, batchId)
-          if (exactlyOnce) ExactlyOnce.write(credit, outDir, batchId)
-          else credit.write.mode("append").parquet(outDir)
+          ExactlyOnce.write(credit, outDir, batchId)
           SnapshotTable.publish(newState, stateRoot, s"v$batchId")
         }
         ()

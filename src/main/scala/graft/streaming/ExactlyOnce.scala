@@ -6,8 +6,8 @@ import org.apache.spark.sql.DataFrame
   * story for foreachBatch streams: batch `id` owns (and overwrites) its
   * own hive partition `batch_id=<id>`, so an at-least-once replay
   * rewrites identical bytes where a raw append would duplicate rows.
-  * This is precisely the "keyed by batch id" swap the at-least-once
-  * appenders ([[DedupStream]], [[SpanStream]]) document: deterministic
+  * [[DedupStream]], [[SpanStream]], [[AsofStream]], [[AttributionStream]]
+  * and [[CardStream]] commit their per-batch rows through it: deterministic
   * batch content + per-batch idempotent commit = exactly-once effect,
   * the same argument Structured Streaming's own file sink makes with its
   * transaction log, expressed with partition-directory granularity so

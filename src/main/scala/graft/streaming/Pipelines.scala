@@ -1,6 +1,5 @@
 package graft.streaming
 
-import graft.GraftSession
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -13,16 +12,6 @@ import org.apache.spark.sql.types._
   */
 object Pipelines {
 
-  /** events schema as stored by fixture generations that used a nanos long
-    * `ts`; kept for specs that synthesize such files. Real staging dirs are
-    * read with the schema inferred from the files already present (see
-    * [[eventsStream]]), so either storage form works.
-    */
-  val eventsSchema: StructType = StructType(Seq(
-    StructField("event_id", LongType), StructField("ts", LongType),
-    StructField("user_id", LongType), StructField("event_type", StringType),
-    StructField("value", DoubleType), StructField("props", StringType)))
-
   /** Streaming source over a directory of events parquet files (stand-in
     * for the Kafka ODS topic — file-source streaming picks up new files per
     * micro-batch, the staging-table pattern from SURVEY §7.1). The schema
@@ -30,7 +19,6 @@ object Pipelines {
     * it up front), and ts is then normalized exactly like the batch loader.
     */
   def eventsStream(spark: SparkSession, eventsDir: String): DataFrame = {
-    GraftSession.tune(spark)
     val stored = spark.read.parquet(eventsDir).schema
     graft.Tables.normalizeEvents(
       spark.readStream.schema(stored).parquet(eventsDir))

@@ -18,21 +18,20 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * micro-batched union ≡ one-shot over the full corpus (SpanStreamSpec
   * proves the equality on a planted-overlap feed).
   *
-  * Delivery: foreachBatch is at-least-once; a replayed batch re-appends
-  * IDENTICAL span rows (the computation is deterministic per doc), so
-  * readers treat the output as a set — or swap the raw append for a
-  * [[graft.sources.SnapshotTable]] publish keyed by batch id for
-  * exactly-once, as documented on DedupStream.
+  * Delivery: foreachBatch is at-least-once, and a replayed batch
+  * recomputes IDENTICAL span rows (the computation is deterministic per
+  * doc), so the batch-id-keyed commit ([[ExactlyOnce.write]]) makes the
+  * output exactly-once.
   */
 object SpanStream {
 
   /** Start the decontamination stream: `docs` is a streaming (doc_id,
     * text) frame; `benchDocs` the static eval set. Span rows
-    * (doc_id, bench_id, pos, pos_b, span_tokens) append to `outDir`.
+    * (doc_id, bench_id, pos, pos_b, span_tokens) land in `outDir`'s
+    * `batch_id=<id>` partitions.
     */
   def start(docs: DataFrame, benchDocs: DataFrame, outDir: String,
-      checkpointDir: String, n: Int = 5, minSpan: Int = 12,
-      exactlyOnce: Boolean = false): StreamingQuery = {
+      checkpointDir: String, n: Int = 5, minSpan: Int = 12): StreamingQuery = {
     // built once, session-cached: the bench side is small by contract
     // (an eval set), exactly the frame the batch query broadcasts
     val benchG = SpanDedup.gramTableOf(benchDocs, n).persist()
@@ -43,10 +42,8 @@ object SpanStream {
           val spans = SpanDedup.contaminationSpansAgainst(
             SpanDedup.gramTableOf(batch, n), benchG, n, minSpan)
           // span rows are a pure function of (batch, bench), so the
-          // batch-id-keyed overwrite commit upgrades delivery from
-          // at-least-once to exactly-once
-          if (exactlyOnce) ExactlyOnce.write(spans, outDir, batchId)
-          else spans.write.mode("append").parquet(outDir)
+          // batch-id-keyed overwrite commit makes a replay exactly-once
+          ExactlyOnce.write(spans, outDir, batchId)
         }
         ()
       }

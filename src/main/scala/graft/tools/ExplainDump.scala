@@ -14,7 +14,6 @@ object ExplainDump {
     val names = args.lift(1).map(_.split(",").toSeq)
       .getOrElse(graft.SparkEntry.queries.keys.toSeq.sorted)
     val spark = GraftSession.getOrCreate("explain-dump")
-    spark.sparkContext.setLogLevel("WARN")
     names.foreach { n =>
       println(s"\n===== $n =====")
       graft.SparkEntry.queries(n)(spark, sfDir).explain("formatted")

@@ -48,7 +48,6 @@ object ScaleFixture {
     val Array(srcDir, outDir, factorS) = args
     val factor = factorS.toInt
     val spark = GraftSession.getOrCreate("scale-fixture")
-    spark.sparkContext.setLogLevel("WARN")
     val copies = explode(sequence(lit(0), lit(factor - 1))).as("c")
 
     val tag = concat(lit("c"), col("c").cast("string"), lit("x"))

@@ -20,7 +20,6 @@ object SharedConsumers {
   def main(args: Array[String]): Unit = {
     val Array(sfDir) = args
     val spark = GraftSession.getOrCreate("shared-consumers")
-    spark.sparkContext.setLogLevel("WARN")
     val names = SparkEntry.queries.toSeq.sortBy(_._1)
     names.foreach { case (name, fn) =>
       CacheRegistry.beginQuery(name)

@@ -1,10 +1,9 @@
 package graft
 
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-
 /** The exactly-once verdict sink: a replayed micro-batch must leave the
-  * output byte-identical (one copy), and the exactly-once dedup stream
-  * must accumulate the same verdicts as the at-least-once appender.
+  * output with one copy of its rows, both through [[streaming.ExactlyOnce]]
+  * directly and through the dedup stream restarted over a batch whose
+  * checkpoint commit was lost.
   */
 class ExactlyOnceSpec extends SparkSpec {
 
@@ -23,32 +22,43 @@ class ExactlyOnceSpec extends SparkSpec {
       "partition discovery must expose the batch ids")
   }
 
-  test("exactly-once dedup stream equals the appender's verdicts") {
+  test("a replayed dedup batch leaves one copy of each verdict") {
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
     val text1 = ("alpha beta gamma delta " * 12).trim
-    val batches = Seq(
-      Seq((1L, text1), (2L, "completely different content about oceans")),
-      Seq((10L, text1), (11L, "unique snowflake sentence nothing shared")))
+    val work = java.nio.file.Files.createTempDirectory("eo_replay").toString
+    val dir = s"$work/in"; val idx = s"$work/idx"
+    val out = s"$work/verdicts"; val ckpt = s"$work/ckpt"
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
+    val schema = Seq((1L, "x")).toDF("doc_id", "text").schema
+    def start() = streaming.DedupStream.start(
+      spark.readStream.schema(schema).parquet(dir), idx, out, ckpt)
+    def stage(rows: (Long, String)*): Unit =
+      rows.toDF("doc_id", "text").coalesce(1).write.mode("append").parquet(dir)
+    def files(batchId: Long): Set[String] =
+      new java.io.File(s"$out/batch_id=$batchId").list().toSet
 
-    def run(exactlyOnce: Boolean): Set[(Long, Long, Long)] = {
-      val idx = java.nio.file.Files.createTempDirectory("eo_idx").toString + "/idx"
-      val out = java.nio.file.Files.createTempDirectory("eo_v").toString
-      val ckpt = java.nio.file.Files.createTempDirectory("eo_ck").toString
-      val mem = MemoryStream[(Long, String)]
-      val q = streaming.DedupStream.start(
-        mem.toDS().toDF("doc_id", "text"), idx, out, ckpt, exactlyOnce)
-      try {
-        batches.foreach { b => mem.addData(b: _*); q.processAllAvailable() }
-        spark.read.parquet(out).select("doc_id", "is_keeper", "dup_of")
-          .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      } finally { q.stop(); CacheRegistry.clear() }
-    }
+    val q1 = start()
+    try {
+      stage((1L, text1), (2L, "completely different content about oceans"))
+      q1.processAllAvailable()
+      stage((10L, text1), (11L, "unique snowflake sentence nothing shared"))
+      q1.processAllAvailable()
+    } finally q1.stop()
+    val batch1Files = files(1L)
+    // a crash after batch 1's verdict commit but before its checkpoint
+    // commit: the restarted query runs batch 1 again
+    Seq("1", ".1.crc").foreach(f =>
+      java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(s"$ckpt/commits/$f")))
+    val q2 = start()
+    try q2.processAllAvailable()
+    finally { q2.stop(); CacheRegistry.clear() }
+    assert(files(1L) != batch1Files, "fixture: the restart must replay batch 1")
 
-    val eo = run(exactlyOnce = true)
-    val append = run(exactlyOnce = false)
-    assert(eo == append, s"delivery mode must not change verdicts: $eo vs $append")
-    assert(eo.exists(v => v._1 == 10L && v._2 == 0L && v._3 == 1L),
+    val got = spark.read.parquet(out).select("doc_id", "is_keeper", "dup_of")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+    assert(got.sorted == Seq((1L, 1L, -1L), (2L, 1L, -1L), (10L, 0L, 1L), (11L, 1L, -1L)),
+      s"one verdict per doc after the replay: $got")
+    assert(got.exists(v => v._1 == 10L && v._2 == 0L && v._3 == 1L),
       "fixture sanity: the cross-batch dup drops toward doc 1")
   }
 }

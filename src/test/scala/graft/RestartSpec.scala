@@ -122,11 +122,17 @@ class RestartSpec extends SparkSpec {
       spark.readStream.schema(schema).parquet(dir), idx, out, ckpt)
     Seq((1L, textA), (2L, textB)).toDF("doc_id", "text")
       .coalesce(1).write.mode("append").parquet(dir)
+    def batchFiles(): Map[Long, Set[String]] =
+      new java.io.File(out).listFiles().toSeq.filter(_.getName.startsWith("batch_id="))
+        .map(d => d.getName.stripPrefix("batch_id=").toLong -> d.list().toSet).toMap
     val q1 = start()
     q1.processAllAvailable(); q1.stop()
+    val run1 = batchFiles()
     // doc 10 duplicates doc 1 ACROSS the restart: dropping it requires
-    // the run-1 band index; emitting exactly 3 verdicts requires the
-    // checkpoint (a fresh stream would reprocess batch 1's two docs)
+    // the run-1 band index; leaving batch 0's commit untouched requires
+    // the checkpoint (a fresh stream would reprocess the first batch's two
+    // docs as batch 0 again, and its overwrite would hide that from a row
+    // count)
     Seq((10L, textA)).toDF("doc_id", "text")
       .coalesce(1).write.mode("append").parquet(dir)
     val q2 = start()
@@ -136,8 +142,14 @@ class RestartSpec extends SparkSpec {
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
       assert(verdicts == Set((1L, 1L, -1L), (2L, 1L, -1L), (10L, 0L, 1L)),
         s"expected keepers 1,2 and a cross-restart drop of 10 onto 1: $verdicts")
-      assert(spark.read.parquet(out).count() == 3,
+      val run2 = batchFiles()
+      assert(run1.keySet == Set(0L) && run2.keySet == Set(0L, 1L),
+        s"run 1 commits batch 0 only, run 2 adds batch 1: $run1 then $run2")
+      assert(run2(0L) == run1(0L),
         "batch 1 must not be reprocessed after the restart")
+      assert(spark.read.parquet(s"$out/batch_id=1").select("doc_id")
+        .collect().map(_.getLong(0)).toSeq == Seq(10L),
+        "the resumed batch holds only the post-restart doc")
     } finally { q2.stop(); CacheRegistry.clear() }
   }
 }

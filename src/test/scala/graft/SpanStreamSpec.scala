@@ -70,7 +70,7 @@ class SpanStreamSpec extends SparkSpec {
 
     val mem = MemoryStream[(Long, String)]
     val q1 = streaming.SpanStream.start(
-      mem.toDS().toDF("doc_id", "text"), benchDf, out, ckpt, exactlyOnce = true)
+      mem.toDS().toDF("doc_id", "text"), benchDf, out, ckpt)
     try {
       mem.addData((100L, s"first page with $run quoted"))
       q1.processAllAvailable()
@@ -78,7 +78,7 @@ class SpanStreamSpec extends SparkSpec {
 
     // a NEW query object over the SAME checkpoint continues the stream
     val q2 = streaming.SpanStream.start(
-      mem.toDS().toDF("doc_id", "text"), benchDf, out, ckpt, exactlyOnce = true)
+      mem.toDS().toDF("doc_id", "text"), benchDf, out, ckpt)
     try {
       mem.addData((200L, s"second page also containing $run verbatim"),
         (201L, "clean page about nothing relevant at all"))
