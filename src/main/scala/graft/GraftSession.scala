@@ -1,11 +1,15 @@
 package graft
 
+import graft.expressions.GraftExtensions
 import org.apache.spark.sql.SparkSession
 
 /** The one place an engine session is configured: [[getOrCreate]] builds
   * every session the engine owns (Verify, Bench, Demo, the tools, the
-  * tests), and [[tune]] brings a session built elsewhere to the same
-  * runtime settings.
+  * tests) with the confs below and the native functions of
+  * [[graft.expressions.GraftExtensions]], which its `newSession()` and
+  * streaming clones inherit. [[tune]] brings a session built elsewhere to
+  * the same runtime settings and functions; without it, a query that
+  * calls a native function fails analysis with an error naming it.
   *
   * AQE, its partition coalescing, its skew-join splitting and the runtime
   * Bloom filter are Spark defaults, so none is set here; `GraftSessionSpec`
@@ -48,7 +52,7 @@ object GraftSession {
     */
   def getOrCreate(appName: String = "graft", master: String = "local[32]"): SparkSession = {
     val spark = SparkSession.builder().appName(appName).master(master)
-      .config(confs.toMap).getOrCreate()
+      .config(confs.toMap).withExtensions(new GraftExtensions).getOrCreate()
     spark.conf.set("spark.sql.shuffle.partitions",
       sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS",
         spark.sparkContext.defaultParallelism.toString))
@@ -57,8 +61,14 @@ object GraftSession {
   }
 
   /** Apply the runtime confs to a session built outside [[getOrCreate]]
-    * (UI off is a static conf, which only the builder can set).
+    * (UI off is a static conf, which only the builder can set), and
+    * register each native function the session lacks.
     */
-  def tune(spark: SparkSession): Unit =
+  def tune(spark: SparkSession): Unit = {
     confs.foreach { case (k, v) => if (spark.conf.isModifiable(k)) spark.conf.set(k, v) }
+    val registry = spark.sessionState.functionRegistry
+    GraftExtensions.functions.foreach { case (name, info, build) =>
+      if (!registry.functionExists(name)) registry.registerFunction(name, info, build)
+    }
+  }
 }

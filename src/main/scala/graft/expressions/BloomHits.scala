@@ -1,6 +1,5 @@
 package graft.expressions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -79,11 +78,4 @@ object BloomHits {
     }
     hits
   }
-
-  /** Register `bloom_hits` for SQL/`expr(...)` use (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bloom_hits",
-      exprs => BloomHits(exprs(0), exprs(1)),
-      "built-in")
 }

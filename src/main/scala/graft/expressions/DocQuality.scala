@@ -76,10 +76,6 @@ object DocQuality {
     val n = 2 * toks.length - 1
     java.lang.Long.valueOf(math.floor(sum / n * 1000000.0).toLong)
   }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "doc_quality", exprs => DocQuality(exprs(0)), "built-in")
 }
 
 /** `doc_quality_trained(text)` — [[DocQuality]] with the weight lookup

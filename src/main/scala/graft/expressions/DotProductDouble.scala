@@ -1,6 +1,5 @@
 package graft.expressions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -54,13 +53,4 @@ case class DotProductDouble(left: Expression, right: Expression)
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
-}
-
-object DotProductDouble {
-  /** Register for SQL/`expr(...)` use in a session (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dot_double",
-      exprs => DotProductDouble(exprs(0), exprs(1)),
-      "built-in")
 }

@@ -2,112 +2,61 @@ package graft.expressions
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-/** Session-extension wiring for the engine's native expressions — install
+/** Session-extension wiring for the engine's native expressions: install
   * with `SparkSession.builder().withExtensions(new GraftExtensions)` (or
-  * `spark.sql.extensions=graft.expressions.GraftExtensions`) and
-  * `dot_double` / `sorted_int_intersect_size` resolve in SQL and
-  * `expr(...)` everywhere, no per-session registration calls. The
-  * per-session `register(spark)` helpers remain for driver-created
-  * sessions the library doesn't build (Verify/Bench contract mains).
+  * `spark.sql.extensions=graft.expressions.GraftExtensions`) and every
+  * function in [[GraftExtensions.functions]] resolves in SQL and
+  * `expr(...)`, in that session and in its `newSession()` and streaming
+  * clones. `graft.GraftSession.getOrCreate` installs it; a session built
+  * elsewhere gets the same functions from `graft.GraftSession.tune`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftExtensions.functions.foreach(ext.injectFunction)
+}
 
-  /** Arity gate: without it, `split_words()` dies with an
-    * IndexOutOfBoundsException and extra arguments are silently dropped —
-    * this turns both into a loud analysis-time error naming the function.
+object GraftExtensions {
+
+  /** One native function: its name, its class and its builder behind the
+    * arity gate. Without the gate `split_words()` dies with an
+    * IndexOutOfBoundsException and extra arguments are silently dropped;
+    * with it both are a loud analysis-time error naming the function.
     */
-  private def arity(
-      name: String, n: Int,
-      exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
-      : Seq[org.apache.spark.sql.catalyst.expressions.Expression] = {
-    if (exprs.length != n) throw new IllegalArgumentException(
-      s"$name expects $n argument(s), got ${exprs.length}")
-    exprs
-  }
+  private def fn(name: String, cls: Class[_], n: Int)(build: Seq[Expression] => Expression)
+      : (FunctionIdentifier, ExpressionInfo, FunctionBuilder) =
+    (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), exprs => {
+      if (exprs.length != n) throw new IllegalArgumentException(
+        s"$name expects $n argument(s), got ${exprs.length}")
+      build(exprs)
+    })
 
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("dot_double"),
-      new ExpressionInfo(classOf[DotProductDouble].getName, "dot_double"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        { val a = arity("dot_double", 2, exprs); DotProductDouble(a(0), a(1)) }))
-    ext.injectFunction((
-      FunctionIdentifier("search_sorted"),
-      new ExpressionInfo(classOf[SearchSorted].getName, "search_sorted"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        { val a = arity("search_sorted", 2, exprs); SearchSorted(a(0), a(1)) }))
-    ext.injectFunction((
-      FunctionIdentifier("sorted_int_intersect_size"),
-      new ExpressionInfo(classOf[SortedIntIntersectSize].getName, "sorted_int_intersect_size"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        { val a = arity("sorted_int_intersect_size", 2, exprs); SortedIntIntersectSize(a(0), a(1)) }))
-    ext.injectFunction((
-      FunctionIdentifier("sorted_int_intersect_atleast"),
-      new ExpressionInfo(classOf[SortedIntIntersectAtLeast].getName, "sorted_int_intersect_atleast"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        { val a = arity("sorted_int_intersect_atleast", 3, exprs)
-          SortedIntIntersectAtLeast(a(0), a(1), a(2)) }))
-    ext.injectFunction((
-      FunctionIdentifier("ngram_sketch_hash"),
-      new ExpressionInfo(classOf[NgramSketchHash].getName, "ngram_sketch_hash"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        { val a = arity("ngram_sketch_hash", 1, exprs); NgramSketchHash(a(0)) }))
-    ext.injectFunction((
-      FunctionIdentifier("word_bigrams"),
-      new ExpressionInfo(classOf[WordBigrams].getName, "word_bigrams"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        { val a = arity("word_bigrams", 1, exprs); WordBigrams(a(0)) }))
-    ext.injectFunction((
-      FunctionIdentifier("word_bigram_list"),
-      new ExpressionInfo(classOf[WordBigramList].getName, "word_bigram_list"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        { val a = arity("word_bigram_list", 1, exprs); WordBigramList(a(0)) }))
-    ext.injectFunction((
-      FunctionIdentifier("minhash9"),
-      new ExpressionInfo(classOf[MinHash9].getName, "minhash9"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        { val a = arity("minhash9", 1, exprs); MinHash9(a(0)) }))
-    ext.injectFunction((
-      FunctionIdentifier("minhash18"),
-      new ExpressionInfo(classOf[MinHash18].getName, "minhash18"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        { val a = arity("minhash18", 1, exprs); MinHash18(a(0)) }))
-    ext.injectFunction((
-      FunctionIdentifier("doc_quality"),
-      new ExpressionInfo(classOf[DocQuality].getName, "doc_quality"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        { val a = arity("doc_quality", 1, exprs); DocQuality(a(0)) }))
-    ext.injectFunction((
-      FunctionIdentifier("top_cells"),
-      new ExpressionInfo(classOf[TopCells].getName, "top_cells"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        TopCells(arity("top_cells", 4, exprs)(0), exprs(1), exprs(2), exprs(3).eval() match {
-          case i: Int => i
-          case l: Long => l.toInt
-          case other => throw new IllegalArgumentException(
-            s"top_cells k must be an integer literal, got $other")
-        })))
-    ext.injectFunction((
-      FunctionIdentifier("split_words"),
-      new ExpressionInfo(classOf[SplitWords].getName, "split_words"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        { val a = arity("split_words", 1, exprs); SplitWords(a(0)) }))
-    ext.injectFunction((
-      FunctionIdentifier("bloom_hits"),
-      new ExpressionInfo(classOf[BloomHits].getName, "bloom_hits"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        { val a = arity("bloom_hits", 2, exprs); BloomHits(a(0), a(1)) }))
-    ext.injectFunction((
-      FunctionIdentifier("tri_moments"),
-      new ExpressionInfo(classOf[TriMoments].getName, "tri_moments"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        { val a = arity("tri_moments", 1, exprs); TriMoments(a(0)) }))
-    ext.injectFunction((
-      FunctionIdentifier("moment_cells"),
-      new ExpressionInfo(classOf[MomentCells].getName, "moment_cells"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        { val a = arity("moment_cells", 1, exprs); MomentCells(a(0)) }))
-  }
+  /** The engine's native functions, the one list of them. */
+  private[graft] val functions
+      : Seq[(FunctionIdentifier, ExpressionInfo, FunctionBuilder)] = Seq(
+    fn("dot_double", classOf[DotProductDouble], 2)(a => DotProductDouble(a(0), a(1))),
+    fn("search_sorted", classOf[SearchSorted], 2)(a => SearchSorted(a(0), a(1))),
+    fn("sorted_int_intersect_size", classOf[SortedIntIntersectSize], 2)(
+      a => SortedIntIntersectSize(a(0), a(1))),
+    fn("sorted_int_intersect_atleast", classOf[SortedIntIntersectAtLeast], 3)(
+      a => SortedIntIntersectAtLeast(a(0), a(1), a(2))),
+    fn("ngram_sketch_hash", classOf[NgramSketchHash], 1)(a => NgramSketchHash(a(0))),
+    fn("word_bigrams", classOf[WordBigrams], 1)(a => WordBigrams(a(0))),
+    fn("word_bigram_list", classOf[WordBigramList], 1)(a => WordBigramList(a(0))),
+    fn("minhash9", classOf[MinHash9], 1)(a => MinHash9(a(0))),
+    fn("minhash18", classOf[MinHash18], 1)(a => MinHash18(a(0))),
+    fn("doc_quality", classOf[DocQuality], 1)(a => DocQuality(a(0))),
+    // the fourth argument, k, must be an integer literal
+    fn("top_cells", classOf[TopCells], 4)(a => TopCells(a(0), a(1), a(2), a(3).eval() match {
+      case i: Int => i
+      case l: Long => l.toInt
+      case other => throw new IllegalArgumentException(
+        s"top_cells k must be an integer literal, got $other")
+    })),
+    fn("split_words", classOf[SplitWords], 1)(a => SplitWords(a(0))),
+    fn("bloom_hits", classOf[BloomHits], 2)(a => BloomHits(a(0), a(1))),
+    fn("tri_moments", classOf[TriMoments], 1)(a => TriMoments(a(0))),
+    fn("moment_cells", classOf[MomentCells], 1)(a => MomentCells(a(0))))
 }

@@ -2,7 +2,6 @@ package graft.expressions
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -46,10 +45,6 @@ object WordBigrams {
     while (it.hasNext) { out(j) = UTF8String.fromString(it.next()); j += 1 }
     new GenericArrayData(out)
   }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "word_bigrams", exprs => WordBigrams(exprs(0)), "built-in")
 }
 
 /** `word_bigram_list(text)` — EVERY adjacent word-bigram occurrence of
@@ -86,10 +81,6 @@ object WordBigramList {
     }
     new GenericArrayData(out)
   }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "word_bigram_list", exprs => WordBigramList(exprs(0)), "built-in")
 }
 
 /** `minhash9(shingles)` — the 9-hash min-signature of a shingle array in
@@ -172,10 +163,6 @@ object MinHash9 {
   private val Salts = MinHashCore.saltBytes(2)
 
   def compute(sg: ArrayData): ArrayData = MinHashCore.compute(sg, Salts, 9)
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash9", exprs => MinHash9(exprs(0)), "built-in")
 }
 
 /** `minhash18(shingles)` — the doubled-width signature (four salted
@@ -203,8 +190,4 @@ object MinHash18 {
   private val Salts = MinHashCore.saltBytes(4)
 
   def compute(sg: ArrayData): ArrayData = MinHashCore.compute(sg, Salts, 18)
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash18", exprs => MinHash18(exprs(0)), "built-in")
 }

@@ -2,7 +2,6 @@ package graft.expressions
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -65,11 +64,4 @@ object NgramSketchHash {
     java.util.Arrays.sort(arr)
     new GenericArrayData(arr)
   }
-
-  /** Register for SQL/`expr(...)` use in a session (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "ngram_sketch_hash",
-      exprs => NgramSketchHash(exprs(0)),
-      "built-in")
 }

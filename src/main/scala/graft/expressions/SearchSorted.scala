@@ -1,6 +1,5 @@
 package graft.expressions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -209,15 +208,4 @@ object SearchSorted {
     else if (x == y) 0
     else if (x > y) 1
     else -1
-
-  /** Register for SQL/`expr(...)`/`call_function` use (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "search_sorted",
-      exprs => {
-        if (exprs.length != 2) throw new IllegalArgumentException(
-          s"search_sorted expects 2 arguments, got ${exprs.length}")
-        SearchSorted(exprs(0), exprs(1))
-      },
-      "built-in")
 }

@@ -1,6 +1,5 @@
 package graft.expressions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -77,17 +76,4 @@ case class SortedIntIntersectAtLeast(first: Expression, second: Expression,
 
   override protected def withNewChildrenInternal(f: Expression, s: Expression,
       t: Expression): Expression = copy(first = f, second = s, third = t)
-}
-
-object SortedIntIntersectAtLeast {
-  /** Register for SQL/`expr(...)` use in a session (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sorted_int_intersect_atleast",
-      exprs => {
-        if (exprs.length != 3) throw new IllegalArgumentException(
-          s"sorted_int_intersect_atleast expects 3 arguments, got ${exprs.length}")
-        SortedIntIntersectAtLeast(exprs(0), exprs(1), exprs(2))
-      },
-      "built-in")
 }

@@ -1,6 +1,5 @@
 package graft.expressions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -63,13 +62,4 @@ case class SortedIntIntersectSize(left: Expression, right: Expression)
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
-}
-
-object SortedIntIntersectSize {
-  /** Register for SQL/`expr(...)` use in a session (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sorted_int_intersect_size",
-      exprs => SortedIntIntersectSize(exprs(0), exprs(1)),
-      "built-in")
 }

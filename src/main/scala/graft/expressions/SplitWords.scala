@@ -1,7 +1,6 @@
 package graft.expressions
 
 import graft.functions.Tokenizer
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, Generator, UnaryExpression}
@@ -13,11 +12,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * the Spark analog of the reference's registered UDTF
   * (`RT/app/function/SplitFunction.java:19-30`, a Flink `TableFunction`
   * used as `LATERAL TABLE(ik_analyze(fullword))`). Usable directly in
-  * `LATERAL VIEW split_words(text) t AS word` and in a select list
-  * (`ExtractGenerator` lifts it into a `Generate` node), emitting one row
-  * per token with NO intermediate array value and no Scala-UDF
-  * encode/decode boundary — the row stream feeds the downstream partial
-  * aggregation inside the same task.
+  * `LATERAL VIEW split_words(text) t AS word`, in `selectExpr` and in a
+  * select list (`ExtractGenerator` lifts it into a `Generate` node),
+  * emitting one row per token with NO intermediate array value and no
+  * Scala-UDF encode/decode boundary — the row stream feeds the downstream
+  * partial aggregation inside the same task.
   *
   * Tokenization semantics are exactly [[Tokenizer.splitWords]] (lowercase,
   * Latin runs on non-alphanumeric boundaries, CJK overlapping bigrams;
@@ -45,17 +44,4 @@ case class SplitWords(child: Expression)
 
   override protected def withNewChildInternal(newChild: Expression): SplitWords =
     copy(child = newChild)
-}
-
-object SplitWords {
-  /** Register `split_words` as a session table function (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "split_words", exprs => {
-        // arity gate: without it split_words() dies with an index error
-        // and extra args are silently dropped (mirrors GraftExtensions)
-        if (exprs.length != 1) throw new IllegalArgumentException(
-          s"split_words expects 1 argument, got ${exprs.length}")
-        SplitWords(exprs(0))
-      }, "built-in")
 }

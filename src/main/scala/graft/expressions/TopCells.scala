@@ -1,6 +1,5 @@
 package graft.expressions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -99,19 +98,4 @@ object TopCells {
     }
     new GenericArrayData(best)
   }
-
-  /** Register `top_cells` for SQL/`expr(...)` use (idempotent); the fourth
-    * argument must be an integer literal.
-    */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "top_cells",
-      exprs => TopCells(exprs(0), exprs(1), exprs(2),
-        exprs(3).eval() match {
-          case i: Int => i
-          case l: Long => l.toInt
-          case other => throw new IllegalArgumentException(
-            s"top_cells k must be an integer literal, got $other")
-        }),
-      "built-in")
 }

@@ -1,6 +1,5 @@
 package graft.expressions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -66,10 +65,6 @@ object TriMoments {
     }
     new GenericArrayData(out)
   }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "tri_moments", exprs => TriMoments(exprs.head), "built-in")
 }
 
 /** `moment_cells(fx)` — [[TriMoments]]' KEYED sibling for the maintained
@@ -132,8 +127,4 @@ object MomentCells {
     out(p) = new GenericInternalRow(Array[Any](0L, 1L))
     new GenericArrayData(out)
   }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "moment_cells", exprs => MomentCells(exprs.head), "built-in")
 }

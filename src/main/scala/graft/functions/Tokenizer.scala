@@ -1,7 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-
 /** Dependency-free tokenizer replacing the reference's IK-analyzer UDTF
   * (`RT/app/function/SplitFunction.java:19-30`, `RT/utils/KeywordUtil.java:25-54`).
   *
@@ -12,7 +10,8 @@ import org.apache.spark.sql.SparkSession
   *
   * For pure-ASCII corpora this reduces exactly to
   * `string_split_regex(lower(text), '[^a-z0-9]+')`, which is the DuckDB
-  * oracle's formulation.
+  * oracle's formulation. In SQL and `selectExpr` the same tokens come from
+  * the native table function `split_words` ([[graft.expressions.SplitWords]]).
   */
 object Tokenizer {
 
@@ -45,12 +44,4 @@ object Tokenizer {
     flushLatin(); flushCjk()
     out.result()
   }
-
-  /** Register the native table-function form for SQL / `selectExpr` use
-    * (`LATERAL VIEW split_words(text) t AS word`) — a Catalyst
-    * [[graft.expressions.SplitWords Generator]], not a Scala UDF, so the
-    * token stream stays inside the task with no encoder boundary.
-    */
-  def register(spark: SparkSession): Unit =
-    graft.expressions.SplitWords.register(spark)
 }

@@ -46,8 +46,6 @@ object BloomPrefilter {
     val name = "contamination_bloom"
 
     def run(spark: SparkSession, sfDir: String): DataFrame = {
-      graft.expressions.SortedIntIntersectSize.register(spark)
-      graft.expressions.BloomHits.register(spark)
       val g = Dedup.ngramSketches(spark, sfDir)
       val benchGrams = g.filter(col("doc_id") < 20)
         .select(explode(col("sg")).as("h"))

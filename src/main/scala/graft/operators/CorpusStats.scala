@@ -33,7 +33,6 @@ object CorpusStats {
     * tables incrementally and reuse [[liftOf]] verbatim on them.
     */
   private[graft] def tokenCounts(docs: DataFrame): (DataFrame, DataFrame) = {
-    graft.expressions.WordBigramList.register(docs.sparkSession)
     val pairCt = docs.select(explode(expr("word_bigram_list(text)")).as("pr"))
       .groupBy(col("pr")).agg(count(lit(1)).as("n_xy"))
     val uni = docs.select(explode(tokens(col("text"))).as("t"))

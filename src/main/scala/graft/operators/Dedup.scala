@@ -55,8 +55,6 @@ object Dedup {
     val name = "dedup_minhash_lsh"
 
     def run(spark: SparkSession, sfDir: String): DataFrame = {
-      graft.expressions.WordBigrams.register(spark)
-      graft.expressions.MinHash9.register(spark)
       val docs = Tables.load(spark, sfDir, "documents")
       // persisted: referenced by the signature projection AND both sides of
       // the Jaccard-verify join — without it the shingling runs three times
@@ -77,7 +75,7 @@ object Dedup {
 
   /** Word-bigram shingle sets `(doc_id, sg)`, empty-shingle docs dropped —
     * the content frame the whole minhash family (one-shot, incremental,
-    * cluster) verifies against. Callers must register `WordBigrams`.
+    * cluster) verifies against.
     */
   private[graft] def shingleFrame(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), expr("word_bigrams(text)").as("sg"))
@@ -93,7 +91,7 @@ object Dedup {
     * INDEX layout of [[IncrementalDedup]]: band 1-3 sigs are built from
     * minhash windows 1-9, which are prefix-stable under the `minhash18`
     * widening (windows 1-9 identical), so an index written today stays
-    * joinable after a signature-width upgrade. Callers register `MinHash9`.
+    * joinable after a signature-width upgrade.
     */
   private[graft] def bandFrame(sh: DataFrame): DataFrame =
     sh.select(col("doc_id"), expr("minhash9(sg)").as("hs"))
@@ -308,8 +306,6 @@ object Dedup {
     */
   private[graft] def ngramJaccardOf(gp: DataFrame,
       maxBucket: Long): DataFrame = {
-    val spark = gp.sparkSession
-    graft.expressions.SortedIntIntersectAtLeast.register(spark)
     // band census: one tiny frame (≤ distinct-lengths/11 rows), broadcast
     val sizes = gp.groupBy(floor(col("n_chars") / 11).as("bucket"))
       .agg(count(lit(1)).as("bs"))
@@ -631,7 +627,6 @@ object Dedup {
     * consume the identical frame.
     */
   private[operators] def ngramSketches(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.expressions.NgramSketchHash.register(spark)
     graft.CacheRegistry.shared(s"ngram_sk:$sfDir") {
       Tables.load(spark, sfDir, "documents")
         .select(col("doc_id"), col("n_chars"),
@@ -656,7 +651,6 @@ object Dedup {
     val name = "contamination_ngram"
 
     def run(spark: SparkSession, sfDir: String): DataFrame = {
-      graft.expressions.SortedIntIntersectSize.register(spark)
       val g = ngramSketches(spark, sfDir)
       val bench = g.filter(col("doc_id") < 20)
         .select(col("doc_id").as("bench_id"), col("sg").as("sg_b"))
@@ -1010,8 +1004,6 @@ object Dedup {
     val name = "source_overlap"
 
     def run(spark: SparkSession, sfDir: String): DataFrame = {
-      graft.expressions.WordBigrams.register(spark)
-      graft.expressions.MinHash18.register(spark)
       val docs = Tables.load(spark, sfDir, "documents")
       // persisted: feeds the doc-sketch projection AND the exact-truth path
       val sh = graft.CacheRegistry.persist(docs
@@ -1113,7 +1105,6 @@ object Dedup {
     val name = "contamination_report"
 
     def run(spark: SparkSession, sfDir: String): DataFrame = {
-      graft.expressions.SortedIntIntersectSize.register(spark)
       val g = ngramSketches(spark, sfDir)
       val suiteGrams = g.filter(col("doc_id") < 6)
         .select((col("doc_id") % 3).as("suite"), explode(col("sg")).as("hh"))

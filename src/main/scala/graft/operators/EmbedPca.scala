@@ -156,7 +156,6 @@ object EmbedPca {
       // nested-transform lambda it replaced was the family's measured
       // ceiling at d = 1024 (~88 ms/row, BASELINE.md); aggregated
       // values are bit-identical, so every downstream hash stands
-      graft.expressions.TriMoments.register(fx.sparkSession)
       val moments = fx
         .select(posexplode(expr("tri_moments(fx)")).as(Seq("pos", "xy")))
         .groupBy(col("pos"))

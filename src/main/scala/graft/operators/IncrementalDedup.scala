@@ -185,8 +185,6 @@ object IncrementalDedup {
     */
   private[graft] def ingestBatch(spark: SparkSession, docs: DataFrame,
       idx: String): DataFrame = {
-    graft.expressions.WordBigrams.register(spark)
-    graft.expressions.MinHash9.register(spark)
     val sh = graft.CacheRegistry.persist(Dedup.shingleFrame(docs))
     val bands = graft.CacheRegistry.persist(Dedup.bandFrame(sh))
     // pre-append index state (empty on the first crawl): compacted base

@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.{GraftQuery, Tables}
-import graft.functions.Tokenizer
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -23,7 +22,6 @@ object KeywordStats {
     val name = "keyword_stats"
 
     def run(spark: SparkSession, sfDir: String): DataFrame = {
-      Tokenizer.register(spark)
       Tables.load(spark, sfDir, "documents")
         .selectExpr("doc_id", "split_words(text) AS word")
         .groupBy(col("word"))
@@ -48,7 +46,6 @@ object KeywordStats {
     val name = "ads_keyword_weighted"
 
     def run(spark: SparkSession, sfDir: String): DataFrame = {
-      Tokenizer.register(spark)
       Tables.load(spark, sfDir, "documents")
         .selectExpr("lang", "split_words(text) AS word")
         .withColumn("weight",

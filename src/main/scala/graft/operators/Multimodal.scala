@@ -380,7 +380,6 @@ object Multimodal {
       planes: Seq[Seq[Int]],
       targetBucket: Option[Long]): DataFrame = {
     val spark = media.sparkSession
-    graft.expressions.DotProductDouble.register(spark)
     val feats = extractFeatures(spark, media)
       .select(col("media_id"), col("features").as("v"))
       .withColumn("nrm", sqrt(expr("dot_double(v, v)")))

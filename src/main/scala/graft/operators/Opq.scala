@@ -76,7 +76,6 @@ object Opq {
   private def rotatedFrame(spark: SparkSession, sfDir: String, tag: String,
       model: => EmbedPca.Model,
       base: => DataFrame): DataFrame = {
-    graft.expressions.DotProductDouble.register(spark)
     graft.CacheRegistry.shared(s"opq_vecs:$tag:$sfDir") {
       val u = householderU(model)
       val uArr: Column = array(u.map(lit(_)): _*)

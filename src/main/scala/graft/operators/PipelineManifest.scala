@@ -99,7 +99,6 @@ object PipelineManifest {
     val ruleKeep = Relevance.ruleFrame(deduped)
       .filter(col("keep") === 1).select("doc_id")
     val shaped = deduped.join(ruleKeep, "doc_id")
-    graft.expressions.DocQuality.register(spark)
     val classed = shaped.filter(
       coalesce(expr("doc_quality(text)"), lit(Long.MinValue)) >= -100000L)
     val lmKeep = Relevance.lmScores(classed)

@@ -326,7 +326,6 @@ object Relevance {
     val name = "doc_quality_score"
 
     def run(spark: SparkSession, sfDir: String): DataFrame = {
-      graft.expressions.DocQuality.register(spark)
       Tables.load(spark, sfDir, "documents")
         .select(col("doc_id"),
           size(tokens(col("text"))).cast("long").as("n_toks"),
@@ -691,7 +690,6 @@ object Relevance {
     * every tokenizable document — one codegen'd scan, no shuffle.
     */
   private[graft] def qualityFrame(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.expressions.DocQuality.register(spark)
     Tables.load(spark, sfDir, "documents")
       .filter(size(tokens(col("text"))) > 0)
       .select(col("doc_id"), col("lang"), col("source"),

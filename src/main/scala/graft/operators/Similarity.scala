@@ -106,7 +106,6 @@ object Similarity {
     * summation as the interpreted `aggregate` fold it replaces).
     */
   private[graft] def vecs(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.expressions.DotProductDouble.register(spark)
     // shared: ann_recall composes the brute-force and LSH queries, so the
     // normalized-vector frame is read by several plans per session
     graft.CacheRegistry.shared(s"vecs:$sfDir") {
@@ -476,7 +475,6 @@ object Similarity {
   private val CellRankKeep = 3
 
   private[graft] def cellRanked(e: DataFrame, centers: DataFrame): DataFrame = {
-    graft.expressions.TopCells.register(e.sparkSession)
     val packed = centers.agg(
       collect_list(struct(col("cid"), col("cv"), col("cnrm"))).as("cents"))
     e.crossJoin(broadcast(packed))
@@ -661,7 +659,6 @@ object Similarity {
     * DuckDB, so both engines build bit-identical doubles.
     */
   private[graft] def clusteredVecs(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.expressions.DotProductDouble.register(spark)
     Tables.load(spark, sfDir, "embeddings")
       .select(col("vec_id"))
       .withColumn("v", expr(s"""
@@ -699,7 +696,6 @@ object Similarity {
     * recall twins read it.
     */
   private[graft] def mixedVecs(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.expressions.DotProductDouble.register(spark)
     graft.CacheRegistry.shared(s"clu_vecs:$sfDir") {
       Tables.load(spark, sfDir, "embeddings")
         .select(col("vec_id"))

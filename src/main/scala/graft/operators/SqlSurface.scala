@@ -1,14 +1,13 @@
 package graft.operators
 
 import graft.{GraftQuery, Tables}
-import graft.functions.Tokenizer
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The SQL entry surface — the reference's Table/SQL jobs (S2 Kafka DDL
   * tables + registered UDTF, `RT/app/dws/KeywordStatsApp.java:55-91`,
   * `ProvinceStatsSQLApp.java:69-89`): temp views over the sources, the
-  * tokenizer registered as a SQL table function, and the query expressed in
-  * pure `spark.sql` with `LATERAL VIEW split_words(text)` — the direct
+  * tokenizer as a SQL table function (every engine session has it), and
+  * the query expressed in pure `spark.sql` with `LATERAL VIEW split_words(text)` — the direct
   * analog of Flink's `LATERAL TABLE(split_words(...))`, planned as a native
   * `Generate` over the [[graft.expressions.SplitWords]] Generator (no UDF
   * eval node). Catalyst plans it identically to the DataFrame formulation —
@@ -22,7 +21,6 @@ object SqlSurface {
 
     def run(spark: SparkSession, sfDir: String): DataFrame = {
       Tables.registerAll(spark, sfDir)
-      Tokenizer.register(spark)
       spark.sql("""
         SELECT word, count(*) AS ct, count(DISTINCT doc_id) AS doc_ct
         FROM documents

@@ -279,7 +279,6 @@ object TextAnalysis {
     * live card is a re-aggregation of partials, never a corpus rescan.
     */
   private[graft] def cardPartials(docs: DataFrame): DataFrame = {
-    graft.expressions.DocQuality.register(docs.sparkSession)
     docs
       // EXACT BPE token volume (round 8): the card's tok_ct is what a
       // training-budget reader needs — trainer tokens, not words; the

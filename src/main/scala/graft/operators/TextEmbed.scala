@@ -126,7 +126,6 @@ object TextEmbed {
     */
   private[graft] def normalizedDocVectors(spark: SparkSession,
       sfDir: String): DataFrame = {
-    graft.expressions.DotProductDouble.register(spark)
     docVectors(spark, sfDir)
       .select(col("doc_id"), transform(col("e"), _.cast("double")).as("v"))
       .withColumn("nrm", sqrt(expr("dot_double(v, v)")))
@@ -199,7 +198,6 @@ object TextEmbed {
     private val MinBp = 9500L
 
     def run(spark: SparkSession, sfDir: String): DataFrame = {
-      graft.expressions.DotProductDouble.register(spark)
       val dv = docVectors(spark, sfDir)
         .select(col("doc_id").as("vec_id"),
           transform(col("e"), _.cast("double")).as("v"))
@@ -268,7 +266,6 @@ object TextEmbed {
     val name = "contamination_semantic"
 
     def run(spark: SparkSession, sfDir: String): DataFrame = {
-      graft.expressions.DotProductDouble.register(spark)
       val v = docVectors(spark, sfDir)
         .select(col("doc_id"),
           transform(col("e"), _.cast("double")).as("v"))

@@ -287,8 +287,8 @@ object SnapshotTable {
       key: String, boundaries: Seq[Any]): Unit =
     staged(root, version, latestVersion(root)) { stage =>
       require(boundaries.nonEmpty, "publishAligned needs at least one cutpoint")
-      writePinned(df, stage, boundaries.size + 1, tileId(df.sparkSession,
-        col(key), boundaries, Some(df.schema(key).dataType)) + 1, Seq(col(key)))
+      writePinned(df, stage, boundaries.size + 1, tileId(col(key),
+        boundaries, Some(df.schema(key).dataType)) + 1, Seq(col(key)))
       writeStats(df.sparkSession, stage, Seq(key))
     }
 
@@ -299,8 +299,8 @@ object SnapshotTable {
     * replaces was O(files) per row and overflowed the analyzer's stack
     * at the 4096-tile layouts a 100x corpus publishes.
     */
-  private def tileId(spark: SparkSession, keyCol: Column,
-      boundaries: Seq[Any], keyType: Option[DataType] = None): Column = {
+  private def tileId(keyCol: Column, boundaries: Seq[Any],
+      keyType: Option[DataType] = None): Column = {
     if (boundaries.isEmpty) return lit(0)
     // the kernel compares within one type family ([[key]]'s): it takes
     // cutpoints of ONE family that is also the key column's. `keyType`
@@ -332,7 +332,6 @@ object SnapshotTable {
           }.toArray)
           case _ => typedLit(keys.collect { case StringKey(s) => s }.toArray)
         }
-        graft.expressions.SearchSorted.register(spark)
         call_function("search_sorted", keyCol, arr)
       case None =>
         // the legacy per-boundary fold: correct via lit() coercion,
@@ -500,7 +499,7 @@ object SnapshotTable {
     lay.filter(_ => sameCols).flatMap(l => l.tiles(pk).map(t => (l, t))) match {
       case Some((l, (filesByTile, cuts))) =>
         // tile id of each update row against the broadcast cutpoints
-        val tile = tileId(spark, col(pk), cuts.map(_.value))
+        val tile = tileId(col(pk), cuts.map(_.value))
         // the layout is tiled, so a Keys plan always carries its tile set
         val changed = knownTiles.getOrElse(planOn(spark, root, vOld, pk,
           Prune.Keys(updates), l).tiles.get)
@@ -1271,7 +1270,7 @@ object SnapshotTable {
         case Some((files, cuts)) =>
           val hit = local.flatMap(localTiles(cuts, _)).getOrElse(
             graft.Trace(s"plan:tiles $root $version") {
-              frame.select(tileId(spark, col(pk), cuts.map(_.value))
+              frame.select(tileId(col(pk), cuts.map(_.value))
                 .as("__tile")).distinct().collect().map(_.getInt(0)).toSet })
           Plan(version, Some(files.indices.filter(hit).map(files)), Some(hit))
       }

@@ -93,7 +93,6 @@ object PcaStream {
       // non-ANSI Spark past the ~3e13-row moment bound — and downcast to
       // the table's BIGINT only after the driver-side magnitude guard
       // below proves they fit with headroom
-      graft.expressions.MomentCells.register(fx.sparkSession)
       val deltas = fx.select(explode(expr(momentSql)).as("m"))
         .select(col("m.kk").as("kk"), col("m.v").as("v"))
         .groupBy(col("kk"))

@@ -170,7 +170,6 @@ object Pipelines {
     * has no event time, matching the reference's keyword table refresh).
     */
   def keywordStream(docs: DataFrame): DataFrame = {
-    graft.functions.Tokenizer.register(docs.sparkSession)
     docs.selectExpr("doc_id", "split_words(text) AS word")
       .groupBy(col("word"))
       .agg(count(lit(1)).as("ct"), approx_count_distinct(col("doc_id")).as("doc_ct_approx"))

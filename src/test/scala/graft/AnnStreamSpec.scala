@@ -20,7 +20,6 @@ class AnnStreamSpec extends SparkSpec {
 
   /** 40 deterministic 8-dim vectors (murmur hash — no RNG), ids 0..39. */
   private def fixture: DataFrame = {
-    graft.expressions.DotProductDouble.register(spark)
     spark.range(40).select(col("id").as("vec_id"),
         expr("transform(sequence(1, 8), j -> " +
           "CAST(pmod(hash(id * 8 + j), 200) - 100 AS DOUBLE) / 100.0)")

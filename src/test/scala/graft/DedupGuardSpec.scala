@@ -24,7 +24,6 @@ class DedupGuardSpec extends SparkSpec {
 
   private def toFrame(rows: Seq[(Long, String, Array[Double])]) = {
     import spark.implicits._
-    graft.expressions.DotProductDouble.register(spark)
     rows.toDF("vec_id", "label", "v")
       .withColumn("nrm", sqrt(expr("dot_double(v, v)")))
   }
@@ -143,8 +142,6 @@ class DedupGuardSpec extends SparkSpec {
 
   test("early-exit intersect classifies exactly like the full kernel") {
     import spark.implicits._
-    graft.expressions.SortedIntIntersectSize.register(spark)
-    graft.expressions.SortedIntIntersectAtLeast.register(spark)
     val rnd = new scala.util.Random(7)
     def arr() = (0 until 60).map(_ => rnd.nextInt(250)).distinct.sorted.toArray
     val rows = (0 until 300).map(_ => (arr(), arr()))

@@ -25,7 +25,6 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("split_words plans as a native Generator — no UDF eval node") {
-    Tokenizer.register(spark)
     // SQL table-function position (the reference's LATERAL TABLE shape)
     val sql = spark.sql(
       "SELECT word FROM VALUES ('Spark SQL大数据!') AS t(text) " +
@@ -123,10 +122,6 @@ class FunctionsSpec extends SparkSpec {
   test("native sketch expressions equal their HOF formulations on real docs") {
     import org.apache.spark.sql.functions._
     import graft.functions.TextFunctions._
-    graft.expressions.NgramSketchHash.register(spark)
-    graft.expressions.WordBigrams.register(spark)
-    graft.expressions.WordBigramList.register(spark)
-    graft.expressions.MinHash9.register(spark)
     import spark.implicits._
     // real docs PLUS adversarial rows: multibyte chars (substring must be
     // char-based, not byte-based), case folding, short/empty strings

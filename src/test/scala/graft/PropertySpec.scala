@@ -38,7 +38,6 @@ class PropertySpec extends SparkSpec {
 
   test("native split_words Generator equals the Scala core on random input") {
     import spark.implicits._
-    Tokenizer.register(spark)
     // includes multibyte CJK, control-ish ASCII, empties — ONE Spark pass
     // over the whole sample; the emitted (row, token) multiset must equal
     // the JVM core's, pinning the Generator's eval to Tokenizer.splitWords

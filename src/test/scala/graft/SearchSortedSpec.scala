@@ -10,10 +10,7 @@ import org.apache.spark.sql.functions._
   */
 class SearchSortedSpec extends SparkSpec {
 
-  private def registered() = graft.expressions.SearchSorted.register(spark)
-
   test("equals the per-boundary when-chain on long keys, nulls to tile 0") {
-    registered()
     val bs = Seq(10L, 20L, 30L, 40L)
     val df = spark.range(-5, 60).select(
       when(col("id") % 7 === 0, lit(null)).otherwise(col("id")).as("k"))
@@ -26,7 +23,6 @@ class SearchSortedSpec extends SparkSpec {
   }
 
   test("string keys compare in Spark order; bounds may arrive unsorted") {
-    registered()
     // tok_doc-style composite keys; bounds deliberately shuffled
     val bounds = Array("ml:2", "data:7", "spark:1")
     val rows = Seq("apple:1", "data:7", "data:8", "ml:1", "ml:2", "zz:9", null)
@@ -48,7 +44,6 @@ class SearchSortedSpec extends SparkSpec {
   }
 
   test("8191 cutpoints evaluate constant-depth (the fold overflowed)") {
-    registered()
     val bs = (1L to 8191L).map(_ * 10).toArray
     val bad = spark.range(0, 100000)
       .select(col("id"),
@@ -68,8 +63,6 @@ class SearchSortedSpec extends SparkSpec {
     spark.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
     spark.conf.set("spark.sql.codegen.fallback", "false")
     try {
-      registered()
-      graft.expressions.SortedIntIntersectAtLeast.register(spark)
       val r = spark.range(0, 100)
         .select(
           call_function("search_sorted", col("id"),
@@ -90,7 +83,6 @@ class SearchSortedSpec extends SparkSpec {
   }
 
   test("double keys: NaN routes to the last tile, consistently") {
-    registered()
     val bs = Array(1.0, 2.0)
     val df = spark.createDataFrame(
       spark.sparkContext.parallelize(Seq(

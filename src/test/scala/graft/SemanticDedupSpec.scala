@@ -17,7 +17,6 @@ class SemanticDedupSpec extends SparkSpec {
 
   test("chain drops every dominated vector; keeper is the lowest dominator") {
     import spark.implicits._
-    graft.expressions.DotProductDouble.register(spark)
     // all same label (= cell); τ = 0.30 ⇒ 40° apart is in (cos 40 ≈ .766),
     // 80° apart is out (cos 80 ≈ .174), 90° strictly out
     val e = Seq(

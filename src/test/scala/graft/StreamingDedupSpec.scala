@@ -52,8 +52,6 @@ class StreamingDedupSpec extends SparkSpec {
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sortBy(_._1)
 
       // one-shot rule from the full static corpus, via the same band path
-      graft.expressions.WordBigrams.register(spark)
-      graft.expressions.MinHash9.register(spark)
       val allDocs = batches.flatten.toDF("doc_id", "text")
       val sh = operators.Dedup.shingleFrame(allDocs)
       val bands = operators.Dedup.bandFrame(sh)

@@ -38,7 +38,6 @@ class TriMomentsSpec extends SparkSpec {
   }
 
   test("tri_moments matches the nested-transform lambda cell for cell") {
-    graft.expressions.TriMoments.register(spark)
     val kernel = fx
       .select(posexplode(expr("tri_moments(fx)")).as(Seq("pos", "xy")))
       .groupBy("pos").agg(sum("xy").as("s")).collect()
@@ -77,7 +76,6 @@ class TriMomentsSpec extends SparkSpec {
   }
 
   test("moment_cells matches the keyed momentSql lambda cell for cell") {
-    graft.expressions.MomentCells.register(spark)
     def agg(exprSql: String) = fx.select(explode(expr(exprSql)).as("m"))
       .groupBy(col("m.kk")).agg(sum(col("m.v")).as("s")).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
