@@ -13,7 +13,8 @@ import org.apache.spark.sql.functions._
   * Build: the (token, doc_id, tf) posting table, range-clustered by
   * token at publish so `_STATS` min/max prune by term. Query: a term
   * lookup is [[SnapshotTable.pointLookup]] — the DRIVER selects the one
-  * tile whose token range covers the term before any task launches. At
+  * tile whose token range covers the term and reads it itself, with no
+  * Spark job; the three lookups' frames are local relations. At
   * 100 TB the posting table is the big artifact (∝ corpus tokens) and a
   * term query reads ~1/files of it; the alternative — a full corpus scan
   * with `array_contains` — is exactly what the oracle runs, so hash

@@ -40,7 +40,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * and [[readFiles]] hands Spark only the files whose [min, max] can
   * satisfy the predicate ([[Prune]]) — a dim point-lookup (the
   * reference reads one HBase row by pk, `RT/utils/DimUtil.java:22-27`)
-  * touches ONE file of a pk-clustered snapshot instead of scanning the
+  * reads ONE file of a pk-clustered snapshot, on the driver with no
+  * Spark job ([[pointLookup]]), instead of scanning the
   * table. Skipping composes with, not replaces, parquet row-group
   * pruning: at 100 TB the win is in the task LIST (a 10k-file dim scan
   * becomes a 1-file task), before any scan is scheduled. Stats cover
@@ -1325,15 +1326,26 @@ object SnapshotTable {
     }
 
   /** Dim point-lookup (reference: `RT/utils/DimUtil.java:22-27`, one
-    * HBase row by pk): stats-pruned scan + the pk filter — one file's
-    * worth of IO on a pk-clustered snapshot.
+    * HBase row by pk), served on the driver with no Spark job. The
+    * stats-pruned [[plan]] keeps the files that can hold `value` (one on
+    * a pk-clustered snapshot); [[GraftParquet.readOnDriver]] reads exactly
+    * those files here, applying parquet row-group stats and the
+    * `pkCol = value` filter while reading, and returns the matching rows
+    * as a `LocalRelation` frame, whose `collect()` starts no job.
+    *
+    * The rows are read when this is called, not at the frame's action.
+    * A plan that keeps no file gives a schema-preserving empty frame; a
+    * version without `_STATS` reads every data file.
     */
   def pointLookup(spark: SparkSession, root: String, pkCol: String,
       value: Any): Option[DataFrame] =
     latestVersion(root).map { v =>
-      readFiles(spark, root,
-        plan(spark, root, v, pkCol, Prune.Range(pkCol, value, value)))
-        .filter(col(pkCol) === lit(value))
+      plan(spark, root, v, pkCol, Prune.Range(pkCol, value, value)).files
+        .getOrElse(dataFiles(s"$root/$v")) match {
+        case Nil => readVersion(spark, root, v).filter(lit(false))
+        case fs => GraftParquet.readOnDriver(spark,
+          fs.map(f => s"$root/$v/$f"), col(pkCol) === lit(value))
+      }
     }
 
   /** CHANGE DATA FEED between two retained versions (the Delta

@@ -199,9 +199,13 @@ object Pipelines {
     *    publish clusters into [[DimClusterFiles]] files with pk stats, so
     *    every later batch rewrites only the tiles it touches, and a
     *    `sink_columns` change (dynamic DDL) takes merge's full rewrite.
-    *    Compaction stays optional maintenance. A routed row without its
-    *    pk (Phoenix rejects a null PK) fails the batch by table and pk
-    *    before anything is written: dim routes run before kafka routes.
+    *    Nothing diffs the dim, so its fresh tiles take footer stats
+    *    without row fingerprints (no stats scan per batch); a
+    *    [[graft.sources.SnapshotTable.diff]] over its versions still
+    *    answers exactly, through the full diff. Compaction stays
+    *    optional maintenance. A routed row without its pk (Phoenix
+    *    rejects a null PK) fails the batch by table and pk before
+    *    anything is written: dim routes run before kafka routes.
     */
   def routeCdcBatch(batch: DataFrame, batchId: Long, config: DataFrame, outDir: String): Unit = {
     // config table is tiny by contract; dim routes first, so a batch a
@@ -241,7 +245,8 @@ object Pipelines {
         val newest = routed.withColumn("_rn", row_number().over(wNew))
           .filter(col("_rn") === 1).drop("_rn", "op_seq")
         graft.sources.SnapshotTable.merge(newest, s"$outDir/dim/$sinkTable",
-          pk, s"v$batchId", clusterFiles = Some(DimClusterFiles))
+          pk, s"v$batchId", clusterFiles = Some(DimClusterFiles),
+          rowFingerprints = false)
       }
     }
   }

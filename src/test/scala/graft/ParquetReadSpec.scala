@@ -1,9 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.datasources.parquet.GraftParquet
 import org.apache.spark.sql.functions._
@@ -28,36 +24,9 @@ class ParquetReadSpec extends SparkSpec {
     dir
   }
 
-  /** Runs `body` and counts the Spark jobs this thread started meanwhile
-    * (tagged by a job group, so jobs of other threads never count).
-    */
-  private def jobsStartedBy[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val group = s"parquet-read-spec-${System.nanoTime}"
-    val started = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties)
-            .exists(_.getProperty("spark.jobGroup.id") == group))
-          started.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "jobs counted by ParquetReadSpec")
-    try {
-      val r = body
-      ListenerBusDrain.drain(sc)
-      (r, started.get)
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-  }
-
-  /** The schema a plain `spark.read.parquet` infers for the files a frame
-    * scans.
-    */
-  private def inferred(df: DataFrame): StructType =
-    spark.read.parquet(df.inputFiles.toIndexedSeq: _*).schema
+  /** The schema a plain `spark.read.parquet` infers for `files`. */
+  private def inferred(files: Seq[String]): StructType =
+    spark.read.parquet(files: _*).schema
 
   /** Both reads fail the same way, or both succeed with one schema. */
   private def assertSameOutcome(ours: => StructType, plain: => StructType): Unit =
@@ -111,11 +80,20 @@ class ParquetReadSpec extends SparkSpec {
                 .select(pk), Some(Seq(probe))))))),
           "pointLookup" -> (() =>
             SnapshotTable.pointLookup(spark, root, pk, probe)))
+        // a lookup's frame is a local relation without input files: its
+        // schema is checked against the files of the plan it reads
+        val lookupFiles = SnapshotTable.plan(spark, root, "v1", pk,
+          SnapshotTable.Prune.Range(pk, probe, probe)).files.get
+          .map(f => s"$root/v1/$f")
         reads.foreach { case (name, read) =>
           val (frame, jobs) = jobsStartedBy(read())
           assert(jobs == 0, s"$pk/$name started $jobs Spark job(s)")
-          frame.foreach(f => assert(f.schema == inferred(f),
-            s"$pk/$name: schema differs from inference"))
+          frame.foreach { f =>
+            val files =
+              if (name == "pointLookup") lookupFiles else f.inputFiles.toSeq
+            assert(f.schema == inferred(files),
+              s"$pk/$name: schema differs from inference")
+          }
         }
         val hit = SnapshotTable.pointLookup(spark, root, pk, probe).get
         assert(hit.select("id").collect().map(_.getLong(0)).toSeq == Seq(123L))

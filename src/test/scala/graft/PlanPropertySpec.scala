@@ -4,7 +4,7 @@ import graft.sources.SnapshotTable
 import graft.sources.SnapshotTable.Prune
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, DateType, DecimalType, DoubleType, LongType, StringType, StructField, StructType}
 import org.scalacheck.{Gen, Prop, Test}
 import org.scalacheck.Prop.propBoolean
 import org.scalacheck.rng.Seed
@@ -23,6 +23,10 @@ import org.scalacheck.rng.Seed
   *  - That plan's files, filtered to the keys, hold exactly the rows a
   *    full-version filter finds.
   *  - Range and Outside plans keep every file a row filter needs.
+  *  - A driver-served [[SnapshotTable.pointLookup]] returns exactly the
+  *    rows and schema of the scan it replaces, `readFiles` of its Range
+  *    plan filtered to `k = probe` (the table also carries a decimal and a
+  *    date column).
   *
   * Fixed seed and bounded sizes: a run costs a few hundred small jobs.
   */
@@ -78,7 +82,11 @@ class PlanPropertySpec extends SparkSpec {
       extraProbes: Seq[Any] = Nil, cutAt: Seq[Any] = Nil): Unit = {
     val keys = (cutAt ++ Gen.listOfN(400, gen).pureApply(Gen.Parameters.default,
       Seed(601L))).distinct.take(200)
-    val table = keyFrame(dt, keys, ("v", i => i.toLong, LongType))
+    val table = keyFrame(dt, keys, ("v", i => i.toLong, LongType),
+      ("amount", i => java.math.BigDecimal.valueOf(i * 37L - 500L, 2),
+        DecimalType(12, 2)),
+      ("day", i => java.sql.Date.valueOf(
+        java.time.LocalDate.of(2020, 1, 1).plusDays(i.toLong)), DateType))
     val cuts = (cutAt ++ Gen.pick(5, keys).pureApply(Gen.Parameters.default,
       Seed(602L))).distinct
     val clustered = freshRoot(s"${tag}_clustered")
@@ -92,10 +100,10 @@ class PlanPropertySpec extends SparkSpec {
       val full = SnapshotTable.readVersion(spark, root, "v1")
       // a double key compares by its string form: Scala's `==` on a boxed
       // NaN is false, so a set holding NaN would never equal itself
-      def rows(df: DataFrame) = df.collect().map(r => (r.get(0) match {
+      def rows(df: DataFrame) = df.collect().map(_.toSeq.map {
         case d: Double => d.toString
-        case k => k
-      }, r.getLong(1))).toSet
+        case v => v
+      }).toSet
 
       val probeGen = Gen.frequency(4 -> Gen.oneOf(keys), 3 -> gen,
         1 -> Gen.const(null))
@@ -112,8 +120,19 @@ class PlanPropertySpec extends SparkSpec {
         val got = rows(SnapshotTable.readFiles(spark, root, local)
           .filter(col("k").isin(hit: _*)))
         val want = rows(full.filter(col("k").isin(hit: _*)))
+        // each probe's lookup against the scan it replaces
+        val lookups = probe.map { k =>
+          val served = SnapshotTable.pointLookup(spark, root, "k", k).get
+          val scan = SnapshotTable.readFiles(spark, root, SnapshotTable.plan(
+            spark, root, "v1", "k", Prune.Range("k", k, k)))
+            .filter(col("k") === lit(k))
+          (k, served.schema == scan.schema, rows(served), rows(scan))
+        }
+        val wrong = lookups.filterNot { case (_, sameSchema, a, b) =>
+          sameSchema && a == b }
         (local == distributed) :| s"local $local != distributed $distributed" &&
-          (got == want) :| s"pruned rows $got != full rows $want"
+          (got == want) :| s"pruned rows $got != full rows $want" &&
+          wrong.isEmpty :| s"lookup differs from its scan: $wrong"
       })
 
       def needs(prune: Prune, rowFilter: org.apache.spark.sql.Column) = {

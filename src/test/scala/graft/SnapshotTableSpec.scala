@@ -29,6 +29,15 @@ class SnapshotTableSpec extends SparkSpec {
       SnapshotTable.plan(spark, root, v, c, SnapshotTable.Prune.Range(c, lo, hi)))
   }
 
+  /** The files [[SnapshotTable.pointLookup]] reads for `c = v` on the
+    * head of `root`: those its Range plan keeps.
+    */
+  private def lookupFiles(root: String, c: String, v: Any): Seq[String] = {
+    val head = SnapshotTable.latestVersion(root).get
+    SnapshotTable.plan(spark, root, head, c, SnapshotTable.Prune.Range(c, v, v))
+      .files.get
+  }
+
   private def df(rows: Seq[(Long, String)]) = {
     import spark.implicits._
     rows.toDF("id", "val")
@@ -153,10 +162,11 @@ class SnapshotTableSpec extends SparkSpec {
     assert(stats.size == 8, s"expected 8 file-stats entries, got ${stats.size}")
     assert(SnapshotTable.read(spark, root).get.count() == 10000L,
       "_STATS must be invisible to a normal parquet read")
-    // the point lookup's EXECUTED scan covers exactly one file
+    // the point lookup reads exactly the files of its plan: one
+    val hitFiles = lookupFiles(root, "id", 4321L)
+    assert(hitFiles.size == 1,
+      s"point lookup should prune to 1 file, reads ${hitFiles.size}")
     val hit = SnapshotTable.pointLookup(spark, root, "id", 4321L).get
-    assert(hit.inputFiles.length == 1,
-      s"point lookup should prune to 1 file, scans ${hit.inputFiles.length}")
     assert(hit.collect().map(_.getString(1)).toSeq == Seq("name_4321"))
     // a selective range prunes to the covering subset, result identical
     // to the unpruned filter
@@ -174,10 +184,44 @@ class SnapshotTableSpec extends SparkSpec {
       .select(format_string("k%04d", col("id")).as("k"), col("id").as("v"))
     SnapshotTable.publish(sdim, sroot, "v1",
       statsCols = Seq("k"), clusterFiles = Some(4))
+    val sFiles = lookupFiles(sroot, "k", "k0777")
+    assert(sFiles.size == 1,
+      s"string point lookup should prune to 1 file, reads ${sFiles.size}")
     val shit = SnapshotTable.pointLookup(spark, sroot, "k", "k0777").get
-    assert(shit.inputFiles.length == 1,
-      s"string point lookup should prune to 1 file, scans ${shit.inputFiles.length}")
     assert(shit.collect().map(_.getLong(1)).toSeq == Seq(777L))
+  }
+
+  test("a point lookup starts no Spark job, collect included: hit, misses, empty version, no _STATS") {
+    // even ids only: an odd key is a miss inside a kept file's range
+    val base = spark.range(0L, 2000L, 2L)
+      .select(col("id"), format_string("k%04d", col("id")).as("k"))
+    Seq[(String, Any, Any, Any)](("id", 778L, 777L, -5L),
+        ("k", "k0778", "k0777", "a")).foreach { case (pk, hit, inside, outside) =>
+      val root = freshRoot(s"nojob_$pk")
+      SnapshotTable.publish(base, root, "v1",
+        statsCols = Seq(pk), clusterFiles = Some(4))
+      val empty = freshRoot(s"nojob_empty_$pk")
+      SnapshotTable.publish(base.filter(lit(false)), empty, "v1",
+        statsCols = Seq(pk))
+      // no stats: the lookup reads every data file of the version
+      val unpruned = freshRoot(s"nojob_nostats_$pk")
+      SnapshotTable.publish(base.repartition(3), unpruned, "v1")
+      assert(lookupFiles(root, pk, inside).size == 1 &&
+        lookupFiles(root, pk, outside).isEmpty,
+        s"$pk: precondition: one miss inside a file's range, one outside all")
+      assert(SnapshotTable.readStats(unpruned).isEmpty,
+        s"$pk: precondition: a publish without statsCols writes no _STATS")
+      Seq(("hit", root, hit, 1), ("miss inside a file", root, inside, 0),
+          ("miss outside every file", root, outside, 0),
+          ("empty version", empty, hit, 0),
+          ("no _STATS", unpruned, hit, 1)).foreach { case (name, r, key, n) =>
+        val (rows, jobs) = jobsStartedBy(
+          SnapshotTable.pointLookup(spark, r, pk, key).get.collect())
+        assert(jobs == 0, s"$pk $name: the lookup started $jobs Spark job(s)")
+        assert(rows.length == n && rows.forall(_.getAs[Any](pk) == key),
+          s"$pk $name: ${rows.mkString(";")}")
+      }
+    }
   }
 
   test("diff emits exact change rows; fingerprint matching skips untouched tiles") {
@@ -302,9 +346,12 @@ class SnapshotTableSpec extends SparkSpec {
     val after = SnapshotTable.read(spark, root).get
       .collect().map(r => (r.getLong(0), r.getString(1))).toSet
     assert(after == before, "compaction must not change the data")
-    val hit = SnapshotTable.pointLookup(spark, root, "id", 1234L).get
-    assert(hit.inputFiles.length == 1,
-      s"compacted point lookup should prune to 1 file, scans ${hit.inputFiles.length}")
+    val hitFiles = lookupFiles(root, "id", 1234L)
+    assert(hitFiles.size == 1,
+      s"compacted point lookup should prune to 1 file, reads ${hitFiles.size}")
+    assert(SnapshotTable.pointLookup(spark, root, "id", 1234L).get.collect()
+      .map(r => (r.getLong(0), r.getString(1))).toSeq ==
+      before.filter(_._1 == 1234L).toSeq)
 
     // a stale/colliding version id fails loudly instead of overwriting
     intercept[IllegalArgumentException] {
@@ -441,7 +488,7 @@ class SnapshotTableSpec extends SparkSpec {
     // skipping sidecars survive the round trip: point lookups still prune
     val all = SnapshotTable.read(spark, root2).get.inputFiles.length
     val hit = SnapshotTable.pointLookup(spark, root2, "id", 7L).get
-    assert(hit.count() == 1L && hit.inputFiles.length < all,
+    assert(hit.count() == 1L && lookupFiles(root2, "id", 7L).size < all,
       "carried _STATS must keep pruning after import")
   }
 

@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,4 +14,29 @@ trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession =
     GraftSession.getOrCreate("graft-test", "local[4]")
   val sf: String = "/root/testdata/sf0.001"
+
+  /** Runs `body` and counts the Spark jobs this thread started meanwhile
+    * (tagged by a job group, so jobs of other threads never count).
+    */
+  def jobsStartedBy[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"${getClass.getSimpleName}-${System.nanoTime}"
+    val started = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties)
+            .exists(_.getProperty("spark.jobGroup.id") == group))
+          started.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, s"jobs counted by ${getClass.getSimpleName}")
+    try {
+      val r = body
+      ListenerBusDrain.drain(sc)
+      (r, started.get)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
 }

@@ -312,6 +312,35 @@ class StreamingPipelineSpec extends SparkSpec {
       s"merged dim content off: ${d.toSeq.sortBy(_._1).take(3)}")
   }
 
+  test("cdc dim route: footer stats carry no fingerprints, and a diff of its versions is still exact") {
+    val out = java.nio.file.Files.createTempDirectory("cdcstats").toString
+    val cfg = Seq(("t", "update", "hbase", "dim_t", "id,val", "id"))
+      .toDF("source_table", "operate_type", "sink_type", "sink_table",
+        "sink_columns", "sink_pk")
+    val cols = Seq("database", "tableName", "type", "op_seq", "after")
+    def mkBatch(seq0: Long, ids: Seq[Int], v: String) =
+      ids.zipWithIndex.map { case (id, i) =>
+        ("g", "t", "update", seq0 + i, Map("id" -> f"k$id%04d", "val" -> v))
+      }.toDF(cols: _*)
+    val root = s"$out/dim/dim_t"
+    Pipelines.routeCdcBatch(mkBatch(0L, 0 until 200, "a"), 0L, cfg, out)
+    // two updates in one tile and one key past the max
+    Pipelines.routeCdcBatch(mkBatch(500L, Seq(20, 21, 300), "b"), 1L, cfg, out)
+    Seq("v0", "v1").foreach { v =>
+      val stats = graft.sources.SnapshotTable.readStatsVersion(root, v).get
+      assert(stats.nonEmpty && stats.forall(_.fingerprint.isEmpty),
+        s"$v: the CDC dim's _STATS must carry no row fingerprints: $stats")
+    }
+    assert(graft.sources.SnapshotTable.diffFiles(root, "v0", "v1").isEmpty,
+      "without fingerprints a diff must take the full diff")
+    val d = graft.sources.SnapshotTable.diff(spark, root, "v0", "v1", "id")
+      .collect().map(r => (r.getString(0), r.getString(1), r.getString(2)))
+    assert(d.sorted.toSeq == Seq(
+      ("k0020", "a", "update_preimage"), ("k0020", "b", "update_postimage"),
+      ("k0021", "a", "update_preimage"), ("k0021", "b", "update_postimage"),
+      ("k0300", "b", "insert")), d.mkString(";"))
+  }
+
   test("cdc dim route: a row without its pk fails the batch by table and pk before anything is written") {
     val out = java.nio.file.Files.createTempDirectory("cdcnullpk").toString
     val cfg = Seq(
