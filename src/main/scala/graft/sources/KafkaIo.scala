@@ -50,22 +50,6 @@ object KafkaIo {
       "topic", "partition", "offset", "timestamp")
   }
 
-  /** Batch (bounded) read of a topic — the backfill path. */
-  def batchSource(
-      spark: SparkSession,
-      brokers: String,
-      topics: String,
-      startingOffsets: String = "earliest",
-      endingOffsets: String = "latest"): DataFrame =
-    spark.read.format("kafka")
-      .option("kafka.bootstrap.servers", brokers)
-      .option("subscribe", topics)
-      .option("startingOffsets", startingOffsets)
-      .option("endingOffsets", endingOffsets)
-      .load()
-      .selectExpr("CAST(key AS STRING) AS key", "CAST(value AS STRING) AS value",
-        "topic", "partition", "offset", "timestamp")
-
   /** K1: fixed-topic producer. `df` must carry a `value` string column
     * (and optionally `key`).
     */

@@ -19,10 +19,4 @@ object Sinks {
   def forStatsSink(df: DataFrame, transientCols: Seq[String]): DataFrame =
     df.drop(transientCols: _*)
       .withColumn("ts", (unix_timestamp() * 1000).cast("long"))
-
-  /** Append a stats DataFrame to a parquet "table" (the engine's stand-in
-    * for the ClickHouse table; swap for a JDBC writer on a cluster).
-    */
-  def appendStats(df: DataFrame, path: String, transientCols: Seq[String] = Nil): Unit =
-    forStatsSink(df, transientCols).write.mode("append").parquet(path)
 }

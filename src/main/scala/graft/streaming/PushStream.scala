@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.operators.PushRank
 import graft.sources.SnapshotTable
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** INCREMENTAL residual-push PageRank — the streaming wrapper over the
@@ -47,6 +47,13 @@ import org.apache.spark.sql.functions._
   *    neighborhood; converged tiles are discovered-and-skipped by the
   *    complement prune ([[SnapshotTable.Prune.Outside]]).
   *
+  * One regime rule ([[RangeListCap]]): a key set is read through the
+  * driver when it has at most `RangeListCap` keys, and stays a
+  * distributed frame past it. It is decided per key set — a batch's
+  * edge pairs, sources and nodes, a round's active rows and positive-out
+  * sources — through one bounded collect, and every out-edge read goes
+  * through one reader; the row algebra is one DataFrame plan either way.
+  *
   * Within a batch the seed + `rounds` push rounds evolve an in-memory
   * OVERLAY of changed rows; the state table commits ONCE per batch
   * (tile-local merge), the scalar sidecar (nn, dang, shift) LAST — its
@@ -62,16 +69,29 @@ object PushStream {
 
   private val Damp = graft.operators.Graph.Damp
 
-  /** Past this many touched/active sources a per-source driver range
-    * list stops being "metadata-scale" — the adaptive reads below fall
-    * back to one full scan + semi-join, the right plan when the touched
+  /** The one regime rule: a key set is read through the driver when it
+    * has at most this many keys. Such a set (a batch's edge pairs, its
+    * sources, its nodes, a round's active rows and positive-out sources)
+    * is collected, its key frame becomes a LocalRelation, its tile
+    * discovery is driver math and its out-edges are a per-source range
+    * list. Past the cap the set stays a distributed frame and its
+    * out-edges are one full scan + semi-join, the right plan when the
     * set approaches the corpus (bulk loads, initial convergence). The
     * incremental steady state — the regime this wrapper exists for —
-    * stays far below it. A var only as a test seam (like
-    * `SnapshotTable.onBeforeCommit`): specs set it to 0 to drive every
-    * batch down the distributed path; [[applyBatch]] reads it once.
+    * stays far below it. Decided per key set, so one batch may take both
+    * sides; the row algebra is the same on both. A var only as a test
+    * seam (like `SnapshotTable.onBeforeCommit`); [[applyBatch]] reads it
+    * once.
     */
   private[graft] var RangeListCap = 100000L
+
+  /** One key set of a batch: its one-column key frame, and its ids when
+    * they are on the driver (the frame is then a LocalRelation over
+    * them). `size` counts the ids, or runs one count job past the cap.
+    */
+  private final case class KeySet(frame: DataFrame, ids: Option[Array[Long]]) {
+    def size: Long = ids.fold(frame.count())(_.length.toLong)
+  }
 
   /** The three roots of one maintained push-rank: the additive edge
     * table, the (node, out_n, p, r) state, and the 1-row scalar sidecar
@@ -135,19 +155,46 @@ object PushStream {
     // feeding every batch) survive
     graft.CacheRegistry.scoped { try {
       import spark.implicits._
-      // ---- 0. ONE bounded collect decides the regime and feeds every
-      // driver-side derivation: in the incremental regime (≤ RangeListCap
-      // delta rows — the regime this wrapper exists for) the batch's
-      // sources, node set, edge keys and state-tile hits are all driver
-      // math over this list, its key frames become LocalRelations
-      // (broadcast joins, no pre-jobs), and each tile discovery that
-      // previously launched its own Spark job disappears. Past the cap
-      // (a bulk load, where the touched set approaches the corpus) the
-      // distributed path below runs exactly as before.
-      val batchPairs = traced(batchId, "batch_collect") {
-        deltas.select(col("src"), col("dst"))
-          .limit(cap.toInt + 1).collect() }
-      val local = batchPairs.length <= cap
+      // ---- 0. the regime, decided per key set (RangeListCap's rule) --
+      // every key set below goes through ONE bounded collect and every
+      // out-edge read through ONE reader. In the incremental regime (the
+      // one this wrapper exists for) every set fits: its key frame is a
+      // LocalRelation (broadcast joins, no pre-jobs) and its tile
+      // discovery is driver math. Past the cap (a bulk load, where the
+      // set approaches the corpus) it stays a distributed frame.
+      def bounded(label: String, rows: DataFrame): Option[Array[Row]] = {
+        val got = traced(batchId, label) {
+          rows.limit(cap.toInt + 1).collect() }
+        if (got.length <= cap) Some(got) else None
+      }
+      // the key set `name`: the `known` ids, else the bounded collect of
+      // `frame`; past the cap `frame` itself (built only then)
+      def keySet(label: String, name: String, known: Option[Array[Long]])(
+          frame: => DataFrame): KeySet = {
+        lazy val f = frame
+        known.orElse(bounded(label, f).map(_.map(_.getLong(0)))) match {
+          case Some(ids) => KeySet(ids.toSeq.toDF(name), Some(ids))
+          case None => KeySet(f, None)
+        }
+      }
+      // the n > 0 out-edges of `srcs` at `version`: with the ids on the
+      // driver, one "<src> " prefix range per source ('!' sorts between
+      // the ' ' separator and digit '0', so the range brackets exactly
+      // this source's keys); past the cap, the whole version. Either way
+      // semi-joined to the key frame.
+      def outEdges(version: String, srcs: KeySet): DataFrame =
+        (srcs.ids match {
+          case Some(ids) => SnapshotTable.readFiles(spark, rt.edges,
+            SnapshotTable.plan(spark, rt.edges, version, "edge_key",
+              SnapshotTable.Prune.Ranges("edge_key",
+                ids.map(s => (s"$s ", s"$s!")).toSeq)))
+          case None => SnapshotTable.readVersion(spark, rt.edges, version)
+        }).filter(col("n") > 0)
+          .join(srcs.frame, Seq("src"), "left_semi")
+          .select(col("src"), col("dst"), col("n"))
+
+      val batchPairs =
+        bounded("batch_collect", deltas.select(col("src"), col("dst")))
 
       // ---- 1. additive edge fold (exactly-once inside AdditiveFold) --
       // a retraction may cancel an edge exactly (n = 0 keeps the key,
@@ -166,9 +213,8 @@ object PushStream {
         // n riding in the stats makes the overdraw guard a metadata
         // read AND lets the n>0 out-edge reads prune all-zero tiles
         extraStatsCols = Seq("n"),
-        localKeys = if (local)
-          Some(batchPairs.map(r => s"${r.getLong(0)} ${r.getLong(1)}").toSeq)
-        else None) }
+        localKeys = batchPairs.map(
+          _.map(r => s"${r.getLong(0)} ${r.getLong(1)}").toSeq)) }
 
       // ---- 2. pinned reads + previous scalars -----------------------
       val prevStateV = VersionedState.below(rt.state, batchId)
@@ -194,41 +240,16 @@ object PushStream {
         statePlans = statePlans.map(_ ++ plan)
         SnapshotTable.readFiles(spark, rt.state, plan)
       }
-      def readEdges(version: String, ranges: Seq[(String, String)]) =
-        SnapshotTable.readFiles(spark, rt.edges, SnapshotTable.plan(spark,
-          rt.edges, version, "edge_key",
-          SnapshotTable.Prune.Ranges("edge_key", ranges)))
 
       // ---- 3. touched sources and their old/new out-edges -----------
-      // one "<src> " prefix range per touched source — driver list is
-      // batch-scale by the same contract as Prune.Keys' key
-      // collect ('!' sorts between the ' ' separator and digit '0', so
-      // the range brackets exactly this source's keys). ADAPTIVE: past
-      // RangeListCap sources (a bulk load, not an incremental batch) a
-      // driver range list would itself be corpus-scale — fall back to
-      // one full scan + semi-join, which is the right plan when the
-      // touched set IS the corpus
-      val srcIds: Array[Long] =
-        if (local) batchPairs.map(_.getLong(0)).distinct.sorted
-        else traced(batchId, "srcs_collect") {
-          deltas.select(col("src")).distinct()
-            .limit(cap.toInt + 1).collect().map(_.getLong(0)) }
-      val nSrcs = srcIds.length.toLong
-      val srcs =
-        if (local) srcIds.toSeq.toDF("src")
-        else graft.CacheRegistry.persist(deltas.select(col("src")).distinct())
-      val srcRanges =
-        if (nSrcs > cap) Nil
-        else srcIds.sorted.map(s => (s"$s ", s"$s!")).toSeq
-      def outEdgesOf(version: String): DataFrame =
-        (if (srcRanges.isEmpty && nSrcs > 0)
-          SnapshotTable.readVersion(spark, rt.edges, version)
-        else readEdges(version, srcRanges))
-          .filter(col("n") > 0)
-          .join(srcs, Seq("src"), "left_semi")
-          .select(col("src"), col("dst"), col("n"))
-      val oldE = prevEdgeV.map(outEdgesOf).getOrElse(emptyEdges(spark))
-      val newE = outEdgesOf(v)
+      // where the batch pairs fit, the sources and nodes come from them
+      // with no extra collect; otherwise from their own frames, persisted
+      // because several reads below consume a set that stays distributed
+      val srcs = keySet("srcs_collect", "src",
+          batchPairs.map(_.map(_.getLong(0)).distinct)) {
+        graft.CacheRegistry.persist(deltas.select(col("src")).distinct()) }
+      val oldE = prevEdgeV.map(outEdges(_, srcs)).getOrElse(emptyEdges(spark))
+      val newE = outEdges(v, srcs)
       // persisted: the fused setup aggregation AND the seed overlay both
       // read the new out-degrees — unpersisted, each would re-run the
       // pruned edge read
@@ -236,24 +257,18 @@ object PushStream {
         newE.groupBy(col("src")).agg(sum(col("n")).as("out_new")))
 
       // ---- 4. node set + state rows for the batch's neighborhood ----
-      val batchNodeIds: Array[Long] =
-        if (local)
-          (batchPairs.map(_.getLong(0)) ++ batchPairs.map(_.getLong(1)))
-            .distinct
-        else Array.empty
-      val batchNodes =
-        if (local) batchNodeIds.toSeq.toDF("node")
-        else graft.CacheRegistry.persist(
-          deltas.select(col("src").as("node"))
-            .union(deltas.select(col("dst").as("node"))).distinct())
+      val batchNodes = keySet("nodes_collect", "node", batchPairs.map(ps =>
+          (ps.map(_.getLong(0)) ++ ps.map(_.getLong(1))).distinct)) {
+        graft.CacheRegistry.persist(deltas.select(col("src").as("node"))
+          .union(deltas.select(col("dst").as("node"))).distinct()) }
       // ONE tile read of the previous state covers both consumers below
       // (node-set growth wants state ∩ batchNodes; dangling flips want
-      // state ∩ srcs ⊆ batchNodes); in the local regime the key→tile
-      // discovery is driver binary-search math, zero jobs
+      // state ∩ srcs ⊆ batchNodes); with the node ids on the driver the
+      // key→tile discovery is driver binary-search math, zero jobs
       val stateBatch = graft.CacheRegistry.persist(prevStateV.map { pv =>
-        readState(pv, SnapshotTable.Prune.Keys(batchNodes,
-            if (local) Some(batchNodeIds.toSeq) else None))
-          .join(batchNodes, Seq("node"), "left_semi")
+        readState(pv, SnapshotTable.Prune.Keys(batchNodes.frame,
+            batchNodes.ids.map(_.toSeq)))
+          .join(batchNodes.frame, Seq("node"), "left_semi")
       }.getOrElse(emptyState(spark)))
 
       // ---- 4+5 fused: node-set growth AND dangling flips in ONE job --
@@ -261,7 +276,7 @@ object PushStream {
       // state-row count among the batch's nodes gives the growth by
       // driver subtraction; the dangling-flip sum rides the same pass,
       // restricted to touched sources by the is-src flag
-      val isSrc = srcs.select(col("src").as("node"), lit(1).as("__s"))
+      val isSrc = srcs.frame.select(col("src").as("node"), lit(1).as("__s"))
       val outNewN = outNew.withColumnRenamed("src", "node")
       val setupRow = traced(batchId, "setup_agg") { stateBatch
         .join(isSrc, Seq("node"), "left")
@@ -276,10 +291,8 @@ object PushStream {
             .as("dflip"))
         .collect().head }
       val nState = setupRow.getLong(0)
-      val nBatchNodes =
-        if (local) batchNodeIds.length.toLong
-        else traced(batchId, "batch_nodes") { batchNodes.count() }
-      val newNodes = batchNodes.join(stateBatch.select(col("node")),
+      val nBatchNodes = traced(batchId, "batch_nodes") { batchNodes.size }
+      val newNodes = batchNodes.frame.join(stateBatch.select(col("node")),
         Seq("node"), "left_anti")
       val nn1 = nn0 + (nBatchNodes - nState)
       require(nn1 > 0, "PushStream: empty node set")
@@ -322,7 +335,7 @@ object PushStream {
 
       // ---- 8. seed overlay: rows whose stored state changes ---------
       val candNodes = graft.CacheRegistry.persist(
-        srcs.select(col("src").as("node"))
+        srcs.frame.select(col("src").as("node"))
           .union(seedDr.select(col("node")))
           .union(newNodes).distinct())
       val stateCand = prevStateV.map { pv =>
@@ -370,16 +383,12 @@ object PushStream {
         val active = graft.CacheRegistry.persist(
           fromTable.unionByName(overlay)
             .filter(abs(col("r") + lit(shiftPre)) > eps))
-        // ONE bounded collect answers FOUR questions that were previously
-        // separate jobs: is the round drained, the dangling delta, the
-        // positive-out frontier size, and the source list the pruned
-        // edge read needs. Past the cap (bulk convergence): one agg job
-        // for the scalars, full scan + semi-join for the edges — the
-        // right plan when the frontier IS the corpus.
-        val actRows = traced(batchId, s"active_collect_r$k") {
-          active.select(col("node"), col("out_n"), col("r"))
-            .limit(cap.toInt + 1).collect() }
-        if (actRows.isEmpty) {
+        // ONE bounded collect answers three questions: is the round
+        // drained, the dangling delta, and the positive-out sources whose
+        // out-edges the round reads
+        val actRows = bounded(s"active_collect_r$k",
+          active.select(col("node"), col("out_n"), col("r")))
+        if (actRows.exists(_.isEmpty)) {
           // an empty active set makes this and all remaining rounds the
           // identity (the oracle's CASE mirrors this as a no-op)
           drained = true
@@ -388,54 +397,25 @@ object PushStream {
             col("p").as("p_old"),
             (col("p") + col("r") + lit(shiftPre)).as("p_new"),
             col("out_n"), col("r").as("r_a"))
-          // pushed dangling mass re-spreads uniformly: scalar, not rows
-          val (dangDelta, nASrcs, aSrcIdsOpt) =
-            if (actRows.length <= cap) {
-              var dd = 0L
-              val b = Array.newBuilder[Long]
-              actRows.foreach { r =>
-                if (r.getLong(1) == 0L) dd += r.getLong(2) + shiftPre
-                else b += r.getLong(0) }
-              val ids = b.result()
-              (dd, ids.length.toLong, Some(ids))
-            } else {
-              val aggRow = traced(batchId, s"dang_delta_r$k") { activeS.agg(
-                coalesce(sum(when(col("out_n") === 0,
-                  col("r_a") + lit(shiftPre))), lit(0L)).as("dd"),
-                count(when(col("out_n") > 0, lit(1))).as("npos"))
-                .collect().head }
-              (aggRow.getLong(0), aggRow.getLong(1), None)
-            }
+          // pushed dangling mass re-spreads uniformly: scalar, not rows —
+          // a driver sum over the collected rows, one aggregate past the cap
+          val dangDelta = actRows match {
+            case Some(rows) =>
+              rows.filter(_.getLong(1) == 0L).map(_.getLong(2) + shiftPre).sum
+            case None => traced(batchId, s"dang_delta_r$k") { activeS
+              .agg(coalesce(sum(when(col("out_n") === 0,
+                col("r_a") + lit(shiftPre))), lit(0L)))
+              .collect().head.getLong(0) }
+          }
           shift += PushRank.gtermOf(dang + dangDelta, nn1) -
             PushRank.gtermOf(dang, nn1)
           dang += dangDelta
-          // exact per-edge new-minus-old deltas over the frontier's
-          // out-edges — frontier-scale driver range list in the
-          // incremental regime, one full scan + semi-join past
-          // RangeListCap (bulk convergence, where the frontier IS the
-          // corpus and a range list would be corpus-scale)
-          val aEdges =
-            if (nASrcs == 0) emptyEdges(spark)
-            else {
-              val idsOpt = aSrcIdsOpt.orElse(
-                if (nASrcs > cap) None
-                else Some(traced(batchId, s"asrc_collect_r$k") {
-                  activeS.filter(col("out_n") > 0).select(col("src"))
-                    .collect().map(_.getLong(0)) }))
-              idsOpt match {
-                case Some(ids) =>
-                  readEdges(v, ids.sorted.map(s => (s"$s ", s"$s!")).toSeq)
-                    .filter(col("n") > 0)
-                    .join(ids.toSeq.toDF("src"), Seq("src"), "left_semi")
-                    .select(col("src"), col("dst"), col("n"))
-                case None =>
-                  SnapshotTable.readVersion(spark, rt.edges, v)
-                    .filter(col("n") > 0)
-                    .join(activeS.filter(col("out_n") > 0)
-                      .select(col("src")), Seq("src"), "left_semi")
-                    .select(col("src"), col("dst"), col("n"))
-              }
-            }
+          // exact per-edge new-minus-old deltas over the out-edges of the
+          // frontier's positive-out sources
+          val aSrcs = keySet(s"asrc_collect_r$k", "src",
+              actRows.map(_.filter(_.getLong(1) != 0L).map(_.getLong(0)))) {
+            activeS.filter(col("out_n") > 0).select(col("src")) }
+          val aEdges = outEdges(v, aSrcs)
           // persisted: drR feeds the out-neighbor tile discovery AND
           // both overlay branches (three consumers of the pruned-edge
           // delta subtree)

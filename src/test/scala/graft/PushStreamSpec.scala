@@ -18,8 +18,14 @@ import org.apache.spark.sql.functions._
   *     identical state;
   *  3. the fresh-checkpoint guard rejects a batch id behind the head;
   *  4. an overdrawing retraction fails by name;
-  *  5. both sides of `RangeListCap` — the driver-side incremental path
-  *     and the distributed fallback — commit identical state and scalars.
+  *  5. both sides of `RangeListCap` commit identical state and scalars,
+  *     under three caps: the default cap keeps every key set of the
+  *     fixture on the driver (the incremental regime); cap 0 sends every
+  *     non-empty key set down the distributed side (frame-driven tile
+  *     discovery, full-scan edge reads, an aggregated dangling delta);
+  *     and a cap between batch 1's distinct-source and edge-pair counts
+  *     mixes the two within one batch: its pairs (and nodes) stay
+  *     distributed while its sources are read through the driver.
   */
 class PushStreamSpec extends SparkSpec {
   import spark.implicits._
@@ -168,9 +174,12 @@ class PushStreamSpec extends SparkSpec {
       (state, (sc.getAs[Long]("nn"), sc.getAs[Long]("dang"),
         sc.getAs[Long]("shift")))
     }
-    // cap 0 sends every non-empty batch down the distributed branches
-    // (frame-driven tile discovery, full-scan edge reads, aggregated
-    // round scalars); the default cap keeps this fixture driver-side
+    // the regimes of law 5; the mixed cap is batch 1's distinct-source
+    // count, which its edge pairs exceed
+    val b1Pairs = insBatch(1).count()
+    val mixedCap = insBatch(1).select(col("src")).distinct().count()
+    assert(mixedCap < b1Pairs, s"batch 1's $b1Pairs edge pairs do not " +
+      s"exceed its $mixedCap distinct sources: no mixed cap exists")
     def run(tag: String, cap: Long) = {
       val rt = freshRoots(tag)
       val saved = PushStream.RangeListCap
@@ -182,11 +191,13 @@ class PushStreamSpec extends SparkSpec {
         committed(rt)
       } finally PushStream.RangeListCap = saved
     }
-    val distributed = run("pushspec_cap0", 0L)
     val local = run("pushspec_capdefault", PushStream.RangeListCap)
-    batches.indices.foreach { i =>
-      assert(distributed(i) == local(i),
-        s"regimes disagree after step ${i + 1} (batch ${batches(i)._1})")
+    Seq(0L -> run("pushspec_cap0", 0L),
+        mixedCap -> run("pushspec_capmixed", mixedCap)).foreach {
+      case (cap, other) => batches.indices.foreach { i =>
+        assert(other(i) == local(i), s"cap $cap disagrees with the " +
+          s"default cap after step ${i + 1} (batch ${batches(i)._1})")
+      }
     }
     assert(local(2) != local(1), "the retraction batch changed nothing")
   }

@@ -2,7 +2,8 @@
 # Replicates the driver's per-round flow locally:
 #   t1 smoke (entry at sf0.001) -> t2 correctness (Verify + DuckDB oracle
 #   at sf0.01) -> perfbench and tools self-tests, one untraced run per workload
-#   registered in BENCHMARK.json -> bench (sf0.1, one JSON line) -> full
+#   registered in BENCHMARK.json, then one traced stream_ingest run whose
+#   per-tick layer counts are printed -> bench (sf0.1, one JSON line) -> full
 #   test suite -> report: known-warning counts in the Verify (sf0.01) and
 #   test logs, and code-line counts (reports only, never a gate).
 set -euo pipefail
@@ -28,6 +29,18 @@ for w in $(python3 -c 'import json; print(" ".join(w["name"] for w in json.load(
     | python3 -c 'import json, sys; sys.exit(0 if json.loads(sys.stdin.read())["correct"] else 1)' \
     || { echo "perfbench $w: run failed or correct: false"; exit 1; }
 done
+
+echo "== perfbench traced stream_ingest @ seed 1: per-tick layer counts (a report, not a gate)"
+python3 perfbench/run.py --workload stream_ingest --seed 1 --seconds 10 --trace 1 \
+  | tail -n 1 \
+  | python3 -c '
+import json, sys
+r = json.loads(sys.stdin.read())
+print("correct", r["correct"])
+for k in ("operators.jobs", "streaming.push.jobs", "session.actions",
+          "scan.files_read"):
+    m = r["metrics"].get(k)
+    print(k, m["value"] if m else "n/a")'
 
 echo "== bench @ sf0.1"
 # a failed query (its time becomes the 1e9 sentinel) or a stale release
@@ -63,6 +76,7 @@ for log in /tmp/graft_dryrun_verify.log /tmp/graft_dryrun_test.log; do
   done
 done
 echo "== report: code lines (tools/loc.py: physical, code, path)"
-python3 tools/loc.py src/main/scala src/main/scala/graft/sources/SnapshotTable.scala
+python3 tools/loc.py src/main/scala src/main/scala/graft/sources/SnapshotTable.scala \
+  src/main/scala/graft/streaming/PushStream.scala
 
 echo "DRYRUN OK"
