@@ -1,7 +1,7 @@
 package graft
 
 import graft.expressions.GraftExtensions
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, GraftPlanUtil, SparkSession}
 
 /** The one place an engine session is configured: [[getOrCreate]] builds
   * every session the engine owns (Verify, Bench, Demo, the tools, the
@@ -17,6 +17,19 @@ import org.apache.spark.sql.SparkSession
   * cluster the same settings apply except `master`, and shuffle partitions
   * should be sized to ~2-3x total cores (AQE coalesces the excess at
   * runtime, so a high static value is safe at 100 TB).
+  *
+  * Micro-batches ([[microBatch]]): every `foreachBatch` twin runs a batch
+  * of at most [[RangeListCap]] rows in an [[interpreted]] clone of its
+  * session, with whole-stage codegen off and Spark's expression factories
+  * interpreted. At ~100 rows a batch's cost is per-plan, not per-row, and
+  * Spark's generated-code cache (100 entries, a static conf) cannot hold
+  * the ~600 classes a tick of three twins compiled, so every tick
+  * recompiled them: about 28 % of a traced tick. Interpreted, a tick
+  * compiles about a dozen classes, the schema-keyed helpers Spark compiles
+  * in any session. A batch past the cap runs in its own session and
+  * compiles as before, since its per-row work is what codegen pays for;
+  * so does work a batch does not bound (`RankStream`'s rank publish, the
+  * push rounds of an empty push batch). AQE stays on in both.
   */
 object GraftSession {
 
@@ -71,4 +84,61 @@ object GraftSession {
       if (!registry.functionExists(name)) registry.registerFunction(name, info, build)
     }
   }
+
+  /** The one regime value. A micro-batch of at most this many rows runs
+    * interpreted ([[microBatch]]), and the push twin reads a key set of at
+    * most this many keys through the driver (`PushStream`); past it the
+    * work approaches the corpus (bulk loads, initial convergence) and
+    * takes the compiled, distributed plans. A var only as a test seam
+    * (like `SnapshotTable.onBeforeCommit`).
+    */
+  private[graft] var RangeListCap = 100000L
+
+  /** Where a `foreachBatch` twin runs `batch`, decided once per batch by
+    * one bounded count of its rows (a take of at most `RangeListCap + 1`,
+    * itself interpreted): None for an empty batch; the batch re-homed into
+    * the [[interpreted]] clone of its session when it has at most
+    * [[RangeListCap]] rows; the batch unchanged past the cap. A twin takes
+    * its session from the returned frame, so every frame, merge and
+    * publish it derives runs where the batch does. The take runs the jobs
+    * of the `isEmpty` check it replaces; a twin that had none (push, CDC)
+    * gains one.
+    */
+  def microBatch(batch: DataFrame): Option[DataFrame] = {
+    val small = GraftPlanUtil.rehome(batch, interpreted(batch.sparkSession))
+    // a take, as `isEmpty` runs it: one job over a one-partition batch,
+    // where `limit(…).count()` adds a shuffle to one partition
+    small.select().limit(RangeListCap.toInt + 1).collect().length match {
+      case 0 => None
+      case n if n <= RangeListCap => Some(small)
+      case _ => Some(batch)
+    }
+  }
+
+  /** A clone of `spark` that plans no generated code: whole-stage codegen
+    * off, and `spark.sql.codegen.factoryMode` (internal; its values name
+    * how projections, predicates and orderings are built) at
+    * `NO_CODEGEN`, so they are interpreted rather than compiled. A few
+    * helpers Spark always compiles (cached-column readers, the partial
+    * aggregate's row joiner, shuffle orderings) depend only on schemas,
+    * and each session compiles its own copy: so the clone is kept per
+    * session, for its last few sessions, and reused batch after batch.
+    * Its confs are re-read from `spark` on every call, so a conf set on
+    * `spark` reaches the next batch; the native functions and the query
+    * listeners are `spark`'s when the clone is built.
+    */
+  private[graft] def interpreted(spark: SparkSession): SparkSession =
+    clones.synchronized {
+      val clone = clones.computeIfAbsent(spark, GraftPlanUtil.cloneSession(_))
+      GraftPlanUtil.setConfs(clone, spark.conf.getAll ++ Seq(
+        "spark.sql.codegen.wholeStage" -> "false",
+        "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"))
+      clone
+    }
+
+  private val clones =
+    new java.util.LinkedHashMap[SparkSession, SparkSession](8, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[SparkSession, SparkSession]): Boolean = size > 4
+    }
 }

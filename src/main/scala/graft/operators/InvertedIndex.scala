@@ -214,9 +214,12 @@ object InvertedIndex {
     * a fresh checkpoint against an existing index re-numbers batches
     * from 0 and must fail fast with the cause named.
     */
-  private[graft] def applyDocBatch(batch: DataFrame, batchId: Long,
+  private[graft] def applyDocBatch(input: DataFrame, batchId: Long,
       root: String, files: Option[Int] = None): Unit = {
-    if (batch.isEmpty) return
+    val batch = graft.GraftSession.microBatch(input) match {
+      case Some(b) => b
+      case None => return
+    }
     val version = s"v$batchId"
     graft.streaming.VersionedState.requireNotBehind("index stream", root,
       batchId, "the index")

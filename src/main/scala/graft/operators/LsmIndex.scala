@@ -200,9 +200,12 @@ object LsmIndex {
     * `maxSegments`. Bytes written on the ingest path ∝ the batch,
     * unconditionally.
     */
-  private[graft] def applyDocBatch(batch: DataFrame, batchId: Long,
+  private[graft] def applyDocBatch(input: DataFrame, batchId: Long,
       root: String, maxSegments: Int = MaxSegments): Unit = {
-    if (batch.isEmpty) return
+    val batch = graft.GraftSession.microBatch(input) match {
+      case Some(b) => b
+      case None => return
+    }
     val post = InvertedIndex.keyedPostings(batch).persist()
     try applyPostings(post, batchId, root, maxSegments)
     finally { post.unpersist(blocking = false); () }

@@ -85,9 +85,12 @@ object AnnStream {
     * and, first batch only, the model rows — into the maintained table.
     * Idempotent per batchId.
     */
-  def applyBatch(batch: DataFrame, batchId: Long, root: String,
+  def applyBatch(input: DataFrame, batchId: Long, root: String,
       clusterFiles: Int = 8): Unit = {
-    if (batch.isEmpty) return
+    val batch = graft.GraftSession.microBatch(input) match {
+      case Some(b) => b
+      case None => return
+    }
     val spark = batch.sparkSession
     val head = VersionedState.requireNotBehind("AnnStream", root, batchId,
       "the table").map(lv => s"v$lv")

@@ -90,15 +90,14 @@ object AsofStream {
       checkpointDir: String, stateDepth: Int = 1): StreamingQuery =
     events.writeStream
       .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
+      .foreachBatch { (input: DataFrame, batchId: Long) =>
+        graft.GraftSession.microBatch(input).foreach { batch =>
           val spark = batch.sparkSession
           val (matched, newState) =
             enrichBatch(spark, batch, stateRoot, batchId, stateDepth)
           ExactlyOnce.write(matched, outDir, batchId)
           SnapshotTable.publish(newState, stateRoot, s"v$batchId")
         }
-        ()
       }
       .start()
 }

@@ -66,14 +66,13 @@ object AttributionStream {
       checkpointDir: String): StreamingQuery =
     events.writeStream
       .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
+      .foreachBatch { (input: DataFrame, batchId: Long) =>
+        graft.GraftSession.microBatch(input).foreach { batch =>
           val spark = batch.sparkSession
           val (credit, newState) = creditBatch(spark, batch, stateRoot, batchId)
           ExactlyOnce.write(credit, outDir, batchId)
           SnapshotTable.publish(newState, stateRoot, s"v$batchId")
         }
-        ()
       }
       .start()
 }

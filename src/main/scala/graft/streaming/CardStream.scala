@@ -36,9 +36,9 @@ object CardStream {
       checkpointDir: String): StreamingQuery =
     docs.writeStream
       .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty)
-          ExactlyOnce.write(TextAnalysis.cardPartials(batch), partialsDir, batchId)
+      .foreachBatch { (input: DataFrame, batchId: Long) =>
+        graft.GraftSession.microBatch(input).foreach(batch =>
+          ExactlyOnce.write(TextAnalysis.cardPartials(batch), partialsDir, batchId))
         // no CacheRegistry.clear() here: the card chain registers no
         // per-query persists, and a long-lived stream clearing the
         // GLOBAL registry would unpersist frames owned by whatever

@@ -37,9 +37,12 @@ object CollocStream {
   /** One micro-batch of (doc_id, text) rows: fold its bigram and unigram
     * counts into the maintained tables. Idempotent per batchId.
     */
-  def applyBatch(batch: DataFrame, batchId: Long, pairRoot: String,
+  def applyBatch(input: DataFrame, batchId: Long, pairRoot: String,
       uniRoot: String, clusterFiles: Int = 8): Unit = {
-    if (batch.isEmpty) return
+    val batch = graft.GraftSession.microBatch(input) match {
+      case Some(b) => b
+      case None => return
+    }
     // BOTH tables must agree the checkpoint is not fresh: a wiped
     // pairRoot with a surviving uniRoot (or vice versa) would slip a
     // head-only check and double-count the surviving table's merges,

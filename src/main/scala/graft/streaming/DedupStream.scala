@@ -53,9 +53,9 @@ object DedupStream {
     IncrementalDedup.markStreamActive(spark, idx)
     val q = docs.writeStream
       .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+      .foreachBatch { (input: DataFrame, batchId: Long) =>
         // batch-scoped registry release (see CacheRegistry.scoped)
-        graft.CacheRegistry.scoped { if (!batch.isEmpty) {
+        graft.CacheRegistry.scoped { graft.GraftSession.microBatch(input).foreach { batch =>
           val verdicts = IncrementalDedup.ingestBatch(batch.sparkSession, batch, idx)
           // exactly-once verdict commit: batch content is deterministic
           // (same docs → same index join → same verdicts), so the

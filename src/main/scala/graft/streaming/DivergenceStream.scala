@@ -46,9 +46,12 @@ object DivergenceStream {
   /** One micro-batch of (doc_id, source, text) rows: fold its (source,
     * token) counts into the maintained table. Idempotent per batchId.
     */
-  def applyBatch(batch: DataFrame, batchId: Long, root: String,
+  def applyBatch(input: DataFrame, batchId: Long, root: String,
       clusterFiles: Int = 8): Unit = {
-    if (batch.isEmpty) return
+    val batch = graft.GraftSession.microBatch(input) match {
+      case Some(b) => b
+      case None => return
+    }
     VersionedState.requireNotBehind("DivergenceStream", root, batchId,
       "the table")
     val deltas = graft.operators.CorpusStats.sourceTokenCounts(batch)

@@ -44,10 +44,13 @@ object IvmStream {
     * it to the view. Idempotent per (batchId) — safe under foreachBatch's
     * at-least-once replay.
     */
-  def applyBatch(batch: DataFrame, batchId: Long, dimRoot: String,
+  def applyBatch(input: DataFrame, batchId: Long, dimRoot: String,
       viewRoot: String, pk: String, bucket: Column, sums: Seq[String],
       deleteWhen: Option[Column] = None, clusterFiles: Int = 16): Unit = {
-    if (batch.isEmpty) return
+    val batch = graft.GraftSession.microBatch(input) match {
+      case Some(b) => b
+      case None => return
+    }
     val spark = batch.sparkSession
     val version = s"v$batchId"
     // a stream restarted on a FRESH checkpoint against an existing

@@ -46,9 +46,12 @@ object LineDedupStream {
     * distinct segment counts into the maintained df table. Idempotent per
     * batchId.
     */
-  def applyBatch(batch: DataFrame, batchId: Long, root: String,
+  def applyBatch(input: DataFrame, batchId: Long, root: String,
       clusterFiles: Int = 8): Unit = {
-    if (batch.isEmpty) return
+    val batch = graft.GraftSession.microBatch(input) match {
+      case Some(b) => b
+      case None => return
+    }
     VersionedState.requireNotBehind("LineDedupStream", root, batchId,
       "the table")
     // per-doc-distinct BEFORE counting: a segment repeated inside one doc

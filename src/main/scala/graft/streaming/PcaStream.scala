@@ -68,9 +68,12 @@ object PcaStream {
   /** One micro-batch of (…, embedding) rows: fold its moment deltas into
     * the maintained table. Idempotent per batchId.
     */
-  def applyBatch(batch: DataFrame, batchId: Long, root: String,
+  def applyBatch(input: DataFrame, batchId: Long, root: String,
       clusterFiles: Int = 8): Unit = {
-    if (batch.isEmpty) return
+    val batch = graft.GraftSession.microBatch(input) match {
+      case Some(b) => b
+      case None => return
+    }
     VersionedState.requireNotBehind("PcaStream", root, batchId, "the table")
     // persisted cache boundary: without it CollapseProject inlines the
     // floor transform into the pair lambda and re-floors d times per row

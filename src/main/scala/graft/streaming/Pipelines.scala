@@ -206,8 +206,12 @@ object Pipelines {
     *    optional maintenance. A routed row without its pk (Phoenix
     *    rejects a null PK) fails the batch by table and pk before
     *    anything is written: dim routes run before kafka routes.
+    *
+    * An empty batch writes nothing; a batch of at most
+    * [[graft.GraftSession.RangeListCap]] rows runs interpreted
+    * ([[graft.GraftSession.microBatch]]).
     */
-  def routeCdcBatch(batch: DataFrame, batchId: Long, config: DataFrame, outDir: String): Unit = {
+  def routeCdcBatch(input: DataFrame, batchId: Long, config: DataFrame, outDir: String): Unit = {
     // config table is tiny by contract; dim routes first, so a batch a
     // dim rejects writes nothing
     val cfg = config.collect().sortBy(_.getAs[String]("sink_type") == "kafka")
@@ -219,6 +223,11 @@ object Pipelines {
       VersionedState.requireNotBehind("CDC dim route",
         s"$outDir/dim/${row.getAs[String]("sink_table")}", batchId,
         "the dim table"))
+    // an empty batch routes nothing: no kafka directory, no dim version
+    val batch = graft.GraftSession.microBatch(input) match {
+      case Some(b) => b
+      case None => return
+    }
     val live = batch.filter(col("type") =!= "delete")
     cfg.foreach { row =>
       val (src, op, sinkType, sinkTable, cols, pk) = (

@@ -4,6 +4,7 @@ import graft.operators.PushRank
 import graft.sources.SnapshotTable
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** INCREMENTAL residual-push PageRank — the streaming wrapper over the
   * spec-proven [[graft.operators.PushRank]] kernels, and the engine's
@@ -47,12 +48,19 @@ import org.apache.spark.sql.functions._
   *    neighborhood; converged tiles are discovered-and-skipped by the
   *    complement prune ([[SnapshotTable.Prune.Outside]]).
   *
-  * One regime rule ([[RangeListCap]]): a key set is read through the
-  * driver when it has at most `RangeListCap` keys, and stays a
-  * distributed frame past it. It is decided per key set — a batch's
-  * edge pairs, sources and nodes, a round's active rows and positive-out
-  * sources — through one bounded collect, and every out-edge read goes
-  * through one reader; the row algebra is one DataFrame plan either way.
+  * One regime rule ([[graft.GraftSession.RangeListCap]]): a key set is
+  * read through the driver when it has at most `RangeListCap` keys, and
+  * stays a distributed frame past it. Such a set is collected, its key
+  * frame becomes a LocalRelation, its tile discovery is driver math and
+  * its out-edges are a per-source range list; past the cap its out-edges
+  * are one full scan + semi-join, the right plan when the set approaches
+  * the corpus (bulk loads, initial convergence). It is decided per key
+  * set — a batch's edge pairs, sources and nodes, a round's active rows
+  * and positive-out sources — through one bounded collect, so one batch
+  * may take both sides, and every out-edge read goes through one reader;
+  * the row algebra is one DataFrame plan either way. A batch of at most
+  * `RangeListCap` rows also runs interpreted
+  * ([[graft.GraftSession.microBatch]]).
   *
   * Within a batch the seed + `rounds` push rounds evolve an in-memory
   * OVERLAY of changed rows; the state table commits ONCE per batch
@@ -68,22 +76,6 @@ import org.apache.spark.sql.functions._
 object PushStream {
 
   private val Damp = graft.operators.Graph.Damp
-
-  /** The one regime rule: a key set is read through the driver when it
-    * has at most this many keys. Such a set (a batch's edge pairs, its
-    * sources, its nodes, a round's active rows and positive-out sources)
-    * is collected, its key frame becomes a LocalRelation, its tile
-    * discovery is driver math and its out-edges are a per-source range
-    * list. Past the cap the set stays a distributed frame and its
-    * out-edges are one full scan + semi-join, the right plan when the
-    * set approaches the corpus (bulk loads, initial convergence). The
-    * incremental steady state — the regime this wrapper exists for —
-    * stays far below it. Decided per key set, so one batch may take both
-    * sides; the row algebra is the same on both. A var only as a test
-    * seam (like `SnapshotTable.onBeforeCommit`); [[applyBatch]] reads it
-    * once.
-    */
-  private[graft] var RangeListCap = 100000L
 
   /** One key set of a batch: its one-column key frame, and its ids when
     * they are on the driver (the frame is then a LocalRelation over
@@ -101,6 +93,15 @@ object PushStream {
 
   def roots(base: String): Roots =
     Roots(base + "_edges", base + "_state", base + "_scalars")
+
+  /** Driver-side rows as a LocalRelation of non-null long columns. Built
+    * from Rows, not through an encoder: an encoder compiles its serializer
+    * under the thread's active session, whatever `spark` is.
+    */
+  private def longRows(spark: SparkSession, cols: Seq[String],
+      rows: Seq[Seq[Long]]): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(rows.map(Row.fromSeq): _*),
+      StructType(cols.map(StructField(_, LongType, nullable = false))))
 
   private def emptyEdges(spark: SparkSession): DataFrame =
     spark.range(0).select(col("id").as("src"), col("id").as("dst"),
@@ -134,15 +135,18 @@ object PushStream {
     * rounds at `eps`, commit. Idempotent per batchId; `eps`/`rounds`
     * must be stable across replays (same-caller contract as iters).
     */
-  def applyBatch(deltas0: DataFrame, batchId: Long, rt: Roots,
+  def applyBatch(batch: DataFrame, batchId: Long, rt: Roots,
       eps: Long, rounds: Int, clusterFiles: Int = 8): Unit = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     require(eps >= 0, s"eps must be >= 0, got $eps")
-    val spark = deltas0.sparkSession
-    val cap = RangeListCap
+    val cap = graft.GraftSession.RangeListCap
     val committed = VersionedState.requireNotBehind("PushStream",
       rt.scalars, batchId, "all three roots")
     if (committed.contains(batchId)) return // scalars commit LAST: done
+    // an empty batch still pushes the state's frontier, which the batch
+    // does not bound, so it stays in the caller's session
+    val deltas0 = graft.GraftSession.microBatch(batch).getOrElse(batch)
+    val spark = deltas0.sparkSession
     val v = s"v$batchId"
     val deltas = deltas0.groupBy(col("src"), col("dst"))
       .agg(sum(col("n_d")).as("n_d"))
@@ -154,7 +158,6 @@ object PushStream {
     // ends, while the CALLER's persists (e.g. the sessionized pair frame
     // feeding every batch) survive
     graft.CacheRegistry.scoped { try {
-      import spark.implicits._
       // ---- 0. the regime, decided per key set (RangeListCap's rule) --
       // every key set below goes through ONE bounded collect and every
       // out-edge read through ONE reader. In the incremental regime (the
@@ -173,7 +176,8 @@ object PushStream {
           frame: => DataFrame): KeySet = {
         lazy val f = frame
         known.orElse(bounded(label, f).map(_.map(_.getLong(0)))) match {
-          case Some(ids) => KeySet(ids.toSeq.toDF(name), Some(ids))
+          case Some(ids) =>
+            KeySet(longRows(spark, Seq(name), ids.toSeq.map(Seq(_))), Some(ids))
           case None => KeySet(f, None)
         }
       }
@@ -475,8 +479,8 @@ object PushStream {
             clusterFiles = Some(clusterFiles), rowFingerprints = false,
             knownPlan = statePlans)
       } }
-      traced(batchId, "scalars_commit") { SnapshotTable.publish(Seq((nn1, dang, shift)).toDF(
-        "nn", "dang", "shift"), rt.scalars, v) }
+      traced(batchId, "scalars_commit") { SnapshotTable.publish(longRows(spark,
+        Seq("nn", "dang", "shift"), Seq(Seq(nn1, dang, shift))), rt.scalars, v) }
     } finally {
       deltas.unpersist(blocking = false)
     } }

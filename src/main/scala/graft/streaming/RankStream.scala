@@ -67,21 +67,25 @@ object RankStream {
     * only the publication lags, which is the standard freshness/cost
     * trade of any corpus-scale derived view.
     */
-  def applyBatch(batch: DataFrame, batchId: Long, edgeRoot: String,
+  def applyBatch(input: DataFrame, batchId: Long, edgeRoot: String,
       rankRoot: String, iters: Int, clusterFiles: Int = 8,
       rankEveryK: Int = 1): Unit = {
     require(rankEveryK >= 1, s"rankEveryK must be >= 1, got $rankEveryK")
-    val spark = batch.sparkSession
-    if (batch.isEmpty) {
-      // the edge fold has nothing to do, but a scheduled PUBLICATION
-      // must still happen — an empty batch landing on the K boundary
-      // would otherwise push the next publish a full K batches out and
-      // staleness past the documented K−1 bound
-      graft.CacheRegistry.scoped { // the publish's pagerank leaves
-        publishRanksIfDue(spark, batchId, edgeRoot, rankRoot, iters,
-          rankEveryK)
-      }
-      return
+    // the caller's session: the rank rebuild is ∝ corpus, not ∝ batch, so
+    // it compiles even when a small batch's fold runs interpreted
+    val spark = input.sparkSession
+    val batch = graft.GraftSession.microBatch(input) match {
+      case Some(b) => b
+      case None =>
+        // the edge fold has nothing to do, but a scheduled PUBLICATION
+        // must still happen — an empty batch landing on the K boundary
+        // would otherwise push the next publish a full K batches out and
+        // staleness past the documented K−1 bound
+        graft.CacheRegistry.scoped { // the publish's pagerank leaves
+          publishRanksIfDue(spark, batchId, edgeRoot, rankRoot, iters,
+            rankEveryK)
+        }
+        return
     }
     VersionedState.requireNotBehind("RankStream", edgeRoot, batchId,
       "edgeRoot, rankRoot")

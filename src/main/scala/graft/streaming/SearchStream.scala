@@ -96,9 +96,12 @@ object SearchStream {
     * ONE additive stat fold. Idempotent per batchId. `maxSegments` is
     * the LSM compaction cap (the lookup-fan-out knob).
     */
-  def applyBatch(batch: DataFrame, batchId: Long, root: String,
+  def applyBatch(input: DataFrame, batchId: Long, root: String,
       maxSegments: Int = LsmIndex.MaxSegments): Unit = {
-    if (batch.isEmpty) return
+    val batch = graft.GraftSession.microBatch(input) match {
+      case Some(b) => b
+      case None => return
+    }
     val statHead = SnapshotTable.latestVersion(statsRoot(root))
       .map(_.drop(1).toLong)
     val idxMax = LsmIndex.liveSegments(indexRoot(root))

@@ -37,15 +37,14 @@ object SpanStream {
     val benchG = SpanDedup.gramTableOf(benchDocs, n).persist()
     docs.writeStream
       .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
+      .foreachBatch { (input: DataFrame, batchId: Long) =>
+        graft.GraftSession.microBatch(input).foreach { batch =>
           val spans = SpanDedup.contaminationSpansAgainst(
             SpanDedup.gramTableOf(batch, n), benchG, n, minSpan)
           // span rows are a pure function of (batch, bench), so the
           // batch-id-keyed overwrite commit makes a replay exactly-once
           ExactlyOnce.write(spans, outDir, batchId)
         }
-        ()
       }
       .start()
   }

@@ -51,8 +51,11 @@ object VocabStream {
   /** One micro-batch of (doc_id, text) rows: one count-fold + one
     * MIN-fold off a single tokenize pass. Idempotent per batchId.
     */
-  def applyBatch(batch: DataFrame, batchId: Long, root: String): Unit = {
-    if (batch.isEmpty) return
+  def applyBatch(input: DataFrame, batchId: Long, root: String): Unit = {
+    val batch = graft.GraftSession.microBatch(input) match {
+      case Some(b) => b
+      case None => return
+    }
     // cross-root guard (the CollocStream half-wipe lesson, tightened by
     // the SearchStream one): dl folds FIRST, so the only legal state
     // with exactly one fresh table is "crash during the FIRST batch,

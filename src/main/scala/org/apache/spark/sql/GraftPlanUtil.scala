@@ -7,7 +7,8 @@ import org.apache.spark.storage.StorageLevel
 /** Plan-surgery helpers that need `private[sql]` access — placed in the
   * Spark SQL package for that reason only; everything used is plain
   * Apache Spark API (`QueryExecution.toRdd`, `LogicalRDD.fromDataset`,
-  * `Dataset.ofRows` — the same sequence `Dataset.localCheckpoint` runs).
+  * `Dataset.ofRows` — the same sequence `Dataset.localCheckpoint` runs —
+  * and `SparkSession.cloneSession`).
   */
 object GraftPlanUtil {
 
@@ -33,11 +34,44 @@ object GraftPlanUtil {
     */
   def cutLineageEager(df: Dataset[Row]): (Dataset[Row], RDD[_]) = {
     val cdf = df.asInstanceOf[classic.Dataset[Row]]
-    // per-partition copy: operators reuse mutable UnsafeRow buffers
-    val rdd: RDD[InternalRow] = cdf.queryExecution.toRdd.map(_.copy())
-    rdd.persist(StorageLevel.MEMORY_AND_DISK)
-    rdd.count() // executes the plan once; the RDD is now the cache
+    // the session's SQL confs reach every task, as in a tracked action:
+    // AQE's stage jobs and the count run outside one, and without this
+    // their tasks see Spark's defaults (codegen on, whatever the session)
+    val rdd: RDD[InternalRow] =
+      execution.SQLExecution.withSQLConfPropagated(cdf.sparkSession) {
+        // per-partition copy: operators reuse mutable UnsafeRow buffers
+        val r = cdf.queryExecution.toRdd.map(_.copy())
+        r.persist(StorageLevel.MEMORY_AND_DISK)
+        r.count() // executes the plan once; the RDD is now the cache
+        r
+      }
     val leaf = execution.LogicalRDD.fromDataset(rdd, cdf, isStreaming = false)
     (classic.Dataset.ofRows(cdf.sparkSession, leaf), rdd)
   }
+
+  /** A clone of `spark` (`SparkSession.cloneSession`, what a streaming
+    * query runs in): same SparkContext and cache manager, and a copy of
+    * its runtime confs, registered functions and query-execution
+    * listeners as they are now.
+    */
+  def cloneSession(spark: SparkSession): SparkSession =
+    spark.asInstanceOf[classic.SparkSession].cloneSession()
+
+  /** Make `spark`'s runtime SQL confs exactly `confs`: set what differs,
+    * unset what `confs` lacks; a conf already at its value is not touched.
+    */
+  def setConfs(spark: SparkSession, confs: Map[String, String]): Unit = {
+    val conf = spark.sessionState.conf
+    conf.getAllConfs.keysIterator.filterNot(confs.contains).foreach(conf.unsetConf)
+    confs.foreach { case (k, v) =>
+      if (conf.getConfString(k, null) != v) conf.setConfString(k, v)
+    }
+  }
+
+  /** `df`'s analyzed plan as a frame of `spark`: every frame derived from
+    * it plans and runs under `spark`'s confs.
+    */
+  def rehome(df: Dataset[Row], spark: SparkSession): Dataset[Row] =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession],
+      df.asInstanceOf[classic.Dataset[Row]].logicalPlan)
 }

@@ -25,7 +25,11 @@ import org.apache.spark.sql.functions._
   *     discovery, full-scan edge reads, an aggregated dangling delta);
   *     and a cap between batch 1's distinct-source and edge-pair counts
   *     mixes the two within one batch: its pairs (and nodes) stay
-  *     distributed while its sources are read through the driver.
+  *     distributed while its sources are read through the driver. A
+  *     batch's row count takes the same cap (`GraftSession.microBatch`):
+  *     at the default cap every batch runs interpreted, at cap 0 every
+  *     non-empty batch compiles, so law 5 also holds compiled state
+  *     against interpreted state.
   */
 class PushStreamSpec extends SparkSpec {
   import spark.implicits._
@@ -182,16 +186,16 @@ class PushStreamSpec extends SparkSpec {
       s"exceed its $mixedCap distinct sources: no mixed cap exists")
     def run(tag: String, cap: Long) = {
       val rt = freshRoots(tag)
-      val saved = PushStream.RangeListCap
-      PushStream.RangeListCap = cap
+      val saved = GraftSession.RangeListCap
+      GraftSession.RangeListCap = cap
       try batches.map { case (b, deltas) =>
         PushStream.applyBatch(deltas, b, rt, Eps, Rounds)
         assert(maintainedTrue(rt) == recomputed(rt),
           s"invariant broke after batch $b at cap $cap")
         committed(rt)
-      } finally PushStream.RangeListCap = saved
+      } finally GraftSession.RangeListCap = saved
     }
-    val local = run("pushspec_capdefault", PushStream.RangeListCap)
+    val local = run("pushspec_capdefault", GraftSession.RangeListCap)
     Seq(0L -> run("pushspec_cap0", 0L),
         mixedCap -> run("pushspec_capmixed", mixedCap)).foreach {
       case (cap, other) => batches.indices.foreach { i =>

@@ -54,6 +54,45 @@ class SearchSortedSpec extends SparkSpec {
     assert(bad == 0)
   }
 
+  /** Input columns for the native functions: nulls, empty and Unicode
+    * text, arrays of unequal length, and sorted int arrays.
+    */
+  private val nativeInputs = Seq("id",
+    "CASE WHEN id % 9 = 0 THEN NULL WHEN id % 9 = 1 THEN '' ELSE concat(" +
+      "'Alpha beta ', id % 5, ' gamma Δelta 数据处理 ', id % 3, ' beta, alpha!') END AS txt",
+    "CASE WHEN id % 7 = 0 THEN NULL ELSE id * 3 - 20 END AS k",
+    "CASE WHEN id % 8 = 0 THEN NULL ELSE array(id / 3D, 1.5D, -2D) END AS da",
+    "array(0.25D, (id % 4) * 0.1D) AS db",
+    "sequence(0, CAST(id % 6 AS INT) * 2, 2) AS ia",
+    "sequence(1, CAST(id % 9 AS INT) + 1) AS ib",
+    "CAST(id % 5 AS INT) + 1 AS need",
+    "transform(sequence(1, CAST(id % 4 AS INT) + 1), x -> x * id - 7) AS fx")
+
+  /** One call of each native function over [[nativeInputs]]. */
+  private val nativeCalls = Seq(
+    "dot_double" -> "dot_double(da, db)",
+    "search_sorted" -> "search_sorted(k, array(-10L, 0L, 10L, 10L, 40L))",
+    "sorted_int_intersect_size" -> "sorted_int_intersect_size(ia, ib)",
+    "sorted_int_intersect_atleast" -> "sorted_int_intersect_atleast(ia, ib, need)",
+    "ngram_sketch_hash" -> "ngram_sketch_hash(txt)",
+    "word_bigrams" -> "word_bigrams(txt)",
+    "word_bigram_list" -> "word_bigram_list(txt)",
+    "minhash9" -> "minhash9(word_bigrams(txt))",
+    "minhash18" -> "minhash18(word_bigrams(txt))",
+    "doc_quality" -> "doc_quality(txt)",
+    "top_cells" -> ("top_cells(da, id + 1D, array(" +
+      "named_struct('cid', 0L, 'cv', array(1D, 0D, 0D), 'cnrm', 1D), " +
+      "named_struct('cid', 1L, 'cv', array(1D, 1D, 1D), 'cnrm', sqrt(3D)), " +
+      "named_struct('cid', 2L, 'cv', array(0D, -1D, 2D), 'cnrm', sqrt(5D))), 2)"),
+    "split_words" -> "split_words(txt)",
+    "bloom_hits" -> "bloom_hits(ia, array(129L, id, 0L))",
+    "tri_moments" -> "tri_moments(fx)",
+    "moment_cells" -> "moment_cells(fx)")
+
+  private def nativeRows(s: org.apache.spark.sql.SparkSession, call: String): Seq[String] =
+    s.range(0, 40).selectExpr(nativeInputs: _*).selectExpr("id", call)
+      .collect().map(_.toString).toSeq.sorted
+
   test("generated code compiles — no silent interpreted fallback") {
     // CODEGEN_ONLY + fallback=false turn a janino failure in the
     // hand-written doGenCode into a test failure instead of a WARN +
@@ -62,7 +101,7 @@ class SearchSortedSpec extends SparkSpec {
     val prevFb = spark.conf.getOption("spark.sql.codegen.fallback")
     spark.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
     spark.conf.set("spark.sql.codegen.fallback", "false")
-    try {
+    val compiled = try {
       val r = spark.range(0, 100)
         .select(
           call_function("search_sorted", col("id"),
@@ -72,6 +111,7 @@ class SearchSortedSpec extends SparkSpec {
         .agg(sum("t"), max("n")).head
       assert(r.getLong(0) == 40L * 1 + 50L * 2) // 0-9→0, 10-49→1, 50-99→2
       assert(r.getInt(1) == 2)
+      nativeCalls.map { case (name, call) => name -> nativeRows(spark, call) }
     } finally {
       def restore(k: String, v: Option[String]) = v match {
         case Some(x) => spark.conf.set(k, x)
@@ -79,6 +119,18 @@ class SearchSortedSpec extends SparkSpec {
       }
       restore("spark.sql.codegen.factoryMode", prevMode)
       restore("spark.sql.codegen.fallback", prevFb)
+    }
+    // the interpreted path (`eval`) is what a small micro-batch runs
+    // (GraftSession.microBatch): every native function must return the
+    // same rows under NO_CODEGEN as its generated code does
+    assert(nativeCalls.map(_._1) ==
+      graft.expressions.GraftExtensions.functions.map(_._1.funcName))
+    val interpreted = GraftSession.interpreted(spark)
+    assert(interpreted.conf.get("spark.sql.codegen.factoryMode") == "NO_CODEGEN")
+    compiled.foreach { case (name, rows) =>
+      assert(rows.length >= 40, name)
+      assert(nativeRows(interpreted, nativeCalls.toMap.apply(name)) == rows,
+        s"$name: interpreted rows differ from generated-code rows")
     }
   }
 

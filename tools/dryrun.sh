@@ -38,7 +38,7 @@ import json, sys
 r = json.loads(sys.stdin.read())
 print("correct", r["correct"])
 for k in ("operators.jobs", "streaming.push.jobs", "session.actions",
-          "scan.files_read"):
+          "scan.files_read", "session.codegen_classes", "session.codegen_ms"):
     m = r["metrics"].get(k)
     print(k, m["value"] if m else "n/a")'
 
