@@ -79,6 +79,10 @@ object GraftSession {
     */
   def tune(spark: SparkSession): Unit = {
     confs.foreach { case (k, v) => if (spark.conf.isModifiable(k)) spark.conf.set(k, v) }
+    registerFunctions(spark)
+  }
+
+  private def registerFunctions(spark: SparkSession): Unit = {
     val registry = spark.sessionState.functionRegistry
     GraftExtensions.functions.foreach { case (name, info, build) =>
       if (!registry.functionExists(name)) registry.registerFunction(name, info, build)
@@ -91,6 +95,14 @@ object GraftSession {
     * work approaches the corpus (bulk loads, initial convergence) and
     * takes the compiled, distributed plans. A var only as a test seam
     * (like `SnapshotTable.onBeforeCommit`).
+    *
+    * As the interpreted bound it is measured, not only inherited: a tick
+    * of the CDC, IVM and push twins over fresh parquet batches of 100,
+    * 1k, 10k and 100k rows took 5.8, 5.4, 6.7 and 18.5 s interpreted and
+    * 7.7, 7.3, 8.4 and 19.9 s compiled (medians of 4 alternating ticks,
+    * `local[4]` on a 4-vCPU VM). Interpreted rows cost more, but at 100k
+    * rows that still does not outweigh compiling the 210-260 classes
+    * such a tick's plans need.
     */
   private[graft] var RangeListCap = 100000L
 
@@ -102,7 +114,9 @@ object GraftSession {
     * its session from the returned frame, so every frame, merge and
     * publish it derives runs where the batch does. The take runs the jobs
     * of the `isEmpty` check it replaces; a twin that had none (push, CDC)
-    * gains one.
+    * gains one. Past the cap it reads `RangeListCap + 1` rows where
+    * `isEmpty` read one: 40-90 ms against 23-54 ms on a one-file batch of
+    * 100k to 1M rows.
     */
   def microBatch(batch: DataFrame): Option[DataFrame] = {
     val small = GraftPlanUtil.rehome(batch, interpreted(batch.sparkSession))
@@ -115,30 +129,35 @@ object GraftSession {
     }
   }
 
-  /** A clone of `spark` that plans no generated code: whole-stage codegen
-    * off, and `spark.sql.codegen.factoryMode` (internal; its values name
-    * how projections, predicates and orderings are built) at
-    * `NO_CODEGEN`, so they are interpreted rather than compiled. A few
-    * helpers Spark always compiles (cached-column readers, the partial
-    * aggregate's row joiner, shuffle orderings) depend only on schemas,
-    * and each session compiles its own copy: so the clone is kept per
-    * session, for its last few sessions, and reused batch after batch.
-    * Its confs are re-read from `spark` on every call, so a conf set on
-    * `spark` reaches the next batch; the native functions and the query
-    * listeners are `spark`'s when the clone is built.
+  /** A session of `spark`'s SparkContext and cache that plans no
+    * generated code: whole-stage codegen off, and
+    * `spark.sql.codegen.factoryMode` (internal; its values name how
+    * projections, predicates and orderings are built) at `NO_CODEGEN`, so
+    * they are interpreted rather than compiled. A few helpers Spark always
+    * compiles (cached-column readers, the partial aggregate's row joiner,
+    * shuffle orderings) depend only on schemas, and each session compiles
+    * its own copy: so the clone is kept, and reused batch after batch, for
+    * as long as `spark` is reachable. It is `spark.newSession()`, which
+    * holds no reference to `spark`, so a weak key releases it with `spark`
+    * (a stopped stream's session) and no count of sessions bounds it.
+    *
+    * Every call makes the clone current: its runtime confs become exactly
+    * `spark`'s and its query-execution listeners exactly `spark`'s, so a
+    * conf set, or a listener registered or removed, on `spark` after one
+    * batch holds for the next. It resolves the native functions; functions
+    * and temp views registered on `spark` itself are not carried, and no
+    * twin uses one.
     */
   private[graft] def interpreted(spark: SparkSession): SparkSession =
     clones.synchronized {
-      val clone = clones.computeIfAbsent(spark, GraftPlanUtil.cloneSession(_))
+      val clone = clones.computeIfAbsent(spark, { s =>
+        val c = s.newSession(); registerFunctions(c); c })
       GraftPlanUtil.setConfs(clone, spark.conf.getAll ++ Seq(
         "spark.sql.codegen.wholeStage" -> "false",
         "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"))
+      GraftPlanUtil.setListeners(clone, spark)
       clone
     }
 
-  private val clones =
-    new java.util.LinkedHashMap[SparkSession, SparkSession](8, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[SparkSession, SparkSession]): Boolean = size > 4
-    }
+  private val clones = new java.util.WeakHashMap[SparkSession, SparkSession]
 }

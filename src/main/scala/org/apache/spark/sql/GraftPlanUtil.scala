@@ -7,8 +7,7 @@ import org.apache.spark.storage.StorageLevel
 /** Plan-surgery helpers that need `private[sql]` access — placed in the
   * Spark SQL package for that reason only; everything used is plain
   * Apache Spark API (`QueryExecution.toRdd`, `LogicalRDD.fromDataset`,
-  * `Dataset.ofRows` — the same sequence `Dataset.localCheckpoint` runs —
-  * and `SparkSession.cloneSession`).
+  * `Dataset.ofRows` — the same sequence `Dataset.localCheckpoint` runs).
   */
 object GraftPlanUtil {
 
@@ -49,14 +48,6 @@ object GraftPlanUtil {
     (classic.Dataset.ofRows(cdf.sparkSession, leaf), rdd)
   }
 
-  /** A clone of `spark` (`SparkSession.cloneSession`, what a streaming
-    * query runs in): same SparkContext and cache manager, and a copy of
-    * its runtime confs, registered functions and query-execution
-    * listeners as they are now.
-    */
-  def cloneSession(spark: SparkSession): SparkSession =
-    spark.asInstanceOf[classic.SparkSession].cloneSession()
-
   /** Make `spark`'s runtime SQL confs exactly `confs`: set what differs,
     * unset what `confs` lacks; a conf already at its value is not touched.
     */
@@ -65,6 +56,18 @@ object GraftPlanUtil {
     conf.getAllConfs.keysIterator.filterNot(confs.contains).foreach(conf.unsetConf)
     confs.foreach { case (k, v) =>
       if (conf.getConfString(k, null) != v) conf.setConfString(k, v)
+    }
+  }
+
+  /** Make `spark`'s query-execution listeners exactly `from`'s, in order
+    * (`listListeners` is Spark-private); left alone when they already are.
+    */
+  def setListeners(spark: SparkSession, from: SparkSession): Unit = {
+    val want = from.listenerManager.listListeners()
+    val own = spark.listenerManager
+    if (!own.listListeners().sameElements(want)) {
+      own.clear()
+      want.foreach(own.register)
     }
   }
 

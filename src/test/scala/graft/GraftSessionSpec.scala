@@ -162,6 +162,51 @@ class GraftSessionSpec extends SparkSpec {
     assert(GraftSession.interpreted(spark).conf.get(k) == saved)
   }
 
+  test("the interpreted clone follows the session's listeners, is kept for " +
+      "every live session and is released with its session") {
+    import org.apache.spark.ListenerBusDrain
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val parent = spark.newSession()
+    val frame = parent.range(0, 10).toDF()
+    def batch(): Unit = {
+      assert(GraftSession.microBatch(frame).get.count() == 10)
+      ListenerBusDrain.drain(spark.sparkContext)
+    }
+    batch()
+    // a listener registered on the session after a batch sees the next
+    // one; once removed from the session it sees no later batch
+    val seen = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = {
+        seen.incrementAndGet(); ()
+      }
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    parent.listenerManager.register(listener)
+    batch()
+    assert(seen.get > 0, "a listener registered after the first batch missed the next")
+    parent.listenerManager.unregister(listener)
+    val before = seen.get
+    batch()
+    assert(seen.get == before, "a listener removed from the session still saw a batch")
+    // one clone per live session, however many sessions: none is evicted
+    val sessions = (1 to 8).map(_ => spark.newSession())
+    val clones = sessions.map(GraftSession.interpreted)
+    sessions.zip(clones).foreach { case (s, c) => assert(GraftSession.interpreted(s) eq c) }
+    // the clone holds no reference to its session, so a session dropped
+    // after a batch is collected, and its clone with it
+    def dropped(): java.lang.ref.WeakReference[SparkSession] = {
+      val s = spark.newSession()
+      assert(GraftSession.microBatch(s.range(0, 10).toDF()).get.count() == 10)
+      new java.lang.ref.WeakReference(s)
+    }
+    val ref = dropped()
+    var tries = 0
+    while (ref.get != null && tries < 50) { System.gc(); Thread.sleep(20); tries += 1 }
+    assert(ref.get == null, "a dropped session stayed reachable after a batch")
+  }
+
   test("a micro-batch at or under the cap runs the push, IVM and CDC twins " +
       "interpreted; past the cap they compile") {
     def edges(b: Long) = (0L until 12L).map(i => (i, (i * 5 + b) % 12, 1L + i % 2))
