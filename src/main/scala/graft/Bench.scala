@@ -17,40 +17,11 @@ import org.apache.spark.sql.SparkSession
   *    the per-query min — the load-robust number to read under container
   *    CPU contention.
   * Per-query persists are released between runs; shared frames stay warm
-  * for the whole suite (their cost is the `shared_build` line).
+  * for the whole suite (their cost is the `shared_build` line) and are
+  * released at its end. A failed warmup step is named `warmup` in
+  * `errors`.
   */
 object Bench {
-
-  /** Shared-frame release schedule: query name → key-prefix families to
-    * release AFTER that query's second run (the query is the family's
-    * last consumer in sorted-name order). Derived empirically by
-    * `tools.SharedConsumers` — rerun it and refresh this map whenever a
-    * query is added/renamed; a stale map shows up as a non-empty
-    * `shared_rebuilds` field in the capture, never as wrong results.
-    */
-  private val releaseAfter: Map[String, Seq[String]] = Map(
-    "ann_opq_recall" -> Seq("opq_vecs:emb", "pq_ranked:opqe", "pq_sub:8:opqe"),
-    "ann_opq_recall_clustered" -> Seq("opq_vecs:clu", "pq_ranked:opqc",
-      "pq_sub:8:opqc"),
-    "ann_pq_m16_recall" -> Seq("pq_sub:16:emb"),
-    "ann_pq_m16_recall_clustered" -> Seq("pq_sub:16:clu"),
-    "ann_pq_recall_clustered" -> Seq("pq_ranked:clu", "pq_sub:8:clu"),
-    "ann_pq_rerank_recall" -> Seq("pq_ranked:emb", "pq_sub:8:emb"),
-    "ann_prefix_recall_clustered" -> Seq("clu_vecs"),
-    "dedup_ngram_jaccard" -> Seq("ngram_sk"),
-    "embed_outliers" -> Seq("clusterCurate"),
-    "embed_pc_projection" -> Seq("embed_fx"),
-    "knn_classify" -> Seq("knn"),
-    "pagerank_stream_periodic" -> Seq("pageevents", "pagepairs"),
-    "pipeline_manifest" -> Seq("pm_dup_losers", "pm_sem_losers",
-      "pm_span_losers", "vecs"),
-    "search_hybrid_rrf" -> Seq("doc_embed"),
-    "search_snippets" -> Seq("bm25dl"),
-    "span_coverage" -> Seq("doc_toks", "span_pairs"),
-    "text_stats" -> Seq("bpe_counts"),
-    "visitor_stats" -> Seq("enriched"),
-    "vocab_growth" -> Seq("bm25tf"),
-  )
 
   /** The three /proc/loadavg load averages (1/5/15 min), or NaNs where
     * unreadable (non-Linux) — the contention telemetry a gate reads to
@@ -90,28 +61,36 @@ object Bench {
     // untimed warmup: janino/codegen framework, parquet reader and shuffle
     // machinery initialization are per-session costs, not per-query costs —
     // pay them before the first timer starts
-    try {
+    val errors = scala.collection.mutable.ArrayBuffer.empty[String]
+    // a failed warmup is named: its cost would otherwise land, unlabeled,
+    // in whichever query runs first
+    def warmup[T](fallback: T)(body: => T): T =
+      try body
+      catch { case scala.util.control.NonFatal(e) =>
+        System.err.println(s"bench: warmup failed: $e")
+        if (!errors.contains("warmup")) errors += "warmup"
+        fallback
+      }
+    warmup(()) {
       spark.range(1000).selectExpr("sum(id) AS s").count()
       spark.read.parquet(s"$sfDir/region.parquet").groupBy("r_name").count().count()
-    } catch { case _: Throwable => () }
+      ()
+    }
     val sharedFrames =
-      try operators.Warmup.sharedFrames(spark, sfDir)
-      catch { case _: Throwable => Nil }
+      warmup(Seq.empty[(String, Double)])(operators.Warmup.sharedFrames(spark, sfDir))
     val sharedBuild =
       if (sharedFrames.isEmpty) -1.0 else sharedFrames.map(_._2).sum
     // optional comma-separated subset for targeted profiling
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    val errors = scala.collection.mutable.ArrayBuffer.empty[String]
     // returns (seconds, succeeded) — a failed run must never win the
     // min-of-2 (a fast crash would otherwise report as the query's best
     // time and a perf gate could pass on a broken capture)
     def runOnce(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): (Double, Boolean) = {
       val t0 = System.nanoTime()
-      CacheRegistry.beginQuery(name)
       val ok =
         try { fn(spark, sfDir).count(); true }
         catch { case _: Throwable => if (!errors.contains(name)) errors += name; false }
-        finally { CacheRegistry.endQuery(); CacheRegistry.clear() }
+        finally CacheRegistry.clear()
       ((System.nanoTime() - t0) / 1e9, ok)
     }
     val results = SparkEntry.queries.toSeq.sortBy(_._1)
@@ -119,13 +98,6 @@ object Bench {
       .map { case (name, fn) =>
         val (run1, ok1) = runOnce(name, fn)
         val (run2, ok2) = runOnce(name, fn)
-        // family-scoped release boundary: once a shared frame's LAST
-        // consumer (sorted order — tools.SharedConsumers derives the map)
-        // has run, the frame stops competing for executor storage with
-        // the families still to come. A stale map cannot corrupt results
-        // — a released-too-early frame rebuilds lazily — but the event
-        // lands in `shared_rebuilds` so the capture flags its own noise.
-        releaseAfter.get(name).foreach(CacheRegistry.releaseShared)
         // no successful run → a loud 1e9 sentinel (valid JSON, impossible
         // as a real duration), so a gate reading total_min FAILS instead
         // of seeing a fast crash as the query's best time
@@ -133,8 +105,6 @@ object Bench {
           .minOption.getOrElse(1e9)
         (name, run1, best)
       }
-    val sharedRebuilds = CacheRegistry.rebuiltAfterRelease
-      .map("\"" + _ + "\"").mkString("[", ",", "]")
     // millisecond precision everywhere: full double repr at 175 queries
     // x 2 maps pushed the line past the driver artifact's tail window,
     // truncating the blob's head — 3dp keeps the whole record in the tail
@@ -168,7 +138,7 @@ object Bench {
     // the file record and the stdout summary share every field but the
     // per-query maps, built once (one ts_ms for both)
     val head = s""""metric":"total","value":${fmt(total)},"unit":"sec","shared_build":${fmt(sharedBuild)},"total_min":${fmt(totalMin)}"""
-    val tail = s""""errors":$errs,"sf":"$sfDir","ts_ms":${System.currentTimeMillis()},"harness_wall_sec":${fmt(wallSec)},"loadavg_start":${jsonArr(loadStart)},"loadavg_end":${jsonArr(loadEnd)},"load_threshold":$loadThreshold,"host_cpus":${Runtime.getRuntime.availableProcessors()},"contended":$contended,"shared_rebuilds":$sharedRebuilds,"levers":{"approx_distinct":$approxLever,"shuffle_partitions":$shufflePartitions,"cpus":$cpus}"""
+    val tail = s""""errors":$errs,"sf":"$sfDir","ts_ms":${System.currentTimeMillis()},"harness_wall_sec":${fmt(wallSec)},"loadavg_start":${jsonArr(loadStart)},"loadavg_end":${jsonArr(loadEnd)},"load_threshold":$loadThreshold,"host_cpus":${Runtime.getRuntime.availableProcessors()},"contended":$contended,"levers":{"approx_distinct":$approxLever,"shuffle_partitions":$shufflePartitions,"cpus":$cpus}"""
     val line = s"""{$head,"queries":$qs,"queries_min":$qsMin,"shared_frames":${json(sharedFrames)},$tail}"""
     // stdout goes through sbt, which interleaves its own log lines — also
     // land the result in a file so a gate never depends on log scraping

@@ -8,78 +8,43 @@ import org.apache.spark.sql.DataFrame
   * arrays in storage memory for the rest of the session.
   */
 object CacheRegistry {
-  private val registered = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-  // cached internal-row RDDs backing materialize()'s lineage cuts — they
-  // release on the same clear()/scoped boundaries as the DataFrame persists
-  private val registeredRdds =
-    scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.rdd.RDD[_]]
+  /** One release unit: the frames [[persist]] and the cached internal-row
+    * RDDs backing [[materialize]]'s lineage cuts, released together.
+    */
+  private final class Frames {
+    val dfs = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    val rdds = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.rdd.RDD[_]]
+    def release(): Unit = {
+      dfs.foreach(_.unpersist(blocking = false))
+      dfs.clear()
+      rdds.foreach(_.unpersist(blocking = false))
+      rdds.clear()
+    }
+  }
+  // per-query frames: registered outside any scope, released by clear()
+  private val perQuery = new Frames
+  // each thread's open [[scoped]] blocks, innermost first: Structured
+  // Streaming runs each query's batches on its own thread, so two twins'
+  // scopes can be open at once and must not release each other's frames
+  private val scopes = ThreadLocal.withInitial[List[Frames]](() => Nil)
   private val sharedDfs = scala.collection.mutable.Map.empty[String, DataFrame]
-  private var currentQuery: Option[String] = None
-  private val accessLog =
-    scala.collection.mutable.Map.empty[String, scala.collection.mutable.Set[String]]
-  private val releasedKeys = scala.collection.mutable.Set.empty[String]
-  private val rebuilt = scala.collection.mutable.ArrayBuffer.empty[String]
+
+  private def current: Frames = scopes.get.headOption.getOrElse(perQuery)
 
   def persist(df: DataFrame): DataFrame = synchronized {
-    registered += df
+    current.dfs += df
     df.persist()
   }
 
   /** A persisted frame SHARED across queries in one harness session (e.g.
     * the enriched events derivation feeding the whole log suite — the DWD
     * layer materialized once for its DWS/ADS consumers, as the reference
-    * stages through a Kafka topic). Survives per-query [[clear]]; released
-    * by [[clearAll]] or a [[releaseShared]] boundary.
+    * stages through a Kafka topic). Built on its key's first call; later
+    * calls return the live frame. Survives per-query [[clear]]; released
+    * by [[clearAll]].
     */
   def shared(key: String)(build: => DataFrame): DataFrame = synchronized {
-    currentQuery.foreach(q =>
-      accessLog.getOrElseUpdate(key, scala.collection.mutable.Set.empty) += q)
-    // a rebuild after an explicit release means the release schedule's
-    // last-consumer map is STALE (a later query still reads this frame):
-    // correctness is unaffected (the frame rebuilds lazily) but the
-    // consumer's timing silently absorbs the rebuild — so the event is
-    // recorded and surfaced in the bench capture's `shared_rebuilds`
-    if (!sharedDfs.contains(key) && releasedKeys.contains(key)) rebuilt += key
     sharedDfs.getOrElseUpdate(key, build.persist())
-  }
-
-  /** Harness attribution scope: shared-frame accesses between
-    * [[beginQuery]] and [[endQuery]] are logged under `name` — the data
-    * [[tools.SharedConsumers]] derives the bench release schedule from.
-    */
-  def beginQuery(name: String): Unit = synchronized { currentQuery = Some(name) }
-  def endQuery(): Unit = synchronized { currentQuery = None }
-
-  /** (shared key → query names that accessed it) for this session. */
-  private[graft] def sharedAccesses: Map[String, Set[String]] = synchronized {
-    accessLog.map { case (k, v) => k -> v.toSet }.toMap
-  }
-
-  /** Keys rebuilt after an explicit release — nonempty means the release
-    * schedule is stale and should be regenerated ([[tools.SharedConsumers]]).
-    */
-  private[graft] def rebuiltAfterRelease: Seq[String] = synchronized {
-    rebuilt.toSeq
-  }
-
-  /** Family-scoped release boundary: unpersist shared frames whose key
-    * matches a prefix (exactly, or `prefix:`-qualified — keys embed the
-    * fixture dir and subspace counts as `:`-suffixes). Called by Bench
-    * after a frame family's LAST consumer has run, so long-lived shared
-    * frames stop competing for executor storage with the families still
-    * to come (the in-suite eviction effect that inflated the PQ family
-    * ~2x vs isolated). Returns the released keys.
-    */
-  def releaseShared(keyPrefixes: Seq[String]): Seq[String] = synchronized {
-    val hit = sharedDfs.keysIterator
-      .filter(k => keyPrefixes.exists(p => k == p || k.startsWith(p + ":")))
-      .toSeq
-    hit.foreach { k =>
-      sharedDfs(k).unpersist(blocking = false)
-      sharedDfs.remove(k)
-      releasedKeys += k
-    }
-    hit
   }
 
   /** Eagerly materialize `df` behind a lineage LEAF and register the cache
@@ -106,7 +71,7 @@ object CacheRegistry {
     */
   def materialize(df: DataFrame): DataFrame = {
     val (cut, rdd) = org.apache.spark.sql.GraftPlanUtil.cutLineageEager(df)
-    synchronized { registeredRdds += rdd }
+    synchronized { current.rdds += rdd }
     cut
   }
 
@@ -121,8 +86,7 @@ object CacheRegistry {
   def releaseMaterialized(df: DataFrame): Unit = {
     df.queryExecution.logical match {
       case l: org.apache.spark.sql.execution.LogicalRDD => synchronized {
-        val i = registeredRdds.indexWhere(_ eq l.rdd)
-        if (i >= 0) registeredRdds.remove(i)
+        (perQuery :: scopes.get).foreach(_.rdds.filterInPlace(_ ne l.rdd))
         l.rdd.unpersist(blocking = false)
         ()
       }
@@ -140,17 +104,18 @@ object CacheRegistry {
     * lose the cache after batch 1 and re-run the window pass per batch.
     * Scoping the release to the batch's own registrations keeps the
     * discipline (nothing batch-local outlives the batch) while letting
-    * multi-batch drivers share ingest-side frames.
+    * multi-batch drivers share ingest-side frames. A scope owns what its
+    * own thread registers inside it (an inner scope's frames release at
+    * the inner exit), so two twins' batches running at once on their own
+    * stream threads never release each other's frames.
     */
   def scoped[T](body: => T): T = {
-    val (mark, rddMark) = synchronized { (registered.size, registeredRdds.size) }
+    val frames = new Frames
+    scopes.set(frames :: scopes.get)
     try body
-    finally synchronized {
-      // frames registered within the scope release; earlier ones stay
-      registered.drop(mark).foreach(_.unpersist(blocking = false))
-      registered.remove(mark, registered.size - mark)
-      registeredRdds.drop(rddMark).foreach(_.unpersist(blocking = false))
-      registeredRdds.remove(rddMark, registeredRdds.size - rddMark)
+    finally {
+      scopes.set(scopes.get.tail)
+      synchronized(frames.release())
     }
   }
 
@@ -160,30 +125,16 @@ object CacheRegistry {
     * ones) without reaching into Spark's cache manager.
     */
   private[graft] def registeredSchemas: Seq[Seq[String]] = synchronized {
-    registered.map(_.schema.fieldNames.toSeq).toSeq
+    perQuery.dfs.map(_.schema.fieldNames.toSeq).toSeq
   }
 
   /** Release per-query persists (between queries in Verify/Bench). */
-  def clear(): Unit = synchronized {
-    registered.foreach(_.unpersist(blocking = false))
-    registered.clear()
-    registeredRdds.foreach(_.unpersist(blocking = false))
-    registeredRdds.clear()
-  }
+  def clear(): Unit = synchronized(perQuery.release())
 
-  /** Release everything, shared frames included (end of harness run).
-    * Also resets the release/rebuild/access bookkeeping so a second
-    * harness run in the same JVM starts clean (a key released last run
-    * must not count as "rebuilt after release" when the next run builds
-    * it fresh).
-    */
+  /** Release everything, shared frames included (end of harness run). */
   def clearAll(): Unit = synchronized {
     clear()
     sharedDfs.values.foreach(_.unpersist(blocking = false))
     sharedDfs.clear()
-    releasedKeys.clear()
-    rebuilt.clear()
-    accessLog.clear()
-    currentQuery = None
   }
 }

@@ -216,13 +216,13 @@ object InvertedIndex {
     */
   private[graft] def applyDocBatch(input: DataFrame, batchId: Long,
       root: String, files: Option[Int] = None): Unit = {
+    graft.streaming.VersionedState.requireNotBehind("index stream", root,
+      batchId, "the index")
     val batch = graft.GraftSession.microBatch(input) match {
       case Some(b) => b
       case None => return
     }
     val version = s"v$batchId"
-    graft.streaming.VersionedState.requireNotBehind("index stream", root,
-      batchId, "the index")
     val post = keyedPostings(batch).persist()
     // the cluster count only shapes a BOOTSTRAP or full-rewrite fallback
     // (tile-local merges keep the table's layout) — compute it ONLY on

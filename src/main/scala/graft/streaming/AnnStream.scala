@@ -87,13 +87,13 @@ object AnnStream {
     */
   def applyBatch(input: DataFrame, batchId: Long, root: String,
       clusterFiles: Int = 8): Unit = {
+    val head = VersionedState.requireNotBehind("AnnStream", root, batchId,
+      "the table").map(lv => s"v$lv")
     val batch = graft.GraftSession.microBatch(input) match {
       case Some(b) => b
       case None => return
     }
     val spark = batch.sparkSession
-    val head = VersionedState.requireNotBehind("AnnStream", root, batchId,
-      "the table").map(lv => s"v$lv")
     val (cents, modelDelta) = head match {
       case Some(h) => (centroids(spark, root, h), None)
       case None =>

@@ -39,16 +39,16 @@ object CollocStream {
     */
   def applyBatch(input: DataFrame, batchId: Long, pairRoot: String,
       uniRoot: String, clusterFiles: Int = 8): Unit = {
-    val batch = graft.GraftSession.microBatch(input) match {
-      case Some(b) => b
-      case None => return
-    }
     // BOTH tables must agree the checkpoint is not fresh: a wiped
     // pairRoot with a surviving uniRoot (or vice versa) would slip a
     // head-only check and double-count the surviving table's merges,
     // silently corrupting lift scores
     Seq(pairRoot, uniRoot).foreach(VersionedState.requireNotBehind(
       "CollocStream", _, batchId, "pairRoot, uniRoot"))
+    val batch = graft.GraftSession.microBatch(input) match {
+      case Some(b) => b
+      case None => return
+    }
     // the exactly-once fold discipline (committed-head base, replay
     // self-read filter, tile-pruned join, persisted deltas) lives in
     // AdditiveFold, shared with RankStream and LineDedupStream

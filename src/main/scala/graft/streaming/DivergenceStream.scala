@@ -48,12 +48,12 @@ object DivergenceStream {
     */
   def applyBatch(input: DataFrame, batchId: Long, root: String,
       clusterFiles: Int = 8): Unit = {
+    VersionedState.requireNotBehind("DivergenceStream", root, batchId,
+      "the table")
     val batch = graft.GraftSession.microBatch(input) match {
       case Some(b) => b
       case None => return
     }
-    VersionedState.requireNotBehind("DivergenceStream", root, batchId,
-      "the table")
     val deltas = graft.operators.CorpusStats.sourceTokenCounts(batch)
       .select(concat_ws("\u0001", col("source"), col("token")).as("sk"),
         col("source"), col("token"), col("cnt"))

@@ -47,12 +47,6 @@ object IvmStream {
   def applyBatch(input: DataFrame, batchId: Long, dimRoot: String,
       viewRoot: String, pk: String, bucket: Column, sums: Seq[String],
       deleteWhen: Option[Column] = None, clusterFiles: Int = 16): Unit = {
-    val batch = graft.GraftSession.microBatch(input) match {
-      case Some(b) => b
-      case None => return
-    }
-    val spark = batch.sparkSession
-    val version = s"v$batchId"
     // a stream restarted on a FRESH checkpoint against an existing
     // dimRoot re-numbers batches from 0, and the merge's monotonicity
     // require would then fail every batch forever with a message naming
@@ -60,6 +54,12 @@ object IvmStream {
     // merge short-circuits and the view recomputes idempotently
     VersionedState.requireNotBehind("IvmStream", dimRoot, batchId,
       "dimRoot, viewRoot")
+    val batch = graft.GraftSession.microBatch(input) match {
+      case Some(b) => b
+      case None => return
+    }
+    val spark = batch.sparkSession
+    val version = s"v$batchId"
     val dimPrev = VersionedState.below(dimRoot, batchId)
     // batch-scoped registry release: diff registers its join frame in
     // the per-query registry and the view publish is the last consumer

@@ -48,12 +48,12 @@ object LineDedupStream {
     */
   def applyBatch(input: DataFrame, batchId: Long, root: String,
       clusterFiles: Int = 8): Unit = {
+    VersionedState.requireNotBehind("LineDedupStream", root, batchId,
+      "the table")
     val batch = graft.GraftSession.microBatch(input) match {
       case Some(b) => b
       case None => return
     }
-    VersionedState.requireNotBehind("LineDedupStream", root, batchId,
-      "the table")
     // per-doc-distinct BEFORE counting: a segment repeated inside one doc
     // is one df unit, exactly as the batch query counts it. The
     // exactly-once fold discipline lives in AdditiveFold (shared with

@@ -70,11 +70,11 @@ object PcaStream {
     */
   def applyBatch(input: DataFrame, batchId: Long, root: String,
       clusterFiles: Int = 8): Unit = {
+    VersionedState.requireNotBehind("PcaStream", root, batchId, "the table")
     val batch = graft.GraftSession.microBatch(input) match {
       case Some(b) => b
       case None => return
     }
-    VersionedState.requireNotBehind("PcaStream", root, batchId, "the table")
     // persisted cache boundary: without it CollapseProject inlines the
     // floor transform into the pair lambda and re-floors d times per row
     // (the PLANS.md lambda trap EmbedPca documents)

@@ -74,6 +74,8 @@ object RankStream {
     // the caller's session: the rank rebuild is ∝ corpus, not ∝ batch, so
     // it compiles even when a small batch's fold runs interpreted
     val spark = input.sparkSession
+    VersionedState.requireNotBehind("RankStream", edgeRoot, batchId,
+      "edgeRoot, rankRoot")
     val batch = graft.GraftSession.microBatch(input) match {
       case Some(b) => b
       case None =>
@@ -87,8 +89,6 @@ object RankStream {
         }
         return
     }
-    VersionedState.requireNotBehind("RankStream", edgeRoot, batchId,
-      "edgeRoot, rankRoot")
     // the exactly-once additive fold (committed-head base, replay
     // self-read filter, tile-pruned batch-sized join, persisted deltas)
     // lives in AdditiveFold, shared with CollocStream and LineDedupStream

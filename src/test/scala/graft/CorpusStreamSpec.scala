@@ -135,6 +135,12 @@ class CorpusStreamSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("fresh checkpoint"),
       "a batch id behind EITHER table's head must fail loudly")
+    // an empty batch behind the head fails by name too, not silently
+    val empty = intercept[IllegalArgumentException] {
+      CollocStream.applyBatch(docsOf(Seq.empty), 0L, pairRoot, uniRoot)
+    }
+    assert(empty.getMessage.contains("CollocStream batch 0 is behind"),
+      empty.getMessage)
   }
 
   // -- kill-and-resume through real checkpoints (the LsmIndex recipe) --

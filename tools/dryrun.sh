@@ -43,8 +43,8 @@ for k in ("operators.jobs", "streaming.push.jobs", "session.actions",
     print(k, m["value"] if m else "n/a")'
 
 echo "== bench @ sf0.1"
-# a failed query (its time becomes the 1e9 sentinel) or a stale release
-# map (a shared frame rebuilt after release) fails the step
+# a failed query (its time becomes the 1e9 sentinel) or a failed warmup
+# (named "warmup" in errors) fails the step
 SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 SPARK_DRIVER_MEM=24g \
   sbt -batch "runMain graft.Bench" 2>/dev/null | grep '"metric"' | python3 -c '
 import json, sys
@@ -55,8 +55,8 @@ for line in sys.stdin:
         summary = json.loads(line[line.index("{"):])
 if summary is None:
     sys.exit("bench: no summary line")
-bad = {k: summary[k] for k in ("errors", "shared_rebuilds") if summary[k]}
-sys.exit("bench: " + json.dumps(bad) if bad else 0)'
+sys.exit("bench: errors " + json.dumps(summary["errors"])
+         if summary["errors"] else 0)'
 
 echo "== tests"
 sbt -batch test 2>&1 | tee /tmp/graft_dryrun_test.log
