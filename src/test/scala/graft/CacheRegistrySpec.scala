@@ -17,7 +17,7 @@ class CacheRegistrySpec extends SparkSpec {
   private def cached(df: org.apache.spark.sql.DataFrame) =
     df.storageLevel != org.apache.spark.storage.StorageLevel.NONE
 
-  test("a shared frame survives clear(), is built once per key, and clearAll releases it") {
+  test("a shared frame survives clear(), is built once per key, clearAll frees it") {
     CacheRegistry.clearAll()
     val f = CacheRegistry.shared("vecs:/tmp/b")(frame)
     f.count()
